@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.entry.EntryHelpers._
+import graft.graph.PageRank
+import graft.ops.Fixpoint
 
 
 /** Round-6 mining/statistics additions, in three strands (the fourth —
@@ -505,39 +507,18 @@ private[graft] object MiningQueries {
     val (_, sym, _) = linkBase(s, dir)
     val e = sym.select(col("a").as("src"), col("b").as("dst")).localCheckpoint()
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).localCheckpoint()
-    val seedRow = deg.agg(min("src").as("seed"))
-    val nodes = deg.select(col("src").as("id")).crossJoin(broadcast(seedRow))
-      .localCheckpoint()
-    var r = nodes.select(col("id"),
-      when(col("id") === col("seed"), lit(unit)).otherwise(lit(0L)).as("r"))
-    // static edge⋈outdeg table joined ONCE, cached clustered+sorted on src
-    // with the iteration join pinned merge — the PageRank.ranks discipline
-    // (each round moves only the node-sized rank table; the restart vector
-    // stays in the select, so the plan is otherwise unchanged)
-    val pre = e.join(deg, "src")
-      .repartition(col("src")).sortWithinPartitions("src").cache()
-    try {
+    val seed = lit(deg.agg(min("src")).head().get(0))
+    // the PageRank.ranks static table and round, with the restart term
+    val pre = PageRank.massTable(e, deg)
+    val r = Fixpoint.iterate(3, pre) {
       pre.count()
-      // the checkpoint predicate below MUST track this bound: only the
-      // last round materializes (it has to outlive pre.unpersist) — bind
-      // it once so editing the bound can't silently drop the final
-      // checkpoint and recompute the whole chain at action time
-      val iters = 3
-      for (i <- 1 to iters) {
-        r = nodes
-          .join(pre.hint("merge").join(r, pre("src") === r("id"))
-            .groupBy(col("dst")).agg(sum(expr("r div outdeg")).as("contrib"))
-            .withColumnRenamed("dst", "id"), Seq("id"), "left")
-          .select(col("id"),
-            (when(col("id") === col("seed"), lit(unit - damping)).otherwise(lit(0L)) +
-              expr(s"($damping * coalesce(contrib, cast(0 as bigint))) div $unit")).as("r"))
-        // r is consumed exactly once per round — linear chain; only the
-        // LAST round materializes (it must outlive pre.unpersist below).
-        // The two mid-loop checkpoints this replaces were one job
-        // round-trip each (guide §1.2; the PageRank stride discipline).
-        if (i == iters) r = r.localCheckpoint()
-      }
-    } finally pre.unpersist() // r is checkpointed on exit (last round)
+      deg.select(col("src").as("id"), when(col("src") === seed, lit(unit)).otherwise(lit(0L)).as("r"))
+    } { (r, _) =>
+      PageRank.contribs(pre, r)
+        .select(col("id"),
+          (when(col("id") === seed, lit(unit - damping)).otherwise(lit(0L)) +
+            expr(s"($damping * contrib) div $unit")).as("r"))
+    }
     r.filter(col("r") > 0).orderBy(col("r").desc, col("id")).limit(20)
   }
 
@@ -991,28 +972,22 @@ private[graft] object MiningQueries {
       .agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
     val rowsum = trans.groupBy("f").agg(sum("cnt").as("rs"))
-    val p = trans.join(rowsum, "f")
-      .select(col("f"), col("t"), expr(s"cnt * $unit div rs").as("p"))
-      .localCheckpoint()
-    val states = p.select(col("f").as("st")).distinct()
+    val states = trans.select(col("f").as("st")).distinct()
     val n = states.count()
-    var pi = states.select(col("st"), lit(unit / n).as("pi"))
-    // pi is consumed exactly once per round (the next round's join), so
-    // the chain is linear — materialize on a 4-round stride instead of
-    // every round (and never after the last: the caller's one action
-    // computes it); p and states are already checkpointed, so a 4-round
-    // lineage is four tiny join+agg layers (guide §1.2: each skipped
-    // eager localCheckpoint was a full job round-trip)
-    // stride/last-round predicates written against the bound, not
-    // literals, so an edited iteration count keeps the discipline
-    val iters = 8
-    for (i <- 1 to iters) {
-      pi = states
-        .join(p.join(pi, col("f") === col("st"))
-          .groupBy(col("t")).agg(sum(expr(s"pi * p div $unit")).as("m")),
-          col("st") === col("t"), "left")
-        .select(col("st"), coalesce(col("m"), lit(0L)).as("pi"))
-      if (i % 4 == 0 && i != iters) pi = pi.localCheckpoint()
+    // row-normalized transitions, destinations restricted to states plus
+    // one zero-probability self row per state, so each round's aggregate
+    // emits every state — no left join back to the state universe (the
+    // PageRank.massTable discipline)
+    val p = trans.join(rowsum, "f")
+      .join(states.select(col("st").as("t")), Seq("t"), "left_semi")
+      .select(col("f"), col("t"), expr(s"cnt * $unit div rs").as("p"))
+      .union(states.select(col("st").as("f"), col("st").as("t"), lit(0L).as("p")))
+      .localCheckpoint()
+    val pi = Fixpoint.iterate(8) {
+      states.select(col("st"), lit(unit / n).as("pi"))
+    } { (pi, _) =>
+      p.join(pi, col("f") === col("st"))
+        .groupBy(col("t").as("st")).agg(sum(expr(s"pi * p div $unit")).as("pi"))
     }
     pi.select(col("st").as("state"), col("pi").as("pi_micro")).orderBy("state")
   }

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Fixpoint
+
 /** Bounded-depth BFS hop distances over an edge list — the graph suite's
   * reachability member next to PageRank (mass), triangles (local
   * structure), and connected components (global structure). Distances are
@@ -16,8 +18,8 @@ import org.apache.spark.sql.functions._
   * run, the textbook distributed BFS. A naive `dist ⋈ edges` per round
   * re-expands the entire reached set every round — O(E·depth) — which is
   * the difference between a 6-round web-graph BFS finishing and not, at
-  * 100 TB. The settled set is union-appended and localCheckpoint'd per
-  * round (constant-depth plan, same as PageRank's ranks).
+  * 100 TB. The settled set is union-appended; its materialization
+  * follows [[graft.ops.Fixpoint]].
   *
   * Returns (id, d): every node within `maxHops` of `seed`, d = exact
   * hop distance (min over paths — the anti-join guarantees first-reach,
@@ -26,7 +28,6 @@ import org.apache.spark.sql.functions._
 object Bfs {
 
   def hops(edges: DataFrame, seed: Long, maxHops: Int): DataFrame = {
-    require(maxHops >= 0, s"maxHops=$maxHops")
     // cache the edge list CLUSTERED AND SORTED on src (the caller's edge
     // build is typically a fact-join + distinct — without the cache every
     // round re-executes that whole lineage, maxHops redundant corpus
@@ -36,28 +37,21 @@ object Bfs {
     // the frontier (PageRank.ranks discipline)
     val e = edges.select(col("src"), col("dst"))
       .repartition(col("src")).sortWithinPartitions("src").cache()
-    try {
-      e.count()
-      var settled = e.sparkSession.range(1).select(
-        lit(seed).as("id"), lit(0L).as("d")).localCheckpoint()
-      var frontier = settled.select("id")
-      var round = 0
-      while (round < maxHops) {
-        round += 1
-        // the frontier must materialize (it anchors both the next expansion
-        // and the settled union), but the settled UNION can stay lazy on a
-        // 2-round stride — unions of checkpointed legs are shallow
-        val next = e.hint("merge").join(frontier, e("src") === frontier("id"))
-          .select(col("dst").as("id")).distinct()
-          .join(settled.select("id"), Seq("id"), "left_anti")
-          .select(col("id"), lit(round.toLong).as("d"))
-          .localCheckpoint()
-        settled = settled.union(next)
-        if (round % 2 == 0 || round == maxHops) settled = settled.localCheckpoint()
-        frontier = next.select("id")
-      }
-      settled
-    } finally e.unpersist() // settled is checkpointed on exit (last round)
+    // the frontier must materialize every round (it anchors both the next
+    // expansion and the settled union); the settled UNION of the seed
+    // literal and the checkpointed frontiers is the loop state, shallow
+    // between barriers
+    val start = e.sparkSession.range(1).select(lit(seed).as("id"), lit(0L).as("d"))
+    var frontier = start.select("id")
+    Fixpoint.iterate(maxHops, e) { e.count(); start } { (settled, round) =>
+      val next = e.hint("merge").join(frontier, e("src") === frontier("id"))
+        .select(col("dst").as("id")).distinct()
+        .join(settled.select("id"), Seq("id"), "left_anti")
+        .select(col("id"), lit(round.toLong).as("d"))
+        .localCheckpoint()
+      frontier = next.select("id")
+      settled.union(next)
+    }
   }
 
   /** Bounded-round Bellman-Ford cheapest paths over a WEIGHTED edge list
@@ -67,35 +61,27 @@ object Bfs {
     * trick does not apply: each round is the full min-union relaxation
     *   d'(v) = min(d(v), min over (u,v,w) of d(u) + w)
     * — one equi-join + one combinable min aggregate, the textbook
-    * distributed Bellman-Ford round, localCheckpoint'd for constant plan
-    * depth. O(E) work per round, `rounds` bounded by the caller (path
+    * distributed Bellman-Ford round, materialized by [[graft.ops.Fixpoint]].
+    * O(E) work per round, `rounds` bounded by the caller (path
     * length in edges, the standard k-hop-cost query). Distances exact
     * BIGINT ⇒ replayable by an unrolled min-union oracle. Overflow: the
     * caller bounds w so that rounds·max(w) stays far under 2^63; ANSI
     * mode throws rather than wraps if that contract is broken.
     */
   def cheapest(edges: DataFrame, seed: Long, rounds: Int): DataFrame = {
-    require(rounds >= 0, s"rounds=$rounds")
     // same caching/clustering discipline as [[hops]]: the weighted edge
     // build runs once, each relaxation round moves only the node-sized
     // dist table into the pinned merge join
     val e = edges.select(col("src"), col("dst"), col("w"))
       .repartition(col("src")).sortWithinPartitions("src").cache()
-    try {
+    Fixpoint.iterate(rounds, e) {
       e.count()
-      var dist = e.sparkSession.range(1).select(
-        lit(seed).as("id"), lit(0L).as("d")).localCheckpoint()
-      for (i <- 1 to rounds) {
-        dist = dist.union(
-            e.hint("merge").join(dist, e("src") === dist("id"))
-              .select(col("dst").as("id"), (col("d") + col("w")).as("d")))
-          .groupBy("id").agg(min(col("d")).as("d"))
-        // 2-round checkpoint stride (always the last round): halves the
-        // per-round materialization fixed cost at constant-bounded lineage —
-        // same rationale as PageRank's strided ranks checkpoint
-        if (i % 2 == 0 || i == rounds) dist = dist.localCheckpoint()
-      }
-      dist
-    } finally e.unpersist() // dist is checkpointed on exit (last round)
+      e.sparkSession.range(1).select(lit(seed).as("id"), lit(0L).as("d"))
+    } { (dist, _) =>
+      dist.union(
+          e.hint("merge").join(dist, e("src") === dist("id"))
+            .select(col("dst").as("id"), (col("d") + col("w")).as("d")))
+        .groupBy("id").agg(min(col("d")).as("d"))
+    }
   }
 }

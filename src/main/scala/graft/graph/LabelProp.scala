@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Fixpoint
+
 /** Synchronous label propagation (Raghavan et al. 2007) — community
   * detection over an edge list, the third member of the iterative graph
   * family beside PageRank's fixed-point ranks and Bfs's frontier
@@ -19,9 +21,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: per round ONE equi-join of the edge list against the
   * n-row label table (shuffle on dst, then on src for the count) and one
   * map-side-combinable argmax aggregate — O(E) per round like PageRank's
-  * contribution join, never materializing neighborhoods. Labels are
-  * localCheckpoint'd per round (constant-depth lineage, the PageRank
-  * stride discipline).
+  * contribution join, never materializing neighborhoods. The label
+  * table's materialization follows [[graft.ops.Fixpoint]].
   */
 object LabelProp {
 
@@ -31,13 +32,11 @@ object LabelProp {
     * degree-0 nodes).
     */
   def communities(edges: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 0, s"iters=$iters")
     val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    var labels = e.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-    for (i <- 1 to iters) {
-      labels = e
-        .join(labels.select(col("id").as("dst"), col("lbl").as("nl")), "dst")
+    Fixpoint.iterate(iters) {
+      e.select(col("src").as("id")).distinct().withColumn("lbl", col("id"))
+    } { (labels, _) =>
+      e.join(labels.select(col("id").as("dst"), col("lbl").as("nl")), "dst")
         .groupBy(col("src"), col("nl"))
         .agg(count(lit(1)).as("cnt"))
         // argmax by (count desc, label asc): struct max takes the largest
@@ -46,14 +45,6 @@ object LabelProp {
         .groupBy(col("src").as("id"))
         .agg(max(struct(col("cnt"), (-col("nl")).as("neg"), col("nl"))).as("mm"))
         .select(col("id"), col("mm.nl").as("lbl"))
-      // labels is consumed exactly ONCE per round (the next round's join),
-      // so the chain is linear — materialize on a 2-round stride (never
-      // the last round: the caller's one action computes it) instead of
-      // every round: each skipped localCheckpoint is a full job
-      // round-trip saved, with lineage depth still constant-bounded
-      // (PageRank's stride discipline, guide §1.2)
-      if (i % 2 == 0 && i != iters) labels = labels.localCheckpoint()
     }
-    labels
   }
 }

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Fixpoint
+
 /** Distributed PageRank over an edge list (SURVEY.md §2.9 X4-adjacent:
   * link-graph centrality is the standard quality prior of web-corpus
   * pipelines — Common Crawl ranks hosts exactly this way before sampling
@@ -23,10 +25,10 @@ import org.apache.spark.sql.functions._
   * node-sized (id, rank) table against it (the cached partitioning and
   * ordering are reused, so the edge-sized side never re-exchanges or
   * re-sorts) and runs one aggregation shuffle on the destination id, both
-  * map-side combinable. `localCheckpoint` per round keeps the plan
-  * constant-depth (same rationale as Dedup.dedupGroups); the driver never
-  * sees a row. Overflow headroom: a single node's incoming contribution
-  * is bounded by TOTAL mass n·unit, so the damping multiply
+  * map-side combinable. [[graft.ops.Fixpoint]] keeps the plan
+  * constant-depth; the driver never sees a row. Overflow headroom: a
+  * single node's incoming contribution is bounded by TOTAL mass n·unit,
+  * so the damping multiply
   * `damping · contrib` must stay below 2^63 — on hub-heavy graphs
   * (a star pulls nearly all mass into one node) that binds at n ≈ 10^6.5
   * nodes at the classic 1e6 micro-unit. The unit is therefore DERIVED
@@ -96,9 +98,8 @@ object PageRank {
     // consumers here — cache it so it runs once, released as soon as the
     // static per-edge table below is materialized
     val e = edges.cache()
-    // eager checkpoint: deg anchors every iteration's node-universe left
-    // join AND the rank init — left lazy, each of those re-runs the whole
-    // upstream edge-build lineage per iteration
+    // eager checkpoint: deg anchors the static table's self rows AND the
+    // rank init — left lazy, each re-runs the whole upstream edge build
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).localCheckpoint()
     // node count for the unit derivation: deg is materialized, so this is
     // a metadata-cheap job, not a second edge scan
@@ -107,45 +108,44 @@ object PageRank {
     val base = unit - damping
     require(damping * 100L / 85L == unit,
       s"unit=$unit does not represent damping 0.85 exactly (power of ten >= $MinUnit)")
-    // static denominators: the per-edge (src, dst, outdeg) table is fixed
-    // across iterations — join it once, cache CLUSTERED AND SORTED on src
-    // so every iteration's sort-merge join reuses the cached partitioning
-    // and ordering (InMemoryTableScan preserves both): the edge-sized side
-    // never re-exchanges or re-sorts, only the node-sized rank table moves
-    val pre = e.join(deg, "src")
-      .repartition(col("src")).sortWithinPartitions("src").cache()
-    try {
+    val pre = massTable(e, deg)
+    Fixpoint.iterate(iters, pre, e) {
       pre.count()
       e.unpersist()
-      var ranks = deg.select(col("src").as("id"), lit(unit).as("r")).localCheckpoint()
-      for (i <- 1 to iters) {
-        // merge hint: ranks is node-sized — at web-graph scale it can never
-        // broadcast, so SMJ over the pre-clustered cache IS the production
-        // plan; pinning it also stops AQE from materializing a throwaway
-        // exchange of the edge-sized side before flipping strategies
-        val contribs = pre.hint("merge").join(ranks, pre("src") === ranks("id"))
-          .groupBy(col("dst")).agg(sum(expr("r div outdeg")).as("contrib"))
-        // left join back to the node universe: a node receiving no mass
-        // this round still keeps its base rank (and its out-contributions
-        // next round) instead of silently dropping out of the table
-        ranks = deg.select(col("src").as("id"))
-          .join(contribs.withColumnRenamed("dst", "id"), Seq("id"), "left")
-          .select(col("id"),
-            (lit(base) +
-              expr(s"($damping * coalesce(contrib, cast(0 as bigint))) div $unit"))
-              .as("r"))
-        // materialize on a 4-round stride (and always the last): ranks is
-        // consumed exactly once per round, so the chain is linear and a
-        // 4-round lineage (four join+agg layers over the cached pre) is
-        // still constant-bounded — each skipped eager localCheckpoint is
-        // a full job round-trip saved (guide §1.2; was a 2-round stride —
-        // the i==iters checkpoint is load-bearing: pre.unpersist() runs
-        // before the caller's action, so the result must not depend on
-        // the cache)
-        if (i % 4 == 0 || i == iters) ranks = ranks.localCheckpoint()
-      }
-      ranks.withColumn("unit", lit(unit))
-    } finally { pre.unpersist(); e.unpersist() } // both idempotent; e is
-    // normally already released right after pre materializes
+      deg.select(col("src").as("id"), lit(unit).as("r")).localCheckpoint()
+    } { (ranks, _) =>
+      contribs(pre, ranks)
+        .select(col("id"), (lit(base) + expr(s"($damping * contrib) div $unit")).as("r"))
+    }.withColumn("unit", lit(unit))
   }
+
+  /** The static per-edge table of a rank loop over `e` (src, dst) with
+    * out-degrees `deg` (src, outdeg): (src, dst, outdeg, live), joined
+    * once and cached CLUSTERED AND SORTED on src so every round's
+    * sort-merge join reuses the cached partitioning and ordering
+    * (InMemoryTableScan preserves both) — the edge-sized side never
+    * re-exchanges or re-sorts, only the node-sized rank table moves.
+    * Destinations are restricted to ranked nodes (the srcs of `deg`) and
+    * every ranked node gets one zero-mass (live = 0) self row, so each
+    * round's aggregate emits exactly the ranked nodes: a node receiving
+    * no mass keeps its base rank without a join back to the node
+    * universe. Unmaterialized; the caller fills and releases the cache.
+    */
+  private[graft] def massTable(e: DataFrame, deg: DataFrame): DataFrame =
+    e.join(deg, "src")
+      .join(deg.select(col("src").as("dst")), Seq("dst"), "left_semi")
+      .select(col("src"), col("dst"), col("outdeg"), lit(1L).as("live"))
+      .union(deg.select(col("src"), col("src").as("dst"), col("outdeg"), lit(0L).as("live")))
+      .repartition(col("src")).sortWithinPartitions("src").cache()
+
+  /** One round's incoming mass (id, contrib) for every ranked node of
+    * [[massTable]] `pre`, from the node-sized (id, r) table `ranks`. */
+  private[graft] def contribs(pre: DataFrame, ranks: DataFrame): DataFrame =
+    // merge hint: ranks is node-sized — at web-graph scale it can never
+    // broadcast, so SMJ over the pre-clustered cache IS the production
+    // plan; pinning it also stops AQE from materializing a throwaway
+    // exchange of the edge-sized side before flipping strategies
+    pre.hint("merge").join(ranks, pre("src") === ranks("id"))
+      .groupBy(col("dst").as("id"))
+      .agg(sum(expr("(r div outdeg) * live")).as("contrib"))
 }

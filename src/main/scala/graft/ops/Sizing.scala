@@ -6,11 +6,12 @@ import org.apache.spark.sql.DataFrame
   * loop tables (guide §2.1: size partitions to the data, not to a static
   * `spark.sql.shuffle.partitions`).
   *
-  * The iterative families (BFS / Bellman-Ford / PageRank / PPR / CC) cache
-  * an edge-sized table CLUSTERED on the per-round join key so each round
-  * moves only the node-sized frame. The cluster step is an explicit
-  * `repartition(col)`, which inherits `spark.sql.shuffle.partitions` — and
-  * a CACHED plan's output partitioning is pinned (AQE may not coalesce it:
+  * The iterative families cache a loop table CLUSTERED on the per-round
+  * join key so each round moves only the node-sized frame: the edge-sized
+  * tables of BFS, Bellman-Ford, PageRank and PPR (materialized per
+  * [[Fixpoint]]), and the node-sized adjacency of connected components.
+  * The cluster step is an explicit `repartition(col)`, which inherits
+  * `spark.sql.shuffle.partitions` — and a CACHED plan's output partitioning is pinned (AQE may not coalesce it:
   * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is false by
   * default), so a node-sized loop table at sf0.1 carries 32 near-empty
   * partitions through EVERY round's join, sort and aggregate — measured as

@@ -1,5 +1,9 @@
 package graft.pipeline
 
+import scala.io.Source
+
+import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,7 +43,11 @@ object Npl {
     * table per category row, columns
     * (Category, Quarter, % to Total Loans, Gross NPL, Total Loan).
     */
-  def nplTransform(s: SparkSession, path: String, nCols: Int = 13): DataFrame = {
+  def nplTransform(s: SparkSession, path: String): DataFrame =
+    nplTransform(s, path, nplWidth(s, path))
+
+  /** [[nplTransform]] at a known label + measure width `nCols`. */
+  def nplTransform(s: SparkSession, path: String, nCols: Int): DataFrame = {
     val raw = rawWithIdx(s, path, nCols)
     // rows 4-5 are the two header levels (src:125-127) — driver-side, 2 rows
     val hdr = raw.filter(col("_idx").isin(4, 5)).orderBy("_idx")
@@ -78,6 +86,24 @@ object Npl {
       .withColumn("Gross NPL", Scalar.deComma(col("NPL Outstanding")))
       .drop("NPL Outstanding")
       .withColumn("Total Loan", col("Gross NPL") / col("% to Total Loans"))
+  }
+
+  /** The export's label + measure width: through the last non-empty cell
+    * of its two header rows (rows 4-5) — one label column plus three
+    * measures per quarter, however many quarters the export spans. Read
+    * on the driver, no Spark job; each of the six preamble rows must be
+    * one line.
+    */
+  private def nplWidth(s: SparkSession, path: String): Int = {
+    val p = new Path(path)
+    val src = Source.fromInputStream(
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).open(p), "UTF-8")
+    val hdr = try src.getLines().slice(4, 6).toVector finally src.close()
+    require(hdr.size == 2, s"$path: fewer than 6 rows, no NPL header")
+    val settings = new CsvParserSettings()
+    settings.setMaxColumns(20480) // Spark's own CSV limit
+    val parser = new CsvParser(settings)
+    hdr.map(l => parser.parseLine(l).lastIndexWhere(c => c != null && c.trim.nonEmpty) + 1).max
   }
 
   /** Per-segment split by substring match (src:180-189). */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
+import graft.ops.Fixpoint
 
 /** Similarity search over embedding columns (SURVEY.md §2.9 X2):
   * brute-force cosine top-k as the exact baseline, sign-random-projection
@@ -704,20 +705,15 @@ object Similarity {
       pts.join(assigned.select("vec_id", "cluster"), "vec_id")
         .groupBy("cluster", "pos")
         .agg(expr("sum(e) div count(1)").as("c"))
-    var cents = pts.join(broadcast(seeds), "vec_id")
-      .select(col("cluster"), col("pos"), col("e").as("c"))
-    // Lloyd chain is LINEAR (each cents feeds exactly one assign, each
-    // assign exactly one update) and iters is caller-bounded at 2
-    // everywhere, so no mid-loop materialization: the per-iteration
-    // localCheckpoint this replaces was one full job round-trip per
-    // round (guide §1.2) — the assign's broadcast(cents) builds the
-    // whole upstream as a broadcast subtree inside ONE query execution.
-    // Only the RETURNED frames are checkpointed: both outlive
-    // pts.unpersist(), and both are consumed by callers (cents feeds
-    // IVF probe paths) — an unmaterialized return would recompute the
-    // entire chain against the by-then-uncached point table.
-    for (_ <- 1 to iters) cents = update(assign(cents))
-    cents = cents.localCheckpoint()
+    // only the RETURNED frames are materialized here: both are consumed by
+    // callers (cents feeds IVF probe paths) and outlive the caller's
+    // pts.unpersist() — an unmaterialized return would recompute the
+    // entire chain against the by-then-uncached point table. The loop
+    // hands Fixpoint no caches: `pts` belongs to the caller.
+    val cents = Fixpoint.iterate(iters) {
+      pts.join(broadcast(seeds), "vec_id")
+        .select(col("cluster"), col("pos"), col("e").as("c"))
+    } { (cents, _) => update(assign(cents)) }.localCheckpoint()
     (assign(cents).localCheckpoint(), cents)
   }
 
@@ -826,16 +822,13 @@ object Similarity {
         pts.join(assigned.select("vec_id", "sub", "cluster"), Seq("vec_id", "sub"))
           .groupBy("sub", "cluster", "spos")
           .agg(expr("sum(e) div count(1)").as("c"))
-      var cb = pts.join(broadcast(seeds), "vec_id")
-        .select(col("sub"), col("cluster"), col("spos"), col("e").as("c"))
-      // same unmaterialized linear Lloyd chain as kmeansFixedFull (round
-      // 12): iters is caller-bounded at 2, each codebook feeds exactly one
-      // assign and each assign one update, so the mid-loop checkpoints
-      // were one job round-trip each of pure overhead; only the RETURNED
-      // frames materialize (they outlive pts.unpersist and are consumed
-      // by callers)
-      for (_ <- 1 to iters) cb = update(assign(cb))
-      cb = cb.localCheckpoint()
+      // only the RETURNED frames materialize (they outlive pts.unpersist
+      // and are consumed by callers); `assign` must run before the
+      // release, so pts is not handed to Fixpoint
+      val cb = Fixpoint.iterate(iters) {
+        pts.join(broadcast(seeds), "vec_id")
+          .select(col("sub"), col("cluster"), col("spos"), col("e").as("c"))
+      } { (cb, _) => update(assign(cb)) }.localCheckpoint()
       (assign(cb).localCheckpoint(), cb)
     } finally pts.unpersist()
   }

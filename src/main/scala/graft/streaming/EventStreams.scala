@@ -232,27 +232,11 @@ object EventStreams {
                       stateParts: Int = 8): DataFrame = {
     s.catalog.dropTempView(name) // idempotent under re-runs (bench passes twice)
     withStatePartitions(s, stateParts) {
-      val t0 = System.nanoTime()
       val q = df.writeStream.outputMode(outputMode)
         .format("memory").queryName(name).start()
-      val t1 = System.nanoTime()
       // ALWAYS stop: a failure mid-drive would otherwise leave the named
       // query active and every later start() under this name would fail.
-      val t2 = try { q.processAllAvailable(); System.nanoTime() }
-      finally q.stop()
-      // lifecycle attribution for the q_stream_* fixed floor (see
-      // plans/r13/stream_floor.md): start / per-batch durations. AFTER
-      // the stop (recentProgress survives it) so a debug-path exception
-      // can never skip the stop above.
-      if (sys.env.contains("GRAFT_STREAM_DEBUG")) {
-        val batches = q.recentProgress.toSeq.map(p => (p.batchId,
-          p.durationMs.getOrDefault("triggerExecution", -1L),
-          p.durationMs.getOrDefault("addBatch", -1L),
-          p.numInputRows)).mkString("; ")
-        System.err.println(
-          f"[stream] $name start=${(t1 - t0) / 1e9}%.2fs " +
-            f"drive=${(t2 - t1) / 1e9}%.2fs batches(id,trigger_ms,addBatch_ms,rows)=$batches")
-      }
+      try q.processAllAvailable() finally q.stop()
     }
     s.table(name)
   }

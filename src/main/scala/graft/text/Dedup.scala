@@ -1220,21 +1220,13 @@ object Dedup {
         // so stopping is exact — labels only shrink, and a barrier whose
         // FIRST round already converged observes zero too.
         val obs = org.apache.spark.sql.Observation()
-        val pre = round(round(labels).select("id", "group_id"))
+        labels = round(round(labels).select("id", "group_id"))
           .observe(obs, count(when(col("group_id") =!= col("old"), lit(1))).as("changed"))
           .select("id", "group_id")
-        val next = pre.localCheckpoint()
-        // the executed (final adaptive) barrier plan, for audits — the
-        // checkpoint action above ran pre's own QueryExecution
-        if (iter == 0 && sys.env.contains("GRAFT_CC_PLAN"))
-          System.err.println(pre.queryExecution.executedPlan.toString)
-        val changed = obs.get("changed").asInstanceOf[Long]
-        labels = next
-        converged = changed == 0
+          .localCheckpoint()
+        converged = obs.get("changed").asInstanceOf[Long] == 0
         iter += 2
       }
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] dedupGroups converged=$converged iters=$iter")
       // Silent non-convergence would return plausible-but-wrong group ids
       // (far ends of a long chain keep intermediate labels) — escalate to
       // the star algorithm, whose round count is O(log n) regardless of
@@ -1340,14 +1332,16 @@ object Dedup {
     * distance with bit_count(xor).
     */
   private def simhashPairsFrom(sigs: DataFrame, sigBits: Int, maxHamming: Int): DataFrame = {
-    require(maxHamming <= 3, "4 bands only guarantee distance <= 3")
-    val bandBits = sigBits / 4
+    val numBands = 4
+    require(maxHamming < numBands,
+      s"$numBands bands only guarantee distance <= ${numBands - 1}")
+    val bandBits = sigBits / numBands
     val mask = (1L << bandBits) - 1
     // cached: the per-bit-sum signature aggregation is the expensive
     // subtree; the self-join must not compute it twice. Released after the
     // (eager) pair join — the small pair list is what survives the call.
     val banded = sigs.select(col("doc_id"), col("sig"),
-        posexplode(array((0 until 4).map(j => expr(s"(sig >> ${bandBits * j}) & $mask")): _*)))
+        posexplode(array((0 until numBands).map(j => expr(s"(sig >> ${bandBits * j}) & $mask")): _*)))
       .toDF("doc_id", "sig", "band", "bits").cache()
     try {
       banded.count()
@@ -1361,7 +1355,7 @@ object Dedup {
       // once (banded has exactly one row per (doc, band)), so
       // first-shared-band emission is exactly once per candidate pair —
       // the same pair set distinct() produced.
-      val firstShared = (0 until 3).map { j =>
+      val firstShared = (0 until numBands - 1).map { j =>
         col("a.band") <= j ||
           expr(s"((a.sig >> ${bandBits * j}) & $mask) != " +
             s"((b.sig >> ${bandBits * j}) & $mask)")

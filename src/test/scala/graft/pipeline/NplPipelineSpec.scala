@@ -70,6 +70,51 @@ class NplPipelineSpec extends AnyFunSuite with SparkSuite {
     assert(qs.toSeq == Seq("2013-Q1", "2013-Q2", "2013-Q3", "2013-Q4"))
   }
 
+  test("Runner.buildMarts reads every quarter of a wider export (5 quarters)") {
+    // the fixture export plus a fifth quarter (2014-Q1): each row gains
+    // three cells, the body rows their Gross NPL, share and ratio
+    val fifth = Map("  Housing loans" -> "\"36,000\",12.4,2.70",
+      "  Automobile loans" -> "\"10,300\",3.7,2.00",
+      "  Credit Card loans" -> "\"4,000\",1.5,2.62")
+    val src = scala.io.Source.fromFile(fixture("npl_raw_mini.csv"))
+    val lines = try src.getLines().toVector finally src.close()
+    val wide = lines.zipWithIndex.map { case (l, i) =>
+      val cells =
+        if (i == 4) "Q1/2014 r,,"
+        else if (i == 5) "NPL Outstanding,% to NPLs,% to Total Loans"
+        else if (i < 4 || l.startsWith("Source") || l.startsWith("Remark")) ",,"
+        else fifth.getOrElse(l.takeWhile(_ != ','), "\"1,000\",1.0,1.00")
+      s"$l,$cells"
+    }
+    val dir = java.nio.file.Files.createTempDirectory("npl5q")
+    val npl = dir.resolve("npl_raw.csv")
+    java.nio.file.Files.write(npl, wide.mkString("", "\n", "\n").getBytes("UTF-8"))
+    try {
+      val marts = Runner.buildMarts(spark, Runner.Inputs(
+        nplCsv = npl.toString,
+        flowrateGrossNewJson = fixture("flowrate_gross_new_npl.json"),
+        flowrateGrossJson = fixture("flowrate_gross_npl.json"),
+        flowratePctJson = fixture("flowrate_pct_npl.json"),
+        gdpPath = fixture("gdp_raw_mini.csv"), gdpIsXlsx = false,
+        inflationCsv = fixture("inflation_mini.csv"),
+        mrrPagesJson = Seq(fixture("mrr_api_2013_01.json"), fixture("mrr_api_2013_02.json")),
+        minpayCsv = fixture("minpay.csv"),
+        shockCsv = fixture("shock.csv")))
+      for ((mart, gross, pct) <- Seq(("housing", 36000L, 0.027),
+          ("automobile", 10300L, 0.02), ("credit_card", 4000L, 0.0262))) {
+        val q5 = marts(mart).filter($"Quarter" === "2014-Q1").collect()
+        assert(q5.length == 1, s"$mart lost 2014-Q1")
+        val r = q5.head
+        assert(r.getAs[Long]("Gross NPL") == gross, mart)
+        assert(approx(r.getAs[Double]("% to Total Loans"), pct), mart)
+        assert(approx(r.getAs[Double]("Total Loan"), gross / pct, tol = 1e-2), mart)
+      }
+    } finally {
+      java.nio.file.Files.delete(npl)
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("B2 flowrate: 2013-Q1 golden 0.004217 (notebook cell 52)") {
     val f = Npl.flowrateTransform(spark,
       fixture("flowrate_gross_new_npl.json"),

@@ -227,21 +227,26 @@ object EngineProps extends Properties("graft") {
     }
 
   property("pagerank equals a sequential fixed-point interpreter") =
-    forAll(graphGen) { case (_, und) =>
+    forAll(graphGen.suchThat(_._2.nonEmpty), Gen.oneOf(false, true), Gen.oneOf(1, 4, 32)) {
+      case ((_, und), directed, parts) =>
       import spark.implicits._
-      // symmetrize: the distributed loop and the interpreter both see the
-      // directed edge list, so asymmetric graphs are covered by the
-      // PageRankSpec fixtures; random graphs exercise shapes at volume
-      val edges = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-      edges.isEmpty || {
-        val out = graft.graph.PageRank.ranks(edges.toDF("src", "dst"), iters = 3)
-          .select("id", "r", "unit").as[(Long, Long, Long)].collect()
-        // graphs this small derive the classic 1e6 unit, which is what the
-        // sequential interpreter bakes in
-        val got = out.map { case (id, r, _) => id -> r }.toMap
+      // symmetric: every node ranked, every edge lands on a ranked node;
+      // directed (each edge low -> high id): the highest ids are sink-only
+      // (unranked destinations) and the lowest have no in-edges (ranked
+      // nodes that receive no mass)
+      val edges = if (directed) und else und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      val key = "spark.sql.shuffle.partitions"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, parts.toString)
+      val out = try graft.graph.PageRank.ranks(edges.toDF("src", "dst"), iters = 3)
+        .select("id", "r", "unit").as[(Long, Long, Long)].collect()
+      finally spark.conf.set(key, prev)
+      // graphs this small derive the classic 1e6 unit, which is what the
+      // sequential interpreter bakes in
+      val got = out.map { case (id, r, _) => id -> r }.toMap
+      out.length == got.size &&
         out.forall(_._3 == graft.graph.PageRank.Unit) &&
-          got == pagerankRef(edges, 3)
-      }
+        got == pagerankRef(edges, 3)
     }
 
   property("prefixSum equals the sequential exclusive cumsum for any weights") =
