@@ -44,23 +44,6 @@ object Normalize {
       .schema(schema).csv(path)
   }
 
-  /** Promote row `headerIdx` (1-based ordinal under `order`) to column names
-    * and drop it plus everything above (reference header promotion,
-    * src/ETL-NPL-Pipeline.py:368-371). Driver-side collect of ONE row — the
-    * sanctioned exception to no-collect (BASELINE.md).
-    */
-  def promoteHeader(df: DataFrame, order: Seq[Column], headerIdx: Int): DataFrame = {
-    val withIdx = withOrdinal(df, order: _*)
-    val header = withIdx.filter(col("_idx") === headerIdx).drop("_idx").head()
-    val names = header.toSeq.map(v => Option(v).map(_.toString.trim).getOrElse(""))
-    val body = withIdx.filter(col("_idx") > headerIdx)
-    val dataCols = body.columns.filterNot(_ == "_idx")
-    val renamed = dataCols.zip(names).foldLeft(body) { case (d, (old, nw)) =>
-      if (nw.nonEmpty) d.withColumnRenamed(old, nw) else d
-    }
-    renamed
-  }
-
   /** Schema'd CSV scan that QUARANTINES malformed rows instead of silently
     * nulling them: a row that fails type conversion arrives with its raw
     * line in `_corrupt_record` (and nulls elsewhere). The 100 TB ingest

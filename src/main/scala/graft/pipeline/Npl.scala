@@ -2,10 +2,12 @@ package graft.pipeline
 
 import scala.io.Source
 
-import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVExprUtils, CSVOptions}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ingest.Normalize
 import graft.ops.{Ordered, Reshape, Scalar}
@@ -41,18 +43,41 @@ object Npl {
     * Gross-NPL export with merged-cell two-level headers, revision markers,
     * comma-formatted numerics and Source:/Remark: trailer rows -> one clean
     * table per category row, columns
-    * (Category, Quarter, % to Total Loans, Gross NPL, Total Loan).
+    * (Category, Quarter, % to Total Loans, Gross NPL, Total Loan). The
+    * label + measure width runs through the last non-empty cell of the two
+    * header rows: one label column plus three measures per quarter, however
+    * many quarters the export spans.
     */
-  def nplTransform(s: SparkSession, path: String): DataFrame =
-    nplTransform(s, path, nplWidth(s, path))
+  def nplTransform(s: SparkSession, path: String): DataFrame = {
+    val hdr = nplHeader(s, path)
+    nplFrom(s, path, hdr, hdr.map(_.lastIndexWhere(_.trim.nonEmpty) + 1).max)
+  }
 
   /** [[nplTransform]] at a known label + measure width `nCols`. */
-  def nplTransform(s: SparkSession, path: String, nCols: Int): DataFrame = {
+  def nplTransform(s: SparkSession, path: String, nCols: Int): DataFrame =
+    nplFrom(s, path, nplHeader(s, path), nCols)
+
+  /** The export's two header rows (rows 4-5, src:125-127), read on the
+    * driver through Spark's own CSV settings and blank-line rule, so cells
+    * and row numbers are those of the Spark scan: no Spark job. Each of the
+    * six preamble rows must be one line; an empty cell reads as "".
+    */
+  private def nplHeader(s: SparkSession, path: String): Seq[Array[String]] = {
+    val opts = new CSVOptions(Map.empty[String, String], false, "UTC")
+    val p = new Path(path)
+    val src = Source.fromInputStream(
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).open(p), "UTF-8")
+    val hdr = try CSVExprUtils.filterCommentAndEmpty(src.getLines(), opts).slice(4, 6).toVector
+      finally src.close()
+    require(hdr.size == 2, s"$path: fewer than 6 rows, no NPL header")
+    val parser = new CsvParser(opts.asParserSettings)
+    hdr.map(l => parser.parseLine(l).map(c => Option(c).getOrElse("")))
+  }
+
+  private def nplFrom(s: SparkSession, path: String, hdr: Seq[Array[String]],
+                      nCols: Int): DataFrame = {
     val raw = rawWithIdx(s, path, nCols)
-    // rows 4-5 are the two header levels (src:125-127) — driver-side, 2 rows
-    val hdr = raw.filter(col("_idx").isin(4, 5)).orderBy("_idx")
-      .drop("_idx").collect()
-    val cells = (r: Int) => (1 until nCols).map(c => Option(hdr(r).getString(c)).getOrElse(""))
+    val cells = (r: Int) => (1 until nCols).map(c => hdr(r).lift(c).getOrElse(""))
     // horizontal ffill of merged quarter labels (src:131), strip revision
     // markers + trim (src:134), reformat Qx/YYYY -> YYYY-Qx (src:63-67,137)
     val quarters = cells(0).scanLeft("") { (prev, c) =>
@@ -88,51 +113,83 @@ object Npl {
       .withColumn("Total Loan", col("Gross NPL") / col("% to Total Loans"))
   }
 
-  /** The export's label + measure width: through the last non-empty cell
-    * of its two header rows (rows 4-5) — one label column plus three
-    * measures per quarter, however many quarters the export spans. Read
-    * on the driver, no Spark job; each of the six preamble rows must be
-    * one line.
-    */
-  private def nplWidth(s: SparkSession, path: String): Int = {
-    val p = new Path(path)
-    val src = Source.fromInputStream(
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).open(p), "UTF-8")
-    val hdr = try src.getLines().slice(4, 6).toVector finally src.close()
-    require(hdr.size == 2, s"$path: fewer than 6 rows, no NPL header")
-    val settings = new CsvParserSettings()
-    settings.setMaxColumns(20480) // Spark's own CSV limit
-    val parser = new CsvParser(settings)
-    hdr.map(l => parser.parseLine(l).lastIndexWhere(c => c != null && c.trim.nonEmpty) + 1).max
-  }
-
   /** Per-segment split by substring match (src:180-189). */
   def nplSegments(all: DataFrame): Map[String, DataFrame] =
     Seq("Housing", "Automobile", "Credit Card").map { seg =>
       seg -> all.filter(col("Category").contains(seg)).drop("Category")
     }.toMap
 
+  /** BOT API payloads (pre-staged JSON files), read as one scan under a
+    * declared schema, no inference job. Every leaf is a STRING: the
+    * payloads quote their values, and Spark's JSON reader keeps an unquoted
+    * scalar's text under StringType, so the casts downstream see the same
+    * strings. A file that does not parse fails the action naming the file;
+    * an empty one, or one that is not a JSON object, fails here, naming it.
+    */
+  private def apiPages(s: SparkSession, schema: String, paths: Seq[String]): DataFrame = {
+    val pages = s.read.option("multiLine", "true").option("mode", "FAILFAST")
+      .schema(StructType.fromDDL(schema)).json(paths: _*)
+    paths.foreach(requireObject(s, _))
+    pages
+  }
+
+  /** Fails, naming `path`, unless the file's first non-blank byte opens a
+    * JSON object: the multiLine reader yields no rows, silently, for an
+    * empty or blank file (its file index skips a zero-byte one) and for a
+    * top-level `[]`. Reads a few bytes on the driver, no Spark job.
+    */
+  private def requireObject(s: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    val in = p.getFileSystem(s.sparkContext.hadoopConfiguration).open(p)
+    val first = try Iterator.continually(in.read()).find(b => b < 0 || !" \t\r\n".contains(b.toChar))
+      finally in.close()
+    require(first.contains('{'.toInt), s"$path: empty or not a JSON object")
+  }
+
+  /** The array `c` of an API payload, exploded; a payload without it (an
+    * API error body, say) fails the action naming the file, where a plain
+    * `explode` of NULL would drop the page's rows.
+    */
+  private def explodeRequired(c: String): Column =
+    explode(coalesce(col(c), raise_error(concat(lit(s"no $c in "), input_file_name()))))
+
   /** BOT observations payload -> (period_start, value) rows
-    * (`observations_bot` JSON path result.series[0].observations, src:106).
+    * (`observations_bot` JSON path result.series[0].observations, src:106),
+    * read by [[apiPages]]; a payload without `result.series`, or a series
+    * without `observations`, fails the action naming the file.
     */
   def observations(s: SparkSession, path: String): DataFrame =
-    s.read.option("multiLine", "true").json(path)
-      .select(explode(col("result.series")).as("ser"))
-      .select(explode(col("ser.observations")).as("obs"))
+    apiPages(s, "result STRUCT<series: ARRAY<STRUCT<" +
+        "observations: ARRAY<STRUCT<period_start: STRING, value: STRING>>>>>", Seq(path))
+      .select(explodeRequired("result.series").as("ser"))
+      .select(explodeRequired("ser.observations").as("obs"))
       .select(col("obs.period_start").as("period_start"), col("obs.value").as("value"))
 
-  /** B2 / §3.2 flowrate (src:200-261): three series, two chained inner
-    * joins, derived Total Loan and Flowrate Ratio.
+  /** B2 / §3.2 flowrate (src:200-261): three series, derived Total Loan and
+    * Flowrate Ratio. The reference inner-joins the series on period_start;
+    * here one aggregate over their union keeps a period only when all three
+    * series have it, which is the inner-join result, with no join and so no
+    * broadcast table. A series that repeats a period fails the action,
+    * naming the period (the join would repeat the row).
     */
   def flowrateTransform(s: SparkSession, grossNewPath: String, grossPath: String,
                         pctPath: String): DataFrame = {
-    val gn = observations(s, grossNewPath)
-      .select(col("period_start"), col("value").cast("double").as("Gross New NPL"))
-    val g = observations(s, grossPath)
-      .select(col("period_start"), col("value").cast("double").as("Gross NPL"))
-    val p = observations(s, pctPath)
-      .select(col("period_start"), col("value").cast("double").as("pct_npl"))
-    gn.join(g, Seq("period_start"), "inner").join(p, Seq("period_start"), "inner")
+    val series = Seq(grossNewPath -> "Gross New NPL", grossPath -> "Gross NPL",
+      pctPath -> "pct_npl")
+    // an inner join never matches a NULL period
+    val all = series.map { case (path, name) =>
+      observations(s, path).filter(col("period_start").isNotNull)
+        .select(col("period_start"), lit(name).as("series"), col("value").cast("double").as("value"))
+    }.reduce(_.union(_))
+    val perSeries = series.flatMap { case (_, name) =>
+      val mine = col("series") === name
+      Seq(max(when(mine, col("value"))).as(name), count(when(mine, 1)).as(s"n $name"))
+    }
+    val n = series.map { case (_, name) => col(s"n $name") }
+    all.groupBy("period_start").agg(perSeries.head, perSeries.tail: _*)
+      .filter(when(greatest(n: _*) > 1, raise_error(concat(
+          lit("flowrate: period "), col("period_start"), lit(" repeats"))))
+        .otherwise(least(n: _*) > 0))
       .withColumn("Total Loan", col("Gross NPL") / (col("pct_npl") / 100))
       .withColumn("Flowrate Ratio", col("Gross New NPL") / col("Total Loan"))
       .select(trim(col("period_start")).as("Quarter"), col("Flowrate Ratio"))
@@ -168,45 +225,40 @@ object Npl {
   /** B4 inflation_transformation (src:336-355): d/M/yy parse, percent ->
     * ratio, monthly -> quarterly mean.
     */
-  def inflationTransform(s: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.types.StructType
+  def inflationTransform(s: SparkSession, path: String): DataFrame =
     Normalize.readCsv(s, path,
         StructType.fromDDL("`Time` STRING, `Inflation Rate` STRING"))
       .select(Scalar.toQuarter(to_date(col("Time"), "d/M/yy")).as("Quarter"),
         Scalar.pctToRatio(col("Inflation Rate")).as("rate"))
       .groupBy("Quarter").agg(avg(col("rate")).as("Inflation Rate"))
-  }
 
-  /** BOT avg_loan_rate page -> data_detail rows (src:326 json_normalize). */
-  def mrrPage(s: SparkSession, path: String): DataFrame =
-    s.read.option("multiLine", "true").json(path)
-      .select(explode(col("result.data.data_detail")).as("d"))
-      .select(col("d.period").as("period"), col("d.name_eng").as("name_eng"),
-        col("d.mrr").as("mrr"))
-
-  /** B5 interest_bot + mrr_transformation (src:271-327,420-447): union of
-    * month pages (O3), foreign-branch filter (src:426), daily -> quarterly
-    * mean of mrr/100.
+  /** B5 interest_bot + mrr_transformation (src:271-327,420-447): the BOT
+    * avg_loan_rate month pages (O3) as one [[apiPages]] scan, data_detail
+    * rows (src:326 json_normalize), foreign-branch filter (src:426), daily
+    * -> quarterly mean of mrr/100. A page without `result.data.data_detail`
+    * fails the action naming the file. Building the frame runs no Spark job
+    * for up to `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+    * pages; past it, Spark lists the pages in one job.
     */
-  def mrrTransform(s: SparkSession, paths: Seq[String]): DataFrame =
-    paths.map(mrrPage(s, _)).reduce(_.unionByName(_))
-      .filter(col("name_eng") =!= "Average of Foreign Bank Branches")
-      .select(Scalar.toQuarter(to_date(col("period"), "yyyy-MM-dd")).as("Quarter"),
-        Scalar.pctToRatio(col("mrr")).as("mrr_ratio"))
+  def mrrTransform(s: SparkSession, paths: Seq[String]): DataFrame = {
+    require(paths.nonEmpty, "mrrTransform: no MRR pages")
+    apiPages(s, "result STRUCT<data: STRUCT<data_detail: ARRAY<STRUCT<" +
+        "period: STRING, name_eng: STRING, mrr: STRING>>>>", paths)
+      .select(explodeRequired("result.data.data_detail").as("d"))
+      .filter(col("d.name_eng") =!= "Average of Foreign Bank Branches")
+      .select(Scalar.toQuarter(to_date(col("d.period"), "yyyy-MM-dd")).as("Quarter"),
+        Scalar.pctToRatio(col("d.mrr")).as("mrr_ratio"))
       .groupBy("Quarter").agg(avg(col("mrr_ratio")).as("MRR"))
+  }
 
   /** B6 passthrough series (src:560,586,673,682). */
-  def minpayTransform(s: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.types.StructType
+  def minpayTransform(s: SparkSession, path: String): DataFrame =
     Normalize.readCsv(s, path, StructType.fromDDL("`Quarter` STRING, `Min Payment` STRING"))
       .select(col("Quarter"), Scalar.pctToRatio(col("Min Payment")).as("Min Payment"))
-  }
 
-  def shockLoad(s: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.types.StructType
+  def shockLoad(s: SparkSession, path: String): DataFrame =
     Normalize.readCsv(s, path,
       StructType.fromDDL("`Quarter` STRING, `Macro Shock Index` BIGINT"))
-  }
 
   /** B7 / §3.3 mart assembly (src:706-728): common macro panel + the three
     * segment marts, all full-outer on the coalesced Quarter key.

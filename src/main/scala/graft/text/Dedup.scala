@@ -711,33 +711,6 @@ object Dedup {
       .toDF("doc_id", "band", "bh")
   }
 
-  /** Band-count ablation sharing ONE tokenization and ONE signature pass
-    * across every swept point (doc_id pairs + exact Jaccard, tagged with
-    * the band count that surfaced them). Equivalent to calling
-    * [[minhashLshPairsPortable]] per point — same hashes, same band keys,
-    * same verification — but the corpus is shingled and min-hashed once:
-    * at 100 TB a sweep that re-signs per point costs bandCounts.size
-    * corpus scans for what is per-point a doc-count-sized re-fold.
-    */
-  def minhashLshSweepPortable(docs: DataFrame, n: Int, numHashes: Int,
-                              bandCounts: Seq[Int],
-                              verifyThreshold: Double): DataFrame = {
-    val sh = shingleSet(docs, n).cache()
-    try {
-      sh.count()
-      // the sets overlap heavily across band points (finer banding is a
-      // superset in practice), so the EXPENSIVE exact-Jaccard verification
-      // runs ONCE over the distinct union and each point's verdicts come
-      // back by pair join, not by re-scanning the shingle table per point
-      val tagged = bandSweepCandidates(sh, numHashes, bandCounts)
-      val verified =
-        verifyJaccard(sh, tagged.select("doc_a", "doc_b").distinct(), verifyThreshold)
-      verified.join(tagged, Seq("doc_a", "doc_b"))
-        .select("doc_a", "doc_b", "jaccard", "bands")
-        .localCheckpoint() // eager: sh is released on return
-    } finally sh.unpersist()
-  }
-
   /** UNVERIFIED banded candidates for every point of a band-count sweep,
     * tagged with the band count that surfaced them: ONE signature pass
     * over an already-built shingle table, one doc-count-sized re-band +

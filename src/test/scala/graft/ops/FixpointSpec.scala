@@ -1,16 +1,11 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSuite
+import graft.{JobLog, SparkSuite}
 
 /** The fixpoint materialization policy, read off the jobs it launches: a
   * round body that is one narrow projection launches no job of its own,
@@ -18,52 +13,24 @@ import graft.SparkSuite
   */
 class FixpointSpec extends AnyFunSuite with SparkSuite {
 
-  /** Records the job group of every job start. A fence job, run in its
-    * own group, orders the log: once the fence is seen, every job
-    * submitted before it has been seen too (the bus delivers in order). */
-  private final class JobLog extends SparkListener {
-    val groups = new ConcurrentLinkedQueue[String]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      groups.add(Option(e.properties).flatMap(p =>
-        Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-  }
-
-  private var fences = 0
-
-  /** Jobs other than fences started so far. */
-  private def jobsSoFar(log: JobLog): Int = {
-    fences += 1
-    val fence = s"fence-$fences"
-    val sc = spark.sparkContext
-    sc.setJobGroup(fence, fence)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val t0 = System.currentTimeMillis()
-    while (!log.groups.contains(fence)) {
-      assert(System.currentTimeMillis() - t0 < 30000L, s"$fence never reached the listener")
-      Thread.sleep(10)
-    }
-    log.groups.asScala.count(g => !g.startsWith("fence-"))
-  }
-
   /** Run `rounds` rounds of x + 1 over 0..15; returns the result, and the
     * rounds after which the state was materialized. */
   private def run(rounds: Int, release: DataFrame*): (DataFrame, Seq[Int]) = {
-    val log = new JobLog
-    spark.sparkContext.addSparkListener(log)
+    val log = JobLog.attach(spark.sparkContext)
     try {
       // jobs seen at the start of each round; the last entry after the loop
-      val seen = scala.collection.mutable.ArrayBuffer(jobsSoFar(log))
+      val seen = scala.collection.mutable.ArrayBuffer(log.jobsSoFar())
       val out = Fixpoint.iterate(rounds, release: _*) {
         release.headOption.getOrElse(spark.range(16).toDF("x"))
       } { (s, i) =>
-        if (i > 1) seen += jobsSoFar(log)
+        if (i > 1) seen += log.jobsSoFar()
         s.select((col("x") + 1).as("x"))
       }
-      seen += jobsSoFar(log)
+      seen += log.jobsSoFar()
       val perRound = seen.zip(seen.tail).map { case (a, b) => b - a }.toSeq
       assert(perRound.forall(_ <= 1), s"more than one job after a round: $perRound")
       (out, perRound.zipWithIndex.collect { case (1, i) => i + 1 })
-    } finally spark.sparkContext.removeSparkListener(log)
+    } finally log.close()
   }
 
   private def cached(): DataFrame = spark.range(16).toDF("x").cache()

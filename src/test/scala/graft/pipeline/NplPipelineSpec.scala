@@ -152,6 +152,102 @@ class NplPipelineSpec extends AnyFunSuite with SparkSuite {
     assert(approx(m("2013-Q2"), 0.085)) // the april row from page 2
   }
 
+  /** Writes `files` (name -> text) to a temp directory, runs `body` on
+    * their paths and deletes them. */
+  private def withFiles(files: (String, String)*)(body: Seq[String] => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("npl_hostile")
+    val paths = files.map { case (name, text) =>
+      java.nio.file.Files.write(dir.resolve(name), text.getBytes("UTF-8"))
+    }
+    try body(paths.map(_.toString))
+    finally {
+      paths.foreach(java.nio.file.Files.delete)
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
+  /** The messages of the failure `body` throws, causes included. */
+  private def failure(body: => Any): String = {
+    val e = intercept[Exception](body)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+  }
+
+  private def readFixture(name: String): String =
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture(name))), "UTF-8")
+
+  test("hostile input: an MRR page that is an API error body fails, naming the page") {
+    withFiles("mrr_api_error.json" ->
+        """{"httpCode": "401", "httpMessage": "Unauthorized", "moreInformation": "Client id not registered."}""") {
+      case Seq(bad) =>
+        val msg = failure(Npl.mrrTransform(spark, Seq(fixture("mrr_api_2013_01.json"), bad)).collect())
+        assert(msg.contains("mrr_api_error.json"), msg)
+        assert(msg.contains("result.data.data_detail"), msg)
+    }
+  }
+
+  test("hostile input: a truncated MRR page fails, naming the page") {
+    val page = readFixture("mrr_api_2013_02.json")
+    withFiles("mrr_api_truncated.json" -> page.take(page.indexOf("}, {") + 3)) { case Seq(bad) =>
+      val msg = failure(Npl.mrrTransform(spark, Seq(fixture("mrr_api_2013_01.json"), bad)).collect())
+      assert(msg.contains("mrr_api_truncated.json"), msg)
+    }
+  }
+
+  test("hostile input: a missing MRR page fails at construction, naming the page") {
+    val missing = fixture("mrr_api_2013_01.json").replace("2013_01", "2013_03")
+    val msg = failure(Npl.mrrTransform(spark, Seq(fixture("mrr_api_2013_01.json"), missing)))
+    assert(msg.contains("mrr_api_2013_03.json"), msg)
+  }
+
+  test("hostile input: an empty or blank MRR page fails at construction, naming the page") {
+    for (text <- Seq("", " \n\t\n"))
+      withFiles("mrr_api_empty.json" -> text) { case Seq(bad) =>
+        val msg = failure(Npl.mrrTransform(spark, Seq(fixture("mrr_api_2013_01.json"), bad)))
+        assert(msg.contains("mrr_api_empty.json"), msg)
+      }
+  }
+
+  test("hostile input: an empty observations file fails at construction, naming the file") {
+    withFiles("flowrate_empty.json" -> "") { case Seq(bad) =>
+      val msg = failure(Npl.flowrateTransform(spark, fixture("flowrate_gross_new_npl.json"),
+        bad, fixture("flowrate_pct_npl.json")))
+      assert(msg.contains("flowrate_empty.json"), msg)
+    }
+  }
+
+  test("hostile input: an observations file with no result.series fails, naming the file") {
+    withFiles("flowrate_no_series.json" ->
+        """{"result": {"timestamp": "2026-02-02 19:23:00", "api": "Observations", "error": "series not found"}}""") {
+      case Seq(bad) =>
+        val msg = failure(Npl.flowrateTransform(spark, fixture("flowrate_gross_new_npl.json"),
+          bad, fixture("flowrate_pct_npl.json")).collect())
+        assert(msg.contains("flowrate_no_series.json"), msg)
+        assert(msg.contains("result.series"), msg)
+    }
+  }
+
+  test("hostile input: a flowrate series that repeats a period fails, naming the period") {
+    val gross = readFixture("flowrate_gross_npl.json").replace(
+      """{"period_start": "2013-Q3", "value": "61200.00"}""",
+      """{"period_start": "2013-Q2", "value": "61200.00"}""")
+    withFiles("flowrate_gross_repeated.json" -> gross) { case Seq(bad) =>
+      val msg = failure(Npl.flowrateTransform(spark, fixture("flowrate_gross_new_npl.json"),
+        bad, fixture("flowrate_pct_npl.json")).collect())
+      assert(msg.contains("period 2013-Q2 repeats"), msg)
+    }
+  }
+
+  test("flowrate keeps only the periods all three series have (the inner-join result)") {
+    val pct = readFixture("flowrate_pct_npl.json").replace(
+      """, {"period_start": "2013-Q4", "value": "2.09"}""", "")
+    withFiles("flowrate_pct_short.json" -> pct) { case Seq(short) =>
+      val q = Npl.flowrateTransform(spark, fixture("flowrate_gross_new_npl.json"),
+        fixture("flowrate_gross_npl.json"), short).select("Quarter").as[String].collect().sorted
+      assert(q.toSeq == Seq("2013-Q1", "2013-Q2", "2013-Q3"))
+    }
+  }
+
   test("B7 mart assembly: widened key range, coalesced key, NULL gaps (cell 67)") {
     val marts = Npl.assembleMarts(
       segments,
