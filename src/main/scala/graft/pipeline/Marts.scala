@@ -13,9 +13,11 @@ import graft.sources.Tables
   *
   * Scale design: each series is a partial-aggregated (map-side combined)
   * groupBy producing one row per quarter — at 100 TB the fact scans dominate
-  * and the joined series are tiny, so every join below is broadcast-able;
-  * AQE converts them automatically. The `Quarter` string key sorts
-  * chronologically (zero-padded "YYYY-Qx", SURVEY.md §7.4.3).
+  * and the joined series are tiny. The joins stay shuffle joins: Spark
+  * never broadcasts a FULL OUTER join, and the executed plan shows
+  * `SortMergeJoin ... FullOuter` over quarter-sized inputs. The `Quarter`
+  * string key sorts chronologically (zero-padded "YYYY-Qx", SURVEY.md
+  * §7.4.3).
   */
 object Marts {
 

@@ -25,8 +25,10 @@ object Runner {
       minpayCsv: String,
       shockCsv: String)
 
-  /** Extract + transform + assemble; returns the three marts unmaterialized
-    * (callers choose the sink).
+  /** Extract + transform + assemble; returns the three marts, unwritten
+    * (callers choose the sink). They share one lazily checkpointed panel
+    * ([[Npl.assembleMarts]]): this runs the panel's shuffle stages, the
+    * first mart action computes the panel and the others read it.
     */
   def buildMarts(s: SparkSession, in: Inputs): Map[String, org.apache.spark.sql.DataFrame] = {
     val segments = Npl.nplSegments(Npl.nplTransform(s, in.nplCsv))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
+import graft.pipeline.NplTestKit.{failure, withFiles}
 
 /** Reference-fidelity golden tests (FIXTURES.md B1-B7): miniature raw inputs
   * reproduce the reference's hostile layouts; expected values come from the
@@ -71,27 +72,10 @@ class NplPipelineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("Runner.buildMarts reads every quarter of a wider export (5 quarters)") {
-    // the fixture export plus a fifth quarter (2014-Q1): each row gains
-    // three cells, the body rows their Gross NPL, share and ratio
-    val fifth = Map("  Housing loans" -> "\"36,000\",12.4,2.70",
-      "  Automobile loans" -> "\"10,300\",3.7,2.00",
-      "  Credit Card loans" -> "\"4,000\",1.5,2.62")
-    val src = scala.io.Source.fromFile(fixture("npl_raw_mini.csv"))
-    val lines = try src.getLines().toVector finally src.close()
-    val wide = lines.zipWithIndex.map { case (l, i) =>
-      val cells =
-        if (i == 4) "Q1/2014 r,,"
-        else if (i == 5) "NPL Outstanding,% to NPLs,% to Total Loans"
-        else if (i < 4 || l.startsWith("Source") || l.startsWith("Remark")) ",,"
-        else fifth.getOrElse(l.takeWhile(_ != ','), "\"1,000\",1.0,1.00")
-      s"$l,$cells"
-    }
-    val dir = java.nio.file.Files.createTempDirectory("npl5q")
-    val npl = dir.resolve("npl_raw.csv")
-    java.nio.file.Files.write(npl, wide.mkString("", "\n", "\n").getBytes("UTF-8"))
-    try {
+    val wide = NplTestKit.fiveQuarterExport(NplTestKit.readLines(fixture("npl_raw_mini.csv")))
+    withFiles("npl_raw.csv" -> wide.mkString("", "\n", "\n")) { case Seq(npl) =>
       val marts = Runner.buildMarts(spark, Runner.Inputs(
-        nplCsv = npl.toString,
+        nplCsv = npl,
         flowrateGrossNewJson = fixture("flowrate_gross_new_npl.json"),
         flowrateGrossJson = fixture("flowrate_gross_npl.json"),
         flowratePctJson = fixture("flowrate_pct_npl.json"),
@@ -109,9 +93,6 @@ class NplPipelineSpec extends AnyFunSuite with SparkSuite {
         assert(approx(r.getAs[Double]("% to Total Loans"), pct), mart)
         assert(approx(r.getAs[Double]("Total Loan"), gross / pct, tol = 1e-2), mart)
       }
-    } finally {
-      java.nio.file.Files.delete(npl)
-      java.nio.file.Files.delete(dir)
     }
   }
 
@@ -150,27 +131,6 @@ class NplPipelineSpec extends AnyFunSuite with SparkSuite {
       .orderBy("Quarter").as[(String, Double)].collect().toMap
     assert(approx(m("2013-Q1"), 0.086419, tol = 1e-6))
     assert(approx(m("2013-Q2"), 0.085)) // the april row from page 2
-  }
-
-  /** Writes `files` (name -> text) to a temp directory, runs `body` on
-    * their paths and deletes them. */
-  private def withFiles(files: (String, String)*)(body: Seq[String] => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("npl_hostile")
-    val paths = files.map { case (name, text) =>
-      java.nio.file.Files.write(dir.resolve(name), text.getBytes("UTF-8"))
-    }
-    try body(paths.map(_.toString))
-    finally {
-      paths.foreach(java.nio.file.Files.delete)
-      java.nio.file.Files.delete(dir)
-    }
-  }
-
-  /** The messages of the failure `body` throws, causes included. */
-  private def failure(body: => Any): String = {
-    val e = intercept[Exception](body)
-    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .map(t => String.valueOf(t.getMessage)).mkString("\n")
   }
 
   private def readFixture(name: String): String =
