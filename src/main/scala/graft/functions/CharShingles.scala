@@ -68,7 +68,8 @@ case class CharShingles(child: Expression, n: Int, stride: Int = 1,
     if (partial) {
       // frame mode: a window starts at every stride multiple below the
       // string length (an empty string still yields ONE empty window —
-      // the frameSample empty-payload contract), and the tail windows
+      // the frameSample empty-payload contract; a NULL string yields no
+      // window, and frameSample fails on it first), and the tail windows
       // may be shorter than n. Same single linear walk.
       val m = (math.max(c, 1) - 1) / stride + 1
       val out = new Array[Any](m)
@@ -182,8 +183,9 @@ object CharShingles {
     * [[graft.multimodal.Media.frameSample]] contract. Value-identical to
     * exploding `substring(s, i*stride + 1, n)` over
     * i ∈ [0, floor((greatest(len,1)-1)/stride)] for non-null strings
-    * (a NULL string yields an empty array — callers at this boundary
-    * guarantee non-null text). Same single linear codepoint walk. */
+    * (a NULL string yields an empty array, so an exploding caller drops
+    * the row; frameSample fails on NULL text instead). Same single linear
+    * codepoint walk. */
   def charFrames(c: Column, n: Int, stride: Int): Column =
     call_function("char_frames", c, lit(n), lit(stride))
 }

@@ -181,12 +181,14 @@ object Media {
     // below the length, partial tail windows kept, an empty payload
     // yields exactly ONE empty frame (the sequence/greatest dance the old
     // form needed for DuckDB's range(0,0) agreement now lives in the
-    // kernel), and frame_chars = length of the sliced frame. Text is
-    // non-null at this boundary (corpus invariant; a NULL would now drop
-    // the doc instead of emitting a null-fp row).
+    // kernel), and frame_chars = length of the sliced frame. A NULL text
+    // fails the action naming the doc, where the kernel's empty array
+    // would drop the doc silently.
+    val text = coalesce(col("text"),
+      raise_error(concat(lit("frameSample: NULL text in doc "), col("doc_id").cast("string"))))
     docs.select(col("doc_id"),
         posexplode(graft.functions.CharShingles.charFrames(
-          col("text"), frameLen, stride)).as(Seq("frame_idx", "frame")))
+          text, frameLen, stride)).as(Seq("frame_idx", "frame")))
       .select(col("doc_id"), col("frame_idx"),
         graft.text.TextOps.mixedOf(graft.functions.TextHash.portableHash(
           col("frame"))).as("frame_fp"),

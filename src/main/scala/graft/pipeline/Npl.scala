@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.ingest.Normalize
-import graft.ops.{Ordered, Reshape, Scalar}
+import graft.ops.{Ordered, Scalar}
 
 /** Reference-fidelity recreation of the NPL analytics pipeline
   * (src/ETL-NPL-Pipeline.py) on its own hostile raw layouts — the §3.1-§3.3
@@ -34,7 +34,7 @@ object Npl {
     * single-task sort — correct for ingest-sized header-bearing files
     * (Normalize's scale note), not for large data tables.
     */
-  private def rawWithIdx(s: SparkSession, path: String, nCols: Int): DataFrame =
+  private[pipeline] def rawWithIdx(s: SparkSession, path: String, nCols: Int): DataFrame =
     Normalize.withOrdinal(Normalize.readRawCsv(s, path, nCols),
         monotonically_increasing_id())
       .withColumn("_idx", (col("_idx") - 1).cast("long"))
@@ -47,6 +47,13 @@ object Npl {
     * label + measure width runs through the last non-empty cell of the two
     * header rows: one label column plus three measures per quarter, however
     * many quarters the export spans.
+    *
+    * The header rows are read on the driver, so the reference's stack ->
+    * pivot reshape is a projection: no aggregate, no shuffle. Where pandas
+    * `pivot` raises on a repeated category, every body row here yields its
+    * own rows; a segment category listed twice then fails the marts
+    * ([[assembleMarts]]: `mart: quarter <q> repeats`). A repeat of a
+    * category no mart reads (`Agriculture`, say) stays unchecked.
     */
   def nplTransform(s: SparkSession, path: String): DataFrame = {
     val hdr = nplHeader(s, path)
@@ -62,7 +69,7 @@ object Npl {
     * and row numbers are those of the Spark scan: no Spark job. Each of the
     * six preamble rows must be one line; an empty cell reads as "".
     */
-  private def nplHeader(s: SparkSession, path: String): Seq[Array[String]] = {
+  private[pipeline] def nplHeader(s: SparkSession, path: String): Seq[Array[String]] = {
     val opts = new CSVOptions(Map.empty[String, String], false, "UTC")
     val p = new Path(path)
     val src = Source.fromInputStream(
@@ -84,32 +91,31 @@ object Npl {
       if (c.trim.nonEmpty) c else prev
     }.tail.map(q => q.trim.replaceAll("\\s*(r1|p1|r|p)$", "")
       .replaceAll("^Q(\\d)/(\\d{4})$", "$2-Q$1"))
-    val measures = cells(1).map(_.trim)
-    val qm = quarters.zip(measures)
+    // (quarter, measure) -> column, keeping only the columns whose measure
+    // != '% to NPLs' (mask P4, src:144-145)
+    val kept = quarters.zip(cells(1).map(_.trim)).zipWithIndex.collect {
+      case ((q, m), i) if m != "% to NPLs" => (q, m) -> col(s"_c${i + 1}")
+    }
     // body: category rows only — drop title/trailer rows (src:125-126,152)
     val body = raw.filter(col("_idx") > 5 &&
       !col("_c0").startsWith("Source") && !col("_c0").startsWith("Remark") &&
       col("_c0").isNotNull && trim(col("_c0")) =!= "")
-    // keep only the columns whose measure != '% to NPLs' (mask P4, src:144-145)
-    val keep = qm.zipWithIndex.collect {
-      case ((q, m), i) if m != "% to NPLs" => (s"_c${i + 1}", s"$q::$m")
+    // the stack (src:160) -> pivot (src:163-165) round trip as one
+    // projection: a row per category and quarter with a kept column, each
+    // measure's cell or NULL where the export has no such column
+    val perQuarter = kept.map(_._1._1).distinct.map { q =>
+      def cell(m: String) = kept.collect { case ((`q`, `m`), c) => c } match {
+        case Seq() => lit(null).cast("string").as(m)
+        case Seq(c) => c.as(m)
+        case _ => throw new IllegalArgumentException(s"$path: quarter $q has two '$m' columns")
+      }
+      struct(lit(q).as("Quarter"), cell("% to Total Loans"), cell("NPL Outstanding"))
     }
-    val named = keep.foldLeft(body.select(
-        (trim(col("_c0")).as("Category") +: keep.map { case (c, _) => col(c) }): _*)) {
-      case (d, (old, nw)) => d.withColumnRenamed(old, nw)
-    }
-    // stack (src:160) -> split the two header levels -> pivot (src:163-165)
-    val long = Reshape.unpivotWide(named, Seq("Category"), keep.map(_._2), "qm", "Value")
-      .withColumn("Quarter", split(col("qm"), "::").getItem(0))
-      .withColumn("Type", split(col("qm"), "::").getItem(1))
-    val wide = Reshape.pivotLong(long.select("Category", "Quarter", "Type", "Value"),
-      Seq("Category", "Quarter"), "Type",
-      Seq("NPL Outstanding", "% to Total Loans"), first(col("Value")))
     // casts + derived Total Loan (src:169-176)
-    wide
-      .withColumn("% to Total Loans", Scalar.pctToRatio(col("% to Total Loans")))
-      .withColumn("Gross NPL", Scalar.deComma(col("NPL Outstanding")))
-      .drop("NPL Outstanding")
+    body.select(trim(col("_c0")).as("Category"), inline(array(perQuarter: _*)))
+      .select(col("Category"), col("Quarter"),
+        Scalar.pctToRatio(col("% to Total Loans")).as("% to Total Loans"),
+        Scalar.deComma(col("NPL Outstanding")).as("Gross NPL"))
       .withColumn("Total Loan", col("Gross NPL") / col("% to Total Loans"))
   }
 

@@ -1281,39 +1281,52 @@ object Dedup {
         coalesce(col("root"), col("id")).as("group_id"))
   }
 
-  /** 64-bit SimHash signature per doc: each bit is the sign of the sum of
-    * ±1 votes from every distinct token's xxhash64 bit. One groupBy with 64
+  /** Width of the portable SimHash signature. */
+  private val SimhashBits = 56
+
+  /** 56-bit portable SimHash: each bit is the sign of the sum of ±1 votes
+    * from every distinct token's hash bit; two independent 28-bit mixed
+    * portable hashes (TextOps.mixedHash with different multipliers) supply
+    * bits 0-27 and 28-55. Every step is DuckDB-replicable, so
+    * [[simhashPairsPortable]] is oracle-checked. One groupBy with 56
     * partial-aggregable sums — map-side combined, single shuffle.
     */
-  def simhashSignatures(docs: DataFrame): DataFrame = {
+  def simhashSignaturesPortable(docs: DataFrame): DataFrame = {
+    graft.functions.TextHash.register(docs.sparkSession)
+    val half = SimhashBits / 2
+    val ph = graft.functions.TextHash.portableHash(col("w"))
     val tok = rebalanced(docs)
       .select(col("doc_id"),
         explode(array_distinct(TextOps.tokens(col("text")))).as("w"))
-      .withColumn("h", xxhash64(col("w")))
-    val sums = (0 until 64).map(b =>
-      sum(when(expr(s"(h >> $b) & 1") === 1, 1).otherwise(-1)).as(s"b$b"))
-    val sig = (0 until 64)
+      .withColumn("h1", TextOps.mixedOf(ph))
+      .withColumn("h2", TextOps.mixedOf(ph, mult = TextOps.AltMixMult))
+    val sums = (0 until 2 * half).map { b =>
+      val (src, bb) = if (b < half) ("h1", b) else ("h2", b - half)
+      sum(when(expr(s"($src >> $bb) & 1") === 1, 1).otherwise(-1)).as(s"b$b")
+    }
+    val sig = (0 until 2 * half)
       .map(b => when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
       .reduce(_.bitwiseOR(_))
     tok.groupBy("doc_id").agg(sums.head, sums.tail: _*)
       .select(col("doc_id"), sig.as("sig"))
   }
 
-  /** SimHash near-dup pairs: band the signature into 4 equal bit slices;
+  /** SimHash near-dup pairs: band the portable signature
+    * ([[simhashSignaturesPortable]]) into 4 equal bit slices;
     * by pigeonhole any pair within Hamming distance 3 shares at least one
     * exact band — equi-join on (band, bits), then verify the true Hamming
     * distance with bit_count(xor).
     */
-  private def simhashPairsFrom(sigs: DataFrame, sigBits: Int, maxHamming: Int): DataFrame = {
+  def simhashPairsPortable(docs: DataFrame, maxHamming: Int): DataFrame = {
     val numBands = 4
     require(maxHamming < numBands,
       s"$numBands bands only guarantee distance <= ${numBands - 1}")
-    val bandBits = sigBits / numBands
+    val bandBits = SimhashBits / numBands
     val mask = (1L << bandBits) - 1
     // cached: the per-bit-sum signature aggregation is the expensive
     // subtree; the self-join must not compute it twice. Released after the
     // (eager) pair join — the small pair list is what survives the call.
-    val banded = sigs.select(col("doc_id"), col("sig"),
+    val banded = simhashSignaturesPortable(docs).select(col("doc_id"), col("sig"),
         posexplode(array((0 until numBands).map(j => expr(s"(sig >> ${bandBits * j}) & $mask")): _*)))
       .toDF("doc_id", "sig", "band", "bits").cache()
     try {
@@ -1343,38 +1356,6 @@ object Dedup {
         .localCheckpoint()
     } finally banded.unpersist()
   }
-
-  def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame =
-    simhashPairsFrom(simhashSignatures(docs), sigBits = 64, maxHamming)
-
-  /** 56-bit portable SimHash: two independent 28-bit mixed portable hashes
-    * (TextOps.mixedHash with different multipliers) supply bits 0-27 and
-    * 28-55. Every step is DuckDB-replicable, so [[simhashPairsPortable]]
-    * is the oracle-checked variant; 56 bits keeps Hamming<=3 about as
-    * selective as the 64-bit xxhash version.
-    */
-  def simhashSignaturesPortable(docs: DataFrame): DataFrame = {
-    graft.functions.TextHash.register(docs.sparkSession)
-    val half = 28
-    val ph = graft.functions.TextHash.portableHash(col("w"))
-    val tok = rebalanced(docs)
-      .select(col("doc_id"),
-        explode(array_distinct(TextOps.tokens(col("text")))).as("w"))
-      .withColumn("h1", TextOps.mixedOf(ph))
-      .withColumn("h2", TextOps.mixedOf(ph, mult = TextOps.AltMixMult))
-    val sums = (0 until 2 * half).map { b =>
-      val (src, bb) = if (b < half) ("h1", b) else ("h2", b - half)
-      sum(when(expr(s"($src >> $bb) & 1") === 1, 1).otherwise(-1)).as(s"b$b")
-    }
-    val sig = (0 until 2 * half)
-      .map(b => when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-      .reduce(_.bitwiseOR(_))
-    tok.groupBy("doc_id").agg(sums.head, sums.tail: _*)
-      .select(col("doc_id"), sig.as("sig"))
-  }
-
-  def simhashPairsPortable(docs: DataFrame, maxHamming: Int): DataFrame =
-    simhashPairsFrom(simhashSignaturesPortable(docs), sigBits = 56, maxHamming)
 
   /** ExactSubstr-style duplicated-region statistics (Lee, Ippolito et al.
     * 2022, "Deduplicating Training Data Makes Language Models Better" —

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
 
@@ -27,95 +26,6 @@ object Scratch {
       println(f"[scratch] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
     }
 
-    // Attribution for the decade3:q_sem_decontaminate time row: run the
-    // query on a given dir under the gate's forced-shuffle confs and
-    // split wall time into executor run time, GC, and spill per stage —
-    // is the ×3-per-byte excess compute, collection, or disk?
-    if (args.length > 1 && args(1) == "semdecon_profile") {
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-      val agg = new java.util.concurrent.ConcurrentHashMap[Int, Array[Long]]()
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            val a = agg.computeIfAbsent(e.stageId, _ => new Array[Long](7))
-            a.synchronized {
-              a(0) += m.executorRunTime; a(1) += m.jvmGCTime
-              a(2) += m.memoryBytesSpilled; a(3) += m.diskBytesSpilled
-              a(4) += m.shuffleWriteMetrics.bytesWritten
-              a(5) += m.shuffleReadMetrics.totalBytesRead
-              a(6) += 1
-            }
-          }
-        }
-      })
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.shuffle.partitions", "256")
-      val fn = SparkEntry.queries("q_sem_decontaminate")
-      fn(spark, sfDir).count() // warm (stamped builds, codegen)
-      spark.catalog.clearCache(); System.gc(); agg.clear()
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500)
-      import scala.jdk.CollectionConverters._
-      val rows = agg.asScala.toSeq.sortBy(_._1)
-      val tot = new Array[Long](7)
-      rows.foreach { case (_, a) => (0 until 7).foreach(i => tot(i) += a(i)) }
-      println(f"[semdecon] $sfDir wall=$wall%.1fs rows=$n run=${tot(0) / 1e3}%.1fs " +
-        f"gc=${tot(1) / 1e3}%.1fs memSpill=${tot(2) >> 20}MB diskSpill=${tot(3) >> 20}MB " +
-        f"shufW=${tot(4) >> 20}MB shufR=${tot(5) >> 20}MB tasks=${tot(6)}")
-      rows.filter(_._2(0) > 3000).foreach { case (sid, a) =>
-        println(f"[semdecon]   stage $sid%4d run=${a(0) / 1e3}%8.1fs gc=${a(1) / 1e3}%7.1fs " +
-          f"memSpill=${a(2) >> 20}%6dMB diskSpill=${a(3) >> 20}%6dMB " +
-          f"shufW=${a(4) >> 20}%6dMB shufR=${a(5) >> 20}%6dMB tasks=${a(6)}%4d")
-      }
-      spark.stop(); return
-    }
-    // Width cliff probe: same embeddings table, increasing per-band bit
-    // width — is the bucket-compute stage's superlinear growth a
-    // per-plane cost (linear in width) or a codegen/regime cliff?
-    if (args.length > 1 && args(1) == "lsh_width_probe") {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      println(s"[widthprobe] n=${emb.count()}")
-      for (bits <- Seq(1, 2, 4, 6, 8, 11); round <- 1 to 2) {
-        val pl = graft.sim.Similarity.portablePlanes(8 * bits, 64)
-        val t0 = System.nanoTime()
-        val n = graft.sim.Similarity.withLshBuckets(emb, pl, 8)
-          .select(org.apache.spark.sql.functions.sum(element_at(col("buckets"), 1)))
-          .collect()(0).getLong(0)
-        println(f"[widthprobe] bits=$bits r$round ${(System.nanoTime() - t0) / 1e9}%8.2f s (chk=$n)")
-      }
-      spark.stop(); return
-    }
-    if (args.length > 1 && args(1) == "hotcap_stages") {
-      for (round <- 1 to 3) {
-        val t0 = System.nanoTime()
-        val corpus = graft.entry.TextSimQueries.hotCapCorpus(spark, sfDir)
-        val feat = graft.multimodal.Media.bovwFeatures(spark, corpus).localCheckpoint()
-        val t1 = System.nanoTime()
-        val cap = (feat.count() / 5).toInt
-        val t2 = System.nanoTime()
-        val hot = graft.sim.Similarity.hotBuckets(feat, numPlanes = 48,
-          bands = 8, maxBucketDf = cap).localCheckpoint()
-        val t3 = System.nanoTime()
-        val hits = graft.sim.Similarity.semanticMatches(spark, feat,
-            queryPred = col("vec_id") >= 30000000L && col("vec_id") < 60000000L,
-            threshold = 0.6, numPlanes = 48, bands = 8,
-            maxBucketDf = cap, broadcastQueries = true, hotKeys = hot)
-          .filter(col("vec_id") < 30000000L)
-        val nh = hits.count()
-        val t4 = System.nanoTime()
-        hits.count() // same QueryExecution: planning already done
-        val t5 = System.nanoTime()
-        def s(a: Long, b: Long): String = f"${(b - a) / 1e9}%6.2f"
-        println(s"[scratch] r$round feat=${s(t0, t1)} count=${s(t1, t2)} " +
-          s"hot=${s(t2, t3)} matches=${s(t3, t4)} rerun=${s(t4, t5)} hits=$nh cap=$cap")
-        spark.catalog.clearCache()
-      }
-      spark.stop(); return
-    }
     // Job-count attribution: at sf0.1 the top queries sit in a flat
     // 1.8–3.7 s band on µs-sized data — the cost is Spark-job fixed
     // overhead (scheduling + codegen + 32-partition shuffles of tiny

@@ -186,6 +186,14 @@ class MediaSpec extends AnyFunSuite with SparkSuite {
     assert(got == Seq((5L, 0, 0L, 0)))
   }
 
+  test("frameSample fails on NULL text, naming the doc, instead of dropping it") {
+    val withNull = Seq((5L, Some("ab" * 10)), (7L, None)).toDF("doc_id", "text")
+    val e = intercept[Exception](Media.frameSample(spark, withNull).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(msgs.contains("frameSample: NULL text in doc 7"), msgs)
+  }
+
   test("extractFeatures runs partition-wise with a fixed output schema") {
     val ds = Media.extractFeatures(spark, docs)
     val rows = ds.collect().sortBy(_.doc_id)

@@ -114,6 +114,20 @@ class MartAssemblySpec extends AnyFunSuite with SparkSuite with AdaptiveSparkPla
     }
   }
 
+  test("hostile input: an NPL export that repeats the Housing row fails, naming a quarter") {
+    // the pivot kept one of the two rows (32,076) and silently dropped the other
+    val lines = readLines(fixture("npl_raw_mini.csv"))
+    val housing = lines.find(_.startsWith("  Housing loans")).get
+    val twice = lines.flatMap(l =>
+      if (l == housing) Seq(l, l.replace("\"32,076\"", "\"99,999\"")) else Seq(l))
+    assert(twice.count(_.contains("99,999")) == 1)
+    withFiles("npl_raw.csv" -> twice.mkString("", "\n", "\n")) { case Seq(path) =>
+      val (panel, _) = marts(nplCsv = path)
+      val msg = failure(panel("housing").collect())
+      assert("mart: quarter 2013-Q[1-4] repeats".r.findFirstIn(msg).nonEmpty, msg)
+    }
+  }
+
   test("the mart writes read the one panel, never a source file, in equal jobs") {
     val (panel, _) = marts()
     val plans = new ConcurrentLinkedQueue[SparkPlan]()

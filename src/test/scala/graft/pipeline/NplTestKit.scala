@@ -2,10 +2,52 @@ package graft.pipeline
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.ops.{Reshape, Scalar}
 
 /** Shared inputs, references and helpers of the pipeline specs. */
 object NplTestKit {
+
+  /** `Npl.nplTransform` as the reference reshapes (src:160-165) and as it
+    * was computed before its one projection: the kept columns renamed to
+    * `quarter::measure`, stacked, the two header levels split apart and
+    * pivoted back with `first`, which keeps one of two rows that repeat a
+    * category. The reference the projection must equal; `nCols` defaults
+    * to the header's width, as in `nplTransform`.
+    */
+  def stackPivotNpl(s: SparkSession, path: String, nCols: Option[Int] = None): DataFrame = {
+    val hdr = Npl.nplHeader(s, path)
+    val width = nCols.getOrElse(hdr.map(_.lastIndexWhere(_.trim.nonEmpty) + 1).max)
+    val raw = Npl.rawWithIdx(s, path, width)
+    val cells = (r: Int) => (1 until width).map(c => hdr(r).lift(c).getOrElse(""))
+    val quarters = cells(0).scanLeft("") { (prev, c) =>
+      if (c.trim.nonEmpty) c else prev
+    }.tail.map(q => q.trim.replaceAll("\\s*(r1|p1|r|p)$", "")
+      .replaceAll("^Q(\\d)/(\\d{4})$", "$2-Q$1"))
+    val qm = quarters.zip(cells(1).map(_.trim))
+    val body = raw.filter(col("_idx") > 5 &&
+      !col("_c0").startsWith("Source") && !col("_c0").startsWith("Remark") &&
+      col("_c0").isNotNull && trim(col("_c0")) =!= "")
+    val keep = qm.zipWithIndex.collect {
+      case ((q, m), i) if m != "% to NPLs" => (s"_c${i + 1}", s"$q::$m")
+    }
+    val named = keep.foldLeft(body.select(
+        (trim(col("_c0")).as("Category") +: keep.map { case (c, _) => col(c) }): _*)) {
+      case (d, (old, nw)) => d.withColumnRenamed(old, nw)
+    }
+    val long = Reshape.unpivotWide(named, Seq("Category"), keep.map(_._2), "qm", "Value")
+      .withColumn("Quarter", split(col("qm"), "::").getItem(0))
+      .withColumn("Type", split(col("qm"), "::").getItem(1))
+    Reshape.pivotLong(long.select("Category", "Quarter", "Type", "Value"),
+        Seq("Category", "Quarter"), "Type",
+        Seq("NPL Outstanding", "% to Total Loans"), first(col("Value")))
+      .withColumn("% to Total Loans", Scalar.pctToRatio(col("% to Total Loans")))
+      .withColumn("Gross NPL", Scalar.deComma(col("NPL Outstanding")))
+      .drop("NPL Outstanding")
+      .withColumn("Total Loan", col("Gross NPL") / col("% to Total Loans"))
+  }
 
   /** The mart assembly as the reference writes it (src:706-728) and as
     * `Npl.assembleMarts` computed it before its shared panel: the common

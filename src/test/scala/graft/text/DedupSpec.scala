@@ -273,13 +273,6 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     assert(colSigs == aggSigs)
   }
 
-  test("simhash puts the near-dups within small Hamming distance") {
-    val pairs = Dedup.simhashPairs(docs, maxHamming = 3)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect()
-    assert(pairs.contains((1L, 2L)))
-    assert(!pairs.contains((1L, 3L)) && !pairs.contains((2L, 3L)))
-  }
-
   test("shingles guard: fewer than n tokens yields empty array, not a reversed sequence") {
     val got = Seq("one two").toDF("text")
       .select(TextOps.shingles(TextOps.tokens($"text"), 3)).as[Seq[String]].head()
