@@ -8,7 +8,6 @@ import graft.graph.PageRank
 import graft.ingest.Normalize
 import graft.multimodal.Media
 import graft.ops.{Ordered, Profile, Reshape, Scalar}
-import graft.pipeline.Marts
 import graft.sim.Similarity
 import graft.sources.Tables
 import graft.text.{Dedup, TextOps}

@@ -13,23 +13,21 @@ import graft.sources.Tables
   *
   * Scale design: each series is a partial-aggregated (map-side combined)
   * groupBy producing one row per quarter — at 100 TB the fact scans dominate
-  * and the joined series are tiny. The joins stay shuffle joins: Spark
-  * never broadcasts a FULL OUTER join, and the executed plan shows
-  * `SortMergeJoin ... FullOuter` over quarter-sized inputs. The `Quarter`
-  * string key sorts chronologically (zero-padded "YYYY-Qx", SURVEY.md
-  * §7.4.3).
+  * and the joined series are tiny. The full-outer joins are the pipeline's
+  * own [[Npl.quarterPanel]]: the series, tagged, in one union and one
+  * aggregate on `Quarter`, so the executed plan has no join; the union
+  * keeps the series' hash partitioning on `Quarter`, so the only exchange
+  * past theirs is the presentation sort's. The `Quarter` string key sorts
+  * chronologically (zero-padded "YYYY-Qx", SURVEY.md §7.4.3).
   */
 object Marts {
-
-  private def read(s: SparkSession, dir: String, t: String) =
-    s.read.parquet(s"$dir/$t.parquet")
 
   /** NPL-segment analog (src:121-191): lineitem split by l_returnflag, per
     * quarter: pct (avg discount), gross (sum extendedprice), and the derived
     * total = gross / pct (src:176).
     */
   def segment(s: SparkSession, dir: String, flag: String): DataFrame =
-    read(s, dir, "lineitem")
+    Tables.table(s, dir, "lineitem")
       .filter(col("l_returnflag") === flag)
       .groupBy(Scalar.toQuarter(col("l_shipdate")).as("Quarter"))
       .agg(
@@ -37,12 +35,10 @@ object Marts {
         Scalar.stableSum(col("l_extendedprice")).as("gross_rev"))
       .withColumn("total_rev", col("gross_rev") / col("pct_gross"))
 
-  /** The common macro panel (src:706-708): 4 quarterly series full-outer
-    * joined on Quarter, key coalesced by the usingColumns join.
-    */
-  def commonSeries(s: SparkSession, dir: String): DataFrame = {
-    val orders = read(s, dir, "orders")
-    val lineitem = read(s, dir, "lineitem")
+  /** The four quarterly series of the common macro panel (src:706-708). */
+  private def common(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
+    val orders = Tables.table(s, dir, "orders")
+    val lineitem = Tables.table(s, dir, "lineitem")
     val gdp = orders // GDP-growth analog
       .groupBy(Scalar.toQuarter(col("o_orderdate")).as("Quarter"))
       .agg(Scalar.stableAvg(col("o_totalprice")).as("avg_price"))
@@ -57,10 +53,16 @@ object Marts {
       .filter(col("o_orderpriority") === "1-URGENT")
       .groupBy(Scalar.toQuarter(col("o_orderdate")).as("Quarter"))
       .agg(count(lit(1)).as("n_urgent"))
-    gdp.join(inflation, Seq("Quarter"), "full_outer")
-      .join(flow, Seq("Quarter"), "full_outer")
-      .join(shock, Seq("Quarter"), "full_outer")
+    Seq("gdp" -> gdp, "inflation" -> inflation, "flow" -> flow, "shock" -> shock)
   }
+
+  /** The full-outer join of `sources` on Quarter, ordered by Quarter. */
+  private def joinOnQuarter(sources: Seq[(String, DataFrame)]): DataFrame =
+    Npl.quarterMart(Npl.quarterPanel(sources), sources)
+
+  /** The common macro panel (src:706-708): its 4 series full-outer joined
+    * on Quarter, the key coalesced as by a usingColumns join. */
+  def commonSeries(s: SparkSession, dir: String): DataFrame = joinOnQuarter(common(s, dir))
 
   /** Mart assembly (src:714-728): segment ⟗ common ⟗ MRR-analog. The events
     * table lies in 2024 — disjoint from the 1995-2001 fact quarters — so the
@@ -71,10 +73,7 @@ object Marts {
     val mrr = Tables.events(s, dir)
       .groupBy(Scalar.toQuarter(col("ts")).as("Quarter"))
       .agg(Scalar.stableAvg(col("value")).as("mrr"))
-    segment(s, dir, "A")
-      .join(commonSeries(s, dir), Seq("Quarter"), "full_outer")
-      .join(mrr, Seq("Quarter"), "full_outer")
-      .orderBy("Quarter")
+    joinOnQuarter(("segment" -> segment(s, dir, "A")) +: common(s, dir) :+ ("mrr" -> mrr))
   }
 
   /** DuckDB oracle for [[martAssembly]] — same CTE graph. */

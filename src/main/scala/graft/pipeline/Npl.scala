@@ -271,16 +271,11 @@ object Npl {
     * and its own series (housing: mrr, credit_card: minpay), full-outer on
     * the coalesced Quarter key, ordered by Quarter.
     *
-    * The joins are one aggregate: every source, tagged, in one union,
-    * grouped by Quarter into one panel row with each source's values and
-    * row count; a mart is the panel rows its sources fill. The panel is
-    * local-checkpointed once, lazily, so the sources are read once for all
-    * three marts: building the marts runs the panel's shuffle stages (so a
-    * source whose action fails fails here), the first mart action computes
-    * the panel and the others read it. A NULL Quarter matches nothing, so
-    * each such row stays its own row, as in the join. A source that
-    * repeats a quarter fails every mart's action, naming the quarter (the
-    * join would repeat the rows).
+    * The joins are one [[quarterPanel]] of all nine sources, local-
+    * checkpointed once, lazily, so the sources are read once for all three
+    * marts: building the marts runs the panel's shuffle stages (so a source
+    * whose action fails fails here), the first mart action computes the
+    * panel and the others read it.
     */
   def assembleMarts(npl: Map[String, DataFrame], flowrate: DataFrame,
                     gdp: DataFrame, inflation: DataFrame, shock: DataFrame,
@@ -292,33 +287,44 @@ object Npl {
       "housing" -> (segment("Housing") +: common :+ ("mrr" -> mrr)),
       "automobile" -> (segment("Automobile") +: common),
       "credit_card" -> (segment("Credit Card") +: common :+ ("minpay" -> minpay)))
-    val sources = marts.flatMap(_._2).distinctBy(_._1)
-    // (mart column, panel column) of each value column of a source
-    def values(src: String, df: DataFrame) =
-      df.columns.toSeq.filterNot(_ == "Quarter").map(c => c -> s"$src: $c")
-    def rows(src: String) = s"$src: rows"
-    // a NULL Quarter matches nothing: such a row keys its own group
+    val panel = quarterPanel(marts.flatMap(_._2).distinctBy(_._1)).localCheckpoint(eager = false)
+    marts.map { case (mart, srcs) => mart -> quarterMart(panel, srcs) }.toMap
+  }
+
+  // (mart column, panel column) of each value column of a source
+  private def values(src: String, df: DataFrame) =
+    df.columns.toSeq.filterNot(_ == "Quarter").map(c => c -> s"$src: $c")
+  private def rows(src: String) = s"$src: rows"
+
+  /** The full-outer join of the named `sources` on `Quarter` as one
+    * aggregate: every source, tagged, in one union, grouped by Quarter into
+    * one panel row with each source's values and row count. A NULL Quarter
+    * matches nothing, so each such row keys its own group, as in the join.
+    * A source that repeats a quarter fails the panel's action, naming the
+    * quarter (the join would repeat the rows, and `first` would keep one).
+    */
+  private[pipeline] def quarterPanel(sources: Seq[(String, DataFrame)]): DataFrame = {
     val tagged = sources.map { case (src, df) =>
       df.select(col("Quarter") +:
         when(col("Quarter").isNull, struct(lit(src), monotonically_increasing_id())).as("unmatched") +:
         lit(1).as(rows(src)) +:
         values(src, df).map { case (c, p) => col(c).as(p) }: _*)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
-    // a source fills at most one row of a group (else the filter fails)
     val perSource = sources.flatMap { case (src, df) =>
       count(col(rows(src))).as(rows(src)) +:
         values(src, df).map { case (_, p) => first(col(p), ignoreNulls = true).as(p) }
     }
-    val panel = tagged.groupBy("Quarter", "unmatched").agg(perSource.head, perSource.tail: _*)
+    tagged.groupBy("Quarter", "unmatched").agg(perSource.head, perSource.tail: _*)
       .filter(when(greatest(sources.map { case (src, _) => col(rows(src)) }: _*) > 1,
           raise_error(concat(lit("mart: quarter "), col("Quarter"), lit(" repeats"))))
         .otherwise(lit(true)))
-      .localCheckpoint(eager = false)
-    marts.map { case (mart, srcs) =>
-      mart -> panel.filter(srcs.map { case (src, _) => col(rows(src)) > 0 }.reduce(_ || _))
-        .select(col("Quarter") +: srcs.flatMap { case (src, df) =>
-          values(src, df).map { case (c, p) => col(p).as(c) } }: _*)
-        .orderBy("Quarter")
-    }.toMap
   }
+
+  /** The join of `sources`, some of a [[quarterPanel]]'s, read off it: the
+    * rows they fill, Quarter and their columns, ordered by Quarter. */
+  private[pipeline] def quarterMart(panel: DataFrame, sources: Seq[(String, DataFrame)]): DataFrame =
+    panel.filter(sources.map { case (src, _) => col(rows(src)) > 0 }.reduce(_ || _))
+      .select(col("Quarter") +: sources.flatMap { case (src, df) =>
+        values(src, df).map { case (c, p) => col(p).as(c) } }: _*)
+      .orderBy("Quarter")
 }

@@ -1,22 +1,24 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.SparkEntry
 
 /** Dev scratchpad: repeated warm timings for the queries under
-  * investigation (`runMain graft.tools.Scratch <sfDir> [query...]`).
-  * Not part of the library surface.
+  * investigation (`runMain graft.tools.Scratch <sfDir> [query...]`), or
+  * their jobs (`<sfDir> jobs query...`), on `local[4]` with Bench's
+  * extensions. Not part of the library surface.
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkSession.builder().master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -26,38 +28,36 @@ object Scratch {
       println(f"[scratch] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
     }
 
-    // Job-count attribution: at sf0.1 the top queries sit in a flat
-    // 1.8–3.7 s band on µs-sized data — the cost is Spark-job fixed
-    // overhead (scheduling + codegen + 32-partition shuffles of tiny
-    // frames), so the optimization lever is JOBS AND EXCHANGES REMOVED,
-    // and this mode is what measures it: per warm query, the number of
-    // jobs, stages, tasks, and shuffle bytes.
+    // Job-count attribution: per-job fixed overhead dominates the small
+    // queries, so the lever is JOBS AND EXCHANGES REMOVED. Per warm query
+    // and round, the time, jobs and stages of building the frame (eager
+    // work inside the query function) and, apart, of its noop write, which
+    // materializes what `count()` would let Catalyst prune.
     if (args.length > 1 && args(1) == "jobs") {
-      import org.apache.spark.scheduler.{SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-      import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+      import org.apache.spark.scheduler.{SparkListenerJobStart, SparkListenerStageCompleted}
+      import java.util.concurrent.atomic.AtomicInteger
       val jobs = new AtomicInteger; val stages = new AtomicInteger
-      val tasks = new AtomicInteger; val shw = new AtomicLong
       spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
         override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
-        override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-          tasks.incrementAndGet()
-          if (e.taskMetrics != null) shw.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        }
       })
-      val names = args.drop(2).toSeq
-      for (name <- names) { // warm pass: artifacts + codegen
-        SparkEntry.queries(name)(spark, sfDir).count(); spark.catalog.clearCache()
-      }
-      for (name <- names) {
-        Thread.sleep(400)
-        jobs.set(0); stages.set(0); tasks.set(0); shw.set(0)
+      def phase[T](body: => T): (T, String) = {
+        jobs.set(0); stages.set(0)
         val t0 = System.nanoTime()
-        val n = SparkEntry.queries(name)(spark, sfDir).count()
+        val out = body
         val dt = (System.nanoTime() - t0) / 1e9
         Thread.sleep(600) // listener bus drain
-        println(f"[jobs] $name%-28s $dt%6.2f s jobs=${jobs.get}%3d stages=${stages.get}%4d " +
-          f"tasks=${tasks.get}%5d shufW=${shw.get >> 10}%8dKB rows=$n")
+        (out, f"$dt%6.2f s jobs=${jobs.get}%3d stages=${stages.get}%4d")
+      }
+      def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+      val names = args.drop(2).toSeq
+      for (name <- names) { // warm pass: artifacts + codegen
+        noop(SparkEntry.queries(name)(spark, sfDir)); spark.catalog.clearCache()
+      }
+      for (round <- 1 to 4; name <- names) {
+        val (df, construct) = phase(SparkEntry.queries(name)(spark, sfDir))
+        val (_, action) = phase(noop(df))
+        println(s"[jobs] ${name.padTo(28, ' ')} r$round construct $construct | noop $action")
         spark.catalog.clearCache()
       }
       spark.stop(); return

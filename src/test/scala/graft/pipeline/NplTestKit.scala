@@ -10,6 +10,20 @@ import graft.ops.{Reshape, Scalar}
 /** Shared inputs, references and helpers of the pipeline specs. */
 object NplTestKit {
 
+  /** `Runner.Inputs` over the pipeline fixtures; `fixture` resolves a
+    * fixture file name to its path. */
+  def fixtureInputs(fixture: String => String): Runner.Inputs = Runner.Inputs(
+    nplCsv = fixture("npl_raw_mini.csv"),
+    flowrateGrossNewJson = fixture("flowrate_gross_new_npl.json"),
+    flowrateGrossJson = fixture("flowrate_gross_npl.json"),
+    flowratePctJson = fixture("flowrate_pct_npl.json"),
+    gdpPath = fixture("gdp_raw_mini.csv"),
+    gdpIsXlsx = false,
+    inflationCsv = fixture("inflation_mini.csv"),
+    mrrPagesJson = Seq(fixture("mrr_api_2013_01.json"), fixture("mrr_api_2013_02.json")),
+    minpayCsv = fixture("minpay.csv"),
+    shockCsv = fixture("shock.csv"))
+
   /** `Npl.nplTransform` as the reference reshapes (src:160-165) and as it
     * was computed before its one projection: the kept columns renamed to
     * `quarter::measure`, stacked, the two header levels split apart and

@@ -6,17 +6,7 @@ import graft.SparkSuite
 
 class RunnerSpec extends AnyFunSuite with SparkSuite {
 
-  private def inputs = Runner.Inputs(
-    nplCsv = fixture("npl_raw_mini.csv"),
-    flowrateGrossNewJson = fixture("flowrate_gross_new_npl.json"),
-    flowrateGrossJson = fixture("flowrate_gross_npl.json"),
-    flowratePctJson = fixture("flowrate_pct_npl.json"),
-    gdpPath = fixture("gdp_raw_mini.csv"),
-    gdpIsXlsx = false,
-    inflationCsv = fixture("inflation_mini.csv"),
-    mrrPagesJson = Seq(fixture("mrr_api_2013_01.json"), fixture("mrr_api_2013_02.json")),
-    minpayCsv = fixture("minpay.csv"),
-    shockCsv = fixture("shock.csv"))
+  private def inputs = NplTestKit.fixtureInputs(fixture)
 
   test("full extract→transform→load run writes three readable marts") {
     val outBase = java.nio.file.Files.createTempDirectory("graft_run").toString
