@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.text.Dedup
 
@@ -220,13 +220,11 @@ object IngestDedup {
     }
 
   /** Drain everything currently in the feed and stop (Trigger.AvailableNow):
-    * the catch-up / backfill mode of the loop. Returns the started query;
-    * callers await termination.
+    * the catch-up / backfill mode of the loop. Returns the terminated
+    * query; a failed drive throws here.
     */
   def runAvailable(stream: DataFrame, docsPath: String, indexPath: String,
                    labelsPath: String, checkpoint: String, p: Params): StreamingQuery =
-    attach(stream, docsPath, indexPath, labelsPath, p)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    EventStreams.drainAvailable(stream.sparkSession,
+      attach(stream, docsPath, indexPath, labelsPath, p), checkpoint)
 }

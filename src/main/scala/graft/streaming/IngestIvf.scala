@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.sim.Similarity
 
@@ -81,8 +81,6 @@ object IngestIvf {
   /** Drain the feed and stop (Trigger.AvailableNow) — catch-up mode. */
   def runAvailable(stream: DataFrame, indexPath: String, assignsPath: String,
                    checkpoint: String): StreamingQuery =
-    attach(stream, indexPath, assignsPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    EventStreams.drainAvailable(stream.sparkSession,
+      attach(stream, indexPath, assignsPath), checkpoint)
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.sim.Similarity
 
@@ -74,8 +74,6 @@ object IngestPq {
   /** Drain the feed and stop (Trigger.AvailableNow) — catch-up mode. */
   def runAvailable(stream: DataFrame, indexPath: String, codesPath: String,
                    checkpoint: String, m: Int): StreamingQuery =
-    attach(stream, indexPath, codesPath, m)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    EventStreams.drainAvailable(stream.sparkSession,
+      attach(stream, indexPath, codesPath, m), checkpoint)
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.sim.SignBandIndex
 
@@ -105,8 +105,6 @@ object IngestSemBand {
   def runAvailable(stream: DataFrame, indexPath: String, matchesPath: String,
                    checkpoint: String, p: SignBandIndex.Params,
                    threshold: Double): StreamingQuery =
-    attach(stream, indexPath, matchesPath, p, threshold)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    EventStreams.drainAvailable(stream.sparkSession,
+      attach(stream, indexPath, matchesPath, p, threshold), checkpoint)
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.sim.Similarity
 
@@ -117,8 +117,6 @@ object StreamKmeans {
   /** Drain the feed and stop (Trigger.AvailableNow) — catch-up mode. */
   def runAvailable(stream: DataFrame, statsPath: String,
                    checkpoint: String): StreamingQuery =
-    attach(stream, statsPath)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    EventStreams.drainAvailable(stream.sparkSession,
+      attach(stream, statsPath), checkpoint)
 }

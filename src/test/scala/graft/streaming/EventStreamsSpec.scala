@@ -227,24 +227,24 @@ class EventStreamsSpec extends AnyFunSuite with SparkSuite {
       (2L, 1 * h, 2L, "view", 2.0, "{}"),
       (2L, 1 * h, 2L, "view", 2.0, "{}"))) // in-batch duplicate
 
-    def start() = EventStreams
+    // each run processes what is there and STOPS (simulated failure or
+    // deploy); the drive helper checkpoints it through the FileSystem-based
+    // manager, since the checkpoint is local
+    def run() = EventStreams.drive(spark, EventStreams
       .dedupStream(EventStreams.readEventStream(spark, feed.toString))
       .select("event_id", "user_id", "value")
       .writeStream.outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt.toString)
-      .format("parquet").option("path", out.toString)
-      .start()
+      .format("parquet").option("path", out.toString),
+      Some(ckpt.toString))(_.processAllAvailable())
 
-    // first run: process batch 0, then STOP (simulated failure/deploy)
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
+    // first run: process batch 0, then stop
+    run()
     // second run: new data arrives (including a replay of event 1 — the
     // at-least-once upstream), restart from the SAME checkpoint
     stageBatch(feed, "b1.parquet", Seq(
       (1L, 1 * h, 1L, "view", 1.0, "{}"), // replayed across the restart
       (3L, 1 * h + h / 60, 3L, "view", 3.0, "{}")))
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
+    run()
 
     // the file sink's commit log + state-store recovery must yield each
     // event exactly once across the stop/restart boundary
@@ -252,5 +252,114 @@ class EventStreamsSpec extends AnyFunSuite with SparkSuite {
       .orderBy("event_id").as[(Long, Long, Double)].collect().toSeq
     assert(got == Seq((1L, 1L, 1.0), (2L, 2L, 2.0), (3L, 3L, 3.0)),
       s"exactly-once resume violated: $got")
+  }
+
+  // Every stream goes through EventStreams.drive: on the local file system
+  // its checkpoint files are renamed without forking a `readlink` per file,
+  // and the session's checkpoint-manager setting comes back as it was,
+  // whether the drive succeeds or fails.
+
+  private val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val fileContextManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+
+  /** The command line of every process this JVM started while `body` ran,
+    * read back from an in-process JFR recording of `jdk.ProcessStart`.
+    */
+  private def forks(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    val out = java.nio.file.Files.createTempFile("forks", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(out)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.toSeq
+        .map(_.getString("command"))
+    } finally { rec.close(); java.nio.file.Files.deleteIfExists(out) }
+  }
+
+  private def assertNoReadlink(cmds: Seq[String]): Unit = {
+    val readlinks = cmds.filter(_.startsWith("readlink"))
+    assert(readlinks.size == 0,
+      s"readlink forks, of ${cmds.size} forks in all; first: ${readlinks.headOption}")
+  }
+
+  test("a sessionize drive renames its checkpoint files without forking readlink") {
+    var rows = 0L
+    val cmds = forks {
+      rows = graft.SparkEntry.queries("q_stream_sessionize")(spark, dir).count()
+    }
+    assert(rows > 0)
+    assertNoReadlink(cmds)
+  }
+
+  test("an ingest-dedup drain renames its checkpoint files without forking readlink") {
+    import java.nio.file.Files
+    def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+    val (feed, docsP, idx, labelsP) =
+      (tmp("ckpt_ingest_feed"), tmp("ckpt_ingest_docs") + "/docs",
+        tmp("ckpt_ingest_idx") + "/idx", tmp("ckpt_ingest_labels") + "/labels")
+    val p = IngestDedup.Params(n = 3, numHashes = 32, bands = 16,
+      verifyThreshold = 0.5)
+    IngestDedup.ensureIngestState(Seq(
+        (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"))
+      .toDF("doc_id", "text"), docsP, idx, labelsP, p)
+    Seq((10L, "red orange yellow green blue indigo violet pink brown black white"))
+      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(feed)
+    val cmds = forks {
+      IngestDedup.runAvailable(
+        spark.readStream.schema("doc_id BIGINT, text STRING").parquet(feed),
+        docsP, idx, labelsP, tmp("ckpt_ingest_ckpt"), p)
+    }
+    assert(IngestDedup.labels(spark, labelsP).orderBy("id")
+      .as[(Long, Long)].collect().toSeq == Seq((1L, 1L), (10L, 10L)))
+    assertNoReadlink(cmds)
+  }
+
+  private def quarterlyTo(name: String) =
+    EventStreams.quarterlyValues(EventStreams.readEventStream(spark, feedDir))
+      .writeStream.outputMode(OutputMode.Update).format("memory").queryName(name)
+
+  test("a drive restores a set checkpoint-manager setting, and overrides it meanwhile") {
+    spark.conf.set(managerKey, fileContextManager)
+    try {
+      var during: Option[String] = None
+      EventStreams.drive(spark, quarterlyTo("ckpt_set")) { q =>
+        during = spark.conf.getOption(managerKey)
+        q.processAllAvailable()
+      }
+      assert(during.exists(_.endsWith("FileSystemBasedCheckpointFileManager")))
+      assert(spark.conf.getOption(managerKey) == Some(fileContextManager))
+      assert(spark.table("ckpt_set").count() > 0)
+    } finally spark.conf.unset(managerKey)
+  }
+
+  test("a drive leaves an unset checkpoint-manager setting unset") {
+    assert(spark.conf.getOption(managerKey).isEmpty)
+    EventStreams.drive(spark, quarterlyTo("ckpt_unset"))(_.processAllAvailable())
+    assert(spark.conf.getOption(managerKey).isEmpty)
+    assert(spark.table("ckpt_unset").count() > 0)
+  }
+
+  test("a failing drive restores the setting and leaves no query running") {
+    spark.conf.set(managerKey, fileContextManager)
+    try {
+      val failing = EventStreams.readEventStream(spark, feedDir)
+        .select(raise_error(lit("injected failure")).as("x"))
+      intercept[Exception] {
+        EventStreams.runToCompletion(spark, failing, "ckpt_failing", OutputMode.Append)
+      }
+      assert(spark.conf.getOption(managerKey) == Some(fileContextManager))
+      spark.conf.unset(managerKey)
+      intercept[IllegalStateException] {
+        EventStreams.drive(spark, quarterlyTo("ckpt_await_throws")) { _ =>
+          throw new IllegalStateException("await failed")
+        }
+      }
+      assert(spark.conf.getOption(managerKey).isEmpty)
+      assert(spark.streams.active.isEmpty)
+    } finally spark.conf.unset(managerKey)
   }
 }
