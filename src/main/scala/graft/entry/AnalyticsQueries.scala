@@ -41,7 +41,7 @@ private[graft] object AnalyticsQueries {
     */
   private def qDedupKeepBest(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val groups = njGroups(s, dir)
     val w = Window.partitionBy("group_id").orderBy(desc("score"), asc("doc_id"))
     docs.join(groups, "doc_id")
@@ -58,7 +58,7 @@ private[graft] object AnalyticsQueries {
     * moments in exact DECIMAL then one double formula are.
     */
   private def qCorrStats(s: SparkSession, dir: String): DataFrame = {
-    val li = read(s, dir, "lineitem")
+    val li = Tables.table(s, dir, "lineitem")
     val n = count(lit(1)).cast("double")
     li.groupBy(Scalar.toQuarter(col("l_shipdate")).as("Quarter"))
       .agg(n.as("n"),
@@ -88,7 +88,7 @@ private[graft] object AnalyticsQueries {
     */
   private def qTfidf(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val terms = docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("term"))
     val tf = terms.groupBy("doc_id", "term").agg(count(lit(1)).as("cnt"))
       .withColumn("len", sum("cnt").over(Window.partitionBy("doc_id")))
@@ -112,8 +112,8 @@ private[graft] object AnalyticsQueries {
     * shuffle only the key column.
     */
   private def qJoinSemiAnti(s: SparkSession, dir: String): DataFrame = {
-    val c = read(s, dir, "customer").select("c_custkey", "c_mktsegment")
-    val o = read(s, dir, "orders").select(col("o_custkey"))
+    val c = Tables.table(s, dir, "customer").select("c_custkey", "c_mktsegment")
+    val o = Tables.table(s, dir, "orders").select(col("o_custkey"))
     c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
       .withColumn("op", lit("has_orders"))
       .unionByName(
@@ -129,7 +129,7 @@ private[graft] object AnalyticsQueries {
     * pin that case to bin 0 instead of relying on NaN semantics.
     */
   private def qHistogram(s: SparkSession, dir: String): DataFrame = {
-    val o = read(s, dir, "orders")
+    val o = Tables.table(s, dir, "orders")
     val mm = o.agg(min(col("o_totalprice")).as("mn"), max(col("o_totalprice")).as("mx"))
     o.crossJoin(broadcast(mm))
       .withColumn("w", (col("mx") - col("mn")) / lit(20.0))
@@ -150,7 +150,7 @@ private[graft] object AnalyticsQueries {
     * 1.73 — anything above that returns nothing on this data.
     */
   private def qZscoreOutliers(s: SparkSession, dir: String): DataFrame = {
-    val o = read(s, dir, "orders")
+    val o = Tables.table(s, dir, "orders")
       .withColumn("Quarter", Scalar.toQuarter(col("o_orderdate")))
     val n = count(lit(1)).cast("double")
     val mom = o.groupBy("Quarter")
@@ -182,7 +182,7 @@ private[graft] object AnalyticsQueries {
     // Eager checkpoint: prefixSum's repartitionByRange samples its input,
     // which would otherwise run the aggregate twice (q_weighted_median
     // precedent).
-    val vals = read(s, dir, "customer")
+    val vals = Tables.table(s, dir, "customer")
       .filter(col("c_acctbal") > 0.0)
       .groupBy(floor(col("c_acctbal") * lit(1000000.0)).cast("long").as("xq"))
       .agg(count(lit(1)).as("c"))
@@ -210,7 +210,7 @@ private[graft] object AnalyticsQueries {
     */
   private def qKsTest(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val c = read(s, dir, "customer")
+    val c = Tables.table(s, dir, "customer")
       .filter(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
     val vals = c.groupBy(floor(col("c_acctbal") * lit(1000000.0)).cast("long").as("xq"))
       .agg(sum(when(col("c_mktsegment") === "BUILDING", 1L).otherwise(0L)).as("c1"),
@@ -271,7 +271,7 @@ private[graft] object AnalyticsQueries {
     */
   private def qSkyline(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val p = read(s, dir, "part")
+    val p = Tables.table(s, dir, "part")
     val bySize = p.groupBy("p_size").agg(max("p_retailprice").as("mp"))
     val w = Window.orderBy("p_size").rowsBetween(Window.unboundedPreceding, -1)
     val cm = bySize.withColumn("best_smaller", max("mp").over(w))
@@ -317,7 +317,7 @@ private[graft] object AnalyticsQueries {
     * q_tfidf libm-parity convention). Cell-count-bounded output.
     */
   private def qMutualInfo(s: SparkSession, dir: String): DataFrame = {
-    val j = read(s, dir, "orders").join(read(s, dir, "customer"),
+    val j = Tables.table(s, dir, "orders").join(Tables.table(s, dir, "customer"),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("seg"), col("o_orderpriority").as("prio"))
     val cells = j.groupBy("seg", "prio").agg(count(lit(1)).as("n_xy"))
@@ -339,7 +339,7 @@ private[graft] object AnalyticsQueries {
     * classic categorical-drift / feature-screening test.
     */
   private def qChisq(s: SparkSession, dir: String): DataFrame = {
-    val j = read(s, dir, "orders").join(read(s, dir, "customer"),
+    val j = Tables.table(s, dir, "orders").join(Tables.table(s, dir, "customer"),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("seg"), col("o_orderpriority").as("prio"))
     val cells = j.groupBy("seg", "prio").agg(count(lit(1)).as("n_xy"))
@@ -389,7 +389,7 @@ private[graft] object AnalyticsQueries {
   private def qKmvDistinct(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val k = 64
-    val qp = read(s, dir, "lineitem")
+    val qp = Tables.table(s, dir, "lineitem")
       .select(Scalar.toQuarter(col("l_shipdate")).as("Quarter"), col("l_partkey"))
       .distinct()
       .localCheckpoint() // shared by the sketch and its exact companion
@@ -416,7 +416,7 @@ private[graft] object AnalyticsQueries {
     val m = TextOps.HashMod
     val k0 = pmod(col("l_orderkey") * lit(31L) + col("l_linenumber"), lit(m))
     val h = TextOps.mixRound(TextOps.mixRound(k0, TextOps.DefaultMixMult), TextOps.DefaultMixMult)
-    read(s, dir, "lineitem")
+    Tables.table(s, dir, "lineitem")
       .filter(pmod(h, lit(100L)) < 5)
       .select("l_orderkey", "l_linenumber", "l_quantity")
       .orderBy("l_orderkey", "l_linenumber")
@@ -428,10 +428,10 @@ private[graft] object AnalyticsQueries {
     * correct 100 TB shape: fact scan × broadcast ranges, no shuffle.
     */
   private def qRangeJoin(s: SparkSession, dir: String): DataFrame = {
-    val qdim = read(s, dir, "orders")
+    val qdim = Tables.table(s, dir, "orders")
       .select(date_trunc("quarter", col("o_orderdate")).cast("date").as("qstart")).distinct()
       .withColumn("qend", add_months(col("qstart"), 3))
-    read(s, dir, "lineitem")
+    Tables.table(s, dir, "lineitem")
       .join(broadcast(qdim),
         col("l_shipdate") >= col("qstart") && col("l_shipdate") < col("qend"))
       .groupBy("qstart").agg(count(lit(1)).as("n_items"))
@@ -444,7 +444,7 @@ private[graft] object AnalyticsQueries {
     * engines for RE2-compatible patterns.
     */
   private def qRegexExtract(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "part")
+    Tables.table(s, dir, "part")
       .select(regexp_extract(col("p_brand"), "Brand#(\\d+)", 1).cast("int").as("brand_num"))
       .groupBy("brand_num").agg(count(lit(1)).as("n"))
       .orderBy("brand_num")
@@ -460,7 +460,7 @@ private[graft] object AnalyticsQueries {
     val cents = round(col("o_totalprice") * 100, 0).cast("long")
     val key = concat(lpad(cents.cast("string"), 12, "0"), lit("#"),
       lpad(col("o_orderkey").cast("string"), 12, "0"))
-    read(s, dir, "orders")
+    Tables.table(s, dir, "orders")
       .withColumn("Quarter", Scalar.toQuarter(col("o_orderdate")))
       .withColumn("k", key)
       .groupBy("Quarter")
@@ -475,7 +475,7 @@ private[graft] object AnalyticsQueries {
     * pandas compare) plus a count.
     */
   private def qCollectAgg(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "orders")
+    Tables.table(s, dir, "orders")
       .groupBy("o_orderpriority")
       .agg(array_join(array_sort(collect_set(col("o_orderstatus"))), ",").as("statuses"),
         count(lit(1)).as("n"))
@@ -487,7 +487,7 @@ private[graft] object AnalyticsQueries {
     */
   private def qScanJsonl(s: SparkSession, dir: String): DataFrame = {
     val tmp = tmpDir("scan_jsonl", dir)
-    read(s, dir, "nation").coalesce(1).write.mode("overwrite").json(tmp)
+    Tables.table(s, dir, "nation").coalesce(1).write.mode("overwrite").json(tmp)
     s.read.schema("n_nationkey INT, n_name STRING, n_regionkey INT").json(tmp)
       .orderBy("n_nationkey")
   }
@@ -497,7 +497,7 @@ private[graft] object AnalyticsQueries {
     * (levenshtein is integer-valued, so cross-engine exact).
     */
   private def qStringFuncs(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "part")
+    Tables.table(s, dir, "part")
       .select(col("p_partkey"),
         upper(col("p_name")).as("name_up"),
         lpad(col("p_brand"), 12, "*").as("brand_pad"),
@@ -513,7 +513,7 @@ private[graft] object AnalyticsQueries {
   private def qWindowRanks(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("Quarter").orderBy(desc("o_totalprice"), asc("o_orderkey"))
-    read(s, dir, "orders")
+    Tables.table(s, dir, "orders")
       .withColumn("Quarter", Scalar.toQuarter(col("o_orderdate")))
       .withColumn("rk", rank().over(w).cast("int"))
       .withColumn("pct_rk", percent_rank().over(w))
@@ -530,7 +530,7 @@ private[graft] object AnalyticsQueries {
     */
   private def qMonthSpine(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val o = read(s, dir, "orders")
+    val o = Tables.table(s, dir, "orders")
     val mm = o.agg(min(date_trunc("month", col("o_orderdate"))).cast("date").as("mn"),
       max(date_trunc("month", col("o_orderdate"))).cast("date").as("mx"))
     val spine = mm.select(
@@ -553,7 +553,7 @@ private[graft] object AnalyticsQueries {
     */
   private def qSkewSalted(s: SparkSession, dir: String): DataFrame =
     graft.ops.Skew.saltedSumCount(
-        read(s, dir, "lineitem"),
+        Tables.table(s, dir, "lineitem"),
         key = Scalar.toQuarter(col("l_shipdate")),
         value = col("l_quantity"),
         saltSrc = Seq(col("l_orderkey"), col("l_linenumber")))
@@ -575,10 +575,10 @@ private[graft] object AnalyticsQueries {
     val suffix = s"${dirTag(dir)}_$stamp"
     val base = s"${tmpDir("bucketed_join", dir)}_$stamp"
     graft.ops.Bucketing.ensureBucketed(s,
-      read(s, dir, "lineitem").select("l_orderkey", "l_quantity"),
+      Tables.table(s, dir, "lineitem").select("l_orderkey", "l_quantity"),
       s"li_bkt$suffix", s"$base/li", 8, "l_orderkey")
     graft.ops.Bucketing.ensureBucketed(s,
-      read(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
+      Tables.table(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
       s"ord_bkt$suffix", s"$base/ord", 8, "o_orderkey")
     val a = graft.ops.Bucketing.readTable(s, s"li_bkt$suffix")
     val b = graft.ops.Bucketing.readTable(s, s"ord_bkt$suffix")
@@ -595,7 +595,7 @@ private[graft] object AnalyticsQueries {
     * the unordered collect_list is safe.
     */
   private def qMapPivot(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "lineitem")
+    Tables.table(s, dir, "lineitem")
       .groupBy(Scalar.toQuarter(col("l_shipdate")).as("Quarter"),
         col("l_returnflag").as("flag"))
       .agg(Scalar.stableSum(col("l_quantity")).as("qty"))

@@ -43,7 +43,7 @@ private[graft] object CurationQueries {
       lit(".org tel 555-"),
       lpad(pmod(col("doc_id"), lit(10000L)).cast("string"), 4, "0"),
       lit(" ip 10.0."), pmod(col("doc_id"), lit(256L)).cast("string"), lit(".7"))
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .withColumn("enriched", concat(col("text"), lit(" "), contact))
       .select(col("doc_id"),
         TextOps.redactPii(col("enriched")).as("redacted"),
@@ -60,7 +60,7 @@ private[graft] object CurationQueries {
     * corpus side is one scan (Dedup.contaminationHits).
     */
   private def qDecontaminate(s: SparkSession, dir: String): DataFrame =
-    Dedup.contaminationHits(read(s, dir, "documents"),
+    Dedup.contaminationHits(Tables.table(s, dir, "documents"),
         pmod(col("doc_id"), lit(10L)) === 8, n = 8)
       .orderBy("doc_id")
 
@@ -80,7 +80,7 @@ private[graft] object CurationQueries {
     */
   private def qSemDecontaminate(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val hits = Similarity.semanticMatches(s, read(s, dir, "embeddings"),
+    val hits = Similarity.semanticMatches(s, Tables.table(s, dir, "embeddings"),
         queryPred = pmod(col("vec_id"), lit(10L)) === 8L, threshold = 0.35)
       .filter(pmod(col("vec_id"), lit(10L)) =!= 8L)
     val w = Window.partitionBy("vec_id").orderBy(desc("sim"), col("query_id"))
@@ -95,7 +95,7 @@ private[graft] object CurationQueries {
     */
   private def qGlobalIds(s: SparkSession, dir: String): DataFrame =
     graft.ops.Ordered.globalRowIds(
-        read(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
+        Tables.table(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
         Seq(col("o_orderkey")), "gid")
       .select("o_orderkey", "o_orderpriority", "gid")
       .orderBy("o_orderkey")
@@ -109,7 +109,7 @@ private[graft] object CurationQueries {
     */
   private def qStratifiedSample(s: SparkSession, dir: String): DataFrame = {
     val h = TextOps.mixedHash(col("doc_id").cast("string"))
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .filter(pmod(h, lit(100L)) <
         when(col("lang") === "en", lit(50L)).otherwise(lit(10L)))
       .select("doc_id", "lang", "source")
@@ -178,7 +178,7 @@ private[graft] object CurationQueries {
     */
   private def qTextNormalize(s: SparkSession, dir: String): DataFrame = {
     graft.functions.NfcNormalize.register(s)
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       // decomposed plant: 'a' + U+0301 (the oracle spells it chr(769) —
       // Spark's chr() is ASCII-only, so this side uses the escape literal)
       .withColumn("raw", replace(col("text"), lit("a"), lit("a\u0301")))
@@ -197,7 +197,7 @@ private[graft] object CurationQueries {
     * repeated spans; a later exact duplicate comes back empty.
     */
   private def qLineDedup(s: SparkSession, dir: String): DataFrame =
-    Dedup.lineDedup(read(s, dir, "documents"), chunkTokens = 8)
+    Dedup.lineDedup(Tables.table(s, dir, "documents"), chunkTokens = 8)
       .orderBy("doc_id")
 
   /** X1 exact duplicated-substring spans (Lee et al. 2022's ExactSubstr
@@ -209,7 +209,7 @@ private[graft] object CurationQueries {
     * window arithmetic are all engine-portable: fully oracle-checked.
     */
   private def qDupSpans(s: SparkSession, dir: String): DataFrame =
-    Dedup.dupSpans(read(s, dir, "documents"), k = 4, minTokens = 8)
+    Dedup.dupSpans(Tables.table(s, dir, "documents"), k = 4, minTokens = 8)
       .orderBy("doc_a", "doc_b", "a_start", "b_start")
 
   /** X1 ExactSubstr duplicated-region stats (Lee et al. 2022 — the
@@ -221,7 +221,7 @@ private[graft] object CurationQueries {
     * Spark (sorted-neighbor LCP ≥ k ⟺ k-gram count ≥ 2).
     */
   private def qExactSubstr(s: SparkSession, dir: String): DataFrame =
-    Dedup.exactSubstrDupStats(read(s, dir, "documents"), k = 24)
+    Dedup.exactSubstrDupStats(Tables.table(s, dir, "documents"), k = 24)
       .orderBy("doc_id")
 
   /** X3 sequence packing: concatenate the corpus in doc_id order and cut
@@ -233,7 +233,7 @@ private[graft] object CurationQueries {
     * no single-task global window anywhere.
     */
   private def qSeqPack(s: SparkSession, dir: String): DataFrame = {
-    val manifest = read(s, dir, "documents")
+    val manifest = Tables.table(s, dir, "documents")
       .select(col("doc_id"), TextOps.tokenCount(col("text")).cast("long").as("n_tok"))
     graft.ops.Ordered.prefixSum(manifest, Seq(col("doc_id")), col("n_tok"), "cum_before")
       .select(col("doc_id"), col("n_tok"), col("cum_before"),
@@ -259,7 +259,7 @@ private[graft] object CurationQueries {
     */
   private def qWeightedSample(s: SparkSession, dir: String): DataFrame = {
     val n = 100L
-    val manifest = read(s, dir, "documents")
+    val manifest = Tables.table(s, dir, "documents")
       .select(col("doc_id"), col("n_chars").cast("long").as("w"))
     val cum = graft.ops.Ordered.prefixSum(
       manifest, Seq(col("doc_id")), col("w"), "cum_before")
@@ -281,7 +281,7 @@ private[graft] object CurationQueries {
     * can't sort ndarray cells).
     */
   private def qEmbedQuantize(s: SparkSession, dir: String): DataFrame =
-    graft.sim.Similarity.quantizeInt8(read(s, dir, "embeddings"))
+    graft.sim.Similarity.quantizeInt8(Tables.table(s, dir, "embeddings"))
       .select(col("vec_id"), round(col("scale"), 9).as("scale"),
         array_join(transform(col("q"), _.cast("string")), ",").as("q_str"),
         round(col("max_err"), 9).as("max_err"))
@@ -314,7 +314,7 @@ private[graft] object CurationQueries {
     * to 6 places on both engines (SURVEY §5.1 float-parity rule).
     */
   private def qUnigramLogprob(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val toks = docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("term"))
     val tf = toks.groupBy("term").agg(count(lit(1)).as("tf"))
     val total = tf.agg(sum("tf").as("n_total"))
@@ -344,7 +344,7 @@ private[graft] object CurationQueries {
     */
   private def qDsirWeights(s: SparkSession, dir: String): DataFrame = {
     val nb = 64L
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val toks = docs.select(col("doc_id"), col("lang"),
         explode(TextOps.tokens(col("text"))).as("tok"))
       .select(col("doc_id"), col("lang"),

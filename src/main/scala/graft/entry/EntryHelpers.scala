@@ -4,17 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Scalar
+import graft.sources.Tables
 import graft.text.{Dedup, TextOps}
 
-/** Shared plumbing of the SparkEntry query families: testdata readers,
-  * stamped temp/feed staging, stable-aggregate SQL spellings, and the
+/** Shared plumbing of the SparkEntry query families: stamped temp/feed
+  * staging, stable-aggregate SQL spellings, and the
   * DuckDB oracle helper fragments (portable hash family, cosine fold,
   * fixed-point-Lloyd CTE chain). Split out of the monolithic SparkEntry
   * (round-5 verdict ask #8); zero behavior change.
   */
 private[graft] object EntryHelpers {
-  def read(s: SparkSession, dir: String, table: String): DataFrame =
-    s.read.parquet(s"$dir/$table.parquet")
   /** One sanitizer for every sf-dir-derived identifier (tmp paths, table
     * names, stream names) — table names cannot hold dots, so nothing can.
     */
@@ -51,7 +50,7 @@ private[graft] object EntryHelpers {
     */
   def knnTop5(s: SparkSession, dir: String): DataFrame =
     graft.sources.Stamped.ensure(s, dir, "embeddings.parquet", "knn_top5") {
-      graft.sim.Similarity.annTopkBatch(s, read(s, dir, "embeddings"),
+      graft.sim.Similarity.annTopkBatch(s, Tables.table(s, dir, "embeddings"),
         queryPred = lit(true), k = 5)
     }
 
@@ -70,7 +69,7 @@ private[graft] object EntryHelpers {
     */
   def shingleDf3(s: SparkSession, dir: String): DataFrame =
     graft.sources.Stamped.ensure(s, dir, "documents.parquet", "shingledf_n3") {
-      Dedup.shingleDf(read(s, dir, "documents"), n = 3)
+      Dedup.shingleDf(Tables.table(s, dir, "documents"), n = 3)
     }
 
   /** The corpus near-dup pair table (doc_a, doc_b) at the suite's
@@ -112,7 +111,7 @@ private[graft] object EntryHelpers {
     */
   def njGroups(s: SparkSession, dir: String): DataFrame =
     graft.sources.Stamped.ensure(s, dir, "documents.parquet", "njgroups_n3_t05") {
-      Dedup.dedupGroups(read(s, dir, "documents"), njPairs(s, dir), "doc_id")
+      Dedup.dedupGroups(Tables.table(s, dir, "documents"), njPairs(s, dir), "doc_id")
     }
 
   /** Exact 3-gram-Jaccard ≥ 1/2 pair truth (doc_a, doc_b, jaccard) from
@@ -140,7 +139,7 @@ private[graft] object EntryHelpers {
     */
   def embPairsT04(s: SparkSession, dir: String): DataFrame =
     graft.sources.Stamped.ensure(s, dir, "embeddings.parquet", "embpairs_t04") {
-      graft.sim.Similarity.nearDupPairsBanded(s, read(s, dir, "embeddings"),
+      graft.sim.Similarity.nearDupPairsBanded(s, Tables.table(s, dir, "embeddings"),
         threshold = 0.4)
     }
 
@@ -154,7 +153,7 @@ private[graft] object EntryHelpers {
   def exactCosQ10(s: SparkSession, dir: String): DataFrame =
     graft.sources.Stamped.ensure(s, dir, "embeddings.parquet", "exactcos_q10") {
       import org.apache.spark.sql.expressions.Window
-      val emb = read(s, dir, "embeddings")
+      val emb = Tables.table(s, dir, "embeddings")
       val queries10 = emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("embedding").as("qemb"))
       val cos = emb.crossJoin(broadcast(queries10))
@@ -171,7 +170,7 @@ private[graft] object EntryHelpers {
     */
   def annQ10(s: SparkSession, dir: String): DataFrame =
     graft.sources.Stamped.ensure(s, dir, "embeddings.parquet", "ann_q10_top10") {
-      graft.sim.Similarity.annTopkBatch(s, read(s, dir, "embeddings"),
+      graft.sim.Similarity.annTopkBatch(s, Tables.table(s, dir, "embeddings"),
         queryPred = col("vec_id") < 10, k = 10)
     }
 

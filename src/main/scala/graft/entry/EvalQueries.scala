@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.entry.EntryHelpers._
+import graft.sources.Tables
 import graft.text.Dedup
 
 /** Round-6 curation/embedding EVALUATION queries — the engine measuring
@@ -36,7 +37,7 @@ private[graft] object EvalQueries {
     * (per-block windows, no global single-partition sort), ≤ 2·n pairs.
     */
   private def blockedCandidates(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
       .select(col("doc_id"), col("lang"), trim(lower(col("text"))).as("nt"))
       .withColumn("key", substring(col("nt"), 1, 16))
       .withColumn("blk", substring(col("nt"), 1, 2))
@@ -102,7 +103,7 @@ private[graft] object EvalQueries {
     * low). One shingle pass, one combinable min, one key join.
     */
   private def qNgramNovelty(s: SparkSession, dir: String): DataFrame = {
-    val sh = Dedup.shingleSet(read(s, dir, "documents"), n = 3)
+    val sh = Dedup.shingleSet(Tables.table(s, dir, "documents"), n = 3)
     val first = sh.groupBy("s").agg(min("doc_id").as("fd"))
     sh.join(first, "s")
       .groupBy("doc_id")
@@ -123,7 +124,7 @@ private[graft] object EvalQueries {
     * map-side-combinable — linear at any SF.
     */
   private def qPerplexity(s: SparkSession, dir: String): DataFrame = {
-    val toks = read(s, dir, "documents")
+    val toks = Tables.table(s, dir, "documents")
       .select(col("doc_id"), explode(split(trim(lower(col("text"))), "\\s+")).as("w"))
     val vocab = toks.groupBy("w").agg(count(lit(1)).as("cw"))
     val tot = toks.agg(count(lit(1)).as("nt"))
@@ -153,7 +154,7 @@ private[graft] object EvalQueries {
     * combinable count over the per-doc pass.
     */
   private def qLangidConfusion(s: SparkSession, dir: String): DataFrame = {
-    val tok = read(s, dir, "documents")
+    val tok = Tables.table(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         explode(graft.text.TextOps.tokens(col("text"))).as("w"))
     val pred = tok.groupBy("doc_id", "lang")
@@ -174,7 +175,7 @@ private[graft] object EvalQueries {
     * score — the difficulty schedule of curriculum training.
     */
   private def qCurriculumBuckets(s: SparkSession, dir: String): DataFrame = {
-    val scored = read(s, dir, "documents")
+    val scored = Tables.table(s, dir, "documents")
       .select(col("doc_id"), graft.text.TextOps.qualityScore(col("text")).as("score"))
       .localCheckpoint()
     val n = scored.count()
@@ -198,7 +199,7 @@ private[graft] object EvalQueries {
   private def qKnnClassify(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val knn = knnTop5(s, dir)
-    val labels = read(s, dir, "documents").select(col("doc_id"), col("lang"))
+    val labels = Tables.table(s, dir, "documents").select(col("doc_id"), col("lang"))
     val votes = knn.join(labels, knn("vec_id") === labels("doc_id"))
       .groupBy(col("query_id"), col("lang").as("nlang"))
       .agg(count(lit(1)).as("v"))
@@ -222,7 +223,7 @@ private[graft] object EvalQueries {
     * verified LSH pair set (same fusion as q_dedup_band_sweep).
     */
   private def qNearDupEval(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     // truth reads the stamped lossless-prefix artifact; the shingle pass
     // feeds only the LSH side now, so it is single-use (no cache dance)
     val truth = truthPairsT05(s, dir).select("doc_a", "doc_b")
@@ -247,7 +248,7 @@ private[graft] object EvalQueries {
     * one combinable aggregate per half, dim-bounded output.
     */
   private def qCentroidDrift(s: SparkSession, dir: String): DataFrame = {
-    val pts = read(s, dir, "embeddings")
+    val pts = Tables.table(s, dir, "embeddings")
       .select(pmod(col("vec_id"), lit(2L)).as("half"),
         posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("half"), col("pos"),
@@ -267,7 +268,7 @@ private[graft] object EvalQueries {
     * one rounded division per source.
     */
   private def qDupRateBySource(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val groups = njGroups(s, dir)
     val sizes = groups.groupBy("group_id").agg(count(lit(1)).as("gsz"))
     val flagged = groups.join(sizes, "group_id")
@@ -297,7 +298,7 @@ private[graft] object EvalQueries {
     // measured no better). Trigram multiset identical, incl. the
     // short-doc and NULL edge cases (see the kernel's scaladoc).
     graft.functions.CharShingles.register(s)
-    val tri = read(s, dir, "documents")
+    val tri = Tables.table(s, dir, "documents")
       .select(col("lang"), trim(lower(col("text"))).as("nt"))
       .select(col("lang"),
         explode(graft.functions.CharShingles.charShingles(col("nt"), 3)).as("tri"))
@@ -316,7 +317,7 @@ private[graft] object EvalQueries {
     * exact integers. Dim-bounded output.
     */
   private def qDimVariance(s: SparkSession, dir: String): DataFrame = {
-    val pts = read(s, dir, "embeddings")
+    val pts = Tables.table(s, dir, "embeddings")
       .select(posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("pos"),
         (floor(col("v").cast("double") * 1000000).cast("long") + 1000000L).as("e"))
@@ -340,7 +341,7 @@ private[graft] object EvalQueries {
     * expression; vec_id ties pin the greedy order cross-engine.
     */
   private def qMmr(s: SparkSession, dir: String): DataFrame = {
-    val emb = read(s, dir, "embeddings")
+    val emb = Tables.table(s, dir, "embeddings")
     val cands = graft.sim.Similarity.topkCosine(s, emb, queryId = 0L, k = 10)
       .localCheckpoint()
     val withE = cands.join(emb, "vec_id").select(col("vec_id"), col("sim"), col("embedding"))
@@ -420,7 +421,7 @@ private[graft] object EvalQueries {
     * construction, and the recall curve is one pair equi-join.
     */
   private def qDedupBandSweep(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     // truth reads the stamped lossless-prefix artifact; one shingle pass
     // feeds the three band points (single consumer — no cache dance)
     val truth = truthPairsT05(s, dir).select("doc_a", "doc_b")
@@ -463,7 +464,7 @@ private[graft] object EvalQueries {
     * Shard-count-bounded output.
     */
   private def qShardAssign(s: SparkSession, dir: String): DataFrame = {
-    val m = read(s, dir, "documents")
+    val m = Tables.table(s, dir, "documents")
       .select(col("doc_id"), graft.text.TextOps.tokenCount(col("text")).cast("long").as("n_tok"))
     val ranked = graft.ops.Ordered.prefixSum(m,
       Seq(col("n_tok").desc, col("doc_id")), lit(1L), "idx")
@@ -481,7 +482,7 @@ private[graft] object EvalQueries {
     * or everything after it is out).
     */
   private def qBudgetTrim(s: SparkSession, dir: String): DataFrame = {
-    val scored = read(s, dir, "documents")
+    val scored = Tables.table(s, dir, "documents")
       .select(col("doc_id"), graft.text.TextOps.qualityScore(col("text")).as("score"),
         graft.text.TextOps.tokenCount(col("text")).cast("long").as("n_tok"))
     val tot = scored.agg(sum("n_tok").as("tot"))
@@ -503,7 +504,7 @@ private[graft] object EvalQueries {
     */
   private def qOodDetect(s: SparkSession, dir: String): DataFrame = {
     val (assign, _) = graft.sim.Similarity.kmeansFixedFull(
-      read(s, dir, "embeddings"), k = 8, iters = 2)
+      Tables.table(s, dir, "embeddings"), k = 8, iters = 2)
     val dd = col("dist").cast(DecimalType(38, 0))
     val m = assign.agg(count(lit(1)).as("n"),
       sum(dd).as("sd"), sum(dd * dd).as("sq"))
@@ -524,7 +525,7 @@ private[graft] object EvalQueries {
     */
   private def qClusterBalance(s: SparkSession, dir: String): DataFrame = {
     val (assign, _) = graft.sim.Similarity.kmeansFixedFull(
-      read(s, dir, "embeddings"), k = 8, iters = 2)
+      Tables.table(s, dir, "embeddings"), k = 8, iters = 2)
     val t = assign.agg(count(lit(1)).as("tot"))
     assign.groupBy("cluster").agg(count(lit(1)).as("n_vecs"))
       .crossJoin(broadcast(t))
@@ -543,7 +544,7 @@ private[graft] object EvalQueries {
     * index (long format, one combinable min per (doc, slot)).
     */
   private def qMinhashEst(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     // ONE 16-hash signature pass feeds both the banded candidates and the
     // per-hash agreement estimate (the estimate's long form is the wide
     // signature table unpivoted). The verified pair set with its exact
@@ -577,7 +578,7 @@ private[graft] object EvalQueries {
     * rand()-based undersampling. Per-key windows; group-count broadcast.
     */
   private def qClassRebalance(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents").select(col("doc_id"), col("lang"))
+    val docs = Tables.table(s, dir, "documents").select(col("doc_id"), col("lang"))
     val m = docs.groupBy("lang").agg(count(lit(1)).as("n"))
       .agg(min("n").as("m"))
     val h = graft.text.TextOps.mixedOf(
@@ -598,9 +599,9 @@ private[graft] object EvalQueries {
     * label join + one per-query rank window.
     */
   private def qHardNegatives(s: SparkSession, dir: String): DataFrame = {
-    val knn = graft.sim.Similarity.annTopkBatch(s, read(s, dir, "embeddings"),
+    val knn = graft.sim.Similarity.annTopkBatch(s, Tables.table(s, dir, "embeddings"),
       queryPred = col("vec_id") < 20, k = 10)
-    val labels = read(s, dir, "documents").select(col("doc_id"), col("lang"))
+    val labels = Tables.table(s, dir, "documents").select(col("doc_id"), col("lang"))
     val ql = labels.select(col("doc_id").as("query_id"), col("lang").as("qlang"))
     val nl = labels.select(col("doc_id").as("vec_id"), col("lang").as("nlang"))
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
@@ -619,7 +620,7 @@ private[graft] object EvalQueries {
     * combinable aggregates.
     */
   private def qDataCard(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val en = sum(when(col("lang") === "en", 1L).otherwise(0L))
     docs.select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
         graft.text.TextOps.tokenCount(col("text")).cast("long").as("n_tok"),
@@ -643,7 +644,7 @@ private[graft] object EvalQueries {
     * joins; source-pair-bounded output.
     */
   private def qCrossSourceOverlap(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val pairs = njPairs(s, dir)
     val src = docs.select(col("doc_id"), col("source"))
     pairs
@@ -662,7 +663,7 @@ private[graft] object EvalQueries {
     * combinable aggregate on a derived key.
     */
   private def qTemplateDetect(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .select(col("doc_id"), substring(trim(lower(col("text"))), 1, 32).as("prefix"))
       .groupBy("prefix")
       .agg(count(lit(1)).as("n_docs"), min("doc_id").as("first_doc"),
@@ -676,7 +677,7 @@ private[graft] object EvalQueries {
     * per type, population variance, one rounded division.
     */
   private def qBurstiness(s: SparkSession, dir: String): DataFrame = {
-    val daily = read(s, dir, "events")
+    val daily = Tables.events(s, dir)
       .groupBy(col("event_type"), date_trunc("day", col("ts")).cast("date").as("d"))
       .agg(count(lit(1)).as("c"))
     val agg = daily.groupBy("event_type")
@@ -698,7 +699,7 @@ private[graft] object EvalQueries {
     * by the df cap, one per-pair argmin window.
     */
   private def qDedupExplain(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val pairs = njPairs(s, dir)
     val shAll = Dedup.shingleSet(docs, 3)
     val dfs = shAll.groupBy("s").agg(count(lit(1)).as("df"))
@@ -722,7 +723,7 @@ private[graft] object EvalQueries {
     * shared ln 2 constant.
     */
   private def qEntropyRate(s: SparkSession, dir: String): DataFrame = {
-    val tk = read(s, dir, "documents")
+    val tk = Tables.table(s, dir, "documents")
       .select(split(trim(lower(col("text"))), "\\s+").as("tk"))
     val uni = tk.select(explode(col("tk")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
@@ -756,7 +757,7 @@ private[graft] object EvalQueries {
     * explode, exact confusion counts.
     */
   private def qLangidRoc(s: SparkSession, dir: String): DataFrame = {
-    val tok = read(s, dir, "documents")
+    val tok = Tables.table(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         explode(graft.text.TextOps.tokens(col("text"))).as("w"))
     val ratio = tok.groupBy("doc_id", "lang")
@@ -783,7 +784,7 @@ private[graft] object EvalQueries {
     * equi-join on the slim bucket rows.
     */
   private def qAnnCandidates(s: SparkSession, dir: String): DataFrame = {
-    val emb = read(s, dir, "embeddings")
+    val emb = Tables.table(s, dir, "embeddings")
     val pl = graft.sim.Similarity.portablePlanes(16, 64)
     val bd = graft.sim.Similarity.bandedExplode(emb, pl, 8)
       .select("vec_id", "band", "bkt").localCheckpoint()
@@ -808,7 +809,7 @@ private[graft] object EvalQueries {
     * groups pipeline plus one token join.
     */
   private def qDedupReduction(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val groups = njGroups(s, dir)
     val toks = docs.select(col("doc_id"),
       graft.text.TextOps.tokenCount(col("text")).cast("long").as("n_tok"))
@@ -832,7 +833,7 @@ private[graft] object EvalQueries {
     * chains in one SQL statement).
     */
   private def qKmeansElbow(s: SparkSession, dir: String): DataFrame = {
-    val emb = read(s, dir, "embeddings")
+    val emb = Tables.table(s, dir, "embeddings")
     // The three Lloyd runs are INDEPENDENT — submit them from a small
     // thread pool so each run's jobs back-fill the executor tail of the
     // others (guide §2.6: overlap independent jobs; Spark's scheduler
@@ -867,7 +868,7 @@ private[graft] object EvalQueries {
     * it one combinable aggregation, no outer join.
     */
   private def qWeightedJaccard(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     // the pre-named round-10 lever: the LSH pair set at the canonical
     // operating point comes from the stamped per-snapshot artifact
     // (EntryHelpers.lshPairsT05) instead of re-running the signature +
@@ -903,7 +904,7 @@ private[graft] object EvalQueries {
     * decides whether an index must store norms.
     */
   private def qMetricAgreement(s: SparkSession, dir: String): DataFrame = {
-    val emb = read(s, dir, "embeddings")
+    val emb = Tables.table(s, dir, "embeddings")
     val pts = graft.sim.Similarity.quantizeShifted(emb, 1000000L).localCheckpoint()
     val qp = pts.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("pos"), col("e").as("qe"))
@@ -946,7 +947,7 @@ private[graft] object EvalQueries {
     * cost; the stratified view behind q_curriculum_buckets' global ranks.
     */
   private def qQualityBySource(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .select(col("source"), graft.text.TextOps.qualityScore(col("text")).as("sc"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
@@ -966,7 +967,7 @@ private[graft] object EvalQueries {
       pmod(col("doc_id"), lit(graft.text.TextOps.HashMod)))
     val b = pmod(h, lit(10L))
     val split = when(b < 8, "train").when(b < 9, "val").otherwise("test")
-    val cells = read(s, dir, "documents")
+    val cells = Tables.table(s, dir, "documents")
       .select(split.as("split"), col("lang"))
       .groupBy("split", "lang").agg(count(lit(1)).as("n"))
     val t = cells.groupBy("split").agg(sum("n").as("n_split"))
@@ -995,7 +996,7 @@ private[graft] object EvalQueries {
     * convention with the score rounded to 9 first.
     */
   private def qLengthQualityCorr(s: SparkSession, dir: String): DataFrame = {
-    val scored = read(s, dir, "documents")
+    val scored = Tables.table(s, dir, "documents")
       .select(col("n_chars").cast("double").as("x"),
         round(graft.text.TextOps.qualityScore(col("text")), 9).as("y"))
     val n = count(lit(1)).cast("double")
@@ -1074,7 +1075,7 @@ private[graft] object EvalQueries {
     * aggregate, source-bounded arithmetic.
     */
   private def qSourceConcentration(s: SparkSession, dir: String): DataFrame = {
-    val cnt = read(s, dir, "documents")
+    val cnt = Tables.table(s, dir, "documents")
       .groupBy("source").agg(count(lit(1)).as("n"))
     val t = cnt.agg(sum("n").as("tot"), count(lit(1)).as("n_sources"))
     val share = col("n").cast("double") / col("tot").cast("double")

@@ -33,7 +33,7 @@ private[graft] object GraphQualityQueries {
     * generalizes to any per-group adaptive threshold.
     */
   private def qLangLengthFilter(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     val th = docs.groupBy("lang").agg(expr("percentile(n_chars, 0.10)").as("p10"))
     docs.join(broadcast(th), "lang")
@@ -53,7 +53,7 @@ private[graft] object GraphQualityQueries {
     */
   private def qSqlRegionRevenue(s: SparkSession, dir: String): DataFrame = {
     Seq("customer", "orders", "lineitem", "supplier", "nation", "region")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(
       """SELECT n.n_name,
         |  CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,6))
@@ -139,7 +139,7 @@ private[graft] object GraphQualityQueries {
     */
   private def bm25QlScores(s: SparkSession, dir: String): DataFrame = {
     val qTerms = Seq("hash", "vector", "window")
-    val d = read(s, dir, "documents")
+    val d = Tables.table(s, dir, "documents")
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       .withColumn("dl", size(col("toks")))
     val tf = qTerms.foldLeft(d) { (acc, t) =>
@@ -222,7 +222,7 @@ private[graft] object GraphQualityQueries {
       .when(!col("lang").isInCollection(Seq("en", "es", "de", "fr")), "lang_excluded")
       .when(size(array_distinct(toks)).cast("double") / size(toks) < 0.35, "repetitive")
       .otherwise("kept")
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .withColumn("stage", stage)
       .groupBy("source", "stage")
       .agg(count(lit(1)).as("n_docs"))
@@ -239,7 +239,7 @@ private[graft] object GraphQualityQueries {
     * construction, boundary ties going low.
     */
   private def qEquidepth(s: SparkSession, dir: String): DataFrame = {
-    val o = read(s, dir, "orders").select(col("o_totalprice").as("v"))
+    val o = Tables.table(s, dir, "orders").select(col("o_totalprice").as("v"))
     val fracs = (1 to 9).map(i => s"0.$i").mkString(", ")
     val bounds = o.agg(expr(s"percentile(v, array($fracs))").as("bs"))
     val bucket = (1 to 9)
@@ -276,7 +276,7 @@ private[graft] object GraphQualityQueries {
     // fact-table aggregate twice (sample pass + exchange pass); it also
     // makes the totals aggregate below a cheap re-scan instead of a
     // second window-chain execution.
-    val wv = read(s, dir, "lineitem")
+    val wv = Tables.table(s, dir, "lineitem")
       .groupBy(col("l_returnflag"), col("l_extendedprice").as("v"))
       .agg(sum(floor(col("l_quantity") * lit(1000000.0)).cast("long")).as("w"))
       .localCheckpoint()
@@ -301,7 +301,7 @@ private[graft] object GraphQualityQueries {
     */
   private def qScanEvolved(s: SparkSession, dir: String): DataFrame = {
     val tmp = tmpDir("evolve", dir)
-    val o = read(s, dir, "orders")
+    val o = Tables.table(s, dir, "orders")
     val cutoff = lit("1998-01-01").cast("timestamp")
     o.filter(col("o_orderdate") < cutoff)
       .select("o_orderkey", "o_totalprice")
@@ -334,7 +334,7 @@ private[graft] object GraphQualityQueries {
     */
   private def qBudgetAlloc(s: SparkSession, dir: String): DataFrame = {
     val budget = 1000000L
-    val g = read(s, dir, "documents").groupBy("lang", "source")
+    val g = Tables.table(s, dir, "documents").groupBy("lang", "source")
       .agg(sum("n_chars").as("w"))
     val tot = g.agg(sum("w").as("tw"))
     val base = g.join(broadcast(tot))
@@ -357,7 +357,7 @@ private[graft] object GraphQualityQueries {
     * score), the standard memory-bound trade of production vector search.
     */
   private def qAnnInt8(s: SparkSession, dir: String): DataFrame =
-    Similarity.topkInt8(read(s, dir, "embeddings"), queryId = 0L, k = 10)
+    Similarity.topkInt8(Tables.table(s, dir, "embeddings"), queryId = 0L, k = 10)
 
   /** X1 content-defined chunking: Rabin/FastCDC-style boundaries from the
     * portable token hash (h ≡ 0 mod 8 ends a chunk, expected length 8
@@ -366,7 +366,7 @@ private[graft] object GraphQualityQueries {
     * prefix-sum window, ordered string_agg rebuild.
     */
   private def qCdcChunks(s: SparkSession, dir: String): DataFrame =
-    Dedup.cdcChunks(read(s, dir, "documents"), avgTokens = 8)
+    Dedup.cdcChunks(Tables.table(s, dir, "documents"), avgTokens = 8)
       .orderBy("doc_id", "chunk_id")
 
   /** A1+ market-basket co-occurrence (frequent pairs): top co-purchased
@@ -381,14 +381,6 @@ private[graft] object GraphQualityQueries {
       .select(col("pa").as("part_a"), col("pb").as("part_b"), col("support"))
       .orderBy(col("support").desc, col("part_a"), col("part_b"))
       .limit(50)
-
-  /** Canonical (pa < pb) part pairs per order with their support count —
-    * the one definition every basket consumer shares, materialized once
-    * per testdata stamp (sources.GraphTables). Kept as a forwarder for
-    * the specs that replay the derivation on an explicit frame.
-    */
-  private[graft] def basketPairs(li: DataFrame): DataFrame =
-    graft.sources.GraphTables.basketPairsFrom(li)
 
   /** X4 triangle enumeration on the support-≥2 co-purchase graph — the
     * clustering-structure probe of graph analytics, in the classic
@@ -418,7 +410,7 @@ private[graft] object GraphQualityQueries {
     * (libm-parity convention), bounded top-20.
     */
   private def qItemCf(s: SparkSession, dir: String): DataFrame = {
-    val li = read(s, dir, "lineitem")
+    val li = Tables.table(s, dir, "lineitem")
     val pairs = graft.sources.GraphTables.copurchasePairs(s, dir)
       .filter(col("support") >= 2)
     val freq = li.select("l_orderkey", "l_partkey").distinct()
@@ -485,7 +477,7 @@ private[graft] object GraphQualityQueries {
     * Expand trade-off at scale).
     */
   private def qProfile(s: SparkSession, dir: String): DataFrame =
-    Profile.profile(read(s, dir, "orders"),
+    Profile.profile(Tables.table(s, dir, "orders"),
       numericCols = Seq("o_orderkey", "o_custkey", "o_totalprice"),
       otherCols = Seq("o_orderstatus", "o_orderpriority"))
 

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.DecimalType
 import graft.entry.EntryHelpers._
 import graft.graph.PageRank
 import graft.ops.Fixpoint
+import graft.sources.Tables
 
 
 /** Round-6 mining/statistics additions, in three strands (the fourth —
@@ -38,7 +39,7 @@ private[graft] object MiningQueries {
     * cross-engine. The classic "is ingest volume growing" probe.
     */
   private def qOlsTrend(s: SparkSession, dir: String): DataFrame = {
-    val dayrev = read(s, dir, "orders")
+    val dayrev = Tables.table(s, dir, "orders")
       .groupBy(date_trunc("day", col("o_orderdate")).cast("date").as("d"))
       .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("yq"))
     val m = dayrev.agg(min("d").as("mind"))
@@ -63,7 +64,7 @@ private[graft] object MiningQueries {
     * one rounded transcendental. Map-side-combinable 9-row output.
     */
   private def qBenford(s: SparkSession, dir: String): DataFrame = {
-    val d = read(s, dir, "orders").select(
+    val d = Tables.table(s, dir, "orders").select(
       substring(floor(col("o_totalprice")).cast("long").cast("string"), 1, 1)
         .cast("int").as("digit"))
     val t = d.agg(count(lit(1)).as("n"))
@@ -84,7 +85,7 @@ private[graft] object MiningQueries {
     * like q_forecast_eval's).
     */
   private def qCusum(s: SparkSession, dir: String): DataFrame = {
-    val daily = read(s, dir, "events")
+    val daily = Tables.events(s, dir)
       .groupBy(date_trunc("day", col("ts")).cast("date").as("d"))
       .agg(count(lit(1)).as("c"))
     val t = daily.agg(count(lit(1)).as("nd"), sum("c").as("tot"))
@@ -104,8 +105,8 @@ private[graft] object MiningQueries {
     * orderkey co-partitioning; at 100 TB this is the bucketed-join case.
     */
   private def qSqlShipLag(s: SparkSession, dir: String): DataFrame = {
-    val j = read(s, dir, "lineitem")
-      .join(read(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+    val j = Tables.table(s, dir, "lineitem")
+      .join(Tables.table(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
       .select(datediff(col("l_shipdate"), col("o_orderdate")).as("lag"),
         col("o_orderpriority"))
     val bucket = when(col("lag") < 0, "0_early").when(col("lag") <= 90, "1_0-90")
@@ -127,8 +128,8 @@ private[graft] object MiningQueries {
     */
   private def qSqlWaitingSupplier(s: SparkSession, dir: String): DataFrame = {
     val late = (datediff(col("l_shipdate"), col("o_orderdate")) > 60).cast("int")
-    val per = read(s, dir, "lineitem")
-      .join(read(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+    val per = Tables.table(s, dir, "lineitem")
+      .join(Tables.table(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
       .filter(col("o_orderstatus") === "F")
       .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"), late.as("late"))
       .groupBy("ok")
@@ -136,7 +137,7 @@ private[graft] object MiningQueries {
         countDistinct(when(col("late") === 1, col("sk"))).as("nlate"),
         max(when(col("late") === 1, col("sk"))).as("late_sk"))
     per.filter(col("ns") >= 2 && col("nlate") === 1)
-      .join(read(s, dir, "supplier"), col("late_sk") === col("s_suppkey"))
+      .join(Tables.table(s, dir, "supplier"), col("late_sk") === col("s_suppkey"))
       .groupBy("s_name").agg(count(lit(1)).as("numwait"))
       .orderBy(col("numwait").desc, col("s_name")).limit(20)
   }
@@ -207,7 +208,7 @@ private[graft] object MiningQueries {
     * top-30 by lift.
     */
   private def qAssocRules(s: SparkSession, dir: String): DataFrame = {
-    val li = read(s, dir, "lineitem")
+    val li = Tables.table(s, dir, "lineitem")
     val pp = li.select("l_orderkey", "l_partkey").distinct()
     val nb = pp.agg(countDistinct("l_orderkey").as("nb"))
     val freq = pp.groupBy(col("l_partkey").as("p")).agg(count(lit(1)).as("n_p"))
@@ -231,7 +232,7 @@ private[graft] object MiningQueries {
   /** Daily revenue-cents table with a min-anchored integer day index —
     * shared by the two trend estimators. */
   private def dayRevenue(s: SparkSession, dir: String): DataFrame = {
-    val dayrev = read(s, dir, "orders")
+    val dayrev = Tables.table(s, dir, "orders")
       .groupBy(date_trunc("day", col("o_orderdate")).cast("date").as("d"))
       .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("yq"))
     val m = dayrev.agg(min("d").as("mind"))
@@ -266,8 +267,8 @@ private[graft] object MiningQueries {
     val conv = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     val bld = col("c_mktsegment") === "BUILDING"
     val mch = col("c_mktsegment") === "MACHINERY"
-    val agg = read(s, dir, "orders")
-      .join(read(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+    val agg = Tables.table(s, dir, "orders")
+      .join(Tables.table(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
       .filter(bld || mch)
       .agg(sum(when(bld, 1L).otherwise(0L)).as("n1"),
         sum(when(bld && conv, 1L).otherwise(0L)).as("x1"),
@@ -286,7 +287,7 @@ private[graft] object MiningQueries {
     * corpus self-join; map-side-combined count, bounded top-30.
     */
   private def qFreqTriples(s: SparkSession, dir: String): DataFrame = {
-    val lists = read(s, dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    val lists = Tables.table(s, dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
       .groupBy("l_orderkey").agg(sort_array(collect_set("l_partkey")).as("ps"))
       .filter(size(col("ps")) >= 3)
     // ps is sorted-distinct, so suffix slices enumerate EXACTLY the
@@ -326,8 +327,8 @@ private[graft] object MiningQueries {
     */
   private def qHits(s: SparkSession, dir: String): DataFrame = {
     val unit = 1000000L
-    val e = read(s, dir, "orders")
-      .join(read(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
+    val e = Tables.table(s, dir, "orders")
+      .join(Tables.table(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), col("l_suppkey").as("sup")).distinct()
       .localCheckpoint()
     // FIXED 2-iteration unroll with NO mid-loop materialization. The
@@ -367,7 +368,7 @@ private[graft] object MiningQueries {
     * count, never one global-window task; 3-row output.
     */
   private def qParetoAbc(s: SparkSession, dir: String): DataFrame = {
-    val rev = read(s, dir, "lineitem")
+    val rev = Tables.table(s, dir, "lineitem")
       .groupBy("l_partkey")
       .agg(sum(floor(col("l_extendedprice") * 100).cast("long")).as("revc"))
     val cum = graft.ops.Ordered.prefixSum(rev,
@@ -388,7 +389,7 @@ private[graft] object MiningQueries {
     * arithmetic. Monday=0 convention pinned on both engines.
     */
   private def qDowProfile(s: SparkSession, dir: String): DataFrame = {
-    val daily = read(s, dir, "events")
+    val daily = Tables.events(s, dir)
       .groupBy(date_trunc("day", col("ts")).cast("date").as("d"))
       .agg(count(lit(1)).as("c"))
     val t = daily.agg(count(lit(1)).as("nd"), sum("c").as("tot"))
@@ -408,7 +409,7 @@ private[graft] object MiningQueries {
     * window), custkey tie-breaks pin every rank cross-engine.
     */
   private def qRfm(s: SparkSession, dir: String): DataFrame = {
-    val cust = read(s, dir, "orders")
+    val cust = Tables.table(s, dir, "orders")
       .groupBy(col("o_custkey").as("ck"))
       .agg(max("o_orderdate").as("last"), count(lit(1)).as("f"),
         sum(floor(col("o_totalprice") * 100).cast("long")).as("mc"))
@@ -465,7 +466,7 @@ private[graft] object MiningQueries {
     * heatmap feed / copula sketch of bivariate profiling.
     */
   private def qHist2d(s: SparkSession, dir: String): DataFrame = {
-    val li = read(s, dir, "lineitem")
+    val li = Tables.table(s, dir, "lineitem")
     val mm = li.agg(min("l_extendedprice").as("pmn"), max("l_extendedprice").as("pmx"),
       min("l_quantity").as("qmn"), max("l_quantity").as("qmx"))
     def bucket(v: Column, mn: Column, mx: Column): Column =
@@ -485,7 +486,7 @@ private[graft] object MiningQueries {
     */
   private def qRunningDistinct(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val first = read(s, dir, "events")
+    val first = Tables.events(s, dir)
       .groupBy("user_id")
       .agg(min(date_trunc("day", col("ts")).cast("date")).as("d"))
     val daily = first.groupBy("d").agg(count(lit(1)).as("new_users"))
@@ -533,7 +534,7 @@ private[graft] object MiningQueries {
     */
   private def qEmd1d(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val v = read(s, dir, "customer")
+    val v = Tables.table(s, dir, "customer")
       .filter(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
       .groupBy(floor(col("c_acctbal") * 100).cast("long").as("xq"))
       .agg(sum(when(col("c_mktsegment") === "BUILDING", 1L).otherwise(0L)).as("c1"),
@@ -589,7 +590,7 @@ private[graft] object MiningQueries {
     * q_ab_test's proportions.
     */
   private def qTtestMeans(s: SparkSession, dir: String): DataFrame = {
-    val daily = read(s, dir, "events")
+    val daily = Tables.events(s, dir)
       .groupBy(date_trunc("day", col("ts")).cast("date").as("d"))
       .agg(count(lit(1)).as("c"))
       .select(((dayofweek(col("d")) + 5) % 7 >= 5).as("weekend"), col("c"))
@@ -618,7 +619,7 @@ private[graft] object MiningQueries {
     * DAU/WAU is the classic stickiness ratio.
     */
   private def qRollingActive(s: SparkSession, dir: String): DataFrame = {
-    val ud = read(s, dir, "events")
+    val ud = Tables.events(s, dir)
       .select(col("user_id"), date_trunc("day", col("ts")).cast("date").as("d"))
       .distinct().localCheckpoint()
     val span = ud.agg(min("d").as("mind"), max("d").as("maxd"))
@@ -642,7 +643,7 @@ private[graft] object MiningQueries {
     */
   private def qTopMovers(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val qr = read(s, dir, "lineitem")
+    val qr = Tables.table(s, dir, "lineitem")
       .groupBy(col("l_partkey"), graft.ops.Scalar.toQuarter(col("l_shipdate")).as("Quarter"))
       .agg(sum(floor(col("l_extendedprice") * 100).cast("long")).as("revc"))
     val w = Window.partitionBy("l_partkey").orderBy("Quarter")
@@ -660,7 +661,7 @@ private[graft] object MiningQueries {
     */
   private def qChangepoint(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = read(s, dir, "events")
+    val daily = Tables.events(s, dir)
       .groupBy(date_trunc("day", col("ts")).cast("date").as("d"))
       .agg(count(lit(1)).as("c"))
     val t = daily.agg(count(lit(1)).as("nd"), sum("c").as("tot"))
@@ -716,7 +717,7 @@ private[graft] object MiningQueries {
     * count runs day-spine-sized.
     */
   private def decomposeDaily(s: SparkSession, dir: String): DataFrame = {
-    val daily = read(s, dir, "events")
+    val daily = Tables.events(s, dir)
       .groupBy(date_trunc("day", col("ts")).cast("date").as("d"))
       .agg(count(lit(1)).as("c"))
     val w7 = Window.orderBy("d").rowsBetween(-3, 3)
@@ -765,11 +766,11 @@ private[graft] object MiningQueries {
     * broadcasts them when they fit), cents exact, nation²-bounded output.
     */
   private def qTradeMatrix(s: SparkSession, dir: String): DataFrame = {
-    val li = read(s, dir, "lineitem")
-    val o = read(s, dir, "orders")
-    val c = read(s, dir, "customer")
-    val sup = read(s, dir, "supplier")
-    val n = read(s, dir, "nation")
+    val li = Tables.table(s, dir, "lineitem")
+    val o = Tables.table(s, dir, "orders")
+    val c = Tables.table(s, dir, "customer")
+    val sup = Tables.table(s, dir, "supplier")
+    val n = Tables.table(s, dir, "nation")
     li.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(c, col("o_custkey") === col("c_custkey"))
       .join(sup, col("l_suppkey") === col("s_suppkey"))
@@ -788,7 +789,7 @@ private[graft] object MiningQueries {
     * as a 10-row report. Cents exact until the two final divisions.
     */
   private def qLorenzDeciles(s: SparkSession, dir: String): DataFrame = {
-    val cust = read(s, dir, "orders")
+    val cust = Tables.table(s, dir, "orders")
       .groupBy(col("o_custkey").as("ck"))
       .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("mc"))
       .localCheckpoint()
@@ -819,7 +820,7 @@ private[graft] object MiningQueries {
     * beside the z-score and MAD flags.
     */
   private def qAnomalyIqr(s: SparkSession, dir: String): DataFrame = {
-    val daily = read(s, dir, "events")
+    val daily = Tables.events(s, dir)
       .groupBy(date_trunc("day", col("ts")).cast("date").as("d"))
       .agg(graft.ops.Scalar.stableSum(col("value")).as("v"))
     val qs = daily.agg(expr("percentile(v, 0.25)").as("q1"),
@@ -838,7 +839,7 @@ private[graft] object MiningQueries {
     * (user, next week); week-spine-bounded output.
     */
   private def qChurnRate(s: SparkSession, dir: String): DataFrame = {
-    val uw = read(s, dir, "events")
+    val uw = Tables.events(s, dir)
       .select(col("user_id"), date_trunc("week", col("ts")).cast("date").as("w"))
       .distinct().localCheckpoint()
     val prev = uw.groupBy("w").agg(count(lit(1)).as("n_prev"))
@@ -879,7 +880,7 @@ private[graft] object MiningQueries {
     * buckets hide; map-side-combinable, ~60-row output ceiling.
     */
   private def qLog2Hist(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .filter(col("n_chars") > 0)
       .select((length(bin(col("n_chars"))) - 1).as("log2_bucket"))
       .groupBy("log2_bucket")
@@ -895,7 +896,7 @@ private[graft] object MiningQueries {
     * output.
     */
   private def qLenQuartilesByLang(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         round(expr("percentile(n_chars, 0.25)"), 9).as("q1"),
@@ -909,7 +910,7 @@ private[graft] object MiningQueries {
     * outer can start; both levels map-side combinable.
     */
   private def qSqlAvgBasket(s: SparkSession, dir: String): DataFrame = {
-    val per = read(s, dir, "lineitem")
+    val per = Tables.table(s, dir, "lineitem")
       .groupBy("l_orderkey")
       .agg(count(lit(1)).as("n_lines"), countDistinct("l_partkey").as("n_parts"))
     per.agg(count(lit(1)).as("n_orders"),
@@ -925,7 +926,7 @@ private[graft] object MiningQueries {
     * ships; one combinable aggregate, 168-cell ceiling.
     */
   private def qDowHourHeatmap(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "events")
+    Tables.events(s, dir)
       .select(((dayofweek(date_trunc("day", col("ts")).cast("date")) + 5) % 7).as("dow"),
         hour(col("ts")).as("hr"))
       .groupBy("dow", "hr").agg(count(lit(1)).as("n"))
@@ -937,7 +938,7 @@ private[graft] object MiningQueries {
     * exact set sizes, one rounded division per cell.
     */
   private def qAudienceOverlap(s: SparkSession, dir: String): DataFrame = {
-    val ut = read(s, dir, "events")
+    val ut = Tables.events(s, dir)
       .select(col("user_id"), col("event_type")).distinct().localCheckpoint()
     val sizes = ut.groupBy(col("event_type").as("t")).agg(count(lit(1)).as("n"))
     val common = ut.as("a")
@@ -963,7 +964,7 @@ private[graft] object MiningQueries {
     */
   private def qMarkovStationary(s: SparkSession, dir: String): DataFrame = {
     val unit = 1000000L
-    val seq0 = read(s, dir, "events")
+    val seq0 = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val trans = seq0.withColumn("next_type", lead("event_type", 1).over(w))
@@ -998,9 +999,9 @@ private[graft] object MiningQueries {
     * decimals; nation-bounded output.
     */
   private def qSupplierHhi(s: SparkSession, dir: String): DataFrame = {
-    val rev = read(s, dir, "lineitem")
-      .join(read(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(read(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
+    val rev = Tables.table(s, dir, "lineitem")
+      .join(Tables.table(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+      .join(broadcast(Tables.table(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name").as("nation"), col("s_suppkey"))
       .agg(sum(floor(col("l_extendedprice") * 100).cast("long")).as("rc"))
     val tot = rev.groupBy("nation").agg(sum("rc").as("tot"), count(lit(1)).as("n_suppliers"))
@@ -1019,7 +1020,7 @@ private[graft] object MiningQueries {
     * budget). Exact sums, two rounded ratios per language.
     */
   private def qTokenizerFertility(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .select(col("lang"),
         graft.text.TextOps.tokenCount(col("text")).cast("long").as("ws"),
         graft.text.TextOps.bpeTokenCount(col("text")).cast("long").as("bpe"),
@@ -1039,7 +1040,7 @@ private[graft] object MiningQueries {
     * per quarter, quarter-spine-bounded window.
     */
   private def qQoqGrowth(s: SparkSession, dir: String): DataFrame = {
-    val qr = read(s, dir, "lineitem")
+    val qr = Tables.table(s, dir, "lineitem")
       .groupBy(graft.ops.Scalar.toQuarter(col("l_shipdate")).as("Quarter"))
       .agg(sum(floor(col("l_extendedprice") * 100).cast("long")).as("revc"))
     val w = Window.orderBy("Quarter")
@@ -1057,7 +1058,7 @@ private[graft] object MiningQueries {
     * top 20 by relative excess.
     */
   private def qSqlAboveAvg(s: SparkSession, dir: String): DataFrame = {
-    val o = read(s, dir, "orders")
+    val o = Tables.table(s, dir, "orders")
     val avg = o.groupBy(col("o_custkey").as("ck"))
       .agg((sum(floor(col("o_totalprice") * 100).cast("long")) / count(lit(1)))
         .as("avg_cents"))
@@ -1076,7 +1077,7 @@ private[graft] object MiningQueries {
     * on purchasers + one combinable count.
     */
   private def qFirstTouch(s: SparkSession, dir: String): DataFrame = {
-    val ev = read(s, dir, "events")
+    val ev = Tables.events(s, dir)
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val first = ev.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("user_id"), col("event_type").as("first_touch"))
@@ -1096,7 +1097,7 @@ private[graft] object MiningQueries {
     * one exact-percentile aggregate per group.
     */
   private def qValueQuantilesByType(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "events")
+    Tables.events(s, dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         round(expr("percentile(value, 0.25)"), 9).as("p25"),
@@ -1130,7 +1131,7 @@ private[graft] object MiningQueries {
     */
   private def qPartitionSkew(s: SparkSession, dir: String): DataFrame = {
     val m = graft.text.TextOps.HashMod
-    val b = read(s, dir, "lineitem")
+    val b = Tables.table(s, dir, "lineitem")
       .groupBy(pmod(graft.text.TextOps.mixedOf(
         pmod(col("l_suppkey"), lit(m))), lit(32L)).as("bucket"))
       .agg(count(lit(1)).as("n_rows"))

@@ -33,7 +33,7 @@ private[graft] object RelationalQueries {
     */
   private def qScanCsv(s: SparkSession, dir: String): DataFrame = {
     val tmp = tmpDir("scan_csv", dir)
-    read(s, dir, "region").coalesce(1).write.mode("overwrite")
+    Tables.table(s, dir, "region").coalesce(1).write.mode("overwrite")
       .option("header", "true").csv(tmp)
     Normalize.readCsv(s, tmp, StructType.fromDDL("r_regionkey INT, r_name STRING"))
       .orderBy("r_regionkey")
@@ -47,7 +47,7 @@ private[graft] object RelationalQueries {
     */
   private def qScanXlsx(s: SparkSession, dir: String): DataFrame = {
     val path = s"${tmpDir("scan_xlsx", dir)}.xlsx"
-    val rows = read(s, dir, "region").orderBy("r_regionkey")
+    val rows = Tables.table(s, dir, "region").orderBy("r_regionkey")
       .select(col("r_regionkey").cast("string"), col("r_name"))
       .collect().map(r => Seq(r.getString(0), r.getString(1))).toSeq
     graft.sources.Xlsx.writeSheet(path, Seq("r_regionkey", "r_name") +: rows)
@@ -83,7 +83,7 @@ private[graft] object RelationalQueries {
     */
   private def qSinkRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val tmp = tmpDir("sink", dir)
-    read(s, dir, "orders").groupBy("o_orderpriority")
+    Tables.table(s, dir, "orders").groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"))
       .coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
     Normalize.readCsv(s, tmp, StructType.fromDDL("o_orderpriority STRING, n_orders BIGINT"))
@@ -97,7 +97,7 @@ private[graft] object RelationalQueries {
     */
   private def qSinkPartitioned(s: SparkSession, dir: String): DataFrame = {
     val tmp = tmpDir("sink_part", dir)
-    val agg = read(s, dir, "lineitem")
+    val agg = Tables.table(s, dir, "lineitem")
       .groupBy(Scalar.toQuarter(col("l_shipdate")).as("Quarter"), col("l_returnflag"))
       .agg(Scalar.stableSum(col("l_quantity")).as("sum_qty"))
     graft.pipeline.Sink.writePartitioned(agg, tmp, "l_returnflag")
@@ -113,7 +113,7 @@ private[graft] object RelationalQueries {
 
   /** P1/P2 projection by name and by position (src:251,365). */
   private def qProject(s: SparkSession, dir: String): DataFrame = {
-    val li = read(s, dir, "lineitem")
+    val li = Tables.table(s, dir, "lineitem")
     val c = li.columns
     li.select(col(c(0)), col(c(3)), col(c(4))) // positional: orderkey, linenumber, quantity
       .orderBy("l_orderkey", "l_linenumber")
@@ -121,20 +121,20 @@ private[graft] object RelationalQueries {
 
   /** P3 column drop (src:189). */
   private def qDropCol(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "part").drop("p_retailprice", "p_size").orderBy("p_partkey")
+    Tables.table(s, dir, "part").drop("p_retailprice", "p_size").orderBy("p_partkey")
 
   /** P5 equality predicate (src:426 `query("name_eng != ...")`). */
   private def qFilterEq(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "customer").filter(col("c_mktsegment") =!= "BUILDING")
+    Tables.table(s, dir, "customer").filter(col("c_mktsegment") =!= "BUILDING")
       .orderBy("c_custkey")
 
   /** P6 substring predicate (src:180-186 `.str.contains`). */
   private def qFilterContains(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "part").filter(col("p_name").contains("red")).orderBy("p_partkey")
+    Tables.table(s, dir, "part").filter(col("p_name").contains("red")).orderBy("p_partkey")
 
   /** P7 string-length predicate (src:407 drop 4-char year rows). */
   private def qFilterStrlen(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "nation").filter(length(col("n_name")) =!= 4).orderBy("n_nationkey")
+    Tables.table(s, dir, "nation").filter(length(col("n_name")) =!= 4).orderBy("n_nationkey")
 
   /** P8 positional row slice (src:125-126 `iloc[[4,5,16,17,18], ...]`):
     * explicit ordinal + isin/range — pandas row positions on an unordered
@@ -142,7 +142,7 @@ private[graft] object RelationalQueries {
     */
   private def qRowsByOrdinal(s: SparkSession, dir: String): DataFrame =
     Normalize.withOrdinal(
-        read(s, dir, "orders").select("o_orderkey", "o_totalprice"),
+        Tables.table(s, dir, "orders").select("o_orderkey", "o_totalprice"),
         col("o_orderkey"))
       .filter(col("_idx").isin(5, 6, 17, 18, 19) || col("_idx").between(100, 120))
       .orderBy("_idx")
@@ -156,9 +156,9 @@ private[graft] object RelationalQueries {
     * join keys — no hints needed, Catalyst decides.
     */
   private def qJoinInner(s: SparkSession, dir: String): DataFrame = {
-    val li = read(s, dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
-    val o = read(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    val c = read(s, dir, "customer").select("c_custkey", "c_name")
+    val li = Tables.table(s, dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
+    val o = Tables.table(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
+    val c = Tables.table(s, dir, "customer").select("c_custkey", "c_name")
     li.join(o, li("l_orderkey") === o("o_orderkey"))
       .join(c, o("o_custkey") === c("c_custkey"))
       .select("l_orderkey", "l_linenumber", "l_quantity", "o_totalprice", "c_name")
@@ -200,7 +200,7 @@ private[graft] object RelationalQueries {
 
   /** R1 wide->long unpivot (pandas stack, src:149-160). */
   private def qUnpivot(s: SparkSession, dir: String): DataFrame = {
-    val wide = read(s, dir, "orders")
+    val wide = Tables.table(s, dir, "orders")
       .groupBy(Scalar.toQuarter(col("o_orderdate")).as("Quarter"))
       .agg(
         Scalar.stableAvg(col("o_totalprice")).as("avg_price"),
@@ -216,7 +216,7 @@ private[graft] object RelationalQueries {
     */
   private def qPivot(s: SparkSession, dir: String): DataFrame =
     Reshape.pivotLong(
-        read(s, dir, "lineitem").select(
+        Tables.table(s, dir, "lineitem").select(
           Scalar.toQuarter(col("l_shipdate")).as("Quarter"),
           col("l_returnflag"), col("l_quantity")),
         Seq("Quarter"), "l_returnflag", Seq("A", "N", "R"),
@@ -229,7 +229,7 @@ private[graft] object RelationalQueries {
     * Q1 shape with decimal-stable aggregates.
     */
   private def qSqlPricingSummary(s: SparkSession, dir: String): DataFrame = {
-    read(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Tables.table(s, dir, "lineitem").createOrReplaceTempView("lineitem")
     s.sql(
       """SELECT l_returnflag, l_linestatus,
         |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS VARCHAR(64)) AS DOUBLE) AS sum_qty,
@@ -254,7 +254,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlMarketShare(s: SparkSession, dir: String): DataFrame = {
     Seq("part", "lineitem", "orders", "customer", "supplier", "nation", "region")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlMarketShare)
   }
 
@@ -289,7 +289,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlTopSupplier(s: SparkSession, dir: String): DataFrame = {
     Seq("lineitem", "supplier")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlTopSupplier)
   }
 
@@ -315,7 +315,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlLateOrders(s: SparkSession, dir: String): DataFrame = {
     Seq("orders", "lineitem")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlLateOrders)
   }
 
@@ -339,7 +339,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlCustDist(s: SparkSession, dir: String): DataFrame = {
     Seq("customer", "orders")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlCustDist)
   }
 
@@ -367,7 +367,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlPromoShare(s: SparkSession, dir: String): DataFrame = {
     Seq("lineitem", "part")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlPromoShare)
   }
 
@@ -390,7 +390,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlReturnedCust(s: SparkSession, dir: String): DataFrame = {
     Seq("customer", "orders", "lineitem", "nation")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlReturnedCust)
   }
 
@@ -417,7 +417,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlShipPriority(s: SparkSession, dir: String): DataFrame = {
     Seq("customer", "orders", "lineitem")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlShipPriority)
   }
 
@@ -442,7 +442,7 @@ private[graft] object RelationalQueries {
     * combine into a single row.
     */
   private def qSqlDiscRevenue(s: SparkSession, dir: String): DataFrame = {
-    read(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Tables.table(s, dir, "lineitem").createOrReplaceTempView("lineitem")
     s.sql(sqlDiscRevenue)
   }
 
@@ -469,7 +469,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlNationVolume(s: SparkSession, dir: String): DataFrame = {
     Seq("supplier", "lineitem", "orders", "customer", "nation")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlNationVolume)
   }
 
@@ -501,7 +501,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlSmallQty(s: SparkSession, dir: String): DataFrame = {
     Seq("lineitem", "part")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlSmallQty)
   }
 
@@ -525,7 +525,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlLargeOrders(s: SparkSession, dir: String): DataFrame = {
     Seq("customer", "orders", "lineitem")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlLargeOrders)
   }
 
@@ -550,7 +550,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlDisjunctive(s: SparkSession, dir: String): DataFrame = {
     Seq("lineitem", "part")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlDisjunctive)
   }
 
@@ -579,7 +579,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlDormantCust(s: SparkSession, dir: String): DataFrame = {
     Seq("customer", "orders")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlDormantCust)
   }
 
@@ -617,7 +617,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlMinCostSupp(s: SparkSession, dir: String): DataFrame = {
     Seq("part", "lineitem", "supplier", "nation", "region")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlMinCostSupp)
   }
 
@@ -656,7 +656,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlProductProfit(s: SparkSession, dir: String): DataFrame = {
     Seq("part", "lineitem", "supplier", "orders", "nation")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlProductProfit)
   }
 
@@ -692,7 +692,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlImportantStock(s: SparkSession, dir: String): DataFrame = {
     Seq("lineitem", "supplier", "nation")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlImportantStock)
   }
 
@@ -726,7 +726,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlPartsSupp(s: SparkSession, dir: String): DataFrame = {
     Seq("lineitem", "part", "supplier")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlPartsSupp)
   }
 
@@ -751,7 +751,7 @@ private[graft] object RelationalQueries {
     */
   private def qSqlPotentialPromo(s: SparkSession, dir: String): DataFrame = {
     Seq("lineitem", "part", "supplier", "nation")
-      .foreach(t => read(s, dir, t).createOrReplaceTempView(t))
+      .foreach(t => Tables.table(s, dir, t).createOrReplaceTempView(t))
     s.sql(sqlPotentialPromo)
   }
 
@@ -781,7 +781,7 @@ private[graft] object RelationalQueries {
 
   /** A1/A2 group-by mean to quarterly (src:353,441). */
   private def qGroupbyAvg(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "orders")
+    Tables.table(s, dir, "orders")
       .groupBy(Scalar.toQuarter(col("o_orderdate")).as("Quarter"))
       .agg(
         Scalar.stableAvg(col("o_totalprice")).as("avg_price"),
@@ -807,7 +807,7 @@ private[graft] object RelationalQueries {
     * oracle-comparable across engines).
     */
   private def qDistinctCount(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "lineitem")
+    Tables.table(s, dir, "lineitem")
       .groupBy(Scalar.toQuarter(col("l_shipdate")).as("Quarter"))
       .agg(countDistinct(col("l_suppkey")).as("n_suppliers"),
         countDistinct(col("l_partkey")).as("n_parts"))
@@ -823,7 +823,7 @@ private[graft] object RelationalQueries {
     * sketch is constant-size per group and map-side combinable.
     */
   private def qApproxDistinct(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "lineitem")
+    Tables.table(s, dir, "lineitem")
       .groupBy(Scalar.toQuarter(col("l_shipdate")).as("Quarter"))
       .agg(countDistinct(col("l_suppkey")).as("exact_suppliers"),
         approx_count_distinct(col("l_suppkey"), 0.02).as("_approx"))
@@ -845,7 +845,7 @@ private[graft] object RelationalQueries {
     * (both engines interpolate lower+(upper−lower)·frac).
     */
   private def qApproxQuantiles(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "lineitem")
+    Tables.table(s, dir, "lineitem")
       .groupBy(Scalar.toQuarter(col("l_shipdate")).as("Quarter"))
       .agg(expr("percentile(l_extendedprice, array(0.5, 0.99))").as("_e"),
         expr("approx_percentile(l_extendedprice, array(0.5, 0.99), 100)").as("_a"),
@@ -862,7 +862,7 @@ private[graft] object RelationalQueries {
     * engines use the same lower+(upper-lower)*frac interpolation).
     */
   private def qQuantiles(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "orders")
+    Tables.table(s, dir, "orders")
       .groupBy(Scalar.toQuarter(col("o_orderdate")).as("Quarter"))
       // one exact-percentile aggregate (array of fractions) instead of two:
       // the value buffer is built and sorted once per group
@@ -877,7 +877,7 @@ private[graft] object RelationalQueries {
 
   /** F1 quarter-format swap (reformat_quarter, src:63-67) — pure regex. */
   private def qStrQswap(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "orders")
+    Tables.table(s, dir, "orders")
       .select(concat(lit("Q"), quarter(col("o_orderdate")).cast("string"),
         lit("/"), year(col("o_orderdate")).cast("string")).as("raw"))
       .distinct()
@@ -886,7 +886,7 @@ private[graft] object RelationalQueries {
 
   /** F2/F3 revision-marker strip + trim (src:134,385). */
   private def qRegexStrip(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "part")
+    Tables.table(s, dir, "part")
       .select(col("p_partkey"),
         concat(col("p_brand"),
           when(col("p_size") % 2 === 0, lit(" p")).otherwise(lit(" r1"))).as("raw"))
@@ -895,7 +895,7 @@ private[graft] object RelationalQueries {
 
   /** F4/F11 de-comma numeric parse (src:173 `"106,371" -> 106371`). */
   private def qParseNumber(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "orders").filter(col("o_orderkey") >= 1000)
+    Tables.table(s, dir, "orders").filter(col("o_orderkey") >= 1000)
       .select(col("o_orderkey"),
         concat(expr("o_orderkey div 1000").cast("string"), lit(","),
           lpad((col("o_orderkey") % 1000).cast("string"), 3, "0")).as("fmt"))
@@ -904,14 +904,14 @@ private[graft] object RelationalQueries {
 
   /** F5 percent string -> ratio (src:169 etc.). */
   private def qPctRatio(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "part")
+    Tables.table(s, dir, "part")
       .select(col("p_partkey"), col("p_size").cast("string").as("pct_str"))
       .withColumn("ratio", Scalar.pctToRatio(col("pct_str")))
       .orderBy("p_partkey")
 
   /** F6 derived ratio columns (src:176,245,248). */
   private def qDerivedRatio(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "lineitem")
+    Tables.table(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"),
         (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("net_rev"),
         (col("l_extendedprice") / (lit(1.0) + col("l_tax"))).as("pre_tax"))
@@ -921,14 +921,14 @@ private[graft] object RelationalQueries {
     * century-pivot parity with the oracle).
     */
   private def qDateParse(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "orders")
+    Tables.table(s, dir, "orders")
       .select(date_format(col("o_orderdate"), "d/M/yyyy").as("raw")).distinct()
       .withColumn("parsed", to_date(col("raw"), "d/M/yyyy"))
       .orderBy("parsed")
 
   /** F8 date -> quarter key (src:350,438). */
   private def qToQuarter(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "lineitem")
+    Tables.table(s, dir, "lineitem")
       .select(Scalar.toQuarter(col("l_shipdate")).as("Quarter"),
         date_trunc("quarter", col("l_shipdate")).cast("date").as("q_start"))
       .distinct().orderBy("Quarter")
@@ -940,7 +940,7 @@ private[graft] object RelationalQueries {
     // Distinct FIRST on the truncated month (one narrow date column, ~100
     // distinct values), then derive/format — formatting before distinct
     // would run 3 formatter calls per input row instead of per month.
-    val months = read(s, dir, "orders")
+    val months = Tables.table(s, dir, "orders")
       .select(date_trunc("month", col("o_orderdate")).as("m")).distinct()
     val end = date_sub(add_months(col("m"), 1), 1)
     months
@@ -954,7 +954,7 @@ private[graft] object RelationalQueries {
     * with SQL distinct semantics, tagged into one result.
     */
   private def qSetOps(s: SparkSession, dir: String): DataFrame = {
-    val c = read(s, dir, "customer")
+    val c = Tables.table(s, dir, "customer")
     val building = c.filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
     val rich = c.filter(col("c_acctbal") > 5000).select("c_custkey")
     building.intersect(rich).withColumn("op", lit("both"))
@@ -964,7 +964,7 @@ private[graft] object RelationalQueries {
 
   /** Rollup totals (hierarchical grouping sets — free from Catalyst). */
   private def qRollup(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "lineitem")
+    Tables.table(s, dir, "lineitem")
       .rollup(Scalar.toQuarter(col("l_shipdate")).as("Quarter"), col("l_returnflag"))
       .agg(Scalar.stableSum(col("l_quantity")).as("sum_qty"),
         count(lit(1)).as("n"))
@@ -974,7 +974,7 @@ private[graft] object RelationalQueries {
     * in one pass (free from Catalyst's Expand).
     */
   private def qCube(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "orders")
+    Tables.table(s, dir, "orders")
       .cube(year(col("o_orderdate")).cast("int").as("yr"), col("o_orderpriority"))
       .agg(Scalar.stableSum(col("o_totalprice")).as("sum_price"),
         count(lit(1)).as("n"))
@@ -989,7 +989,7 @@ private[graft] object RelationalQueries {
     * bit-stable between Spark and DuckDB.
     */
   private def qArrayFuncs(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "embeddings")
+    Tables.table(s, dir, "embeddings")
       .select(col("vec_id"),
         size(col("embedding")).as("dim"),
         serializeFloats(slice(col("embedding"), 1, 8)).as("head8"),
@@ -1058,7 +1058,7 @@ private[graft] object RelationalQueries {
     * year, quarter rows inherit it — the GDP-sheet pathology on an ordinal.
     */
   private def qFillDown(s: SparkSession, dir: String): DataFrame = {
-    val qs = read(s, dir, "orders")
+    val qs = Tables.table(s, dir, "orders")
       .select(year(col("o_orderdate")).cast("string").as("y"),
         quarter(col("o_orderdate")).cast("string").as("q"))
       .distinct()

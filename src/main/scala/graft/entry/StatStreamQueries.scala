@@ -40,7 +40,7 @@ private[graft] object StatStreamQueries {
     */
   private def qTokenEntropy(s: SparkSession, dir: String): DataFrame = {
     val n = sum(col("c")).cast("double")
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
       .groupBy("doc_id")
@@ -83,7 +83,7 @@ private[graft] object StatStreamQueries {
     * n, turning the band join |Q|·occupancy quadratic at scale).
     */
   private def qAnnBatch(s: SparkSession, dir: String): DataFrame =
-    Similarity.annTopkBatch(s, read(s, dir, "embeddings"),
+    Similarity.annTopkBatch(s, Tables.table(s, dir, "embeddings"),
       queryPred = col("vec_id") < 10, k = 5)
       .orderBy("query_id", "rk")
 
@@ -98,9 +98,9 @@ private[graft] object StatStreamQueries {
   private def qStreamEnrich(s: SparkSession, dir: String): DataFrame = {
     val feed = stageFeed(dir, "stream_enrich_feed")
     val dim = broadcast(
-      read(s, dir, "customer")
+      Tables.table(s, dir, "customer")
         .select(col("c_custkey").as("user_id"), col("c_nationkey"))
-        .join(read(s, dir, "nation")
+        .join(Tables.table(s, dir, "nation")
           .select(col("n_nationkey").as("c_nationkey"), col("n_name")),
           "c_nationkey")
         .select("user_id", "n_name"))
@@ -160,7 +160,7 @@ private[graft] object StatStreamQueries {
     * `grouping_id` disambiguating a grouped NULL from a margin NULL.
     */
   private def qGroupingSets(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "lineitem")
+    Tables.table(s, dir, "lineitem")
       .groupingSets(
         Seq(Seq(col("l_returnflag"), col("l_linestatus")),
           Seq(col("l_returnflag")), Seq()),
@@ -200,7 +200,7 @@ private[graft] object StatStreamQueries {
     */
   private def qCdcMerge(s: SparkSession, dir: String): DataFrame = {
     val k = col("o_orderkey")
-    val base = read(s, dir, "orders")
+    val base = Tables.table(s, dir, "orders")
       .select(k, col("o_totalprice"), col("o_orderstatus"))
     val upd1 = base.filter(pmod(k, lit(100L)) === 3)
       .select(k, lit(1L).as("seq"), lit("U").as("op"),
@@ -234,10 +234,10 @@ private[graft] object StatStreamQueries {
     * so the oracle is the plain semi-join SQL.
     */
   private def qBloomJoin(s: SparkSession, dir: String): DataFrame = {
-    val dim = read(s, dir, "orders")
+    val dim = Tables.table(s, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT").select("o_orderkey")
     val bloom = graft.functions.Bloom.buildFilter(dim, "o_orderkey", 100000L)
-    read(s, dir, "lineitem")
+    Tables.table(s, dir, "lineitem")
       .filter(graft.functions.Bloom.mightContain(s, bloom, col("l_orderkey")))
       .join(dim, col("l_orderkey") === col("o_orderkey"), "left_semi")
       .groupBy("l_returnflag")
@@ -252,7 +252,7 @@ private[graft] object StatStreamQueries {
     * (the input to PCA/whitening at 100 TB).
     */
   private def qEmbedGram(s: SparkSession, dir: String): DataFrame =
-    Similarity.gramUpper(read(s, dir, "embeddings"), "embedding")
+    Similarity.gramUpper(Tables.table(s, dir, "embeddings"), "embedding")
       .orderBy("i", "j")
 
   /** X2 leading principal component via fixed-point power iteration with
@@ -272,7 +272,7 @@ private[graft] object StatStreamQueries {
     * on zero-mean embeddings (observed: it converged to e2).
     */
   private def qPcaPower(s: SparkSession, dir: String): DataFrame = {
-    val gU = Similarity.gramUpper(read(s, dir, "embeddings"), "embedding")
+    val gU = Similarity.gramUpper(Tables.table(s, dir, "embeddings"), "embedding")
       .select(col("i"), col("j"),
         expr("(g12 - pmod(g12, 1000000)) DIV 1000000").as("gq"))
     var g = gU
@@ -419,7 +419,7 @@ private[graft] object StatStreamQueries {
     * key itself is oracle-checked bit-for-bit.
     */
   private def qZorderKey(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "orders")
+    Tables.table(s, dir, "orders")
       .select(col("o_orderkey"),
         graft.functions.ZOrder.zOrderKey(s,
           col("o_custkey"),
@@ -456,7 +456,7 @@ private[graft] object StatStreamQueries {
     * places on both engines.
     */
   private def qBigramLogprob(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     // the prefix word rides along from generation (struct element) — no
     // regex re-split of millions of bigram rows downstream
     val bgs = docs.select(col("doc_id"),
@@ -483,7 +483,7 @@ private[graft] object StatStreamQueries {
     * stays exact and oracle-checkable).
     */
   private def qHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    val toks = read(s, dir, "documents")
+    val toks = Tables.table(s, dir, "documents")
       .select(explode(TextOps.tokens(col("text"))).as("term"))
     val tf = toks.groupBy("term").agg(count(lit(1)).as("c"))
     val total = tf.agg(sum("c").as("n_total"))
@@ -505,7 +505,7 @@ private[graft] object StatStreamQueries {
     * levenshtein evaluates only on block-mates, inside codegen.
     */
   private def qFuzzyMatch(s: SparkSession, dir: String): DataFrame = {
-    val cust = read(s, dir, "customer")
+    val cust = Tables.table(s, dir, "customer")
       .select(col("c_custkey").as("k"), col("c_name").as("name"))
     val dirty = cust.filter(pmod(col("k"), lit(40L)) === 1)
       .select((col("k") + 1000000L).as("k"),
@@ -536,7 +536,7 @@ private[graft] object StatStreamQueries {
     val n = size(tk)
     val nChunks = when(n <= win, lit(1))
       .otherwise(ceil((n - win).cast("double") / stride).cast("int") + 1)
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .select(col("doc_id"),
         posexplode(transform(sequence(lit(0), nChunks - 1), i =>
           struct((i * stride).cast("int").as("tok_start"),
@@ -556,7 +556,7 @@ private[graft] object StatStreamQueries {
     */
   private def qOovRate(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = read(s, dir, "documents")
+    val toks = Tables.table(s, dir, "documents")
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("term"))
     val tf = toks.groupBy("term").agg(count(lit(1)).as("c"))
     val vocab = tf
@@ -579,7 +579,7 @@ private[graft] object StatStreamQueries {
     * row; the clip itself is a map-only least/greatest over the scan.
     */
   private def qWinsorize(s: SparkSession, dir: String): DataFrame = {
-    val o = read(s, dir, "orders")
+    val o = Tables.table(s, dir, "orders")
     val qs = o.agg(expr("percentile(o_totalprice, array(0.05, 0.95))").as("_q"))
       .select(col("_q").getItem(0).as("lo"), col("_q").getItem(1).as("hi"))
     o.crossJoin(broadcast(qs))
@@ -684,10 +684,10 @@ private[graft] object StatStreamQueries {
       |FROM reach GROUP BY n ORDER BY n""".stripMargin
 
   private def qSqlReachability(s: SparkSession, dir: String): DataFrame = {
-    read(s, dir, "customer").createOrReplaceTempView("customer")
-    read(s, dir, "orders").createOrReplaceTempView("orders")
-    read(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-    read(s, dir, "supplier").createOrReplaceTempView("supplier")
+    Tables.table(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.table(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.table(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Tables.table(s, dir, "supplier").createOrReplaceTempView("supplier")
     s.sql(sqlReachabilityText)
   }
 
@@ -700,9 +700,9 @@ private[graft] object StatStreamQueries {
     * the final sort+limit as TakeOrderedAndProject, a bounded heap).
     */
   private def qSqlTopOrders(s: SparkSession, dir: String): DataFrame = {
-    read(s, dir, "customer").createOrReplaceTempView("customer")
-    read(s, dir, "orders").createOrReplaceTempView("orders")
-    read(s, dir, "lineitem").createOrReplaceTempView("lineitem")
+    Tables.table(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.table(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.table(s, dir, "lineitem").createOrReplaceTempView("lineitem")
     // Spark side accumulates at DECIMAL(18,6): the 18,6×18,6 product is
     // an exact DECIMAL(37,12), while 19,6×19,6 would exceed precision 38
     // and get silently ADJUSTED to (38,11) — one rounded scale digit the
@@ -767,7 +767,7 @@ private[graft] object StatStreamQueries {
     * noise. ln rounds to 6 places (libm parity).
     */
   private def qBigramPmi(s: SparkSession, dir: String): DataFrame = {
-    val bgs = read(s, dir, "documents")
+    val bgs = Tables.table(s, dir, "documents")
       .select(explode(TextOps.bigramPairs(col("text"))).as("e"))
       .select(col("e.w1").as("w1"), col("e.w2").as("w2"))
     val bgc = bgs.groupBy("w1", "w2").agg(count(lit(1)).as("c"))

@@ -29,7 +29,7 @@ private[graft] object TextSimQueries {
 
   /** X1 exact dedup — lowest doc_id per (lang, source). */
   private def qDedupExact(s: SparkSession, dir: String): DataFrame =
-    Dedup.exact(read(s, dir, "documents"), Seq("lang", "source"), "doc_id")
+    Dedup.exact(Tables.table(s, dir, "documents"), Seq("lang", "source"), "doc_id")
       .select("doc_id", "lang", "source").orderBy("doc_id")
 
   /** X1 n-gram Jaccard near-dup pairs: inverted-index join over
@@ -96,7 +96,7 @@ private[graft] object TextSimQueries {
     * the oracle (and a DedupSpec property) asserts.
     */
   private def qDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val isNew = pmod(col("doc_id"), lit(5L)) === 4L
     val idx = bandIndexPath(dir)
     Dedup.ensureBandIndex(docs.filter(!isNew), idx, n = 3, numHashes = 16, bands = 4)
@@ -118,7 +118,7 @@ private[graft] object TextSimQueries {
     * batch's partition out of its index read.
     */
   private def qDedupMultibatch(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val m = pmod(col("doc_id"), lit(5L))
     val stamp = graft.sources.Stamped.stampOf(dir, "documents.parquet")
     val idx = s"${tmpDir("band_index_mb", dir)}_n3h16b4_$stamp"
@@ -148,7 +148,7 @@ private[graft] object TextSimQueries {
     * committed batch and just read the latest labels).
     */
   private def qIngestStream(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val m = pmod(col("doc_id"), lit(5L))
     val stamp = graft.sources.Stamped.stampOf(dir, "documents.parquet")
     val root = s"${tmpDir("ingest_loop", dir)}_n3h16b4_$stamp"
@@ -203,7 +203,7 @@ private[graft] object TextSimQueries {
     * — which is exactly what the oracle recomputes from scratch.
     */
   private def qGroupsIncremental(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val isNew = pmod(col("doc_id"), lit(5L)) === 4L
     val idxPath = bandIndexPath(dir) // shared with q_dedup_incremental
     val corpus = docs.filter(!isNew)
@@ -230,12 +230,12 @@ private[graft] object TextSimQueries {
     * stays the library's production path (DedupSpec).
     */
   private def qSimhash(s: SparkSession, dir: String): DataFrame =
-    Dedup.simhashPairsPortable(read(s, dir, "documents"), maxHamming = 3)
+    Dedup.simhashPairsPortable(Tables.table(s, dir, "documents"), maxHamming = 3)
       .orderBy("doc_a", "doc_b")
 
   /** X2 exact top-k cosine against vec 0 (codegen'd CosineSim kernel). */
   private def qTopkCosine(s: SparkSession, dir: String): DataFrame =
-    Similarity.topkCosine(s, read(s, dir, "embeddings"), queryId = 0L, k = 10)
+    Similarity.topkCosine(s, Tables.table(s, dir, "embeddings"), queryId = 0L, k = 10)
 
   /** X1/X2 embedding near-dup pairs: sign-LSH band candidates (equi-join
     * on (band, bucket) — no n² product in the plan) + exact cosine verify.
@@ -255,7 +255,7 @@ private[graft] object TextSimQueries {
     * candidate SQL plus a recursive-CTE transitive closure.
     */
   private def qDedupEmbedGroups(s: SparkSession, dir: String): DataFrame = {
-    val emb = read(s, dir, "embeddings")
+    val emb = Tables.table(s, dir, "embeddings")
     val pairs = embPairsT04(s, dir)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
     Dedup.dedupGroups(emb.select("vec_id"), pairs, "vec_id").orderBy("vec_id")
@@ -267,7 +267,7 @@ private[graft] object TextSimQueries {
     * overlap, and cosine re-rank are all cross-engine-checked.
     */
   private def qAnnLsh(s: SparkSession, dir: String): DataFrame =
-    Similarity.annTopk(s, read(s, dir, "embeddings"), queryId = 0L, k = 10,
+    Similarity.annTopk(s, Tables.table(s, dir, "embeddings"), queryId = 0L, k = 10,
       planes = Similarity.portablePlanes(16, 64))
 
   /** X2 multi-probe LSH ANN (Similarity.annTopkMultiprobe): the query also
@@ -278,7 +278,7 @@ private[graft] object TextSimQueries {
     * same index; the recall gain is spec-asserted.
     */
   private def qAnnMultiprobe(s: SparkSession, dir: String): DataFrame =
-    Similarity.annTopkMultiprobe(s, read(s, dir, "embeddings"), queryId = 0L,
+    Similarity.annTopkMultiprobe(s, Tables.table(s, dir, "embeddings"), queryId = 0L,
       k = 10, planes = Similarity.portablePlanes(16, 64))
 
   /** X2 IVF ANN: inverted lists + nprobe probing, on the ONE clustering
@@ -290,7 +290,7 @@ private[graft] object TextSimQueries {
     * distinct operating points of the same implementation.
     */
   private def qIvfTopk(s: SparkSession, dir: String): DataFrame =
-    Similarity.ivfTopkFixed(s, read(s, dir, "embeddings"), queryId = 0L,
+    Similarity.ivfTopkFixed(s, Tables.table(s, dir, "embeddings"), queryId = 0L,
       kNeighbors = 10, clusters = 8, nprobe = 3, iters = 1)
 
   /** X2 Lloyd-REFINED k-means through the correctness gate — closes the
@@ -301,7 +301,7 @@ private[graft] object TextSimQueries {
     * the PageRank playbook applied to clustering. k=8, iters=2.
     */
   private def qKmeansLloyd(s: SparkSession, dir: String): DataFrame =
-    Similarity.kmeansFixed(read(s, dir, "embeddings"), k = 8, iters = 2)
+    Similarity.kmeansFixed(Tables.table(s, dir, "embeddings"), k = 8, iters = 2)
       .orderBy("vec_id")
 
   /** X2 IVF top-k over the REFINED fixed-point centroids — q_ivf_topk's
@@ -311,7 +311,7 @@ private[graft] object TextSimQueries {
     * complete refined-IVF path is hash-checked, not just spec'd.
     */
   private def qIvfRefined(s: SparkSession, dir: String): DataFrame =
-    Similarity.ivfTopkFixed(s, read(s, dir, "embeddings"), queryId = 0L,
+    Similarity.ivfTopkFixed(s, Tables.table(s, dir, "embeddings"), queryId = 0L,
       kNeighbors = 10, clusters = 8, nprobe = 2, iters = 2)
 
   /** X2 product-quantization codes (Jégou et al. 2011; the FAISS/SCaNN
@@ -323,7 +323,7 @@ private[graft] object TextSimQueries {
     * per-subspace Lloyd chain and hash-matches every code and distance.
     */
   private def qPqEncode(s: SparkSession, dir: String): DataFrame =
-    Similarity.productQuantize(read(s, dir, "embeddings"),
+    Similarity.productQuantize(Tables.table(s, dir, "embeddings"),
         m = 8, k = 8, iters = 2)._1
       .select(col("vec_id"), col("sub"), col("cluster").as("code"), col("dist"))
       .orderBy("vec_id", "sub")
@@ -339,7 +339,7 @@ private[graft] object TextSimQueries {
     * corpus (SimilaritySpec pins ≥ 0.8).
     */
   private def qAnnPq(s: SparkSession, dir: String): DataFrame =
-    Similarity.pqTopkAdc(s, read(s, dir, "embeddings"), queryId = 0L,
+    Similarity.pqTopkAdc(s, Tables.table(s, dir, "embeddings"), queryId = 0L,
       kNeighbors = 10, m = 8, k = 8, iters = 2, rerank = 64)
 
   /** X2 batched PQ-ADC (Similarity.pqTopkAdcBatch): every 50th vector is
@@ -355,7 +355,7 @@ private[graft] object TextSimQueries {
     // bytes ×94.6 at the 10× synthetic decade (SCALE_r08, first run).
     // With |Q| pinned the scan is linear in the corpus, which is the
     // workload a serving deployment actually has.
-    Similarity.pqTopkAdcBatch(s, read(s, dir, "embeddings"),
+    Similarity.pqTopkAdcBatch(s, Tables.table(s, dir, "embeddings"),
         queryPred = col("vec_id") < 40L,
         kNeighbors = 5, m = 8, k = 8, iters = 2, rerank = 64)
       .orderBy("query_id", "rk")
@@ -374,7 +374,7 @@ private[graft] object TextSimQueries {
     * itself scale-gated.
     */
   private def qAnnIvfPq(s: SparkSession, dir: String): DataFrame = {
-    val emb = read(s, dir, "embeddings")
+    val emb = Tables.table(s, dir, "embeddings")
     val stamp = graft.sources.Stamped.stampOf(dir, "embeddings.parquet")
     val idx = s"${tmpDir("ivfpq_index", dir)}_c8m8k8i2_$stamp"
     Similarity.ensureIvfPqIndex(emb, idx, coarseK = 8, m = 8, k = 8, iters = 2)
@@ -400,7 +400,7 @@ private[graft] object TextSimQueries {
     * one IEEE division — the clustering-quality gate, linear cost.
     */
   private def qSilhouette(s: SparkSession, dir: String): DataFrame =
-    Similarity.silhouetteFixed(read(s, dir, "embeddings"), k = 8, iters = 2)
+    Similarity.silhouetteFixed(Tables.table(s, dir, "embeddings"), k = 8, iters = 2)
       .orderBy("vec_id")
 
   /** X2 incremental IVF ingest: vectors ≡ 4 (mod 5) play the arriving
@@ -413,7 +413,7 @@ private[graft] object TextSimQueries {
     * end-to-end — the similarity-side mirror of q_dedup_incremental.
     */
   private def qIvfIncremental(s: SparkSession, dir: String): DataFrame = {
-    val emb = read(s, dir, "embeddings")
+    val emb = Tables.table(s, dir, "embeddings")
     val isNew = pmod(col("vec_id"), lit(5L)) === 4L
     val stamp = graft.sources.Stamped.stampOf(dir, "embeddings.parquet")
     val idx = s"${tmpDir("centroid_index", dir)}_k8i2_$stamp"
@@ -430,7 +430,7 @@ private[graft] object TextSimQueries {
     * compressed-store ingest loop.
     */
   private def qPqIncremental(s: SparkSession, dir: String): DataFrame = {
-    val emb = read(s, dir, "embeddings")
+    val emb = Tables.table(s, dir, "embeddings")
     val isNew = pmod(col("vec_id"), lit(5L)) === 4L
     val stamp = graft.sources.Stamped.stampOf(dir, "embeddings.parquet")
     val idx = s"${tmpDir("pq_index", dir)}_m8k8i2_$stamp"
@@ -451,7 +451,7 @@ private[graft] object TextSimQueries {
     * store. Warm re-runs skip every committed batch and just read.
     */
   private def qStreamIvf(s: SparkSession, dir: String): DataFrame = {
-    val emb = read(s, dir, "embeddings")
+    val emb = Tables.table(s, dir, "embeddings")
     val m = pmod(col("vec_id"), lit(5L))
     val stamp = graft.sources.Stamped.stampOf(dir, "embeddings.parquet")
     val root = s"${tmpDir("ivf_loop", dir)}_k8i2_$stamp"
@@ -486,7 +486,7 @@ private[graft] object TextSimQueries {
     * the arrived fifths in one pass. Warm re-runs skip committed batches.
     */
   private def qStreamPq(s: SparkSession, dir: String): DataFrame = {
-    val emb = read(s, dir, "embeddings")
+    val emb = Tables.table(s, dir, "embeddings")
     val m = pmod(col("vec_id"), lit(5L))
     val stamp = graft.sources.Stamped.stampOf(dir, "embeddings.parquet")
     val root = s"${tmpDir("pq_loop", dir)}_m8k8i2_$stamp"
@@ -522,7 +522,7 @@ private[graft] object TextSimQueries {
     * bootstrap + both updates.
     */
   private def qStreamKmeans(s: SparkSession, dir: String): DataFrame = {
-    val emb = read(s, dir, "embeddings")
+    val emb = Tables.table(s, dir, "embeddings")
     val m = pmod(col("vec_id"), lit(5L))
     val stamp = graft.sources.Stamped.stampOf(dir, "embeddings.parquet")
     val root = s"${tmpDir("kmeans_loop", dir)}_k8i2_$stamp"
@@ -574,7 +574,7 @@ private[graft] object TextSimQueries {
     * covered by SimilaritySpec's drop-rule contract.
     */
   private def qSemDedup(s: SparkSession, dir: String): DataFrame =
-    Similarity.semDedup(s, read(s, dir, "embeddings"), clusters = 8,
+    Similarity.semDedup(s, Tables.table(s, dir, "embeddings"), clusters = 8,
       threshold = 0.4).orderBy("vec_id")
 
   /** X2/X4 embedding statistics: per-label mean L2 norm. Norms via
@@ -584,7 +584,7 @@ private[graft] object TextSimQueries {
     */
   private def qEmbedNorms(s: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 20)
-    val norms = read(s, dir, "embeddings")
+    val norms = Tables.table(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .withColumn("xd", col("x").cast("double"))
       .groupBy("vec_id", "label")
@@ -596,7 +596,7 @@ private[graft] object TextSimQueries {
 
   /** X3 token counting: whitespace tokens + BPE-ish regex tokens. */
   private def qTokenCount(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .select(col("doc_id"), TextOps.tokenCount(col("text")).as("n_tokens"),
         TextOps.bpeTokenCount(col("text")).as("n_bpe_tokens"),
         length(col("text")).as("n_chars_obs"))
@@ -609,7 +609,7 @@ private[graft] object TextSimQueries {
     */
   private def qRollingFingerprint(s: SparkSession, dir: String): DataFrame = {
     graft.functions.TextHash.register(s)
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .select(col("doc_id"),
         TextOps.portableRollingHashFast(TextOps.tokens(col("text"))).as("rolling_fp"))
       .orderBy("doc_id")
@@ -623,7 +623,7 @@ private[graft] object TextSimQueries {
     * oracle-replayable.
     */
   private def qWinnow(s: SparkSession, dir: String): DataFrame =
-    Dedup.winnowedFingerprints(read(s, dir, "documents"), n = 3, w = 4)
+    Dedup.winnowedFingerprints(Tables.table(s, dir, "documents"), n = 3, w = 4)
       .orderBy("doc_id", "pos", "fp")
 
   /** X1 MOSS comparison phase (Dedup.winnowedPairs): doc pairs sharing
@@ -633,7 +633,7 @@ private[graft] object TextSimQueries {
     * shingle join.
     */
   private def qWinnowPairs(s: SparkSession, dir: String): DataFrame =
-    Dedup.winnowedPairs(read(s, dir, "documents"), n = 3, w = 4,
+    Dedup.winnowedPairs(Tables.table(s, dir, "documents"), n = 3, w = 4,
         minShared = 2)
       .orderBy("doc_a", "doc_b")
 
@@ -644,7 +644,7 @@ private[graft] object TextSimQueries {
     * same planes.
     */
   private def qRandProj(s: SparkSession, dir: String): DataFrame =
-    Similarity.randomProjections(read(s, dir, "embeddings"), numProj = 16)
+    Similarity.randomProjections(Tables.table(s, dir, "embeddings"), numProj = 16)
       .orderBy("vec_id", "j")
 
   /** X3 BPE merge training (text/Bpe, Sennrich 2016): 3 rounds of
@@ -655,7 +655,7 @@ private[graft] object TextSimQueries {
     * bit-identically in the unrolled oracle.
     */
   private def qBpeMerges(s: SparkSession, dir: String): DataFrame =
-    graft.text.Bpe.merges(read(s, dir, "documents"), rounds = 3)
+    graft.text.Bpe.merges(Tables.table(s, dir, "documents"), rounds = 3)
       .orderBy("round")
 
   /** X3 BPE encode (text/Bpe.encodeCounts): the corpus re-segmented by
@@ -664,7 +664,7 @@ private[graft] object TextSimQueries {
     * one oracle-checked chain.
     */
   private def qBpeEncode(s: SparkSession, dir: String): DataFrame =
-    graft.text.Bpe.encodeCounts(read(s, dir, "documents"), rounds = 3)
+    graft.text.Bpe.encodeCounts(Tables.table(s, dir, "documents"), rounds = 3)
       .orderBy("doc_id")
 
   /** X3 hashing-trick featurization (Weinberger et al. 2009): bag of
@@ -678,7 +678,7 @@ private[graft] object TextSimQueries {
   private def qHashFeatures(s: SparkSession, dir: String): DataFrame = {
     graft.functions.TextHash.register(s)
     val h = TextOps.mixedOf(graft.functions.TextHash.portableHash(col("w")))
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("w"))
       .select(col("doc_id"),
         pmod(h, lit(64L)).cast("int").as("idx"),
@@ -691,7 +691,7 @@ private[graft] object TextSimQueries {
 
   /** X3 language-ID heuristic: stopword-hit ratio per doc. */
   private def qLangId(s: SparkSession, dir: String): DataFrame = {
-    val tok = read(s, dir, "documents")
+    val tok = Tables.table(s, dir, "documents")
       .select(col("doc_id"), col("lang"), explode(TextOps.tokens(col("text"))).as("w"))
     tok.groupBy("doc_id", "lang")
       .agg((count(when(col("w").isin(TextOps.EnStopwords: _*), 1)).cast("double") /
@@ -702,7 +702,7 @@ private[graft] object TextSimQueries {
 
   /** X3 quality scoring: lexical diversity + character cleanliness. */
   private def qQualityScore(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .select(col("doc_id"),
         TextOps.typeTokenRatio(col("text")).as("ttr"),
         TextOps.alphaRatio(col("text")).as("alpha_ratio"),
@@ -711,7 +711,7 @@ private[graft] object TextSimQueries {
 
   /** X3 document fingerprinting (md5, engine-portable). */
   private def qDocFingerprint(s: SparkSession, dir: String): DataFrame =
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .select(col("doc_id"), TextOps.fingerprint(col("lang"), col("text")).as("fp"))
       .orderBy("doc_id")
 
@@ -724,7 +724,7 @@ private[graft] object TextSimQueries {
   private def qRepetitionRatio(s: SparkSession, dir: String): DataFrame = {
     val tk = TextOps.tokens(col("text"))
     val sh = TextOps.shingles(tk, 3)
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .select(col("doc_id"),
         (lit(1.0) - size(array_distinct(tk)).cast("double") / size(tk))
           .as("dup_word_frac"),
@@ -749,7 +749,7 @@ private[graft] object TextSimQueries {
     // the normalization denominator is a keyless window over the GROUP
     // table (|sources| x |langs| rows — bounded by the catalog, not the
     // corpus), which keeps the whole query one scan of documents
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .groupBy("source", "lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(TextOps.tokenCount(col("text")).cast("long")).as("n_tokens"))
@@ -770,7 +770,7 @@ private[graft] object TextSimQueries {
     */
   private def qVocabTopk(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    read(s, dir, "documents")
+    Tables.table(s, dir, "documents")
       .select(explode(TextOps.tokens(col("text"))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("freq"))
       .withColumn("token_id",
@@ -789,7 +789,7 @@ private[graft] object TextSimQueries {
     */
   private def qVocabCoverage(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val freqs = read(s, dir, "documents")
+    val freqs = Tables.table(s, dir, "documents")
       .select(explode(TextOps.tokens(col("text"))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("freq"))
     val byFreq = Window.orderBy(desc("freq"), asc("term"))
@@ -813,7 +813,7 @@ private[graft] object TextSimQueries {
     */
   private def qTokenZipf(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pts = read(s, dir, "documents")
+    val pts = Tables.table(s, dir, "documents")
       .select(explode(TextOps.tokens(col("text"))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("freq"))
       .withColumn("rank", row_number().over(Window.orderBy(desc("freq"), asc("term"))))
@@ -838,7 +838,7 @@ private[graft] object TextSimQueries {
     * none of those). Source counts broadcast; the gate is map-side.
     */
   private def qSourceCapSample(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val counts = docs.groupBy("source").agg(count(lit(1)).as("n_src"))
     val h = TextOps.mixRound(
       TextOps.mixRound(pmod(col("doc_id"), lit(TextOps.HashMod)),
@@ -861,7 +861,7 @@ private[graft] object TextSimQueries {
     */
   private def qCurationPipeline(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
       .withColumn("norm", trim(lower(col("text"))))
       .withColumn("n_tok", size(TextOps.tokens(col("text"))).cast("long"))
       .filter(col("n_tok") >= 30)
@@ -883,13 +883,13 @@ private[graft] object TextSimQueries {
 
   /** X4 multimodal metadata over the opaque binary payload. */
   private def qMultimodalMeta(s: SparkSession, dir: String): DataFrame =
-    Media.metadata(read(s, dir, "documents")).orderBy("doc_id")
+    Media.metadata(Tables.table(s, dir, "documents")).orderBy("doc_id")
 
   /** X4 frame sampling over the payload stream (every 256th offset, 64-unit
     * frames, portable-hash fingerprints) — oracle-checked end to end.
     */
   private def qMediaFrames(s: SparkSession, dir: String): DataFrame =
-    Media.frameSample(s, read(s, dir, "documents"))
+    Media.frameSample(s, Tables.table(s, dir, "documents"))
       .orderBy("doc_id", "frame_idx")
 
   /** X4 partition-wise feature extraction over a REAL image format: the
@@ -906,7 +906,7 @@ private[graft] object TextSimQueries {
     * cells.
     */
   private def qMediaFeatures(s: SparkSession, dir: String): DataFrame =
-    Media.extractFeatures(s, read(s, dir, "documents")).toDF()
+    Media.extractFeatures(s, Tables.table(s, dir, "documents")).toDF()
       .withColumn("features", serializeFloats(col("features")))
       .orderBy("doc_id")
 
@@ -918,7 +918,7 @@ private[graft] object TextSimQueries {
     * so the oracle replay is bit-exact.
     */
   private def qAudioFeatures(s: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Audio.extractWindows(s, read(s, dir, "documents")).toDF()
+    graft.multimodal.Audio.extractWindows(s, Tables.table(s, dir, "documents")).toDF()
       .orderBy("doc_id", "window_idx")
 
   /** X4 perceptual image hash — [[Media.imagePhash]] (average hash, bit
@@ -926,7 +926,7 @@ private[graft] object TextSimQueries {
     * queries and the scale probes alike.
     */
   private def imagePhash(s: SparkSession, dir: String): DataFrame =
-    Media.imagePhash(s, read(s, dir, "documents"))
+    Media.imagePhash(s, Tables.table(s, dir, "documents"))
 
   private def qImagePhash(s: SparkSession, dir: String): DataFrame =
     imagePhash(s, dir)
@@ -971,7 +971,7 @@ private[graft] object TextSimQueries {
     * what the oracle (and a MihIndexSpec property) asserts.
     */
   private def qImageDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents")
+    val docs = Tables.table(s, dir, "documents")
     val isNew = pmod(col("doc_id"), lit(5L)) === 4L
     // the batch/corpus split happens on the DOCS, before the phash chain:
     // thumbnails decode via mapPartitions, which a later doc_id filter
@@ -1146,7 +1146,7 @@ private[graft] object TextSimQueries {
     }
 
   private[graft] def mediaSemCorpus(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents").select("doc_id", "text")
+    val docs = Tables.table(s, dir, "documents").select("doc_id", "text")
     val hh = greatest(ceil(length(col("text")) / lit(32.0)).cast("long"), lit(1L))
     val sibs = docs
       .filter(pmod(col("doc_id"), lit(4L)) === 1L && length(col("text")) >= 256)
@@ -1212,7 +1212,7 @@ private[graft] object TextSimQueries {
     * PROBE in the query-id range (id 50000001): the corpus shape that
     * makes the bucket-df cap LOAD-BEARING at the oracle SFs. */
   private[graft] def hotCapCorpus(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents").select("doc_id", "text")
+    val docs = Tables.table(s, dir, "documents").select("doc_id", "text")
     val cluster = docs.filter(pmod(col("doc_id"), lit(2L)) === 0L)
       .select((col("doc_id") + lit(20000000L)).as("doc_id"),
         lit(HotClusterRow * 8).as("text"))
@@ -1285,7 +1285,7 @@ private[graft] object TextSimQueries {
     * Map-only after the decode; all-integer, so fully oracle-replayable.
     */
   private def audioFingerprint(s: SparkSession, dir: String): DataFrame =
-    audioFingerprintOf(s, read(s, dir, "documents"))
+    audioFingerprintOf(s, Tables.table(s, dir, "documents"))
 
   /** [[audioFingerprint]] over an explicit doc frame — the dedup query
     * feeds its sibling-augmented corpus through the same chain. */
@@ -1315,7 +1315,7 @@ private[graft] object TextSimQueries {
     * degenerate). Declarative perturbation, replayed verbatim in SQL.
     */
   private def audioDedupDocs(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents").select("doc_id", "text")
+    val docs = Tables.table(s, dir, "documents").select("doc_id", "text")
     val p = greatest(floor(length(col("text")) / 2), lit(1L)).cast("int")
     docs.union(
       docs.filter(pmod(col("doc_id"), lit(25L)) === 0L)
@@ -1357,7 +1357,7 @@ private[graft] object TextSimQueries {
   private def qVideoFeatures(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("doc_id").orderBy("frame_idx")
-    graft.multimodal.Video.frameFeatures(s, read(s, dir, "documents")).toDF()
+    graft.multimodal.Video.frameFeatures(s, Tables.table(s, dir, "documents")).toDF()
       .withColumn("p1", lag("h1", 1).over(w))
       .withColumn("p2", lag("h2", 1).over(w))
       .withColumn("hamming_prev", expr(
@@ -1427,7 +1427,7 @@ private[graft] object TextSimQueries {
     * surgery, replayed verbatim in the oracle.
     */
   private def lossyDedupDocs(s: SparkSession, dir: String): DataFrame = {
-    val docs = read(s, dir, "documents").select("doc_id", "text")
+    val docs = Tables.table(s, dir, "documents").select("doc_id", "text")
     docs.union(
       docs.filter(pmod(col("doc_id"), lit(25L)) === 0L)
         .select((col("doc_id") + 2000000L).as("doc_id"),
@@ -1522,7 +1522,7 @@ private[graft] object TextSimQueries {
     */
   private[graft] def audioOffsetCorpus(s: SparkSession, dir: String): DataFrame =
     AudioOffsets.map(k =>
-      read(s, dir, "documents")
+      Tables.table(s, dir, "documents")
         .filter(length(col("text")) >= 256)
         .select((col("doc_id") * 512L + k).as("doc_id"),
           expr(s"substring(text, ${k + 1})").as("text")))
@@ -1533,7 +1533,7 @@ private[graft] object TextSimQueries {
   private def qAudioOffsetRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val offs = AudioOffsets
-    val base = read(s, dir, "documents")
+    val base = Tables.table(s, dir, "documents")
       .filter(length(col("text")) >= 256).select("doc_id", "text")
     def corpus = audioOffsetCorpus(s, dir)
     val universe = base.select(col("doc_id").as("doc"))
@@ -1599,7 +1599,7 @@ private[graft] object TextSimQueries {
     * comma-joined string for the driver compare, like q_media_features.
     */
   private def qMediaResize(s: SparkSession, dir: String): DataFrame =
-    Media.thumbnails(s, read(s, dir, "documents")).toDF()
+    Media.thumbnails(s, Tables.table(s, dir, "documents")).toDF()
       .withColumn("thumb",
         expr("array_join(transform(thumb, x -> cast(x as string)), ',')"))
       .orderBy("doc_id")
@@ -1624,7 +1624,7 @@ private[graft] object TextSimQueries {
     graft.functions.TextHash.register(s)
     val m = TextOps.HashMod
     val (depth, width) = (2, 8)
-    val wc = read(s, dir, "documents")
+    val wc = Tables.table(s, dir, "documents")
       .select(explode(TextOps.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("cnt"))

@@ -82,20 +82,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** All-pairs near-duplicates above a cosine threshold. EXACT BASELINE
-    * ONLY — the join is an O(n^2) nested-loop product, impossible at
-    * corpus scale; it exists so SimilaritySpec can property-test
-    * [[nearDupPairsBanded]] (the declared, scale-shaped path) against it.
-    */
-  def nearDupPairs(s: SparkSession, emb: DataFrame, threshold: Double): DataFrame = {
-    val a = emb.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
-    val b = emb.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))
-    a.join(b, col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"), Vectors.cosineSim(s, "ea", "eb").as("sim"))
-      .filter(col("sim") > threshold)
-      .orderBy("vec_a", "vec_b")
-  }
-
   /** Banded near-dup pairs: candidates share at least one sign-LSH band
     * bucket (EQUI-join on (band, bucket) — no all-pairs product anywhere
     * in the plan), then the exact codegen'd cosine verifies each candidate
@@ -1480,26 +1466,5 @@ object Similarity {
       .select(explode(col("_g")).as("e"))
       .select(col("e.i").as("i"), col("e.j").as("j"), col("e.g12").as("g12"),
         (col("e.g12").cast("double") / lit(1e12)).as("g"))
-  }
-
-  /** The declarative formulation of [[gramUpper]] (nested array transform
-    * → explode → (i, j) aggregate): the property-tested reference the
-    * native [[graft.functions.GramAgg]] must reproduce exactly. Its
-    * interpreted lambdas allocate d² structs per row, which is exactly
-    * the cost the one-buffer aggregate removes from the hot path.
-    */
-  def gramUpperDeclarative(emb: DataFrame, vecCol: String): DataFrame = {
-    val v = col(vecCol)
-    val entries = filter(
-      flatten(transform(v, (xi, i) =>
-        transform(v, (xj, j) =>
-          struct(i.as("i"), j.as("j"),
-            floor(xi.cast("double") * xj.cast("double") * lit(1e12)).as("p12"))))),
-      e => e("j") >= e("i"))
-    emb.select(explode(entries).as("e"))
-      .groupBy(col("e.i").as("i"), col("e.j").as("j"))
-      .agg(sum(col("e.p12")).as("g12"))
-      .select(col("i"), col("j"), col("g12"),
-        (col("g12").cast("double") / lit(1e12)).as("g"))
   }
 }

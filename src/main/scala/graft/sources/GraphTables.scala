@@ -23,25 +23,16 @@ import org.apache.spark.sql.functions._
   */
 object GraphTables {
 
-  /** Each artifact is keyed on EVERY source table its build reads, so a
-    * regenerated orders.parquet with an untouched lineitem.parquet still
-    * misses the cache (round-7 advice) — not on the whole-dir-rewritten-
-    * together convention.
-    */
-  private def ensure(s: SparkSession, dir: String, stamps: Seq[String],
-                     name: String)(build: => DataFrame): DataFrame =
-    Stamped.ensure(s, dir, stamps, name)(build)
-
   /** Symmetrized weighted purchase graph (src, dst, cnt): per-pair
     * lineitem⋈orders interaction counts, customers offset by 1e6 into a
     * disjoint id space, both orientations (cnt is per-pair, so it is the
-    * same in each direction).
+    * same in each direction). Keyed on both source tables, so a
+    * regenerated orders.parquet with an untouched lineitem.parquet still
+    * misses the artifact.
     */
   def weightedPurchaseGraph(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, Seq("lineitem.parquet", "orders.parquet"), "purchase_graph") {
-      purchaseGraphFrom(
-        s.read.parquet(s"$dir/lineitem.parquet"),
-        s.read.parquet(s"$dir/orders.parquet"))
+    Stamped.ensure(s, dir, Seq("lineitem.parquet", "orders.parquet"), "purchase_graph") {
+      purchaseGraphFrom(Tables.table(s, dir, "lineitem"), Tables.table(s, dir, "orders"))
     }
 
   /** The derivation behind [[weightedPurchaseGraph]], on explicit fact
@@ -75,8 +66,8 @@ object GraphTables {
     * count, materialized once per testdata stamp.
     */
   def copurchasePairs(s: SparkSession, dir: String): DataFrame =
-    ensure(s, dir, Seq("lineitem.parquet"), "copurchase_pairs") {
-      basketPairsFrom(s.read.parquet(s"$dir/lineitem.parquet"))
+    Stamped.ensure(s, dir, "lineitem.parquet", "copurchase_pairs") {
+      basketPairsFrom(Tables.table(s, dir, "lineitem"))
     }
 
   /** The derivation behind [[copurchasePairs]], on an explicit lineitem

@@ -8,7 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * of every source table the derivation reads, the build is
   * `_SUCCESS`-guarded so a crashed write re-runs, and reads after the
   * first call cost one parquet scan — at 100 TB this is the difference
-  * between one corpus pass per snapshot and one per query.
+  * between one corpus pass per snapshot and one per query. The artifact
+  * is opened through [[Tables.parquet]], so a call that finds it
+  * published runs no Spark job before the caller's action.
   *
   * Policy — what gets stamped: a derivation is materialized here ONLY
   * when two or more queries consume the identical table (the purchase
@@ -101,6 +103,6 @@ object Stamped {
         if (fs.exists(nested)) fs.delete(nested, true)
       }
     }
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 }

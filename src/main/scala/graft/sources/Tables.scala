@@ -1,16 +1,50 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-/** Testdata table readers. Always explicit paths + parquet-native schemas —
-  * scans stay prunable/pushdown-able (BASELINE.md design consequences).
+/** The one parquet reader for the testdata tables and the stamped
+  * artifacts. Every read carries its schema, taken from one parquet footer
+  * read in-process: a bare `spark.read.parquet` runs a Spark job per read
+  * to merge footer schemas, before any action. Scans stay prunable and
+  * pushdown-able (BASELINE.md design consequences).
   */
 object Tables {
 
   def table(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    parquet(s, s"$dir/$name.parquet")
+
+  /** A parquet file, or a directory of part files, read with the schema
+    * Spark would infer with `mergeSchema` off: the first data file's footer
+    * (names starting `_` or `.` are not data), its stored Spark schema if
+    * it has one, else Spark's own conversion under the session's SQL conf
+    * (so `nanosAsLong` and NTZ inference hold as for an inferred read).
+    * A missing path, or a directory without a data file, throws
+    * `FileNotFoundException` naming it. The status calls follow symlinks
+    * without forking a process (feed dirs are directories of links).
+    */
+  def parquet(s: SparkSession, path: String): DataFrame = {
+    val conf = s.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val file = fs.listStatus(root).filter(f => f.isFile &&
+        !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName).headOption
+      .getOrElse(throw new java.io.FileNotFoundException(s"no parquet data file in $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(s.sessionState.conf))
+    s.read.schema(schema).parquet(path)
+  }
 
   /** Normalize the events `ts` column to a proper TimestampType regardless
     * of how the parquet writer encoded it — the testdata generator has
@@ -33,8 +67,9 @@ object Tables {
     *    nanos branch produces.
     *  - TimestampType already: pass through.
     *
-    * One shared entry point for BATCH AND STREAM paths (EventStreams probes
-    * the feed footer and funnels through here) so the two can never drift.
+    * One shared entry point for BATCH AND STREAM paths (EventStreams reads
+    * the feed's schema through [[parquet]] and funnels through here) so the
+    * two can never drift.
     */
   def adaptEventTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
     case LongType => // nanos-as-long rebuild

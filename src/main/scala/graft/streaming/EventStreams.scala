@@ -24,32 +24,32 @@ object EventStreams {
   /** An events feed directory as a stream (each new parquet file in the
     * directory becomes a micro-batch — the standard file-feed layout).
     * Schema is explicit — a streaming scan must never infer — but it is
-    * PROBED from the feed's own parquet footer (one driver-side batch-read
-    * of ingest-sized metadata, no data scan) rather than hard-coded: the
-    * testdata's ts encoding has drifted between TIMESTAMP(NANOS) and
-    * TIMESTAMP(MICROS) across regenerations, and a declared `ts BIGINT`
-    * over a micros file reads the raw INT64 and silently lands every event
-    * in 1970 (round-4 verdict #2). The probed schema feeds the SAME
-    * [[graft.sources.Tables.adaptEventTs]] normalizer as the batch path,
-    * so stream and batch cannot disagree on what `ts` means.
+    * taken from the feed's own parquet footer through
+    * [[graft.sources.Tables.parquet]] (one footer read in-process, no
+    * Spark job) rather than hard-coded: the testdata's ts encoding has
+    * drifted between TIMESTAMP(NANOS) and TIMESTAMP(MICROS) across
+    * regenerations, and a declared `ts BIGINT` over a micros file reads
+    * the raw INT64 and silently lands every event in 1970 (round-4 verdict
+    * #2). The schema feeds the SAME [[graft.sources.Tables.adaptEventTs]]
+    * normalizer as the batch path, so stream and batch cannot disagree on
+    * what `ts` means.
     */
   def readEventStream(s: SparkSession, feedDir: String): DataFrame = {
-    // A feed directory that exists but holds no files yet has no footer to
-    // probe (the batch read throws UNABLE_TO_INFER_SCHEMA) — a legitimate
-    // state for a stream attaching BEFORE the first file lands. Fall back
-    // to the declared events schema with `ts TIMESTAMP` (the micros
-    // encoding current testdata ships; adaptEventTs passes it through).
-    // A nanos-encoded feed still gets the probed branch the moment a file
-    // exists, which is the case for every staged-feed caller here.
-    val probed =
-      try s.read.parquet(feedDir).schema
-      catch { case _: org.apache.spark.sql.AnalysisException =>
+    // A feed directory that holds no files yet has no footer to read — a
+    // legitimate state for a stream attaching BEFORE the first file lands.
+    // Fall back to the declared events schema with `ts TIMESTAMP` (the
+    // micros encoding current testdata ships; adaptEventTs passes it
+    // through). A nanos-encoded feed still gets its footer schema the
+    // moment a file exists, which is the case for every staged-feed caller.
+    val schema =
+      try graft.sources.Tables.parquet(s, feedDir).schema
+      catch { case _: java.io.FileNotFoundException =>
         org.apache.spark.sql.types.StructType.fromDDL(
           "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
             "event_type STRING, value DOUBLE, props STRING")
       }
     graft.sources.Tables.adaptEventTs(
-      s.readStream.schema(probed).parquet(feedDir))
+      s.readStream.schema(schema).parquet(feedDir))
   }
 
   /** Windowed event-time aggregation with a watermark (the streaming analog

@@ -545,20 +545,11 @@ object Dedup {
   }
 
   /** MinHash signatures: numHashes independent min-hashes of the shingle
-    * set, as one partial-aggregable groupBy (each hash = min over shingles
-    * of a salted xxhash64). Column-per-hash formulation — reference
-    * implementation for [[minhashSignaturesAgg]].
-    */
-  def minhashSignatures(docs: DataFrame, n: Int, numHashes: Int): DataFrame = {
-    val sh = shingleSet(docs, n)
-    val aggs = (0 until numHashes).map(i => min(xxhash64(lit(i), col("s"))).as(s"h$i"))
-    sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Same signatures via the native [[graft.functions.MinHashAgg]]
-    * TypedImperativeAggregate: one aggregate with one long[] buffer instead
-    * of numHashes separate min columns — one hash loop per row, still fully
-    * partial-aggregable. Output: (doc_id, sig array<bigint>).
+    * set (each hash = min over shingles of a salted xxhash64), via the
+    * native [[graft.functions.MinHashAgg]] TypedImperativeAggregate: one
+    * aggregate with one long[] buffer instead of numHashes separate min
+    * columns — one hash loop per row, still fully partial-aggregable.
+    * Output: (doc_id, sig array<bigint>).
     */
   def minhashSignaturesAgg(docs: DataFrame, n: Int, numHashes: Int): DataFrame =
     minhashSignaturesAgg(shingleSet(docs, n), numHashes)
@@ -1046,21 +1037,10 @@ object Dedup {
     * components.
     */
   def incrementalGroups(priorLabels: DataFrame, newPairs: DataFrame): DataFrame = {
-    // materialized once: endpoints, the subgraph union, and (via
-    // dedupGroups) the edge cache all re-reference the pair list
-    val p = newPairs.select("doc_a", "doc_b").localCheckpoint()
-    val ends = p.select(col("doc_a").as("id"))
-      .union(p.select(col("doc_b").as("id"))).distinct()
-    val seeds = ends.join(priorLabels, Seq("id"), "left")
-      .select(coalesce(col("group_id"), col("id")).as("group_id")).distinct()
-    val affected = priorLabels.join(seeds, Seq("group_id"), "left_semi")
-    val starEdges = affected.filter(col("id") =!= col("group_id"))
-      .select(col("group_id").as("doc_a"), col("id").as("doc_b"))
-    val subNodes = affected.select("id").union(ends).distinct()
-    val relabeled = dedupGroups(subNodes, starEdges.union(p), "id")
+    val (seeds, relabeled) = relabelTouched(priorLabels, newPairs)
     priorLabels.join(seeds, Seq("group_id"), "left_anti")
       .select("id", "group_id")
-      .union(relabeled.select("id", "group_id"))
+      .union(relabeled)
   }
 
   /** The TOUCHED-COMPONENT slice of [[incrementalGroups]] alone — every
@@ -1076,7 +1056,16 @@ object Dedup {
     * few unchanged rows costs bytes, not correctness.
     */
   def incrementalGroupsDelta(priorLabels: DataFrame,
-                             newPairs: DataFrame): DataFrame = {
+                             newPairs: DataFrame): DataFrame =
+    relabelTouched(priorLabels, newPairs)._2
+
+  /** Steps 1–3 of [[incrementalGroups]], shared with its delta: the seed
+    * labels (group_id) of the components the new pairs touch, and those
+    * components relabeled (id, group_id) over the star edges ∪ the new
+    * pairs.
+    */
+  private def relabelTouched(priorLabels: DataFrame,
+                             newPairs: DataFrame): (DataFrame, DataFrame) = {
     // materialized once: endpoints, the subgraph union, and (via
     // dedupGroups) the edge cache all re-reference the pair list
     val p = newPairs.select("doc_a", "doc_b").localCheckpoint()
@@ -1088,8 +1077,7 @@ object Dedup {
     val starEdges = affected.filter(col("id") =!= col("group_id"))
       .select(col("group_id").as("doc_a"), col("id").as("doc_b"))
     val subNodes = affected.select("id").union(ends).distinct()
-    dedupGroups(subNodes, starEdges.union(p), "id")
-      .select("id", "group_id")
+    (seeds, dedupGroups(subNodes, starEdges.union(p), "id").select("id", "group_id"))
   }
 
   /** Connected components over a near-dup pair list: every doc gets the

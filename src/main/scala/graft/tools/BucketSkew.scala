@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Band-bucket occupancy skew diagnostic for the banded sign-LSH
   * families (runMain graft.tools.BucketSkew <mode> <dir> [<dir>...]):
   *
@@ -40,7 +42,7 @@ object BucketSkew {
     */
   private def profileMih(spark: SparkSession, dir: String): Unit = {
     val ph = graft.multimodal.Media.imagePhash(spark,
-        spark.read.parquet(s"$dir/documents.parquet"))
+        Tables.table(spark, dir, "documents"))
       .select(posexplode(array(col("h1"), col("h2"))).as(Seq("half", "k")))
     val occ = ph.groupBy("half", "k").agg(count(lit(1)).as("n")).cache()
     val stats = occ.agg(max("n").as("max"), expr("percentile(n, 0.99)").as("p99"),
@@ -64,12 +66,12 @@ object BucketSkew {
     val feat = mode match {
       case "bovw" =>
         graft.multimodal.Media.bovwFeatures(spark,
-          spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text"))
+          Tables.table(spark, dir, "documents").select("doc_id", "text"))
       case "media" =>
         graft.multimodal.Media.bovwFeatures(spark,
           graft.entry.TextSimQueries.mediaSemCorpus(spark, dir))
       case "emb" =>
-        spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id", "embedding")
+        Tables.table(spark, dir, "embeddings").select("vec_id", "embedding")
       case other => throw new IllegalArgumentException(s"unknown mode $other")
     }
     val baseBits = if (mode == "emb") 2 else 4

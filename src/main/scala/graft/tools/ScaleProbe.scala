@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
+import graft.sources.Tables
 
 /** Scale-proportionality probe: run the heavy dedup/graph family at two
   * scale factors and measure how runtime and SHUFFLE-WRITE BYTES grow.
@@ -107,17 +108,17 @@ object ScaleProbe {
   import org.apache.spark.sql.DataFrame
   val BuildFamily: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "build:purchase_graph" -> ((s, d) => graft.sources.GraphTables.purchaseGraphFrom(
-      s.read.parquet(s"$d/lineitem.parquet"), s.read.parquet(s"$d/orders.parquet"))),
+      Tables.table(s, d, "lineitem"), Tables.table(s, d, "orders"))),
     "build:copurchase_pairs" -> ((s, d) => graft.sources.GraphTables.basketPairsFrom(
-      s.read.parquet(s"$d/lineitem.parquet"))),
+      Tables.table(s, d, "lineitem"))),
     // round-10 (verdict ask #7): the shared shingle-df table is now the
     // stamped corpus pass feeding the whole set-similarity family — gate
     // the build itself (tokenize + df count + annotate join) like every
     // other once-per-snapshot corpus pass
     "build:shingledf" -> ((s, d) => graft.text.Dedup.shingleDf(
-      s.read.parquet(s"$d/documents.parquet"), n = 3)),
+      Tables.table(s, d, "documents"), n = 3)),
     "build:njpairs" -> ((s, d) => graft.text.Dedup.ngramJaccardPairs(
-      s.read.parquet(s"$d/documents.parquet"), n = 3, threshold = 0.5)
+      Tables.table(s, d, "documents"), n = 3, threshold = 0.5)
       .select("doc_a", "doc_b")),
     // round-11 (verdict ask #5's pre-named lever): the verified LSH pair
     // set at the canonical operating point is now a stamped artifact
@@ -125,7 +126,7 @@ object ScaleProbe {
     // FULL fresh derivation (tokenize + signatures + band join + verify)
     // like every other once-per-snapshot corpus pass
     "build:lshpairs" -> ((s, d) => graft.text.Dedup.minhashLshPairsPortable(
-      s.read.parquet(s"$d/documents.parquet"), n = 3, numHashes = 16,
+      Tables.table(s, d, "documents"), n = 3, numHashes = 16,
       bands = 4, verifyThreshold = 0.5)),
     // round-11: q_audio_offset_recall's hop-1 subfingerprint extraction
     // (the suite's former bench ceiling) is now a stamped per-snapshot
@@ -149,26 +150,26 @@ object ScaleProbe {
         s, graft.entry.TextSimQueries.mediaSemCorpus(s, d)),
       numPlanes = 32, bands = 8)),
     "build:njgroups" -> ((s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = Tables.table(s, d, "documents")
       val pairs = graft.text.Dedup.ngramJaccardPairs(docs, n = 3, threshold = 0.5)
         .select("doc_a", "doc_b")
       graft.text.Dedup.dedupGroups(docs, pairs, "doc_id")
     }),
     "build:truthpairs" -> ((s, d) => graft.text.Dedup.jaccardPrefixPairs(
-      s.read.parquet(s"$d/documents.parquet"), n = 3,
+      Tables.table(s, d, "documents"), n = 3,
       thresholdNum = 1, thresholdDen = 2).select("doc_a", "doc_b")),
     "build:knn_top5" -> ((s, d) => graft.sim.Similarity.annTopkBatch(
-      s, s.read.parquet(s"$d/embeddings.parquet"),
+      s, Tables.table(s, d, "embeddings"),
       queryPred = org.apache.spark.sql.functions.lit(true), k = 5)),
     "build:embpairs" -> ((s, d) => graft.sim.Similarity.nearDupPairsBanded(
-      s, s.read.parquet(s"$d/embeddings.parquet"), threshold = 0.4)),
+      s, Tables.table(s, d, "embeddings"), threshold = 0.4)),
     // round-8: q_ann_ivfpq's training moved onto the stamped-index
     // machinery (verdict ask #2) — probe the FULL build (coarse Lloyd +
     // residual codebooks + corpus encode) fresh so the once-per-snapshot
     // cost stays scale-gated now that the query no longer pays it
     "build:ivfpq_index" -> ((s, d) => {
       val (_, _, codes, _) = graft.sim.Similarity.ivfPqTrain(
-        s.read.parquet(s"$d/embeddings.parquet"),
+        Tables.table(s, d, "embeddings"),
         coarseK = 8, m = 8, k = 8, iters = 2)
       codes
     }))
@@ -208,7 +209,7 @@ object ScaleProbe {
     */
   private def storeBatch(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.table(s, dir, "documents")
       .orderBy("doc_id").limit(100)
       .select((col("doc_id") + StoreBatchOffset).as("doc_id"),
         concat(col("text"), lit(" zbatch")).as("text"))
@@ -268,7 +269,7 @@ object ScaleProbe {
     // equi-joins the PRE-BUILT index; cost claim = |batch| + |candidates|
     "store:ingest_probe" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      val corpus = s.read.parquet(s"$d/documents.parquet").select("doc_id", "text")
+      val corpus = Tables.table(s, d, "documents").select("doc_id", "text")
       graft.text.Dedup.ensureBandIndex(corpus, storeIdx(d), n = 3,
         numHashes = 16, bands = 4)
       graft.text.Dedup.incrementalLshPairs(corpus.union(storeBatch(s, d)),
@@ -282,7 +283,7 @@ object ScaleProbe {
     // label table is semi-joined, never re-written)
     "store:ingest_relabel" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      val corpus = s.read.parquet(s"$d/documents.parquet").select("doc_id", "text")
+      val corpus = Tables.table(s, d, "documents").select("doc_id", "text")
       graft.text.Dedup.ensureBandIndex(corpus, storeIdx(d), n = 3,
         numHashes = 16, bands = 4)
       graft.text.Dedup.ensureGroupLabels(corpus, storeLabels(d), n = 3,
@@ -309,11 +310,11 @@ object ScaleProbe {
         maxKeyDf = Some(graft.sim.Hamming.ImageMaxKeyDf))
       graft.sim.MihIndex.ensureIndex(
         graft.multimodal.Media.imagePhash(
-            s, s.read.parquet(s"$d/documents.parquet"))
+            s, Tables.table(s, d, "documents"))
           .select("doc_id", "h1", "h2"),
         "doc_id", storeMih(d), p)
       val batch = graft.multimodal.Media.imagePhash(s,
-          s.read.parquet(s"$d/documents.parquet").orderBy("doc_id").limit(100))
+          Tables.table(s, d, "documents").orderBy("doc_id").limit(100))
         .select((col("doc_id") + StoreBatchOffset).as("doc_id"),
           col("h1"), col("h2").bitwiseXOR(lit(3L)).as("h2"))
       graft.sim.MihIndex.ingestNearPairs(batch, "doc_id", storeMih(d), p)
@@ -325,7 +326,7 @@ object ScaleProbe {
     // against the PRE-BUILT per-snapshot index; cost claim =
     // |batch|·bands probe rows + bucket-occupancy candidates
     "store:semband_probe" -> ((s, d) => {
-      val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id", "text")
+      val docs = Tables.table(s, d, "documents").select("doc_id", "text")
       val p = graft.sim.SignBandIndex.Params(numPlanes = 32, bands = 8)
       graft.sim.SignBandIndex.ensureIndex(
         graft.multimodal.Media.bovwFeatures(s, docs), "vec_id",
@@ -401,7 +402,7 @@ object ScaleProbe {
       // standing distributional gate instead of a presumption)
       ("skew:semband_emb", Some(graft.sim.Similarity.DefaultMaxBucketDf),
         (s: SparkSession, d: String) => bandOcc(
-          s.read.parquet(s"$d/embeddings.parquet")
+          Tables.table(s, d, "embeddings")
             .select("vec_id", "embedding"),
           bands = 8, baseBits = 2)),
       // MIH half-keys over the image phash table (32-bit halves: the
@@ -417,7 +418,7 @@ object ScaleProbe {
       ("skew:mih_halfkey", Some(graft.sim.Hamming.ImageMaxKeyDf),
         (s: SparkSession, d: String) =>
           graft.multimodal.Media.imagePhash(
-              s, s.read.parquet(s"$d/documents.parquet"))
+              s, Tables.table(s, d, "documents"))
             .select(posexplode(array(col("h1"), col("h2"))).as(Seq("half", "k")))
             .groupBy("half", "k").agg(count(lit(1)).as("n"))
             .withColumn("expected", lit(1L))),
@@ -427,7 +428,7 @@ object ScaleProbe {
         (s: SparkSession, d: String) =>
           graft.text.Dedup.portableBanded(
               graft.text.Dedup.shingleSet(
-                s.read.parquet(s"$d/documents.parquet"), n = 3),
+                Tables.table(s, d, "documents"), n = 3),
               numHashes = 16, bands = 4)
             .groupBy("band", "bh").agg(count(lit(1)).as("n"))
             .withColumn("expected", lit(1L))))
@@ -657,7 +658,7 @@ object ScaleProbe {
     def done(table: String): Boolean =
       new java.io.File(s"$out/$table.parquet/_SUCCESS").exists()
     if (!done("documents")) {
-      val docs = s.read.parquet(s"$srcDir/documents.parquet")
+      val docs = Tables.table(s, srcDir, "documents")
       unionAll((0 until factor).map { r =>
         if (r == 0) docs
         else {
@@ -671,7 +672,7 @@ object ScaleProbe {
       }).write.mode("overwrite").parquet(s"$out/documents.parquet")
     }
     if (!done("embeddings")) {
-      val emb = s.read.parquet(s"$srcDir/embeddings.parquet")
+      val emb = Tables.table(s, srcDir, "embeddings")
       unionAll((0 until factor).map { r =>
         if (r == 0) emb
         else {

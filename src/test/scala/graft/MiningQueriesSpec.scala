@@ -140,8 +140,8 @@ class MiningQueriesSpec extends AnyFunSuite with SparkSuite {
     assert(rows.nonEmpty)
     assert(rows.forall(_._3 > 0.0))
     assert(rows.map(_._3).sliding(2).forall(w => w.length < 2 || w(0) >= w(1)))
-    val edges = graft.entry.GraphQualityQueries
-      .basketPairs(spark.read.parquet(s"$dir/lineitem.parquet"))
+    val edges = graft.sources.GraphTables
+      .basketPairsFrom(spark.read.parquet(s"$dir/lineitem.parquet"))
       .filter(col("support") >= 2)
       .select("pa", "pb").as[(Long, Long)].collect().toSet
     assert(rows.forall(r => !edges((r._1, r._2))), "predicted links must be non-edges")
@@ -198,8 +198,8 @@ class MiningQueriesSpec extends AnyFunSuite with SparkSuite {
       .as[(Long, Long, Long, Long)].collect()
     assert(trips.nonEmpty)
     assert(trips.forall(t => t._1 < t._2 && t._2 < t._3 && t._4 >= 2))
-    val pairs = graft.entry.GraphQualityQueries
-      .basketPairs(spark.read.parquet(s"$dir/lineitem.parquet"))
+    val pairs = graft.sources.GraphTables
+      .basketPairsFrom(spark.read.parquet(s"$dir/lineitem.parquet"))
       .as[(Long, Long, Long)].collect().map(p => (p._1, p._2) -> p._3).toMap
     trips.foreach { case (a, b, c, s3) =>
       assert(s3 <= pairs((a, b)) && s3 <= pairs((b, c)) && s3 <= pairs((a, c)),
@@ -316,8 +316,8 @@ class MiningQueriesSpec extends AnyFunSuite with SparkSuite {
     val rows = q("q_ppr").select("id", "r").as[(Long, Long)].collect()
     assert(rows.nonEmpty)
     assert(rows.map(_._2).sliding(2).forall(w => w.length < 2 || w(0) >= w(1)))
-    val seed = graft.entry.GraphQualityQueries
-      .basketPairs(spark.read.parquet(s"$dir/lineitem.parquet"))
+    val seed = graft.sources.GraphTables
+      .basketPairsFrom(spark.read.parquet(s"$dir/lineitem.parquet"))
       .filter(col("support") >= 2)
       .agg(min(least(col("pa"), col("pb")))).as[Long].head()
     assert(rows.head._1 == seed,

@@ -284,7 +284,7 @@ object EngineProps extends Properties("graft") {
         .toDF("vec_id", "embedding")
       val native = graft.sim.Similarity.gramUpper(df, "embedding")
         .orderBy("i", "j").select("i", "j", "g12").as[(Int, Int, Long)].collect().toSeq
-      val decl = graft.sim.Similarity.gramUpperDeclarative(df, "embedding")
+      val decl = graft.References.gramUpper(df, "embedding")
         .orderBy("i", "j").select("i", "j", "g12").as[(Int, Int, Long)].collect().toSeq
       native == decl
     }

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSuite
+import graft.{References, SparkSuite}
 import graft.functions.Vectors
 
 class SimilaritySpec extends AnyFunSuite with SparkSuite {
@@ -49,7 +49,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   }
 
   test("nearDupPairs finds the identical pair above threshold") {
-    val got = Similarity.nearDupPairs(spark, emb, threshold = 0.95)
+    val got = References.nearDupPairs(spark, emb, threshold = 0.95)
       .select("vec_a", "vec_b").as[(Long, Long)].collect()
     assert(got.contains((0L, 1L)))
   }
@@ -86,7 +86,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   test("banded near-dup pairs equal the all-pairs baseline on the driver testdata") {
     val banded = Similarity.nearDupPairsBanded(spark, testdataEmb, threshold = 0.4)
       .as[(Long, Long, Double)].collect().toSet
-    val exact = Similarity.nearDupPairs(spark, testdataEmb, threshold = 0.4)
+    val exact = References.nearDupPairs(spark, testdataEmb, threshold = 0.4)
       .as[(Long, Long, Double)].collect().toSet
     assert(banded.nonEmpty)
     // identical PAIR SET and identical exact sims: the banding only
@@ -108,7 +108,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
       .as[(Long, Long, Double, Boolean)].collect()
     assert(rows.length == testdataEmb.count())
     val meta = rows.map { case (id, cl, cs, _) => id -> ((cl, cs)) }.toMap
-    val pairs = Similarity.nearDupPairs(spark, testdataEmb, threshold = t)
+    val pairs = References.nearDupPairs(spark, testdataEmb, threshold = t)
       .select("vec_a", "vec_b").as[(Long, Long)].collect()
     val expectedDropped = pairs.flatMap { case (x, y) =>
       val ((cx, sx), (cy, sy)) = (meta(x), meta(y))
@@ -304,7 +304,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val native = Similarity.gramUpper(emb, "embedding")
       .orderBy("i", "j").as[(Int, Int, Long, Double)].collect().toSeq
-    val declarative = Similarity.gramUpperDeclarative(emb, "embedding")
+    val declarative = References.gramUpper(emb, "embedding")
       .orderBy("i", "j").as[(Int, Int, Long, Double)].collect().toSeq
     assert(native == declarative)
     assert(native.size == 64 * 65 / 2)
@@ -325,7 +325,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     val df = spark.createDataFrame(rows, schema)
     val native = Similarity.gramUpper(df, "embedding")
       .orderBy("i", "j").as[(Int, Int, Long, Double)].collect().toSeq
-    val declarative = Similarity.gramUpperDeclarative(df, "embedding")
+    val declarative = References.gramUpper(df, "embedding")
       .orderBy("i", "j").as[(Int, Int, Long, Double)].collect().toSeq
     assert(native == declarative)
     // spot-check: cell (0,0) saw all three rows, cell (1,2) only row 2

@@ -2,11 +2,12 @@ package graft.sources
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSuite
+import graft.{JobLog, SparkEntry, SparkSuite}
 
 /** Testdata-drift CANARY (round-4 verdict ask #2). The driver regenerates
   * /root/testdata between rounds and has already shipped events.ts as BOTH
@@ -15,6 +16,10 @@ import graft.SparkSuite
   * whatever the current encoding is, `Tables.events` must analyze, produce
   * a TimestampType ts, and yield sane 2024-range data — so the NEXT
   * regeneration fails here first, not across the query surface.
+  *
+  * It also pins the reader itself: `Tables.parquet` takes the schema Spark
+  * would infer from one parquet footer, read in-process, so opening a table
+  * runs no Spark job.
   */
 class TablesSpec extends AnyFunSuite with SparkSuite {
 
@@ -164,5 +169,97 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
     val asLong = Seq((1L, 1710504000123456L * 1000L)).toDF("event_id", "ts")
     assert(asLong.schema("ts").dataType == LongType)
     assert(Tables.adaptEventTs(asLong).schema("ts").dataType == TimestampType)
+  }
+
+  private val sf = s"${sys.props("user.home")}/testdata/sf0.001"
+  private val testdataTables = Seq("customer", "documents", "embeddings", "events",
+    "lineitem", "nation", "orders", "part", "region", "supplier")
+
+  test("the footer schema equals Spark's inferred schema for every testdata table") {
+    testdataTables.map(t => s"$sf/$t.parquet").foreach { path =>
+      assume(new java.io.File(path).exists())
+      assert(Tables.parquet(spark, path).schema == spark.read.parquet(path).schema, path)
+    }
+  }
+
+  test("the footer schema equals Spark's inferred schema for a multi-part directory") {
+    val out = Files.createTempDirectory("graft_parts").toString + "/t.parquet"
+    spark.range(0, 1000, 1, 4)
+      .select(col("id"), (col("id") / 3).as("x"), col("id").cast("string").as("s"),
+        timestamp_micros(col("id")).as("ts"),
+        timestamp_micros(col("id")).cast("timestamp_ntz").as("ntz"),
+        array(col("id"), col("id") + 1).as("a"),
+        struct(col("id").as("k"), lit("v").as("v")).as("m"))
+      .write.parquet(out)
+    assert(new java.io.File(out).list().count(_.startsWith("part-")) == 4)
+    val df = Tables.parquet(spark, out)
+    assert(df.schema == spark.read.parquet(out).schema)
+    assert(df.count() == 1000)
+  }
+
+  test("a missing table fails at construction and names its path") {
+    val dir = Files.createTempDirectory("graft_missing").toString
+    val e = intercept[java.io.FileNotFoundException](Tables.table(spark, dir, "orders"))
+    assert(e.getMessage.contains(s"$dir/orders.parquet"), e.getMessage)
+    val empty = Files.createDirectories(java.nio.file.Paths.get(dir, "events.parquet"))
+    val e2 = intercept[java.io.FileNotFoundException](Tables.events(spark, dir))
+    assert(e2.getMessage.contains(empty.toString), e2.getMessage)
+  }
+
+  /** Builds a DataFrame the way a query function does: no Spark job may
+    * start before the caller's action.
+    */
+  private def assertNoConstructionJobs(build: => DataFrame): Unit = {
+    assume(new java.io.File(s"$sf/orders.parquet").exists())
+    val (df, jobs) = JobLog.counting(spark.sparkContext)(build)
+    assert(jobs == 0, s"$jobs jobs at construction")
+    assert(df.count() > 0)
+  }
+
+  test("constructing Tables.table runs no Spark job") {
+    assertNoConstructionJobs(Tables.table(spark, sf, "orders"))
+  }
+
+  test("constructing Tables.events runs no Spark job") {
+    assertNoConstructionJobs(Tables.events(spark, sf))
+  }
+
+  test("constructing a second Stamped.ensure of one artifact runs no Spark job") {
+    var builds = 0
+    def ensure() = Stamped.ensure(spark, sf, "region.parquet", "spec_reread") {
+      builds += 1
+      Tables.table(spark, sf, "region")
+    }
+    ensure()
+    assertNoConstructionJobs(ensure())
+    assert(builds <= 1)
+  }
+
+  test("constructing q_mart_assembly runs no Spark job") {
+    assertNoConstructionJobs(SparkEntry.queries("q_mart_assembly")(spark, sf))
+  }
+
+  test("q_cusum gives the same rows on nanos-long events as on the same instants in micros") {
+    import spark.implicits._
+    // 2024-03-15T12:00:00.123456Z, then later instants over five days
+    val base = 1710504000123456L
+    val micros = Seq(0L, 3600L, 86400L, 90000L, 3 * 86400L, 3 * 86400L + 40000L, 5 * 86400L)
+      .map(sec => base + sec * 1000000L)
+
+    // micros: TIMESTAMP(MICROS, isAdjustedToUTC=false), today's testdata encoding
+    val microsDir = Files.createTempDirectory("graft_cusum_micros").toString
+    micros.zipWithIndex.map { case (us, i) => (i.toLong, us) }.toDF("event_id", "us")
+      .select(col("event_id"), timestamp_micros(col("us")).cast("timestamp_ntz").as("ts"))
+      .write.parquet(s"$microsDir/events.parquet")
+
+    // nanos-long: the legacy nanosAsLong shape — a LONG ts column
+    val nanosDir = Files.createTempDirectory("graft_cusum_nanos").toString
+    micros.zipWithIndex.map { case (us, i) => (i.toLong, us * 1000L) }.toDF("event_id", "ts")
+      .write.parquet(s"$nanosDir/events.parquet")
+
+    val q = SparkEntry.queries("q_cusum")
+    val viaMicros = q(spark, microsDir).collect().toSeq
+    assert(viaMicros.size == 4)
+    assert(q(spark, nanosDir).collect().toSeq == viaMicros)
   }
 }

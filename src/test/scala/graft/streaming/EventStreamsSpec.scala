@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
@@ -252,6 +253,21 @@ class EventStreamsSpec extends AnyFunSuite with SparkSuite {
       .orderBy("event_id").as[(Long, Long, Double)].collect().toSeq
     assert(got == Seq((1L, 1L, 1.0), (2L, 2L, 2.0), (3L, 3L, 3.0)),
       s"exactly-once resume violated: $got")
+  }
+
+  test("a feed's stream schema is its footer schema, adapted as the batch read") {
+    val stream = EventStreams.readEventStream(spark, feedDir)
+    assert(stream.isStreaming)
+    assert(stream.schema == Tables.events(spark, dir).schema)
+  }
+
+  test("an existing empty feed dir falls back to the declared events schema") {
+    val empty = java.nio.file.Files.createTempDirectory("graft_feed_empty").toString
+    val stream = EventStreams.readEventStream(spark, empty)
+    assert(stream.isStreaming)
+    assert(stream.schema.fields.map(f => f.name -> f.dataType).toSeq == Seq(
+      "event_id" -> LongType, "ts" -> TimestampType, "user_id" -> LongType,
+      "event_type" -> StringType, "value" -> DoubleType, "props" -> StringType))
   }
 
   // Every stream goes through EventStreams.drive: on the local file system

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSuite
+import graft.{References, SparkSuite}
 
 class DedupSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
@@ -264,7 +264,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("MinHashAgg signatures equal the column-per-hash formulation exactly") {
-    val cols = Dedup.minhashSignatures(docs, n = 3, numHashes = 16)
+    val cols = References.minhashSignatures(docs, n = 3, numHashes = 16)
     val colSigs = cols.orderBy("doc_id").collect()
       .map(r => r.getLong(0) -> (1 to 16).map(r.getLong).toSeq).toMap
     val aggSigs = Dedup.minhashSignaturesAgg(docs, n = 3, numHashes = 16)
