@@ -126,9 +126,9 @@ private[graft] object CurationQueries {
   private def qScanOrc(s: SparkSession, dir: String): DataFrame = {
     val stamp = graft.sources.Stamped.stampOf(dir, "events.parquet")
     val tmp = s"${tmpDir("scan_orc", dir)}_$stamp"
-    if (!new java.io.File(s"$tmp/_SUCCESS").exists())
+    graft.sources.Stamped.publish(s, tmp)(
       Tables.events(s, dir).select("event_id", "event_type", "value")
-        .write.mode("overwrite").orc(tmp)
+        .write.mode("overwrite").orc(_))
     s.read.orc(tmp)
       .filter(col("event_type") =!= "error")
       .groupBy("event_type")

@@ -9,7 +9,7 @@ import graft.ingest.Normalize
 import graft.multimodal.Media
 import graft.ops.{Ordered, Profile, Reshape, Scalar}
 import graft.sim.Similarity
-import graft.sources.Tables
+import graft.sources.{Stamped, Tables}
 import graft.text.{Dedup, TextOps}
 
 import graft.entry.EntryHelpers._
@@ -71,10 +71,10 @@ private[graft] object TextSimQueries {
     Dedup.containmentPairsFromShingleDf(shingleDf3(s, dir), threshold = 0.9)
       .orderBy("doc_a", "doc_b")
 
-  /** X1 MinHash+LSH banding with exact-Jaccard verification — the
-    * portable-hash-family variant, so signature minima, band keys,
-    * candidate join, and verification all hash-match a DuckDB oracle; the
-    * xxhash64 MinHashAgg path remains the library's production variant.
+  /** X1 MinHash+LSH banding with exact-Jaccard verification over the
+    * portable hash family, so signature minima, band keys, candidate
+    * join, and verification all hash-match a DuckDB oracle; this is the
+    * library's one MinHash pipeline.
     * Feeds from the stamped per-snapshot shingle table (shingleDf3, like
     * the whole ngram family) — the signature aggregation, band join, and
     * verify still run live per call, so the operator stays measurable;
@@ -113,9 +113,9 @@ private[graft] object TextSimQueries {
     * Signatures are per-doc functions, so the final probe still equals
     * full-corpus LSH restricted to batch-2-vs-rest — the identical
     * oracle restriction as q_dedup_incremental, now witnessed through
-    * the grown artifact. Idempotent across runs: the batch partition's
-    * own _SUCCESS skips the re-append, and the probe prunes a replayed
-    * batch's partition out of its index read.
+    * the grown artifact. Idempotent across runs: the batch partition is
+    * written once, so a re-run skips the append, and the probe prunes a
+    * replayed batch's partition out of its index read.
     */
   private def qDedupMultibatch(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.table(s, dir, "documents")
@@ -134,6 +134,17 @@ private[graft] object TextSimQueries {
     Dedup.incrementalLshPairs(docs, m === 4L, idx, n = 3, numHashes = 16,
         bands = 4, verifyThreshold = 0.5)
       .orderBy("doc_a", "doc_b")
+  }
+
+  /** Publish the stream feed at `feed` once ([[Stamped.publish]]): each
+    * frame lands as ONE file, so `maxFilesPerTrigger = 1` replays it as
+    * one micro-batch. Returns `feed`.
+    */
+  private def publishFeed(s: SparkSession, feed: String,
+                          batches: DataFrame*): String = {
+    Stamped.publish(s, feed)(dir =>
+      batches.foreach(_.coalesce(1).write.mode("append").parquet(dir)))
+    feed
   }
 
   /** X1 the ingest-dedup loop run as a STREAM (graft.streaming.IngestDedup):
@@ -157,20 +168,12 @@ private[graft] object TextSimQueries {
     graft.streaming.IngestDedup.ensureIngestState(
       docs.filter(m < 3).select("doc_id", "text"),
       s"$root/docs", s"$root/idx", s"$root/labels", p)
-    // stage the two arrival batches as one feed file each, once (the
-    // marker is underscore-hidden, so the file source never reads it)
-    val feedDir = new java.io.File(s"$root/feed")
-    val staged = new java.io.File(feedDir, "_graft_staged")
-    if (!staged.exists()) {
-      docs.filter(m === 3L).select("doc_id", "text")
-        .coalesce(1).write.mode("append").parquet(feedDir.toString)
-      docs.filter(m === 4L).select("doc_id", "text")
-        .coalesce(1).write.mode("append").parquet(feedDir.toString)
-      staged.createNewFile()
-    }
+    val feedDir = publishFeed(s, s"$root/feed",
+      docs.filter(m === 3L).select("doc_id", "text"),
+      docs.filter(m === 4L).select("doc_id", "text"))
     val stream = s.readStream.schema("doc_id BIGINT, text STRING")
       .option("maxFilesPerTrigger", 1) // one feed file = one micro-batch
-      .parquet(feedDir.toString)
+      .parquet(feedDir)
     graft.streaming.IngestDedup.runAvailable(stream, s"$root/docs",
       s"$root/idx", s"$root/labels", s"$root/ckpt", p).awaitTermination()
     graft.streaming.IngestDedup.labels(s, s"$root/labels")
@@ -405,8 +408,8 @@ private[graft] object TextSimQueries {
 
   /** X2 incremental IVF ingest: vectors ≡ 4 (mod 5) play the arriving
     * batch; the rest are the standing corpus whose REFINED centroid
-    * index is materialized once per testdata generation (stamped path,
-    * _SUCCESS-idempotent — the same convention as the dedup band index)
+    * index is published once per testdata generation (stamped path, the
+    * same [[graft.sources.Stamped.publish]] as the dedup band index)
     * and every batch assigns against the stored k·dim table at
     * |batch|·k·dim cost, never re-clustering the corpus. Exact integer
     * centroids make the store-probe-replay chain oracle-checkable
@@ -423,8 +426,8 @@ private[graft] object TextSimQueries {
   }
 
   /** X2 incremental PQ encode: the 4/5 corpus trains the STORED codebook
-    * once (stamped path, `_SUCCESS` + params sidecar — the centroid-index
-    * conventions); the held-out fifth encodes against it at
+    * once (stamped path, published with its params sidecar like the
+    * centroid index); the held-out fifth encodes against it at
     * |batch|·m·k·subdim cost with the trainer's own argmin, never
     * retraining. The PQ-side mirror of q_ivf_incremental, closing the
     * compressed-store ingest loop.
@@ -444,7 +447,7 @@ private[graft] object TextSimQueries {
     * the corpus 3/5 bootstraps the refined centroid index; the two
     * remaining fifths arrive as one-file micro-batches and each
     * foreachBatch assigns them against the STORED centroids, landing
-    * `_SUCCESS`-guarded batch partitions. Assignments are per-vector
+    * write-once batch partitions. Assignments are per-vector
     * functions of exact integer centroids, so the streamed result equals
     * the batch replay — the oracle runs the Lloyd chain over the corpus
     * and assigns the arrived fifths, hash-matching the loop's committed
@@ -457,18 +460,12 @@ private[graft] object TextSimQueries {
     val root = s"${tmpDir("ivf_loop", dir)}_k8i2_$stamp"
     graft.streaming.IngestIvf.ensureIvfState(
       emb.filter(m < 3), s"$root/idx", k = 8, iters = 2)
-    val feedDir = new java.io.File(s"$root/feed")
-    val staged = new java.io.File(feedDir, "_graft_staged")
-    if (!staged.exists()) {
-      emb.filter(m === 3L).select("vec_id", "embedding")
-        .coalesce(1).write.mode("append").parquet(feedDir.toString)
-      emb.filter(m === 4L).select("vec_id", "embedding")
-        .coalesce(1).write.mode("append").parquet(feedDir.toString)
-      staged.createNewFile()
-    }
+    val feedDir = publishFeed(s, s"$root/feed",
+      emb.filter(m === 3L).select("vec_id", "embedding"),
+      emb.filter(m === 4L).select("vec_id", "embedding"))
     val stream = s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", 1) // one feed file = one micro-batch
-      .parquet(feedDir.toString)
+      .parquet(feedDir)
     graft.streaming.IngestIvf.runAvailable(stream, s"$root/idx",
       s"$root/assigns", s"$root/ckpt").awaitTermination()
     graft.streaming.IngestIvf.assignments(s, s"$root/assigns")
@@ -479,7 +476,7 @@ private[graft] object TextSimQueries {
   /** X2 the PQ encode loop run as a STREAM (graft.streaming.IngestPq):
     * the corpus 3/5 trains the stored codebook; the two remaining fifths
     * arrive as one-file micro-batches and each foreachBatch encodes them
-    * against the STORED codebook, landing `_SUCCESS`-guarded
+    * against the STORED codebook, landing write-once
     * sub-partitioned batch directories. Codes are per-vector functions
     * of exact integer codewords, so the streamed store equals the batch
     * replay — the oracle trains the chain over the corpus and encodes
@@ -492,18 +489,12 @@ private[graft] object TextSimQueries {
     val root = s"${tmpDir("pq_loop", dir)}_m8k8i2_$stamp"
     graft.streaming.IngestPq.ensurePqState(
       emb.filter(m < 3), s"$root/idx", m = 8, k = 8, iters = 2)
-    val feedDir = new java.io.File(s"$root/feed")
-    val staged = new java.io.File(feedDir, "_graft_staged")
-    if (!staged.exists()) {
-      emb.filter(m === 3L).select("vec_id", "embedding")
-        .coalesce(1).write.mode("append").parquet(feedDir.toString)
-      emb.filter(m === 4L).select("vec_id", "embedding")
-        .coalesce(1).write.mode("append").parquet(feedDir.toString)
-      staged.createNewFile()
-    }
+    val feedDir = publishFeed(s, s"$root/feed",
+      emb.filter(m === 3L).select("vec_id", "embedding"),
+      emb.filter(m === 4L).select("vec_id", "embedding"))
     val stream = s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", 1) // one feed file = one micro-batch
-      .parquet(feedDir.toString)
+      .parquet(feedDir)
     graft.streaming.IngestPq.runAvailable(stream, s"$root/idx",
       s"$root/codes", s"$root/ckpt", m = 8).awaitTermination()
     graft.streaming.IngestPq.codes(s, s"$root/codes")
@@ -528,9 +519,8 @@ private[graft] object TextSimQueries {
     val root = s"${tmpDir("kmeans_loop", dir)}_k8i2_$stamp"
     graft.streaming.StreamKmeans.ensureKmeansState(
       emb.filter(m < 3), s"$root/stats", k = 8, iters = 2)
-    val feedDir = new java.io.File(s"$root/feed")
-    val staged = new java.io.File(feedDir, "_graft_staged")
-    if (!staged.exists()) {
+    val feedDir = s"$root/feed"
+    Stamped.publish(s, feedDir) { dir =>
       // Pin STRICTLY SPACED mtimes on the two feed writes: centroids
       // EVOLVE per batch, so micro-batch order is part of this query's
       // semantics — and FileStreamSource orders its maxFilesPerTrigger=1
@@ -540,23 +530,22 @@ private[graft] object TextSimQueries {
       // breaking the oracle's fixed k1/k2 unroll nondeterministically.
       // The part filenames are writer UUIDs, so WHICH file holds which
       // fifth is recorded by diffing the listing between the writes.
-      def parts = feedDir.listFiles().filter(f =>
+      def parts = new java.io.File(dir).listFiles().filter(f =>
         f.getName.endsWith(".parquet") && !f.getName.startsWith("_")
           && !f.getName.startsWith(".")).toSeq
       emb.filter(m === 3L).select("vec_id", "embedding")
-        .coalesce(1).write.mode("append").parquet(feedDir.toString)
+        .coalesce(1).write.mode("append").parquet(dir)
       val firstWrite = parts.map(_.getName).toSet
       emb.filter(m === 4L).select("vec_id", "embedding")
-        .coalesce(1).write.mode("append").parquet(feedDir.toString)
+        .coalesce(1).write.mode("append").parquet(dir)
       val base = System.currentTimeMillis()
       parts.foreach { f =>
         f.setLastModified(if (firstWrite(f.getName)) base - 8000 else base - 4000)
       }
-      staged.createNewFile()
     }
     val stream = s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir.toString)
+      .parquet(feedDir)
     graft.streaming.StreamKmeans.runAvailable(stream, s"$root/stats",
       s"$root/ckpt").awaitTermination()
     graft.streaming.StreamKmeans.centroids(s, s"$root/stats")
@@ -1040,7 +1029,7 @@ private[graft] object TextSimQueries {
     * the re-upload-after-re-encode arrival order a production near-dup
     * loop must close over). Each foreachBatch probes the index, appends
     * its own `batch=` partition, and lands its verified matches behind
-    * a `_SUCCESS` — batch 2's matches against batch 1's arrivals come
+    * a commit marker — batch 2's matches against batch 1's arrivals come
     * THROUGH THE GROWN INDEX alone, no corpus re-bucketing between
     * batches, and they are GUARANTEED non-vacuous at every SF: a
     * re-upload carries its source's exact embedding, so it banded-hits
@@ -1055,11 +1044,9 @@ private[graft] object TextSimQueries {
     * are per-vector functions of the frozen planes, so the streamed
     * store equals the batch replay with the loop-closure restriction
     * spelled as the oracle hits predicate. Warm re-runs skip committed
-    * batches. The feed is staged crash-idempotently: both files are
-    * written into a `.staging` directory and published with ONE atomic
-    * rename (the Stamped idiom) — an interrupt mid-staging leaves only
-    * the staging dir, which the next run rebuilds from scratch, never a
-    * half-visible feed that a replay would re-append and duplicate.
+    * batches. The feed is published once ([[publishFeed]]), so an
+    * interrupt mid-staging never leaves a half-visible feed that a
+    * replay would re-append and duplicate.
     */
   private def qStreamSemband(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1070,29 +1057,16 @@ private[graft] object TextSimQueries {
     graft.streaming.IngestSemBand.ensureState(
       mediaSemFeatures(s, dir).filter(col("vec_id") < 30000000L),
       s"$root/idx", p, countForWidth = Some(corpus.count()))
-    val feedDir = new java.io.File(s"$root/feed")
-    if (!feedDir.exists()) {
-      val staging = new java.io.File(s"$root/feed.staging")
-      if (staging.exists()) {
-        val fs = new org.apache.hadoop.fs.Path(staging.toString)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(staging.toString), true)
-      }
-      val reups = corpus
-        .filter(col("doc_id") < 30000000L &&
-          pmod(col("doc_id"), lit(4L)) === 1L && length(col("text")) >= 256)
-        .select((col("doc_id") + lit(60000000L)).as("doc_id"), col("text"))
-      mediaSemFeatures(s, dir).filter(col("vec_id") >= 30000000L)
-        .coalesce(1).write.mode("append").parquet(staging.toString)
-      Media.bovwFeatures(s, reups)
-        .coalesce(1).write.mode("append").parquet(staging.toString)
-      if (!staging.renameTo(feedDir) && !feedDir.exists())
-        throw new java.io.IOException(
-          s"could not publish staged feed $staging -> $feedDir")
-    }
+    val reups = corpus
+      .filter(col("doc_id") < 30000000L &&
+        pmod(col("doc_id"), lit(4L)) === 1L && length(col("text")) >= 256)
+      .select((col("doc_id") + lit(60000000L)).as("doc_id"), col("text"))
+    val feedDir = publishFeed(s, s"$root/feed",
+      mediaSemFeatures(s, dir).filter(col("vec_id") >= 30000000L),
+      Media.bovwFeatures(s, reups))
     val stream = s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", 1) // one feed file = one micro-batch
-      .parquet(feedDir.toString)
+      .parquet(feedDir)
     graft.streaming.IngestSemBand.runAvailable(stream, s"$root/idx",
       s"$root/matches", s"$root/ckpt", p, threshold = 0.6).awaitTermination()
     val all = graft.streaming.IngestSemBand.matches(s, s"$root/matches")

@@ -33,7 +33,6 @@ object GraftFunctions {
     ("zorder_key", classOf[ZOrderKey].getName, ZOrder.builder),
     ("word_shingles", classOf[WordShingles].getName, WordShingles.builder),
     ("gram_agg", classOf[GramAgg].getName, GramAgg.builder),
-    ("minhash_agg", classOf[MinHashAgg].getName, MinHashAgg.builder),
     ("graft_bloom_agg",
       "org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate",
       Bloom.aggBuilder),

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Stamped
+
 /** Bucketed-table layout for co-located joins (BASELINE.json scale
   * directive: "co-locate joins via bucketing or pre-partitioning").
   *
@@ -14,33 +16,38 @@ object Bucketing {
 
   /** Sidecar recording the layout the files were ACTUALLY written with —
     * re-registration must never trust the caller's arguments over the
-    * on-disk truth (see [[ensureBucketed]]). All sidecar I/O goes through
-    * the Hadoop FileSystem of the TABLE path (like Dedup.ensureBandIndex):
-    * with java.io/java.nio the sidecar would live on executor-local disk
-    * while the table lives on the cluster FS — never found on re-probe, so
-    * every run would silently rebuild the 100 TB layout the cache exists
-    * to avoid.
+    * on-disk truth (see [[ensureBucketed]]).
     */
-  private val SpecFile = "_graft_bucket_spec"
-  private def specLine(buckets: Int, keyCol: String) = s"$buckets\n$keyCol\n"
+  private def specOf(buckets: Int, keyCol: String): Stamped.Spec =
+    Stamped.Spec("bucketed layout", "_graft_bucket_spec", s"$buckets\n$keyCol\n")()
 
-  private def fsOf(s: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** Persist `df` as a bucketed, per-bucket-sorted table at `path`. */
+  /** Persist `df` as a bucketed, per-bucket-sorted table at `path` and
+    * register it as `table`. The files are published once as a root
+    * ([[Stamped.publish]]): Spark's bucketed writer runs under a
+    * throwaway table name into the staging directory, and `table` is
+    * registered over the published layout. A layout already published
+    * with the same (buckets, keyCol) is reused; one written with other
+    * parameters is replaced.
+    */
   def writeBucketed(df: DataFrame, table: String, path: String,
                     buckets: Int, keyCol: String): Unit = {
-    df.write.mode("overwrite")
-      .bucketBy(buckets, keyCol).sortBy(keyCol)
-      .option("path", path)
-      .format("parquet")
-      .saveAsTable(table)
-    val (fs, root) = fsOf(df.sparkSession, path)
-    val out = fs.create(new org.apache.hadoop.fs.Path(root, SpecFile), true)
-    try out.write(specLine(buckets, keyCol).getBytes("UTF-8"))
-    finally out.close()
+    val s = df.sparkSession
+    val spec = specOf(buckets, keyCol)
+    Stamped.withdrawStale(s, path, spec)
+    Stamped.publish(s, path, spec) { dir =>
+      val staged = "graft_" + dir.replaceAll(".*staging_", "staging_")
+      df.write.mode("overwrite")
+        .bucketBy(buckets, keyCol).sortBy(keyCol)
+        .option("path", dir)
+        .format("parquet")
+        .saveAsTable(staged)
+      s.sql(s"DROP TABLE $staged") // external: the files stay
+      spec.want
+    }
+    s.sql(s"DROP TABLE IF EXISTS $table")
+    s.sql(s"CREATE TABLE $table (${df.schema.toDDL}) USING parquet " +
+      s"CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO $buckets BUCKETS " +
+      s"LOCATION '$path'")
   }
 
   /** Idempotent [[writeBucketed]]: the one-time write is ONE-time — if the
@@ -51,36 +58,18 @@ object Bucketing {
     * therefore pays the join, not the table build — on a 100 TB fact
     * table the rewrite would dwarf the join it enables.
     *
-    * Re-registration only trusts surviving files when (a) the writer's
-    * job COMMITTED (_SUCCESS marker — a crashed write leaves a partial
-    * bucket set whose registration would return silently short join
-    * results) and (b) the on-disk spec sidecar matches the requested
-    * (buckets, keyCol): registering an 8-bucket layout under a 16-bucket
-    * spec makes Spark's exchange-free join pair bucket i with bucket i
-    * while matching rows sit in different files — silently short results,
-    * the worst failure mode a layout cache can have. Any mismatch or
-    * missing sidecar rebuilds.
+    * Surviving files are only trusted when the layout was published
+    * (a crashed write leaves no root) and its spec sidecar matches the
+    * requested (buckets, keyCol): registering an 8-bucket layout under a
+    * 16-bucket spec makes Spark's exchange-free join pair bucket i with
+    * bucket i while matching rows sit in different files — silently
+    * short results, the worst failure mode a layout cache can have. Any
+    * mismatch or missing sidecar rebuilds.
     */
   def ensureBucketed(s: SparkSession, df: => DataFrame, table: String,
-                     path: String, buckets: Int, keyCol: String): Unit = {
-    if (s.catalog.tableExists(table)) return
-    val (fs, root) = fsOf(s, path)
-    val committed = fs.exists(new org.apache.hadoop.fs.Path(root, "_SUCCESS"))
-    val spec = new org.apache.hadoop.fs.Path(root, SpecFile)
-    val specMatches = committed && fs.exists(spec) && {
-      val in = fs.open(spec)
-      val stored =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      stored == specLine(buckets, keyCol)
-    }
-    if (specMatches) {
-      val schema = df.schema.toDDL
-      s.sql(s"CREATE TABLE $table ($schema) USING parquet " +
-        s"CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO $buckets BUCKETS " +
-        s"LOCATION '$path'")
-    } else writeBucketed(df, table, path, buckets, keyCol)
-  }
+                     path: String, buckets: Int, keyCol: String): Unit =
+    if (!s.catalog.tableExists(table))
+      writeBucketed(df, table, path, buckets, keyCol)
 
   def readTable(s: SparkSession, table: String): DataFrame = s.table(table)
 }

@@ -1,8 +1,9 @@
 package graft.sim
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.Stamped
 
 /** The INGEST-LOOP form of multi-index Hamming search: a persisted
   * half-key index over perceptual-hash signatures (image average-hash,
@@ -21,13 +22,13 @@ import org.apache.spark.sql.functions._
   *     plus one `batch=<id>/` partition per ingested batch — ~24 bytes
   *     per document, independent of media size, the artifact that makes
   *     perceptual dedup affordable per-arrival at 100 TB;
-  *   - a [[SpecFile]] sidecar (written LAST, after the data commit)
-  *     pins maxHamming and maxKeyDf; every probe/append `require`s a
-  *     match — a capped index probed uncapped (or vice versa) would
-  *     silently return a DIFFERENT pair set, so a mismatch is
-  *     corrupt-by-construction, not a recall knob;
-  *   - appends are idempotent on the batch partition's own `_SUCCESS`,
-  *     so an at-least-once replay overwrites its partial partition
+  *   - a parameter sidecar, published with the index
+  *     ([[graft.sources.Stamped.publish]]), pins maxHamming and maxKeyDf;
+  *     every probe/append `require`s a match — a capped index probed
+  *     uncapped (or vice versa) would silently return a DIFFERENT pair
+  *     set, so a mismatch is corrupt-by-construction, not a recall knob;
+  *   - appends are written once per batch partition, so an
+  *     at-least-once replay overwrites its partial partition
   *     instead of duplicating rows, and the probe prunes a replayed
   *     batch's partition out of its index read (partition-pruned scan).
   *
@@ -58,35 +59,12 @@ import org.apache.spark.sql.functions._
   */
 object MihIndex {
 
-  /** Sidecar filename pinning the parameters the index was built with. */
-  val SpecFile = "_graft_mih_spec"
-
   /** Probe/index parameters, fixed at bootstrap. */
   final case class Params(maxHamming: Int = 3, maxKeyDf: Option[Int] = None)
 
-  private def specJson(p: Params): String =
-    s"""{"maxHamming":${p.maxHamming},"maxKeyDf":${p.maxKeyDf.getOrElse(-1)}}"""
-
-  private def fsOf(s: SparkSession, path: String) = {
-    val p = new Path(path)
-    (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def requireSpec(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                          p: Params): Unit = {
-    val specPath = new Path(root, SpecFile)
-    require(fs.exists(specPath),
-      s"MIH index at $root has no $SpecFile sidecar — not a graft MIH index " +
-        "(or written by a pre-sidecar version; rebuild with ensureIndex)")
-    val in = fs.open(specPath)
-    val stored =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val want = specJson(p)
-    require(stored == want,
-      s"MIH index at $root was built with $stored but probed with $want — " +
-        "pass the build-time parameters or rebuild the index")
-  }
+  private def specOf(p: Params): Stamped.Spec =
+    Stamped.Spec("MIH index", "_graft_mih_spec",
+      s"""{"maxHamming":${p.maxHamming},"maxKeyDf":${p.maxKeyDf.getOrElse(-1)}}""")()
 
   /** Materialize the MIH half-key index of a hash table at `path`
     * (idempotent: a complete index is left untouched). Input: `hashes`
@@ -100,22 +78,13 @@ object MihIndex {
     Hamming.requireMaxHamming(p.maxHamming)
     p.maxKeyDf.foreach(c => require(c > 0, s"maxKeyDf=$c must be positive"))
     val s = hashes.sparkSession
-    val (fs, root) = fsOf(s, path)
-    val done = new Path(root, "_SUCCESS")
-    val spec = new Path(root, SpecFile)
-    if (fs.exists(done) && fs.exists(spec)) {
-      requireSpec(fs, root, p)
-    } else {
-      // no _SUCCESS (crashed build) or no sidecar: rebuild from scratch
-      val checked = Hamming.checkedHalves(hashes, idCol)
-      checked.withColumn("batch", lit("base"))
-        .write.mode("overwrite").partitionBy("batch").parquet(path)
-      if (p.maxKeyDf.isDefined)
-        baseHot(s.read.parquet(path), p.maxKeyDf.get)
-          .write.mode("overwrite").parquet(s"$path/_hot/batch=base")
-      val out = fs.create(spec, true)
-      try out.write(specJson(p).getBytes("UTF-8"))
-      finally out.close()
+    val spec = specOf(p)
+    Stamped.publish(s, path, spec) { dir =>
+      Hamming.checkedHalves(hashes, idCol).withColumn("batch", lit("base"))
+        .write.mode("overwrite").partitionBy("batch").parquet(dir)
+      p.maxKeyDf.foreach(cap => baseHot(s.read.parquet(dir), cap)
+        .write.mode("overwrite").parquet(s"$dir/_hot/batch=base"))
+      spec.want
     }
   }
 
@@ -154,8 +123,8 @@ object MihIndex {
     * `appendBatch = Some(id)` CLOSES the loop: after the candidates are
     * materialized, the batch's hashes are appended as a `batch=<id>/`
     * index partition and (when capped) its newly-hot keys as
-    * `_hot/batch=<id>/` — both idempotent on their partition `_SUCCESS`,
-    * so the NEXT batch's probe sees this one at no corpus cost.
+    * `_hot/batch=<id>/` — each written once, so the NEXT batch's probe
+    * sees this one at no corpus cost.
     *
     * Returns canonical (id_a, id_b, hamming) with id_a < id_b.
     */
@@ -164,8 +133,7 @@ object MihIndex {
                       appendBatch: Option[String] = None,
                       includeInternal: Boolean = true): DataFrame = {
     val s = batchHashes.sparkSession
-    val (fs, root) = fsOf(s, indexPath)
-    requireSpec(fs, root, p)
+    Stamped.requireSpec(s, indexPath, specOf(p))
     val batch = Hamming.checkedHalves(batchHashes, idCol).localCheckpoint()
     // a replayed batch may ALREADY sit in the index — prune its own
     // partitions out of the probe (partition-pruned, so free) or the
@@ -225,18 +193,10 @@ object MihIndex {
     // own append
     val out = all.localCheckpoint()
     appendBatch.foreach { id =>
-      require(id.matches("[A-Za-z0-9_.-]+") && id != "base",
-        s"batch id '$id' must be a plain path token and not the reserved 'base'")
-      require(fs.exists(new Path(root, "_SUCCESS")),
-        s"cannot append batch '$id': no complete MIH index at $indexPath")
-      newlyHot.foreach { nh =>
-        val part = new Path(root, s"_hot/batch=$id")
-        if (!fs.exists(new Path(part, "_SUCCESS")))
-          nh.write.mode("overwrite").parquet(part.toString)
-      }
-      val part = new Path(root, s"batch=$id")
-      if (!fs.exists(new Path(part, "_SUCCESS")))
-        batch.write.mode("overwrite").parquet(part.toString)
+      newlyHot.foreach(nh => Stamped.appendOnce(s, indexPath, "MIH index", id,
+        "_hot/")(nh.write.mode("overwrite").parquet(_)))
+      Stamped.appendOnce(s, indexPath, "MIH index", id)(
+        batch.write.mode("overwrite").parquet(_))
     }
     out
   }

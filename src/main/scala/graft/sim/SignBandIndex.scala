@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Stamped
+
 /** The INGEST-LOOP form of banded sign-LSH similarity search: a persisted
   * (id, embedding, buckets) index over a vector corpus that arriving
   * batches probe — and grow — at |batch| + |candidates| cost, never
@@ -22,7 +24,7 @@ import org.apache.spark.sql.functions._
   *     as `path/batch=base/…` plus one `batch=<id>/` partition per
   *     ingested batch — the verify step reads the stored vectors, so a
   *     probe never recomputes a corpus feature;
-  *   - a [[SpecFile]] sidecar (written LAST, after the data commit) pins
+  *   - a parameter sidecar, published with the index, pins
   *     bands, dim, the RESOLVED plane count, the bucket-df cap, and the
   *     build-time occupancy profile (expected + measured max). The plane
   *     width is frozen at build time from the base-corpus count
@@ -47,8 +49,9 @@ import org.apache.spark.sql.functions._
   *     broadcast-semi-joined index scan with a |batch|-key shuffle, and
   *     the accumulated set after batch N equals the full recompute's
   *     hot set over base ∪ batches 1..N);
-  *   - appends are idempotent on the batch partition's own `_SUCCESS`,
-  *     and a replayed batch's partition is pruned out of its own probe.
+  *   - appends are written once per batch partition
+  *     ([[graft.sources.Stamped.appendOnce]]), and a replayed batch's
+  *     partition is pruned out of its own probe.
   *
   * Scale: per batch, the probe side is |batch|·bands slim rows
   * (broadcast under AQE against the index scan), the index side is
@@ -60,9 +63,6 @@ import org.apache.spark.sql.functions._
   * row (fixed batch, corpus ×10).
   */
 object SignBandIndex {
-
-  /** Sidecar filename pinning the parameters the index was built with. */
-  val SpecFile = "_graft_band_spec"
 
   /** Probe/build parameters: `numPlanes` is the BASE plane request
     * (bands × base-width); the build may widen it adaptively and the
@@ -87,11 +87,6 @@ object SignBandIndex {
       s""""maxBucketDf":${p.maxBucketDf},"expectedOcc":$expectedOcc,""" +
       s""""buildMaxOcc":$buildMaxOcc}"""
 
-  private def fsOf(s: SparkSession, path: String) = {
-    val p = new Path(path)
-    (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-  }
-
   /** The sidecar's pinned build state. */
   private final case class Spec(planes: Int, expectedOcc: Long,
                                 buildMaxOcc: Long) {
@@ -102,34 +97,27 @@ object SignBandIndex {
       RebuildOccFactor * math.max(expectedOcc, buildMaxOcc)
   }
 
-  /** Read the sidecar, validate bands/dim/base-width/cap against `p`,
-    * and return the pinned build state. */
-  private def readSpec(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                       p: Params): Spec = {
-    val specPath = new Path(root, SpecFile)
-    require(fs.exists(specPath),
-      s"sign-band index at $root has no $SpecFile sidecar — not a graft " +
-        "band index (or a pre-sidecar layout; rebuild with ensureIndex)")
-    val in = fs.open(specPath)
-    val stored =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val m = ("""\{"planes":(\d+),"bands":(\d+),"dim":(\d+),""" +
+  private val SpecText =
+    ("""\{"planes":(\d+),"bands":(\d+),"dim":(\d+),""" +
       """"maxBucketDf":(\d+),"expectedOcc":(\d+),"buildMaxOcc":(\d+)\}""").r
-    stored match {
-      case m(pl, b, d, c, e, mx) =>
-        require(b.toInt == p.bands && d.toInt == p.dim &&
-            pl.toInt >= p.numPlanes && c.toInt == p.maxBucketDf,
-          s"sign-band index at $root was built with $stored but probed with " +
-            s"planes>=${p.numPlanes}/bands=${p.bands}/dim=${p.dim}/" +
-            s"maxBucketDf=${p.maxBucketDf} — pass the build-time parameters " +
-            "or rebuild the index")
-        Spec(pl.toInt, e.toLong, mx.toLong)
-      case _ => throw new IllegalStateException(
-        s"sign-band index sidecar at $root is unparseable or pre-cap: " +
-          s"$stored — rebuild with ensureIndex")
+
+  /** The sidecar a probe with `p` accepts: bands, dim and cap equal, and
+    * at least the base plane count (the build may have widened it). */
+  private def specFor(p: Params): Stamped.Spec =
+    Stamped.Spec("sign-band index", "_graft_band_spec",
+      s"planes>=${p.numPlanes}/bands=${p.bands}/dim=${p.dim}/" +
+        s"maxBucketDf=${p.maxBucketDf}") {
+      case SpecText(pl, b, d, c, _, _) =>
+        b.toInt == p.bands && d.toInt == p.dim && pl.toInt >= p.numPlanes &&
+          c.toInt == p.maxBucketDf
+      case _ => false
     }
-  }
+
+  /** Validate the sidecar against `p` and return the pinned build state. */
+  private def readSpec(s: SparkSession, path: String, p: Params): Spec =
+    Stamped.requireSpec(s, path, specFor(p)) match {
+      case SpecText(pl, _, _, _, e, mx) => Spec(pl.toInt, e.toLong, mx.toLong)
+    }
 
   /** Hot keys of a standing bucket table: (band, bkt) whose count exceeds
     * the cap — one slim map-side-combinable groupBy, paid once at build.
@@ -169,12 +157,7 @@ object SignBandIndex {
       s"numPlanes=${p.numPlanes} must be a multiple of bands=${p.bands}")
     require(p.maxBucketDf > 0, s"maxBucketDf=${p.maxBucketDf} must be positive")
     val s = emb.sparkSession
-    val (fs, root) = fsOf(s, path)
-    val done = new Path(root, "_SUCCESS")
-    val spec = new Path(root, SpecFile)
-    if (fs.exists(done) && fs.exists(spec)) {
-      readSpec(fs, root, p) // validates
-    } else {
+    Stamped.publish(s, path, specFor(p)) { dir =>
       val base = p.numPlanes / p.bands
       val n = countForWidth.getOrElse(emb.count())
       val rows = math.max(base,
@@ -189,22 +172,19 @@ object SignBandIndex {
           emb.select(col(idCol).as("id"), col("embedding")), pl, p.bands)
         .select(col("id"), col("embedding"), col("buckets"))
         .withColumn("batch", lit("base"))
-        .write.mode("overwrite").partitionBy("batch").parquet(path)
-      val stored = s.read.parquet(path)
+        .write.mode("overwrite").partitionBy("batch").parquet(dir)
+      val stored = s.read.parquet(dir)
       val occ = stored.select(posexplode(col("buckets")).as(Seq("band", "bkt")))
         .groupBy("band", "bkt").agg(count(lit(1)).as("n"))
         .localCheckpoint()
       occ.filter(col("n") > p.maxBucketDf).select("band", "bkt")
-        .write.mode("overwrite").parquet(s"$path/_hot/batch=base")
+        .write.mode("overwrite").parquet(s"$dir/_hot/batch=base")
       val buildMaxOcc = {
         val r = occ.agg(max("n")).collect()(0)
         if (r.isNullAt(0)) 0L else r.getLong(0)
       }
       val expectedOcc = math.max(1L, stored.count() >> rows)
-      val out = fs.create(spec, true)
-      try out.write(
-        specJson(planes, p, expectedOcc, buildMaxOcc).getBytes("UTF-8"))
-      finally out.close()
+      specJson(planes, p, expectedOcc, buildMaxOcc)
     }
   }
 
@@ -218,8 +198,7 @@ object SignBandIndex {
     * rebuilt (re-widened) from the grown corpus.
     */
   def rebuildDue(s: SparkSession, indexPath: String, p: Params): Boolean = {
-    val (fs, root) = fsOf(s, indexPath)
-    val spec = readSpec(fs, root, p)
+    val spec = readSpec(s, indexPath, p)
     val r = s.read.parquet(indexPath)
       .select(posexplode(col("buckets")).as(Seq("band", "bkt")))
       .groupBy("band", "bkt").agg(count(lit(1)).as("n"))
@@ -237,8 +216,9 @@ object SignBandIndex {
     * cost that keeps every PROBE at |batch| + |candidates| forever.
     */
   def rebuild(s: SparkSession, indexPath: String, p: Params): Unit = {
-    val (fs, root) = fsOf(s, indexPath)
-    readSpec(fs, root, p) // refuse to flatten a dir that isn't a band index
+    readSpec(s, indexPath, p) // refuse to flatten a dir that isn't a band index
+    val root = new Path(indexPath)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     // Atomic-publish rebuild (the Stamped.ensure convention): the new
     // index is built into a STAGING path while the old one stays live and
     // durable — the build's lineage reads the old files in place, so no
@@ -256,7 +236,7 @@ object SignBandIndex {
     val oldP = new Path(s"$indexPath.old_$token")
     // swap: old aside -> staging in -> drop old. A crash between the
     // renames loses only the published NAME, never a complete index (the
-    // staging and old-aside dirs both carry their own _SUCCESS); the
+    // staging and old-aside dirs are both published roots); the
     // destination never exists at rename time, so the local-FS
     // rename-onto-existing-dir nesting trap (see Stamped) cannot fire.
     if (!fs.rename(root, oldP))
@@ -291,9 +271,9 @@ object SignBandIndex {
     *
     * `appendBatch = Some(id)` CLOSES the loop: the batch's (id, vector,
     * buckets) rows are appended as a `batch=<id>/` partition and its
-    * newly-hot keys as `_hot/batch=<id>/` — idempotent on their own
-    * `_SUCCESS`, and a replayed batch's partitions are pruned out of
-    * its own probe (partition-pruned scan — free).
+    * newly-hot keys as `_hot/batch=<id>/` — each written once, and a
+    * replayed batch's partitions are pruned out of its own probe
+    * (partition-pruned scan — free).
     */
   def ingestMatches(batchEmb: DataFrame, idCol: String, indexPath: String,
                     p: Params, threshold: Double,
@@ -322,8 +302,7 @@ object SignBandIndex {
                          appendBatch: Option[String] = None,
                          includeInternal: Boolean = false): (DataFrame, ProbeStats) = {
     val s = batchEmb.sparkSession
-    val (fs, root) = fsOf(s, indexPath)
-    val spec = readSpec(fs, root, p)
+    val spec = readSpec(s, indexPath, p)
     val pl = Similarity.portablePlanes(spec.planes, p.dim)
     val batch = Similarity.withLshBuckets(
         batchEmb.select(col(idCol).as("id"), col("embedding")), pl, p.bands)
@@ -395,16 +374,10 @@ object SignBandIndex {
     // return could otherwise race its own append
     val out = all.localCheckpoint()
     appendBatch.foreach { id =>
-      require(id.matches("[A-Za-z0-9_.-]+") && id != "base",
-        s"batch id '$id' must be a plain path token and not the reserved 'base'")
-      require(fs.exists(new Path(root, "_SUCCESS")),
-        s"cannot append batch '$id': no complete sign-band index at $indexPath")
-      val hotPart = new Path(root, s"_hot/batch=$id")
-      if (!fs.exists(new Path(hotPart, "_SUCCESS")))
-        fresh.write.mode("overwrite").parquet(hotPart.toString)
-      val part = new Path(root, s"batch=$id")
-      if (!fs.exists(new Path(part, "_SUCCESS")))
-        batch.write.mode("overwrite").parquet(part.toString)
+      Stamped.appendOnce(s, indexPath, "sign-band index", id, "_hot/")(
+        fresh.write.mode("overwrite").parquet(_))
+      Stamped.appendOnce(s, indexPath, "sign-band index", id)(
+        batch.write.mode("overwrite").parquet(_))
     }
     (out, ProbeStats(probeMaxOcc, spec.rebuildThreshold))
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
 import graft.ops.Fixpoint
+import graft.sources.Stamped
 
 /** Similarity search over embedding columns (SURVEY.md §2.9 X2):
   * brute-force cosine top-k as the exact baseline, sign-random-projection
@@ -567,51 +568,23 @@ object Similarity {
   }
 
   /** Build-once persisted centroid index: [[kmeansFixedFull]]'s refined
-    * centroid table written as parquet at `path`, `_SUCCESS`-idempotent
-    * (a replayed build is a no-op — the ingest-loop convention shared
-    * with Dedup.ensureBandIndex; callers key `path` by corpus stamp AND
-    * every parameter baked into the content, so a param change misses
-    * rather than silently probing a mismatched index). The centroids
-    * are exact integers, so the store-and-reload loses nothing — the
-    * oracle replays the stored values bit-for-bit.
+    * centroid table published as a parquet root at `path`
+    * ([[graft.sources.Stamped.publish]]; callers key `path` by corpus
+    * stamp, and the sidecar pins (k, iters, scale),
+    * which every stored centroid bakes in). The centroids are exact
+    * integers, so the store-and-reload loses nothing — the oracle
+    * replays the stored values bit-for-bit.
     */
   def ensureCentroidIndex(emb: DataFrame, path: String, k: Int, iters: Int,
                           scale: Long = 1000000L): Unit = {
-    // Hadoop FS API, not java.io.File: the index lives wherever the
-    // warehouse does (HDFS/object store at scale) — a java.io probe would
-    // silently rebuild on every non-local-FS path. Same guard convention
-    // as Dedup.ensureBandIndex, including the params sidecar: every
-    // stored centroid bakes in (k, iters, scale), so probing with
-    // different parameters is corrupt-by-construction and must throw,
-    // not silently assign against a mismatched quantizer.
-    val s = emb.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(root, "_SUCCESS")
-    val spec = new org.apache.hadoop.fs.Path(root, CentroidSpecFile)
-    val want = s"""{"k":$k,"iters":$iters,"scale":$scale}"""
-    if (fs.exists(done) && fs.exists(spec)) {
-      val in = fs.open(spec)
-      val stored =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      require(stored == want,
-        s"centroid index at $path was built with $stored but probed with " +
-          s"$want — pass the build-time parameters or rebuild the index")
-    } else {
-      // no _SUCCESS (crashed build) or no sidecar (pre-sidecar layout):
-      // rebuild from scratch — partial data must not be trusted
+    val spec = Stamped.Spec("centroid index", "_graft_centroid_spec",
+      s"""{"k":$k,"iters":$iters,"scale":$scale}""")()
+    Stamped.publish(emb.sparkSession, path, spec) { dir =>
       kmeansFixedFull(emb, k, iters, scale)._2
-        .write.mode("overwrite").parquet(path)
-      val out = fs.create(spec, true)
-      try out.write(want.getBytes("UTF-8"))
-      finally out.close()
+        .write.mode("overwrite").parquet(dir)
+      spec.want
     }
   }
-
-  /** Sidecar filename carrying the parameters a centroid index was built
-    * with — the [[ensureCentroidIndex]] twin of Dedup.LshSpecFile. */
-  val CentroidSpecFile = "_graft_centroid_spec"
 
   /** Assign embeddings against an in-memory/lineage centroid table
     * (cluster, pos, c) — [[assignPts]] over the shared quantization; the
@@ -874,39 +847,19 @@ object Similarity {
         col("mm.dist").as("dist"))
   }
 
-  /** Sidecar filename carrying the parameters a PQ codebook index was
-    * built with — the [[ensurePqIndex]] twin of [[CentroidSpecFile]]. */
-  val PqSpecFile = "_graft_pq_spec"
-
   /** Build-once persisted PQ codebook: [[productQuantize]]'s codebook
-    * table written as parquet at `path`, `_SUCCESS`-idempotent with a
-    * params sidecar (the [[ensureCentroidIndex]] conventions verbatim:
-    * Hadoop FS guard, rebuild on partial data, THROW on a parameter
-    * mismatch — codes against a differently-trained codebook are
+    * table published as a parquet root at `path` with a parameter
+    * sidecar (codes against a differently-trained codebook are
     * corrupt-by-construction). */
   def ensurePqIndex(emb: DataFrame, path: String, m: Int, k: Int,
                     iters: Int, dim: Int = 64,
                     scale: Long = 1000000L): Unit = {
-    val s = emb.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(root, "_SUCCESS")
-    val spec = new org.apache.hadoop.fs.Path(root, PqSpecFile)
-    val want = s"""{"m":$m,"k":$k,"iters":$iters,"dim":$dim,"scale":$scale}"""
-    if (fs.exists(done) && fs.exists(spec)) {
-      val in = fs.open(spec)
-      val stored =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      require(stored == want,
-        s"PQ index at $path was built with $stored but probed with $want " +
-          "— pass the build-time parameters or rebuild the index")
-    } else {
+    val spec = Stamped.Spec("PQ index", "_graft_pq_spec",
+      s"""{"m":$m,"k":$k,"iters":$iters,"dim":$dim,"scale":$scale}""")()
+    Stamped.publish(emb.sparkSession, path, spec) { dir =>
       productQuantize(emb, m, k, iters, dim, scale)._2
-        .write.mode("overwrite").parquet(path)
-      val out = fs.create(spec, true)
-      try out.write(want.getBytes("UTF-8"))
-      finally out.close()
+        .write.mode("overwrite").parquet(dir)
+      spec.want
     }
   }
 
@@ -1068,16 +1021,11 @@ object Similarity {
       .limit(kNeighbors)
   }
 
-  /** Sidecar filename carrying the parameters an IVF-PQ composite index
-    * was built with — the [[ensureIvfPqIndex]] twin of [[PqSpecFile]]. */
-  val IvfPqSpecFile = "_graft_ivfpq_spec"
-
   /** Build-once persisted IVF-PQ composite index: [[ivfPqTrain]]'s four
     * tables written as parquet subdirs of `path` (cents / assigned /
-    * codes / codebook), published under ONE root `_SUCCESS` + params
-    * sidecar (the [[ensureCentroidIndex]]/[[ensurePqIndex]] conventions:
-    * Hadoop FS guard, rebuild on partial data, THROW on a parameter
-    * mismatch). This is the production split of the composite index —
+    * codes / codebook) and published as ONE root with an
+    * parameter sidecar, so a reader never sees two subdirs from
+    * different builds. This is the production split of the composite index —
     * the coarse training, residual codebooks, and full-corpus encode are
     * a once-per-snapshot build; the probe/ADC/rerank stay live per query
     * ([[ivfPqTopkIndexed]]). Every stored column is exact BIGINT, so the
@@ -1087,53 +1035,20 @@ object Similarity {
   def ensureIvfPqIndex(emb: DataFrame, path: String, coarseK: Int, m: Int,
                        k: Int, iters: Int, dim: Int = 64,
                        scale: Long = 1000000L): Unit = {
-    val s = emb.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(root, "_SUCCESS")
-    val spec = new org.apache.hadoop.fs.Path(root, IvfPqSpecFile)
-    val want = s"""{"coarseK":$coarseK,"m":$m,"k":$k,"iters":$iters,""" +
-      s""""dim":$dim,"scale":$scale}"""
-    if (fs.exists(done) && fs.exists(spec)) {
-      val in = fs.open(spec)
-      val stored =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      require(stored == want,
-        s"IVF-PQ index at $path was built with $stored but probed with " +
-          s"$want — pass the build-time parameters or rebuild the index")
-    } else {
-      // no root _SUCCESS (crashed/partial build): rebuild all four tables
-      // — a subdir from a dead build is never trusted. The build lands in
-      // a private STAGING dir and publishes with one rename (the Stamped
-      // convention): a concurrent reader can never observe two subdirs
-      // from different builds, and two racing builders don't interleave
-      // writes under the same root. All four frames leave ivfPqTrain
-      // localCheckpoint'd (kmeansFixedFull / pqTrainOnPts), so the four
-      // writes read materialized blocks — the corpus-scale training runs
-      // once, not once per write.
-      val staging = new org.apache.hadoop.fs.Path(
-        path + ".staging_" + java.util.UUID.randomUUID().toString.take(8))
+    val spec = Stamped.Spec("IVF-PQ index", "_graft_ivfpq_spec",
+      s"""{"coarseK":$coarseK,"m":$m,"k":$k,"iters":$iters,""" +
+        s""""dim":$dim,"scale":$scale}""")()
+    Stamped.publish(emb.sparkSession, path, spec) { dir =>
+      // all four frames leave ivfPqTrain localCheckpoint'd
+      // (kmeansFixedFull / pqTrainOnPts), so the four writes read
+      // materialized blocks — the corpus-scale training runs once
       val (cents, assigned, codes, cb) =
         ivfPqTrain(emb, coarseK, m, k, iters, dim, scale)
-      cents.write.mode("overwrite").parquet(s"$staging/cents")
-      assigned.write.mode("overwrite").parquet(s"$staging/assigned")
-      codes.write.mode("overwrite").parquet(s"$staging/codes")
-      cb.write.mode("overwrite").parquet(s"$staging/codebook")
-      val out = fs.create(new org.apache.hadoop.fs.Path(staging, IvfPqSpecFile), true)
-      try out.write(want.getBytes("UTF-8"))
-      finally out.close()
-      fs.create(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"), true).close()
-      // _SUCCESS re-checked immediately before publishing (local-FS rename
-      // onto an existing dir NESTS rather than fails — see Stamped.ensure)
-      if (fs.exists(done)) {
-        fs.delete(staging, true)
-      } else {
-        if (fs.exists(root) && !fs.exists(done)) fs.delete(root, true)
-        if (!fs.rename(staging, root)) fs.delete(staging, true)
-        val nested = new org.apache.hadoop.fs.Path(root, staging.getName)
-        if (fs.exists(nested)) fs.delete(nested, true)
-      }
+      cents.write.mode("overwrite").parquet(s"$dir/cents")
+      assigned.write.mode("overwrite").parquet(s"$dir/assigned")
+      codes.write.mode("overwrite").parquet(s"$dir/codes")
+      cb.write.mode("overwrite").parquet(s"$dir/codebook")
+      spec.want
     }
   }
 

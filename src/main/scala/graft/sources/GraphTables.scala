@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * passes over the largest table for two immutable edge lists. Production
   * graph stacks materialize the edge table once per corpus snapshot and
   * point every algorithm at it; this does the same with the repo's
-  * stamped-artifact convention (`_SUCCESS`-idempotent, path keyed by the
+  * stamped-artifact convention (published once, path keyed by the
   * testdata stamp — Dedup.ensureBandIndex / Similarity.ensureCentroidIndex
   * precedent). Everything stored is exact BIGINTs, so the parquet
   * roundtrip loses nothing and every oracle still re-derives its graph

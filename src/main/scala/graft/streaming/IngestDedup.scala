@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
+import graft.sources.Stamped
 import graft.text.Dedup
 
 /** The ingest-dedup loop as a STREAMING sink: a document feed is landed,
@@ -20,20 +21,19 @@ import graft.text.Dedup
   * maintenance of transactional batch artifacts: the driver only
   * coordinates; every data pass is a distributed job.
   *
-  * Three co-versioned stores, all commit-marker idempotent so an
-  * at-least-once replay (crash anywhere, restart, even a deleted
-  * checkpoint) CONVERGES instead of duplicating:
+  * Three co-versioned stores, every directory written once
+  * ([[Stamped.writeOnce]]) so an at-least-once replay (crash anywhere,
+  * restart, even a deleted checkpoint) CONVERGES instead of duplicating:
   *
-  *   - doc store   `docsPath/batch=<v>/`   arrivals land once per batch
-  *                                         (partition `_SUCCESS` guard);
+  *   - doc store   `docsPath/batch=<v>/`   arrivals land once per batch;
   *   - band index  `indexPath/batch=<v>/`  signatures appended after the
   *                                         probe ([[Dedup.ingestPairs]]);
   *   - labels      `labelsPath/v=<v>/`     a label DELTA per version —
   *                                         the touched components + the
   *                                         batch's singletons, committed
-  *                                         LAST — the version's
-  *                                         `_SUCCESS` is the batch's
-  *                                         overall commit record.
+  *                                         LAST — the committed version
+  *                                         is the batch's overall
+  *                                         commit record.
   *
   * A batch whose label version is committed is skipped wholesale; a batch
   * that crashed mid-way re-runs against stores whose per-partition guards
@@ -71,7 +71,7 @@ object IngestDedup {
   final case class Params(n: Int = 3, numHashes: Int = 16, bands: Int = 4,
                           verifyThreshold: Double = 0.5)
 
-  private val BaseVersion = "b000000000"
+  private val BaseVersion = Stamped.version(-1)
 
   /** Version-dir marker naming a FULL label snapshot (vs a delta); the
     * base version is full by construction and needs no marker. */
@@ -81,40 +81,6 @@ object IngestDedup {
     * the read-side delta fold at N versions. */
   val CompactEvery = 8
 
-  private def version(batchId: Long): String = f"b${batchId + 1}%09d"
-
-  private def fsOf(s: SparkSession, path: String) = {
-    val p = new Path(path)
-    (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def committed(s: SparkSession, dir: String): Boolean = {
-    val (fs, p) = fsOf(s, dir)
-    fs.exists(new Path(p, "_SUCCESS"))
-  }
-
-  /** Land `df` at `dir` exactly once (skip if the dir already carries its
-    * `_SUCCESS`) — the same per-partition idempotence as the index append.
-    */
-  private def landOnce(df: DataFrame, dir: String): Unit =
-    if (!committed(df.sparkSession, dir))
-      df.write.mode("overwrite").parquet(dir)
-
-  /** All committed label versions under `labelsPath`, ascending
-    * (bootstrap writes [[BaseVersion]], so a running loop always has
-    * one). */
-  private def committedVersions(s: SparkSession, labelsPath: String): Seq[String] = {
-    val (fs, root) = fsOf(s, labelsPath)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v="))
-      .filter(v => committed(s, s"$labelsPath/v=$v"))
-      .sorted
-  }
-
   /** The loop's current labeling: (id, group_id) folded from the latest
     * full snapshot plus every later committed DELTA, latest version
     * winning per id — what a downstream keep-one-per-group read
@@ -123,11 +89,12 @@ object IngestDedup {
     * read landing right on a compaction point) is a plain read.
     */
   def labels(s: SparkSession, labelsPath: String): DataFrame = {
-    val vs = committedVersions(s, labelsPath)
+    val vs = Stamped.versions(s, labelsPath)
     if (vs.isEmpty)
       throw new IllegalStateException(
         s"no committed label version under $labelsPath — run ensureIngestState first")
-    val (fs, root) = fsOf(s, labelsPath)
+    val root = new Path(labelsPath)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     def isFull(v: String): Boolean = v == BaseVersion ||
       fs.exists(new Path(root, s"v=$v/$FullMarker"))
     val from = vs.filter(isFull).lastOption.getOrElse(
@@ -135,7 +102,7 @@ object IngestDedup {
         s"label store at $labelsPath has committed delta versions " +
           s"(${vs.mkString(", ")}) but NO full snapshot — the base " +
           s"version $BaseVersion (or a $FullMarker'd compaction) is " +
-          "missing or lost its _SUCCESS; the deltas alone cannot " +
+          "missing or uncommitted; the deltas alone cannot " +
           "reconstruct the labeling"))
     val fold = vs.dropWhile(_ != from)
     if (fold.size == 1) s.read.parquet(s"$labelsPath/v=${fold.head}")
@@ -152,17 +119,21 @@ object IngestDedup {
     * no-op when all three are committed): land `baseDocs` as the doc
     * store's base partition, build the band index from the LANDED copy
     * (the store, not the caller's frame, is the loop's source of truth),
-    * and write the base labels as version [[BaseVersion]].
+    * and write the base labels as version [[BaseVersion]] — in place,
+    * like every version.
     */
   def ensureIngestState(baseDocs: DataFrame, docsPath: String,
                         indexPath: String, labelsPath: String,
                         p: Params): Unit = {
     val s = baseDocs.sparkSession
-    landOnce(baseDocs.select("doc_id", "text"), s"$docsPath/batch=$BaseVersion")
-    val landed = s.read.parquet(s"$docsPath/batch=$BaseVersion")
+    val base = s"$docsPath/batch=$BaseVersion"
+    Stamped.writeOnce(s, base)(
+      baseDocs.select("doc_id", "text").write.mode("overwrite").parquet(_))
+    val landed = s.read.parquet(base)
     Dedup.ensureBandIndex(landed, indexPath, p.n, p.numHashes, p.bands)
-    Dedup.ensureGroupLabels(landed, s"$labelsPath/v=$BaseVersion",
-      p.n, p.numHashes, p.bands, p.verifyThreshold)
+    Stamped.writeOnce(s, s"$labelsPath/v=$BaseVersion")(
+      Dedup.groupLabels(landed, p.n, p.numHashes, p.bands, p.verifyThreshold)
+        .write.mode("overwrite").parquet(_))
   }
 
   /** One micro-batch of the loop (also the batch-mode entry point for a
@@ -172,11 +143,12 @@ object IngestDedup {
   def processBatch(batch: DataFrame, batchId: Long, docsPath: String,
                    indexPath: String, labelsPath: String, p: Params): Unit = {
     val s = batch.sparkSession
-    val v = version(batchId)
+    val v = Stamped.version(batchId)
     // the version's label dir is the batch's commit record: committed ⇒
     // every store already holds this batch ⇒ nothing to do
-    if (committed(s, s"$labelsPath/v=$v")) return
-    landOnce(batch.select("doc_id", "text"), s"$docsPath/batch=$v")
+    if (Stamped.committed(s, s"$labelsPath/v=$v")) return
+    Stamped.writeOnce(s, s"$docsPath/batch=$v")(
+      batch.select("doc_id", "text").write.mode("overwrite").parquet(_))
     // the store's landed copy (not the in-memory micro-batch) feeds the
     // probe: deterministic under replay, and the corpus side of the
     // candidate verify partition-prunes to candidate batches only.
@@ -201,8 +173,9 @@ object IngestDedup {
       val d = withSingles.localCheckpoint()
       val full = d.union(prior.join(d.select("id"), Seq("id"), "left_anti"))
       full.write.mode("overwrite").parquet(s"$labelsPath/v=$v")
-      val (fs, _) = fsOf(s, labelsPath)
-      fs.create(new Path(s"$labelsPath/v=$v/$FullMarker"), true).close()
+      val marker = new Path(s"$labelsPath/v=$v/$FullMarker")
+      marker.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .create(marker, true).close()
     } else {
       withSingles.write.mode("overwrite").parquet(s"$labelsPath/v=$v")
     }

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.sim.Similarity
+import graft.sources.Stamped
 
 /** Continuous IVF ingest: embedding shards arrive as a stream and each
   * micro-batch assigns itself to the PERSISTED refined-centroid index
@@ -17,24 +17,16 @@ import graft.sim.Similarity
   *
   * Simpler transactional story than the dedup loop because assignments are
   * PER-VECTOR functions of the stored centroids — no cross-batch folding:
-  * one store `assignsPath/batch=<v>/` (vec_id, cluster, dist), one
-  * `_SUCCESS` guard per batch. An at-least-once replay recomputes the
+  * one store `assignsPath/batch=<v>/` (vec_id, cluster, dist), written
+  * once per batch ([[Stamped.writeOnce]]). An at-least-once replay recomputes the
   * identical rows (exact integer arithmetic) into the same partition —
   * convergent by construction. Per-batch cost is |batch|·k·dim through
   * one broadcast join; the driver only coordinates.
   */
 object IngestIvf {
 
-  private def version(batchId: Long): String = f"b${batchId + 1}%09d"
-
-  private def committed(s: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .exists(new Path(p, "_SUCCESS"))
-  }
-
   /** Bootstrap: build (once) the refined centroid index from the base
-    * corpus. Idempotent — delegates to the index's own `_SUCCESS` guard.
+    * corpus. Idempotent — the index is published once.
     */
   def ensureIvfState(baseEmb: DataFrame, indexPath: String, k: Int,
                      iters: Int): Unit =
@@ -50,11 +42,10 @@ object IngestIvf {
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
                    assignsPath: String): Unit = {
     val s = batch.sparkSession
-    val dir = s"$assignsPath/batch=${version(batchId)}"
-    if (committed(s, dir)) return
-    Similarity.assignToCentroidIndex(s, batch.select("vec_id", "embedding"),
-        indexPath)
-      .write.mode("overwrite").partitionBy("cluster").parquet(dir)
+    Stamped.writeOnce(s, s"$assignsPath/batch=${Stamped.version(batchId)}")(
+      Similarity.assignToCentroidIndex(s, batch.select("vec_id", "embedding"),
+          indexPath)
+        .write.mode("overwrite").partitionBy("cluster").parquet(_))
   }
 
   /** Every assignment the loop has committed so far: (vec_id, cluster,

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.sim.Similarity
+import graft.sources.Stamped
 
 /** Continuous PQ encode: embedding shards arrive as a stream and each
   * micro-batch encodes itself against the PERSISTED codebook
@@ -17,25 +17,17 @@ import graft.sim.Similarity
   *
   * The same transactional story as the IVF loop: codes are PER-VECTOR
   * functions of the stored codebook — no cross-batch folding; one store
-  * `codesPath/batch=<v>/` (vec_id, sub, cluster, dist) with a `_SUCCESS`
-  * guard per batch. An at-least-once replay recomputes the identical rows
-  * (exact integer arithmetic) into the same partition — convergent by
-  * construction. Codes land PARTITIONED BY SUB, so a per-subspace ADC
+  * `codesPath/batch=<v>/` (vec_id, sub, cluster, dist) written once per
+  * batch ([[Stamped.writeOnce]]). An at-least-once replay recomputes
+  * the identical rows (exact integer arithmetic) into the same partition
+  * — convergent by construction. Codes land PARTITIONED BY SUB, so a per-subspace ADC
   * lookup join prunes to that subspace's directories at the scan.
   * Per-batch cost is |batch|·m·k·(dim/m) through one broadcast join.
   */
 object IngestPq {
 
-  private def version(batchId: Long): String = f"b${batchId + 1}%09d"
-
-  private def committed(s: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .exists(new Path(p, "_SUCCESS"))
-  }
-
   /** Bootstrap: train (once) the codebook from the base corpus.
-    * Idempotent — delegates to the index's own `_SUCCESS`+sidecar guard.
+    * Idempotent — the index is published once, pinned by its sidecar.
     */
   def ensurePqState(baseEmb: DataFrame, indexPath: String, m: Int, k: Int,
                     iters: Int): Unit =
@@ -47,11 +39,10 @@ object IngestPq {
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
                    codesPath: String, m: Int): Unit = {
     val s = batch.sparkSession
-    val dir = s"$codesPath/batch=${version(batchId)}"
-    if (committed(s, dir)) return
-    Similarity.encodeWithPqIndex(s, batch.select("vec_id", "embedding"),
-        indexPath, m)
-      .write.mode("overwrite").partitionBy("sub").parquet(dir)
+    Stamped.writeOnce(s, s"$codesPath/batch=${Stamped.version(batchId)}")(
+      Similarity.encodeWithPqIndex(s, batch.select("vec_id", "embedding"),
+          indexPath, m)
+        .write.mode("overwrite").partitionBy("sub").parquet(_))
   }
 
   /** Every code the loop has committed so far: (vec_id, sub, cluster,

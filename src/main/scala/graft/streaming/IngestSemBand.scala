@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.sim.SignBandIndex
+import graft.sources.Stamped
 
 /** Continuous SEMANTIC media ingest: feature-vector shards (BoVW image
   * embeddings, any fixed-dim `array<float>` column) arrive as a stream
@@ -17,9 +17,9 @@ import graft.sim.SignBandIndex
   *
   * Transactional story: matches are PER-BATCH functions of (batch,
   * index-so-far), so each batch lands one `matchesPath/batch=<v>/`
-  * (query_id, vec_id, sim) directory behind its own `_SUCCESS`, and the
-  * index append inside [[SignBandIndex.ingestMatches]] carries its own
-  * partition `_SUCCESS`. An at-least-once replay probes with its OWN
+  * (query_id, vec_id, sim) directory, and the index append inside
+  * [[SignBandIndex.ingestMatches]] one partition, each written once
+  * ([[Stamped.writeOnce]]). An at-least-once replay probes with its OWN
   * partition pruned from the index read, so it recomputes the identical
   * match set (exact per-vector buckets, deterministic planes) into the
   * same directory — convergent by construction, across either crash
@@ -29,16 +29,8 @@ import graft.sim.SignBandIndex
   */
 object IngestSemBand {
 
-  private def version(batchId: Long): String = f"b${batchId + 1}%09d"
-
-  private def committed(s: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .exists(new Path(p, "_SUCCESS"))
-  }
-
   /** Bootstrap: build (once) the banded index from the base corpus
-    * features. Idempotent — delegates to the index's `_SUCCESS` guard.
+    * features. Idempotent — the index is published once.
     * `countForWidth` freezes the plane width from the corpus the loop
     * will ultimately serve (base ∪ expected arrivals) instead of the
     * base alone — see [[SignBandIndex.ensureIndex]].
@@ -60,7 +52,7 @@ object IngestSemBand {
     * swap — appends fold into a re-widened base, the hot set and the
     * sidecar profile reset). Ordering keeps replays convergent: the
     * rebuild runs strictly AFTER this batch's matches are durable, so a
-    * replayed batch either skips on its own `_SUCCESS` (and the NEXT
+    * replayed batch either skips its committed matches (and the NEXT
     * batch's probe re-fires the creep signal — maintenance is deferred,
     * never lost while appends keep arriving) or re-probes the pre-rebuild
     * index it originally saw.
@@ -69,9 +61,9 @@ object IngestSemBand {
                    matchesPath: String, p: SignBandIndex.Params,
                    threshold: Double): Unit = {
     val s = batch.sparkSession
-    val v = version(batchId)
+    val v = Stamped.version(batchId)
     val dir = s"$matchesPath/batch=$v"
-    if (committed(s, dir)) return
+    if (Stamped.committed(s, dir)) return
     val (matches, stats) = SignBandIndex.ingestMatchesStats(
       batch.select("vec_id", "embedding"),
       "vec_id", indexPath, p, threshold, appendBatch = Some(v))

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.sim.Similarity
+import graft.sources.Stamped
 
 /** Streaming MINI-BATCH k-means: unlike [[IngestIvf]] (fixed index, new
   * data partitions itself), here the centroids EVOLVE — every arriving
@@ -22,42 +22,18 @@ import graft.sim.Similarity
   * unverifiable — this is the verifiable formulation of the same
   * algorithm.)
   *
-  * Versioned commits, [[IngestDedup]]-style: `statsPath/v=<v>/` with the
-  * version's `_SUCCESS` as the batch's commit record — a replayed batch
-  * (crash, fresh checkpoint) is skipped wholesale, so at-least-once
-  * delivery converges. Per-batch cost: |batch|·k·dim through one
+  * Versioned commits, [[IngestDedup]]-style: `statsPath/v=<v>/`, written
+  * once, with the committed version as the batch's commit record — a
+  * replayed batch (crash, fresh checkpoint) is skipped wholesale, so
+  * at-least-once delivery converges. Per-batch cost: |batch|·k·dim through one
   * broadcast join plus a k·dim-row merge; the driver only coordinates.
   */
 object StreamKmeans {
 
-  private val BaseVersion = "b000000000"
-
-  private def version(batchId: Long): String = f"b${batchId + 1}%09d"
-
-  private def fsOf(s: SparkSession, path: String) = {
-    val p = new Path(path)
-    (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def committed(s: SparkSession, dir: String): Boolean = {
-    val (fs, p) = fsOf(s, dir)
-    fs.exists(new Path(p, "_SUCCESS"))
-  }
-
-  private def latestVersion(s: SparkSession, statsPath: String): Option[String] = {
-    val (fs, root) = fsOf(s, statsPath)
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v="))
-      .filter(v => committed(s, s"$statsPath/v=$v"))
-      .sorted.lastOption
-  }
+  private val BaseVersion = Stamped.version(-1)
 
   private def statsAt(s: SparkSession, statsPath: String): DataFrame = {
-    val v = latestVersion(s, statsPath).getOrElse(throw new IllegalStateException(
+    val v = Stamped.versions(s, statsPath).lastOption.getOrElse(throw new IllegalStateException(
       s"no committed stats version under $statsPath — run ensureKmeansState first"))
     s.read.parquet(s"$statsPath/v=$v")
   }
@@ -75,12 +51,10 @@ object StreamKmeans {
     */
   def ensureKmeansState(baseEmb: DataFrame, statsPath: String, k: Int,
                         iters: Int): Unit = {
-    val dir = s"$statsPath/v=$BaseVersion"
-    if (!committed(baseEmb.sparkSession, dir)) {
-      val base = baseEmb.select("vec_id", "embedding")
+    val base = baseEmb.select("vec_id", "embedding")
+    Stamped.writeOnce(baseEmb.sparkSession, s"$statsPath/v=$BaseVersion")(
       Similarity.clusterStats(base, Similarity.kmeansFixed(base, k, iters))
-        .write.mode("overwrite").parquet(dir)
-    }
+        .write.mode("overwrite").parquet(_))
   }
 
   /** One micro-batch: assign against the CURRENT centroids, fold the
@@ -89,8 +63,8 @@ object StreamKmeans {
     */
   def processBatch(batch: DataFrame, batchId: Long, statsPath: String): Unit = {
     val s = batch.sparkSession
-    val v = version(batchId)
-    if (committed(s, s"$statsPath/v=$v")) return
+    val v = Stamped.version(batchId)
+    if (Stamped.committed(s, s"$statsPath/v=$v")) return
     val prev = statsAt(s, statsPath)
     val cents = prev.select(col("cluster"), col("pos"),
       expr("ssum div n").as("c"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Stamped
+
 /** Deduplication operators for the training-data pipeline (SURVEY.md §2.9
   * X1; BASELINE.json north-star): exact, n-gram Jaccard, MinHash+LSH,
   * SimHash. All shuffle-conscious: candidate generation is always an
@@ -544,25 +546,6 @@ object Dedup {
       .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
   }
 
-  /** MinHash signatures: numHashes independent min-hashes of the shingle
-    * set (each hash = min over shingles of a salted xxhash64), via the
-    * native [[graft.functions.MinHashAgg]] TypedImperativeAggregate: one
-    * aggregate with one long[] buffer instead of numHashes separate min
-    * columns — one hash loop per row, still fully partial-aggregable.
-    * Output: (doc_id, sig array<bigint>).
-    */
-  def minhashSignaturesAgg(docs: DataFrame, n: Int, numHashes: Int): DataFrame =
-    minhashSignaturesAgg(shingleSet(docs, n), numHashes)
-
-  /** [[minhashSignaturesAgg]] over an already-built shingle set — the one
-    * definition of the signature aggregation; the LSH pipeline calls this
-    * with its shared cached shingles.
-    */
-  def minhashSignaturesAgg(sh: DataFrame, numHashes: Int): DataFrame = {
-    graft.functions.MinHashAgg.register(sh.sparkSession)
-    sh.groupBy("doc_id").agg(expr(s"minhash_agg(s, $numHashes)").as("sig"))
-  }
-
   /** Candidate-pair verification with the exact n-gram Jaccard. Prunes the
     * inverted index to candidate docs BEFORE the pair join — candidates are
     * rare, so the expensive shingle⋈shingle product only ever sees them
@@ -620,44 +603,6 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct().localCheckpoint()
 
-  /** MinHash + LSH banding (X1 scale path): signatures -> band hashes ->
-    * equi-join on (band index, band hash) for candidates -> verify with the
-    * exact Jaccard. Bands trade recall for cost: P(candidate) =
-    * 1-(1-j^rows)^bands, so near-dups (j≈0.9) collide w.h.p. while random
-    * pairs don't — this is what makes dedup feasible at 100 TB.
-    */
-  def minhashLshPairs(docs: DataFrame, n: Int, numHashes: Int, bands: Int,
-                      verifyThreshold: Double): DataFrame = {
-    graft.functions.MinHashAgg.register(docs.sparkSession)
-    val rows = numHashes / bands
-    // ONE tokenization pass serves both the signature aggregation and the
-    // exact-Jaccard verification (eagerly cached; see ngramJaccardPairs
-    // for why the count() precedes any broadcast consumer)
-    val sh = shingleSet(docs, n).cache()
-    try {
-      sh.count()
-      val sigs = minhashSignaturesAgg(sh, numHashes)
-      val bandCols = (0 until bands).map { b =>
-        xxhash64((b * rows until (b + 1) * rows).map(i => element_at(col("sig"), i + 1)): _*)
-      }
-      // cached: both sides of the candidate self-join share one computation
-      // of the full signature aggregation instead of running it twice;
-      // released as soon as the (eager) candidate join has consumed it.
-      val banded = sigs.select(col("doc_id"), posexplode(array(bandCols: _*)))
-        .toDF("doc_id", "band", "bh").cache()
-      val cands =
-        try { banded.count(); bandCandidates(banded) }
-        finally banded.unpersist()
-      verifyJaccard(sh, cands, verifyThreshold)
-    } finally sh.unpersist()
-  }
-
-  /** [[minhashLshPairs]] over the portable hash family (TextOps.mixedHash)
-    * instead of xxhash64: h_i(s) = ((2i+1)*H(s) + 12345i+1) mod M, band
-    * key = base-1000003 fold of the band's minima. Same algorithm, every
-    * step replicable in DuckDB SQL — this variant is the oracle-checked
-    * one. ((2i+1)*H < 2^36, fold < 2^52: ANSI-safe.)
-    */
   /** Portable banded signature table (doc_id, band, bh) over an
     * already-built shingle set: h_i(s) = ((2i+1)·H(s) + 12345i+1) mod M
     * over TextOps.mixedHash, band key = base-1000003 fold of the band's
@@ -734,6 +679,13 @@ object Dedup {
     finally banded.unpersist()
   }
 
+  /** MinHash + LSH banding (X1 scale path) over the portable hash family:
+    * signatures -> band keys -> equi-join on (band, bh) for candidates ->
+    * verify with the exact Jaccard. Bands trade recall for cost:
+    * P(candidate) = 1-(1-j^rows)^bands, so near-dups (j≈0.9) collide
+    * w.h.p. while random pairs don't. Every step is replicable in DuckDB
+    * SQL, so this is the oracle-checked pipeline.
+    */
   def minhashLshPairsPortable(docs: DataFrame, n: Int, numHashes: Int,
                               bands: Int, verifyThreshold: Double): DataFrame =
     minhashLshPairsFromShingles(shingleSet(docs, n), numHashes, bands,
@@ -766,33 +718,13 @@ object Dedup {
     } finally sh.unpersist()
   }
 
-  /** Sidecar filename carrying the LSH parameters an index was built
-    * with. Probes and appends `require` a match: a 32-hash probe against
-    * a 16-hash index would otherwise SILENTLY return short pair lists —
-    * the parameters are baked into every stored hash, so a mismatch is
-    * corrupt-by-construction, not a recall knob.
+  /** The LSH parameters a band index was built with. Probes and appends
+    * `require` a match: a 32-hash probe against a 16-hash index would
+    * otherwise SILENTLY return short pair lists.
     */
-  val LshSpecFile = "_graft_lsh_spec"
-
-  private def lshSpecJson(n: Int, numHashes: Int, bands: Int): String =
-    s"""{"n":$n,"numHashes":$numHashes,"bands":$bands}"""
-
-  private def requireLshSpec(fs: org.apache.hadoop.fs.FileSystem,
-                             dir: org.apache.hadoop.fs.Path,
-                             n: Int, numHashes: Int, bands: Int): Unit = {
-    val specPath = new org.apache.hadoop.fs.Path(dir, LshSpecFile)
-    require(fs.exists(specPath),
-      s"band index at $dir has no $LshSpecFile sidecar — not a graft LSH index " +
-        "(or written by a pre-sidecar version; rebuild with ensureBandIndex)")
-    val in = fs.open(specPath)
-    val stored =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val want = lshSpecJson(n, numHashes, bands)
-    require(stored == want,
-      s"band index at $dir was built with $stored but probed with $want — " +
-        "pass the build-time parameters or rebuild the index")
-  }
+  private def lshSpec(n: Int, numHashes: Int, bands: Int): Stamped.Spec =
+    Stamped.Spec("band index", "_graft_lsh_spec",
+      s"""{"n":$n,"numHashes":$numHashes,"bands":$bands}""")()
 
   /** Materialize the portable band-signature INDEX of a corpus at `path`
     * (idempotent: a complete index is left untouched, so repeated runs —
@@ -804,53 +736,17 @@ object Dedup {
     * near-dups without any corpus re-sign. ~numHashes rows of three
     * smallints/longs per document, independent of document length — the
     * artifact that makes ingest-time dedup affordable at 100 TB.
-    *
-    * The build parameters are persisted in a [[LshSpecFile]] sidecar
-    * (written LAST, after the data commit) and `require`d to match on
-    * every later ensure/probe/append. An index directory with `_SUCCESS`
-    * but a MISMATCHED sidecar throws — rebuilding it silently would
-    * corrupt the other caller's artifact.
+    * Published through [[Stamped.publish]] with its parameter sidecar.
     */
   def ensureBandIndex(docs: DataFrame, path: String, n: Int,
                       numHashes: Int, bands: Int): Unit = {
-    val s = docs.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(root, "_SUCCESS")
-    val spec = new org.apache.hadoop.fs.Path(root, LshSpecFile)
-    if (fs.exists(done) && fs.exists(spec)) {
-      requireLshSpec(fs, root, n, numHashes, bands)
-    } else {
-      // no _SUCCESS (crashed build) or no sidecar (pre-sidecar layout):
-      // rebuild from scratch — partial data must not be trusted
+    val spec = lshSpec(n, numHashes, bands)
+    Stamped.publish(docs.sparkSession, path, spec) { dir =>
       portableBanded(shingleSet(docs, n), numHashes, bands)
         .withColumn("batch", lit("base"))
-        .write.mode("overwrite").partitionBy("batch").parquet(path)
-      val out = fs.create(spec, true)
-      try out.write(lshSpecJson(n, numHashes, bands).getBytes("UTF-8"))
-      finally out.close()
+        .write.mode("overwrite").partitionBy("batch").parquet(dir)
+      spec.want
     }
-  }
-
-  /** Append an already-banded batch signature table to a persisted index
-    * as its own `batch=<batchId>/` partition. Idempotent on the
-    * partition's own `_SUCCESS`: re-running a crashed or replayed ingest
-    * batch overwrites the partial partition instead of duplicating rows.
-    * The root index (its `_SUCCESS` + [[LshSpecFile]]) must already
-    * exist — growing an index you never built is a caller bug.
-    */
-  private def appendBandedToIndex(banded: DataFrame, path: String,
-                                  batchId: String): Unit = {
-    require(batchId.matches("[A-Za-z0-9_.-]+") && batchId != "base",
-      s"batch id '$batchId' must be a plain path token and not the reserved 'base'")
-    val s = banded.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(root, "_SUCCESS")),
-      s"cannot append batch '$batchId': no complete band index at $path")
-    val part = new org.apache.hadoop.fs.Path(root, s"batch=$batchId")
-    if (!fs.exists(new org.apache.hadoop.fs.Path(part, "_SUCCESS")))
-      banded.write.mode("overwrite").parquet(part.toString)
   }
 
   /** Incremental dedup of an arriving batch against a corpus whose band
@@ -891,7 +787,7 @@ object Dedup {
     * `appendBatch = Some(stamp)` CLOSES the ingest loop: after the probe,
     * the batch's banded signatures — already computed and cached for the
     * candidate join — are written to the index as a `batch=<stamp>/`
-    * partition (idempotent on that partition's `_SUCCESS`), so the NEXT
+    * partition (written once, [[Stamped.appendOnce]]), so the NEXT
     * batch's probe sees this one without a corpus re-sign. The append
     * reuses the cached banding; its only extra cost is the |batch|-sized
     * parquet write.
@@ -910,21 +806,16 @@ object Dedup {
     * multi-batch query discards batch 1's pairs — computing them was two
     * eager cache fills, a candidate checkpoint, and a corpus-side verify
     * scan of pure waste, guide §1.2: don't compute what you throw away).
-    * Idempotent on the partition's `_SUCCESS`: a warm replay does not
-    * even read the batch.
+    * Written once: a warm replay does not even read the batch.
     */
   def ensureBatchAppended(docs: DataFrame, isNew: Column, indexPath: String,
                           n: Int, numHashes: Int, bands: Int,
                           batchId: String): Unit = {
     val s = docs.sparkSession
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    requireLshSpec(fs, root, n, numHashes, bands)
-    val part = new org.apache.hadoop.fs.Path(root, s"batch=$batchId")
-    if (!fs.exists(new org.apache.hadoop.fs.Path(part, "_SUCCESS")))
-      appendBandedToIndex(
-        portableBanded(shingleSet(docs.filter(isNew), n), numHashes, bands),
-        indexPath, batchId)
+    Stamped.requireSpec(s, indexPath, lshSpec(n, numHashes, bands))
+    Stamped.appendOnce(s, indexPath, "band index", batchId)(
+      portableBanded(shingleSet(docs.filter(isNew), n), numHashes, bands)
+        .write.mode("overwrite").parquet(_))
   }
 
   private def probeIndex(docs: DataFrame, isNew: Column, indexPath: String,
@@ -933,9 +824,7 @@ object Dedup {
                          includeInternal: Boolean,
                          appendBatch: Option[String] = None): DataFrame = {
     val s = docs.sparkSession
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    requireLshSpec(root.getFileSystem(s.sparkContext.hadoopConfiguration),
-      root, n, numHashes, bands)
+    Stamped.requireSpec(s, indexPath, lshSpec(n, numHashes, bands))
     // ONE tokenization of the batch serves signatures AND verification
     val newSh = shingleSet(docs.filter(isNew), n).cache()
     try {
@@ -971,7 +860,10 @@ object Dedup {
         // candidates are materialized (eager checkpoint) — NOW the index
         // may grow; the cached banding is reused, so the append costs one
         // |batch|-sized parquet write
-        appendBatch.foreach(appendBandedToIndex(newBanded, indexPath, _))
+        appendBatch.foreach { id =>
+          Stamped.appendOnce(s, indexPath, "band index", id)(
+            newBanded.write.mode("overwrite").parquet(_))
+        }
         c
       } finally newBanded.unpersist()
       val candIds = cands.select(col("doc_a").as("doc_id"))
@@ -993,25 +885,25 @@ object Dedup {
     } finally newSh.unpersist()
   }
 
-  /** Materialize the corpus's dedup-group labels at `path` (idempotent on
-    * _SUCCESS, like [[ensureBandIndex]]): the minhash-LSH pair graph run
-    * through [[dedupGroups]], stored as (id, group_id) parquet. This is
-    * the second persisted artifact of the ingest loop — arrivals probe
-    * the band index for pairs, then fold them into these labels with
+  /** The corpus's dedup-group labels: the minhash-LSH pair graph run
+    * through [[dedupGroups]], as (id, group_id). This is the second
+    * persisted artifact of the ingest loop — arrivals probe the band
+    * index for pairs, then fold them into these labels with
     * [[incrementalGroups]] instead of re-running corpus CC.
     */
+  def groupLabels(docs: DataFrame, n: Int, numHashes: Int, bands: Int,
+                  verifyThreshold: Double): DataFrame =
+    dedupGroups(docs.select("doc_id"),
+        minhashLshPairsPortable(docs, n, numHashes, bands, verifyThreshold),
+        "doc_id")
+      .withColumnRenamed("doc_id", "id")
+
+  /** [[groupLabels]] published once as a parquet root at `path`. */
   def ensureGroupLabels(docs: DataFrame, path: String, n: Int, numHashes: Int,
-                        bands: Int, verifyThreshold: Double): Unit = {
-    val s = docs.sparkSession
-    val done = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(done)) {
-      val pairs = minhashLshPairsPortable(docs, n, numHashes, bands, verifyThreshold)
-      dedupGroups(docs.select("doc_id"), pairs, "doc_id")
-        .withColumnRenamed("doc_id", "id")
-        .write.mode("overwrite").parquet(path)
-    }
-  }
+                        bands: Int, verifyThreshold: Double): Unit =
+    Stamped.publish(docs.sparkSession, path)(
+      groupLabels(docs, n, numHashes, bands, verifyThreshold)
+        .write.mode("overwrite").parquet(_))
 
   /** Incremental connected-component maintenance: fold a batch of NEW
     * near-dup pairs into an existing fixpoint labeling without
@@ -1030,11 +922,13 @@ object Dedup {
     * then the same fixpoint over the union graph (property-tested
     * against full recomputation on random edge splits, EngineProps).
     *
-    * Scale shape: the corpus-sized label table is touched by ONE
-    * semi-join and ONE anti-join, both keyed on group_id — co-partition
-    * the stored labels by group_id and both collapse onto that layout;
-    * every other operand is sized by the batch and its touched
-    * components.
+    * Scale shape: the corpus-sized label table is read three times:
+    * by ONE semi-join and ONE anti-join, both keyed on group_id, and by
+    * the seeds lookup in [[relabelTouched]]
+    * (`ends.join(priorLabels, Seq("id"), "left")`), keyed on id.
+    * Co-partitioning the stored labels by group_id collapses the first
+    * two onto that layout but does not cover the id-keyed lookup; every
+    * other operand is sized by the batch and its touched components.
     */
   def incrementalGroups(priorLabels: DataFrame, newPairs: DataFrame): DataFrame = {
     val (seeds, relabeled) = relabelTouched(priorLabels, newPairs)

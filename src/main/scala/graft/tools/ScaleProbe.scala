@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
-import graft.sources.Tables
+import graft.sources.{Stamped, Tables}
 
 /** Scale-proportionality probe: run the heavy dedup/graph family at two
   * scale factors and measure how runtime and SHUFFLE-WRITE BYTES grow.
@@ -614,7 +614,7 @@ object ScaleProbe {
   /** Deterministic ×factor synthetic blow-up of the documents and
     * embeddings tables — the probe-only data for the second scale decade
     * (testdata stays read-only; the output lives under /tmp keyed by the
-    * source stamp, `_SUCCESS`-guarded like every stamped artifact).
+    * source stamp, each table published once like every stamped artifact).
     *
     * The blow-up must look like MORE data, not 10 copies of the same
     * data — for EVERY modality derived from it, not just text shingles
@@ -655,9 +655,7 @@ object ScaleProbe {
       "_" + graft.sources.Stamped.stampOf(srcDir, "embeddings.parquet")
     val tag = srcDir.replaceAll("[^A-Za-z0-9]", "_")
     val out = s"/tmp/graft_decade_${tag}_x${factor}_v2_$stamp"
-    def done(table: String): Boolean =
-      new java.io.File(s"$out/$table.parquet/_SUCCESS").exists()
-    if (!done("documents")) {
+    Stamped.publish(s, s"$out/documents.parquet") { dir =>
       val docs = Tables.table(s, srcDir, "documents")
       unionAll((0 until factor).map { r =>
         if (r == 0) docs
@@ -669,9 +667,9 @@ object ScaleProbe {
             t.as("text"), col("lang"), col("source"),
             length(t).cast("long").as("n_chars"))
         }
-      }).write.mode("overwrite").parquet(s"$out/documents.parquet")
+      }).write.mode("overwrite").parquet(dir)
     }
-    if (!done("embeddings")) {
+    Stamped.publish(s, s"$out/embeddings.parquet") { dir =>
       val emb = Tables.table(s, srcDir, "embeddings")
       unionAll((0 until factor).map { r =>
         if (r == 0) emb
@@ -683,7 +681,7 @@ object ScaleProbe {
             expr(s"array(${rot.mkString(",")})").as("embedding"),
             col("label"))
         }
-      }).write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+      }).write.mode("overwrite").parquet(dir)
     }
     out
   }

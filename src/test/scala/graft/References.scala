@@ -4,23 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
-import graft.text.Dedup
 
 /** Exact, unscalable formulations the specs hold the production operators
   * to. None of them runs in a query: each is the plain declarative answer
   * that a native aggregate or a banded candidate path must reproduce.
   */
 object References {
-
-  /** MinHash signatures: numHashes independent min-hashes of the shingle
-    * set, one `min(xxhash64(i, s))` column per hash — the reference for
-    * [[graft.text.Dedup.minhashSignaturesAgg]] (output: doc_id, h0..h{n-1}).
-    */
-  def minhashSignatures(docs: DataFrame, n: Int, numHashes: Int): DataFrame = {
-    val sh = Dedup.shingleSet(docs, n)
-    val aggs = (0 until numHashes).map(i => min(xxhash64(lit(i), col("s"))).as(s"h$i"))
-    sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-  }
 
   /** All-pairs near-duplicates above a cosine threshold, as an O(n²)
     * nested-loop product — the exact baseline for

@@ -34,14 +34,8 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSuite {
       "SELECT word_shingles(array('a','b','c'), 2) AS sh").collect().head
     assert(shingled.getSeq[String](0) == Seq("a b", "b c"))
 
-    // the aggregates: a 2-vector corpus's minhash signature width and the
-    // d=2 Gram upper triangle arity prove both TypedImperativeAggregates
-    // resolve and run through the injected path
-    val aggs = fresh.sql(
-      """SELECT minhash_agg(sh, 8) AS sig
-        |FROM (SELECT explode(array('x', 'y')) AS sh)""".stripMargin)
-      .collect().head
-    assert(aggs.getSeq[Long](0).length == 8)
+    // the aggregate: the d=2 Gram upper triangle arity proves a
+    // TypedImperativeAggregate resolves and runs through the injected path
     val gram = fresh.sql(
       """SELECT gram_agg(v) AS g
         |FROM (SELECT array(1.0D, 2.0D) AS v)""".stripMargin).collect().head

@@ -121,6 +121,72 @@ class StampedSpec extends AnyFunSuite with SparkSuite {
     assert(new java.io.File(leftovers.head, "_SUCCESS").exists())
   }
 
+  /** The entries of `parent` named `name` or staged for it. */
+  private def rootAndStaging(parent: java.io.File, name: String): Seq[String] =
+    Option(parent.listFiles()).getOrElse(Array.empty).map(_.getName)
+      .filter(n => n == name || n.startsWith(s"$name.staging_")).toSeq.sorted
+
+  test("a build that writes part of its output and then throws leaves no root and no staging") {
+    val parent = java.nio.file.Files.createTempDirectory("graft_publish_crash").toFile
+    val path = s"$parent/root"
+    var builds = 0
+    def build(fail: Boolean)(dir: String): Unit = {
+      builds += 1
+      spark.range(3).write.parquet(s"$dir/part")
+      if (fail) throw new IllegalStateException("build died mid-write")
+      spark.range(4).write.mode("overwrite").parquet(dir)
+    }
+    val e = intercept[IllegalStateException](Stamped.publish(spark, path)(build(fail = true)))
+    assert(e.getMessage == "build died mid-write")
+    assert(rootAndStaging(parent, "root").isEmpty,
+      s"a failed build must leave neither root nor staging: ${rootAndStaging(parent, "root")}")
+    // the next call builds and publishes
+    Stamped.publish(spark, path)(build(fail = false))
+    assert(builds == 2)
+    assert(rootAndStaging(parent, "root") == Seq("root"))
+    assert(Stamped.committed(spark, path))
+    assert(spark.read.parquet(path).count() == 4)
+    // and a published root is never rebuilt
+    Stamped.publish(spark, path)(build(fail = false))
+    assert(builds == 2)
+  }
+
+  test("ensureBandIndex publishes its marker and sidecar in the root, with no staging sibling") {
+    import spark.implicits._
+    val parent = java.nio.file.Files.createTempDirectory("graft_publish_band").toFile
+    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "alpha beta gamma delta epsilon eta")).toDF("doc_id", "text")
+    graft.text.Dedup.ensureBandIndex(docs, s"$parent/idx", n = 3, numHashes = 16, bands = 4)
+    val root = new java.io.File(parent, "idx")
+    assert(new java.io.File(root, "_SUCCESS").exists())
+    assert(new java.io.File(root, "_graft_lsh_spec").exists())
+    assert(new java.io.File(root, "batch=base").isDirectory)
+    assert(rootAndStaging(parent, "idx") == Seq("idx"))
+  }
+
+  test("only Stamped names the commit marker or opens a spec sidecar") {
+    // every other main source goes through Stamped's four pieces; Bench and
+    // Verify, the benchmark and correctness harness, keep their own
+    val allowed = Set("sources/Stamped.scala", "Bench.scala", "Verify.scala")
+    val base = new java.io.File("src/main/scala/graft")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val sources = files(base)
+    assert(sources.size > 50, s"source tree not found under ${base.getAbsolutePath}")
+    val sidecar = "_graft_[a-z]+_spec".r
+    val io = """\.(open|create)\(""".r
+    val offenders = sources.flatMap { f =>
+      val rel = base.toPath.relativize(f.toPath).toString
+      val text = java.nio.file.Files.readString(f.toPath)
+      val marker = text.contains("_SUCCESS")
+      val opensSidecar = sidecar.findFirstIn(text).isDefined && io.findFirstIn(text).isDefined
+      if (allowed(rel) || !(marker || opensSidecar)) None
+      else Some(rel + (if (marker) " names _SUCCESS" else " opens a spec sidecar"))
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("knnTop5's rk<=3 prefix IS the k=3 result (prefix-stability claim)") {
     // q_knn_join reads the stamped k=5 table filtered to rk<=3; that is
     // only sound if the deterministic ranking makes every smaller k a

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{References, SparkSuite}
+import graft.SparkSuite
 
 class DedupSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
@@ -252,25 +252,6 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     // reappear verbatim as a suffix of doc 2's chunk list — the
     // edit-robustness fixed windows lack
     assert(b.takeRight(a.length - 1) == a.tail)
-  }
-
-  test("minhash LSH surfaces the same pair after exact verification") {
-    // 16 bands of 2 rows: candidate prob at j=7/13 is 1-(1-j^2)^16 ≈ 0.996
-    // (8 bands of 4 would be a coin flip at this similarity)
-    val pairs = Dedup.minhashLshPairs(docs, n = 3, numHashes = 32, bands = 16,
-      verifyThreshold = 0.5).as[(Long, Long, Double)].collect()
-    assert(pairs.map(p => (p._1, p._2)).toSeq == Seq((1L, 2L)))
-    assert(math.abs(pairs.head._3 - 7.0 / 13.0) < 1e-12)
-  }
-
-  test("MinHashAgg signatures equal the column-per-hash formulation exactly") {
-    val cols = References.minhashSignatures(docs, n = 3, numHashes = 16)
-    val colSigs = cols.orderBy("doc_id").collect()
-      .map(r => r.getLong(0) -> (1 to 16).map(r.getLong).toSeq).toMap
-    val aggSigs = Dedup.minhashSignaturesAgg(docs, n = 3, numHashes = 16)
-      .orderBy("doc_id").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
-    assert(colSigs == aggSigs)
   }
 
   test("shingles guard: fewer than n tokens yields empty array, not a reversed sequence") {
