@@ -21,12 +21,6 @@ object Normalize {
   def withOrdinal(df: DataFrame, order: Column*): DataFrame =
     df.withColumn("_idx", row_number().over(Window.orderBy(order: _*)))
 
-  /** Keep only rows whose ordinal is in `keep` (pandas `iloc[[...]]`,
-    * src/ETL-NPL-Pipeline.py:125-126).
-    */
-  def rowsByOrdinal(df: DataFrame, order: Seq[Column], keep: Seq[Int]): DataFrame =
-    withOrdinal(df, order: _*).filter(col("_idx").isin(keep: _*))
-
   /** Header-aware CSV scan (reference `get_csv`, src:34-40) with an explicit
     * schema so types survive the text round-trip.
     */

@@ -5,11 +5,19 @@ import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.LocalFs
+
 /** Sinks (SURVEY.md §2.1 S6). The reference writes one timestamped CSV per
   * segment from a driver loop (src/ETL-NPL-Pipeline.py:769-793); at scale
   * the same intent is a single partitioned-parquet write — one job, all
   * segments, directory layout `segment=<v>/` so downstream reads
   * partition-prune instead of re-filtering.
+  *
+  * Every write runs in [[LocalFs.scoped]] on its target: on the local file
+  * system, without native Hadoop libraries, the committer's directories,
+  * the part files, their `.crc` files and the commit markers are created
+  * without forking `chmod` for each (9 processes per CSV mart, 27 per
+  * `Runner.run`, before the scope).
   */
 object Sink {
 
@@ -25,34 +33,21 @@ object Sink {
     * dimension-sized outputs ONLY — never for fact-sized data).
     */
   def writeCsv(df: DataFrame, dir: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(dir)
+    LocalFs.scoped(df.sparkSession, dir) {
+      df.coalesce(1).write.mode("overwrite").option("header", "true").csv(dir)
+    }
 
   /** Scale-shaped sink: parquet partitioned by low-cardinality columns.
     * Readers filtering on the partition column scan only its directories
     * (partition pruning); no coalesce — parallelism preserved.
     */
   def writePartitioned(df: DataFrame, dir: String, partitionCols: String*): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(dir)
+    LocalFs.scoped(df.sparkSession, dir) {
+      df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(dir)
+    }
 
   /** Read back a partitioned sink (partition columns are reconstructed from
     * the directory layout).
     */
   def readPartitioned(s: SparkSession, dir: String): DataFrame = s.read.parquet(dir)
-
-  /** Clustered sink: partition directories by `partitionCol`, rows inside
-    * every file ordered by `sortCols` (`sortWithinPartitions` — a local
-    * per-task sort, NO global shuffle). This is the time-series layout:
-    * parquet row-group min/max on the sort columns become tight, so a
-    * time-sliced read prunes row groups inside each partition directory —
-    * the second pruning level after directory pruning. The `repartition`
-    * on the partition column keeps one task per directory writing one
-    * file instead of tasks×directories fragments (the small-file problem
-    * at 100 TB); at larger per-partition volumes add a salt to split
-    * output files without losing intra-file order.
-    */
-  def writeClustered(df: DataFrame, dir: String, partitionCol: String,
-                     sortCols: String*): Unit =
-    df.repartition(org.apache.spark.sql.functions.col(partitionCol))
-      .sortWithinPartitions(partitionCol, sortCols: _*)
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(dir)
 }

@@ -52,9 +52,12 @@ object Stamped {
 
   private val Marker = "_SUCCESS"
 
+  /** The file system under `path`, from the session's Hadoop conf, so a
+    * [[LocalFs.scoped]] write sees [[LocalFs]].
+    */
   private def fsOf(s: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path)
-    (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
+    (p.getFileSystem(s.sessionState.newHadoopConf()), p)
   }
 
   /** Whether the directory at `path` is committed. */
@@ -64,11 +67,12 @@ object Stamped {
   }
 
   /** Write the partition or version directory `dir` inside a root once, in
-    * place: skipped when committed, else `write(dir)` runs and must end in
-    * a committing Spark write (its job commit drops the marker last).
+    * place: skipped when committed, else `write(dir)` runs in
+    * [[LocalFs.scoped]] and must end in a committing Spark write (its job
+    * commit drops the marker last).
     */
   def writeOnce(s: SparkSession, dir: String)(write: String => Unit): Unit =
-    if (!committed(s, dir)) write(dir)
+    if (!committed(s, dir)) LocalFs.scoped(s, dir)(write(dir))
 
   /** Write partition `batch=<batchId>` of the published root at `root`
     * once ([[writeOnce]]), under the root's `sub` directory ("" for the
@@ -163,13 +167,20 @@ object Stamped {
       fs.delete(root, true)
   }
 
+  private def isPublished(fs: FileSystem, root: Path, spec: Option[Spec]): Boolean =
+    fs.exists(new Path(root, Marker)) && spec.forall(sp => fs.exists(new Path(root, sp.file)))
+
+  /** A committed root costs one marker (and sidecar) probe. Otherwise the
+    * build, the sidecar, the marker and the rename run in
+    * [[LocalFs.scoped]].
+    */
   private def publishOnce(s: SparkSession, path: String, spec: Option[Spec])
                          (build: String => String): Unit = {
-    val (fs, root) = fsOf(s, path)
-    def published: Boolean = fs.exists(new Path(root, Marker)) &&
-      spec.forall(sp => fs.exists(new Path(root, sp.file)))
-    if (published) spec.foreach(requireSpec(s, path, _))
-    else {
+    val (probe, at) = fsOf(s, path)
+    if (isPublished(probe, at, spec)) spec.foreach(requireSpec(s, path, _))
+    else LocalFs.scoped(s, path) {
+      val (fs, root) = fsOf(s, path)
+      def published: Boolean = isPublished(fs, root, spec)
       val staging = new Path(
         path + ".staging_" + java.util.UUID.randomUUID().toString.take(8))
       try {

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery, Trigger}
 
 import graft.ops.Scalar
+import graft.sources.LocalFs
 
 /** Structured Streaming surface. The reference is batch-only ("manual-trigger
   * execution model", src/ETL-NPL-Pipeline.py:5), but its quarterly roll-ups
@@ -203,76 +203,51 @@ object EventStreams {
       }
   }
 
-  /** Run `body` with session conf `key` set to `value`, then put back the
-    * previous value, or unset the key if it had none — also on failure.
-    */
-  private def withConf[A](s: SparkSession, key: String, value: String)(body: => A): A = {
-    val old = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try body finally old.fold(s.conf.unset(key))(s.conf.set(key, _))
-  }
-
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily lowered —
     * a stateful streaming query bakes the setting into its state-store
     * layout at FIRST start (the checkpoint pins it thereafter), and every
     * micro-batch commits every state partition, so a low-cardinality
     * keyed state pays a per-partition store commit for partitions holding
     * a handful of keys (measured 6.3s → 2.6s on the interval join at
-    * 32 → 8 partitions, 150 users; most of that commit cost was the
-    * `readlink` each checkpoint-file rename forked, which [[drive]] now
-    * avoids on the local file system). Size to key cardinality / cluster
-    * at scale; the batch analytics setting is the wrong default for state.
-    * Restores the previous value even on failure.
+    * 32 → 8 partitions, 150 users). Each partition's commit writes its
+    * delta file and checkpoint entries through [[drive]]'s local-I/O
+    * scope, which forks no process per file. Size to key cardinality /
+    * cluster at scale; the batch analytics setting is the wrong default
+    * for state. Restores the previous value even on failure.
     */
   def withStatePartitions[A](s: SparkSession, parts: Int)(body: => A): A =
-    withConf(s, "spark.sql.shuffle.partitions", parts.toString)(body)
-
-  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
-  private val FileSystemManager =
-    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
-
-  /** Whether the query's checkpoint lands on the local file system: the
-    * explicit `checkpoint`, else the session's checkpoint root, else
-    * Spark's temp checkpoint (a scheme-less path, so the default FS).
-    */
-  private def localCheckpoint(s: SparkSession, checkpoint: Option[String]): Boolean = {
-    val conf = s.sessionState.newHadoopConf()
-    val fs = checkpoint.orElse(s.conf.getOption("spark.sql.streaming.checkpointLocation"))
-      .fold(FileSystem.get(conf))(new Path(_).getFileSystem(conf))
-    fs.isInstanceOf[LocalFileSystem]
-  }
+    LocalFs.withConf(s, "spark.sql.shuffle.partitions" -> parts.toString)(body)
 
   /** Start `writer` (checkpointed at `checkpoint`, or wherever the session
     * puts it when None), run `await` on the query, ALWAYS stop it, and
-    * return it. Every stream the program runs starts here.
+    * return it. Every stream and ingest drain the program runs starts
+    * here.
     *
-    * A checkpoint on the local file system goes through Spark's
-    * FileSystem-based checkpoint manager instead of its default FileContext
-    * one. Without native Hadoop libraries, FileContext's checksummed rename
-    * resolves every offset, commit, source-log and state file with
-    * `getFileLinkStatus`, which forks a `readlink` process: 320 per
-    * sessionize drive. On `file:` both managers end in the same
-    * `RawLocalFileSystem.rename`, so no atomicity is lost, and the `.crc`
-    * files and Spark's checkpoint checksums stay. Other file systems keep
-    * Spark's default.
-    *
-    * The setting holds for the whole drive, not just `start()`: the stream
-    * clones the session at start, but a file source opens its log later,
-    * on the stream thread, through the caller's session.
+    * The whole drive runs in [[LocalFs.scoped]] on the checkpoint's file
+    * system: the explicit `checkpoint`, else the session's checkpoint
+    * root, else Spark's temp checkpoint (a scheme-less path under
+    * `java.io.tmpdir`). On the local file system, without native Hadoop
+    * libraries, that scope removes the processes a drive forked per
+    * file: 320 `readlink` per sessionize drive from the checkpoint
+    * manager's renames, and 96 `chmod` from the offset, commit, source-log
+    * and state files, their `.crc` files and directories. It holds for the
+    * whole drive, not just `start()`: the stream clones the session at
+    * start (so `foreachBatch` writes inherit it), but a file source opens
+    * its log later, on the stream thread, through the caller's session.
     */
   def drive[T](s: SparkSession, writer: DataStreamWriter[T],
                checkpoint: Option[String] = None)(
       await: StreamingQuery => Unit): StreamingQuery = {
     val w = checkpoint.fold(writer)(writer.option("checkpointLocation", _))
-    def run(): StreamingQuery = {
+    val at = checkpoint.orElse(s.conf.getOption("spark.sql.streaming.checkpointLocation"))
+      .getOrElse(System.getProperty("java.io.tmpdir"))
+    LocalFs.scoped(s, at) {
       val q = w.start()
       // ALWAYS stop: a failure mid-drive would otherwise leave the query
       // active and every later start() under its name would fail.
       try await(q) finally q.stop()
       q
     }
-    if (localCheckpoint(s, checkpoint)) withConf(s, ManagerKey, FileSystemManager)(run())
-    else run()
   }
 
   /** Drain everything currently in the feed and stop

@@ -174,8 +174,7 @@ object IngestDedup {
       val full = d.union(prior.join(d.select("id"), Seq("id"), "left_anti"))
       full.write.mode("overwrite").parquet(s"$labelsPath/v=$v")
       val marker = new Path(s"$labelsPath/v=$v/$FullMarker")
-      marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .create(marker, true).close()
+      marker.getFileSystem(s.sessionState.newHadoopConf()).create(marker, true).close()
     } else {
       withSingles.write.mode("overwrite").parquet(s"$labelsPath/v=$v")
     }

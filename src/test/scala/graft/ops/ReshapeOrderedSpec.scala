@@ -48,9 +48,9 @@ class ReshapeOrderedSpec extends AnyFunSuite with SparkSuite {
     assert(got.toSeq == expected)
   }
 
-  test("withOrdinal + rowsByOrdinal recover pandas iloc picks (src:125-126)") {
+  test("withOrdinal recovers pandas iloc picks (src:125-126)") {
     val df = (1 to 10).map(i => (i * 100L, s"v$i")).toDF("key", "v")
-    val got = Normalize.rowsByOrdinal(df, Seq($"key"), Seq(2, 5, 9))
+    val got = Normalize.withOrdinal(df, $"key").filter($"_idx".isin(2, 5, 9))
       .orderBy("_idx").select("v").as[String].collect()
     assert(got.toSeq == Seq("v2", "v5", "v9"))
   }

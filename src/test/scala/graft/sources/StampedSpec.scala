@@ -164,6 +164,24 @@ class StampedSpec extends AnyFunSuite with SparkSuite {
     assert(rootAndStaging(parent, "idx") == Seq("idx"))
   }
 
+  test("a Stamped build and a spec'd publish fork no chmod or readlink") {
+    clearArtifact("spec_forks")
+    val indexRoot = java.nio.file.Files.createTempDirectory("graft_spec_forks").toString + "/idx"
+    var rows = 0L
+    val cmds = graft.Forks.during {
+      rows = Stamped.ensure(spark, dir, "region.parquet", "spec_forks") {
+        spark.range(5).toDF("id")
+      }.count()
+      Stamped.publish(spark, indexRoot, Stamped.Spec("index", "_graft_forks_spec", "p=1")()) {
+        d => spark.range(3).write.parquet(d); "p=1"
+      }
+    }
+    assert(rows == 5)
+    assert(Stamped.requireSpec(spark, indexRoot,
+      Stamped.Spec("index", "_graft_forks_spec", "p=1")()) == "p=1")
+    graft.Forks.assertNoFsForks(cmds)
+  }
+
   test("only Stamped names the commit marker or opens a spec sidecar") {
     // every other main source goes through Stamped's four pieces; Bench and
     // Verify, the benchmark and correctness harness, keep their own

@@ -270,45 +270,40 @@ class EventStreamsSpec extends AnyFunSuite with SparkSuite {
       "event_type" -> StringType, "value" -> DoubleType, "props" -> StringType))
   }
 
-  // Every stream goes through EventStreams.drive: on the local file system
-  // its checkpoint files are renamed without forking a `readlink` per file,
-  // and the session's checkpoint-manager setting comes back as it was,
-  // whether the drive succeeds or fails.
+  // Every stream goes through EventStreams.drive, in the local-I/O scope
+  // of LocalFs: on the local file system its checkpoint and state files
+  // are created and renamed without forking `chmod` or `readlink`, and
+  // the session's file-system and checkpoint-manager settings come back
+  // as they were, whether the drive succeeds or fails.
 
   private val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
   private val fileContextManager =
     "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+  private val scopedKeys =
+    Seq(managerKey, "fs.file.impl", "fs.file.impl.disable.cache")
+  private def scopedSettings: Seq[Option[String]] = scopedKeys.map(spark.conf.getOption)
+  private val inScope = Seq(
+    Some("org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"),
+    Some("graft.sources.LocalFs"), Some("true"))
 
-  /** The command line of every process this JVM started while `body` ran,
-    * read back from an in-process JFR recording of `jdk.ProcessStart`.
+  /** Run `body` with the manager key set to the FileContext manager and
+    * the cache key set to false (fs.file.impl stays unset), then unset
+    * all three keys.
     */
-  private def forks(body: => Unit): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val rec = new jdk.jfr.Recording()
-    val out = java.nio.file.Files.createTempFile("forks", ".jfr")
-    try {
-      rec.enable("jdk.ProcessStart")
-      rec.start()
-      try body finally rec.stop()
-      rec.dump(out)
-      jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.toSeq
-        .map(_.getString("command"))
-    } finally { rec.close(); java.nio.file.Files.deleteIfExists(out) }
+  private def withPresetScopeKeys(body: => Unit): Unit = {
+    spark.conf.set(managerKey, fileContextManager)
+    spark.conf.set("fs.file.impl.disable.cache", "false")
+    try body finally scopedKeys.foreach(spark.conf.unset)
   }
-
-  private def assertNoReadlink(cmds: Seq[String]): Unit = {
-    val readlinks = cmds.filter(_.startsWith("readlink"))
-    assert(readlinks.size == 0,
-      s"readlink forks, of ${cmds.size} forks in all; first: ${readlinks.headOption}")
-  }
+  private val preset = Seq(Some(fileContextManager), None, Some("false"))
 
   test("a sessionize drive renames its checkpoint files without forking readlink") {
     var rows = 0L
-    val cmds = forks {
+    val cmds = graft.Forks.during {
       rows = graft.SparkEntry.queries("q_stream_sessionize")(spark, dir).count()
     }
     assert(rows > 0)
-    assertNoReadlink(cmds)
+    graft.Forks.assertNoFsForks(cmds)
   }
 
   test("an ingest-dedup drain renames its checkpoint files without forking readlink") {
@@ -324,14 +319,14 @@ class EventStreamsSpec extends AnyFunSuite with SparkSuite {
       .toDF("doc_id", "text"), docsP, idx, labelsP, p)
     Seq((10L, "red orange yellow green blue indigo violet pink brown black white"))
       .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(feed)
-    val cmds = forks {
+    val cmds = graft.Forks.during {
       IngestDedup.runAvailable(
         spark.readStream.schema("doc_id BIGINT, text STRING").parquet(feed),
         docsP, idx, labelsP, tmp("ckpt_ingest_ckpt"), p)
     }
     assert(IngestDedup.labels(spark, labelsP).orderBy("id")
       .as[(Long, Long)].collect().toSeq == Seq((1L, 1L), (10L, 10L)))
-    assertNoReadlink(cmds)
+    graft.Forks.assertNoFsForks(cmds)
   }
 
   private def quarterlyTo(name: String) =
@@ -339,43 +334,68 @@ class EventStreamsSpec extends AnyFunSuite with SparkSuite {
       .writeStream.outputMode(OutputMode.Update).format("memory").queryName(name)
 
   test("a drive restores a set checkpoint-manager setting, and overrides it meanwhile") {
-    spark.conf.set(managerKey, fileContextManager)
-    try {
-      var during: Option[String] = None
+    withPresetScopeKeys {
+      var during: Seq[Option[String]] = Nil
       EventStreams.drive(spark, quarterlyTo("ckpt_set")) { q =>
-        during = spark.conf.getOption(managerKey)
+        during = scopedSettings
         q.processAllAvailable()
       }
-      assert(during.exists(_.endsWith("FileSystemBasedCheckpointFileManager")))
-      assert(spark.conf.getOption(managerKey) == Some(fileContextManager))
+      assert(during == inScope)
+      assert(scopedSettings == preset)
       assert(spark.table("ckpt_set").count() > 0)
-    } finally spark.conf.unset(managerKey)
+    }
   }
 
   test("a drive leaves an unset checkpoint-manager setting unset") {
-    assert(spark.conf.getOption(managerKey).isEmpty)
+    assert(scopedSettings.forall(_.isEmpty))
     EventStreams.drive(spark, quarterlyTo("ckpt_unset"))(_.processAllAvailable())
-    assert(spark.conf.getOption(managerKey).isEmpty)
+    assert(scopedSettings.forall(_.isEmpty))
     assert(spark.table("ckpt_unset").count() > 0)
   }
 
   test("a failing drive restores the setting and leaves no query running") {
-    spark.conf.set(managerKey, fileContextManager)
-    try {
+    withPresetScopeKeys {
       val failing = EventStreams.readEventStream(spark, feedDir)
         .select(raise_error(lit("injected failure")).as("x"))
       intercept[Exception] {
         EventStreams.runToCompletion(spark, failing, "ckpt_failing", OutputMode.Append)
       }
-      assert(spark.conf.getOption(managerKey) == Some(fileContextManager))
-      spark.conf.unset(managerKey)
+      assert(scopedSettings == preset)
+      scopedKeys.foreach(spark.conf.unset)
       intercept[IllegalStateException] {
         EventStreams.drive(spark, quarterlyTo("ckpt_await_throws")) { _ =>
           throw new IllegalStateException("await failed")
         }
       }
-      assert(spark.conf.getOption(managerKey).isEmpty)
+      assert(scopedSettings.forall(_.isEmpty))
       assert(spark.streams.active.isEmpty)
-    } finally spark.conf.unset(managerKey)
+    }
+  }
+
+  test("a failing Sink.writeCsv restores the file-system settings") {
+    withPresetScopeKeys {
+      val out = java.nio.file.Files.createTempDirectory("graft_sink_fail").toString + "/csv"
+      intercept[Exception] {
+        graft.pipeline.Sink.writeCsv(
+          spark.range(3).select(raise_error(lit("injected failure")).as("x")), out)
+      }
+      assert(scopedSettings == preset)
+    }
+  }
+
+  test("a Stamped.writeOnce nested in a drive keeps the drive's settings until the drive ends") {
+    val root = java.nio.file.Files.createTempDirectory("graft_nested").toString
+    var inWrite, afterWrite: Seq[Option[String]] = Nil
+    EventStreams.drive(spark, quarterlyTo("ckpt_nested")) { q =>
+      q.processAllAvailable()
+      graft.sources.Stamped.writeOnce(spark, s"$root/v=1") { d =>
+        inWrite = scopedSettings
+        spark.range(3).write.mode("overwrite").parquet(d)
+      }
+      afterWrite = scopedSettings
+    }
+    assert(inWrite == inScope && afterWrite == inScope)
+    assert(scopedSettings.forall(_.isEmpty))
+    assert(graft.sources.Stamped.committed(spark, s"$root/v=1"))
   }
 }
