@@ -9,7 +9,7 @@ import graft.ingest.Normalize
 import graft.multimodal.Media
 import graft.ops.{Ordered, Profile, Reshape, Scalar}
 import graft.sim.Similarity
-import graft.sources.Tables
+import graft.sources.{LocalFs, Tables}
 import graft.text.{Dedup, TextOps}
 
 import graft.entry.EntryHelpers._
@@ -487,7 +487,9 @@ private[graft] object AnalyticsQueries {
     */
   private def qScanJsonl(s: SparkSession, dir: String): DataFrame = {
     val tmp = tmpDir("scan_jsonl", dir)
-    Tables.table(s, dir, "nation").coalesce(1).write.mode("overwrite").json(tmp)
+    LocalFs.scoped(s, tmp) {
+      Tables.table(s, dir, "nation").coalesce(1).write.mode("overwrite").json(tmp)
+    }
     s.read.schema("n_nationkey INT, n_name STRING, n_regionkey INT").json(tmp)
       .orderBy("n_nationkey")
   }

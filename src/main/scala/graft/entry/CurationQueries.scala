@@ -9,7 +9,7 @@ import graft.ingest.Normalize
 import graft.multimodal.Media
 import graft.ops.{Ordered, Profile, Reshape, Scalar}
 import graft.sim.Similarity
-import graft.sources.Tables
+import graft.sources.{LocalFs, Tables}
 import graft.text.{Dedup, TextOps}
 
 import graft.entry.EntryHelpers._
@@ -389,11 +389,13 @@ private[graft] object CurationQueries {
     val ev = Tables.events(s, dir)
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
       .select("event_id", "day", "event_type", "value")
-    ev.write.mode("overwrite").partitionBy("day").parquet(tmp)
-    ev.filter(col("day") === "2024-01-15")
-      .withColumn("value", col("value") * 2)
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day").parquet(tmp)
+    graft.pipeline.Sink.writePartitioned(ev, tmp, "day")
+    LocalFs.scoped(s, tmp) {
+      ev.filter(col("day") === "2024-01-15")
+        .withColumn("value", col("value") * 2)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day").parquet(tmp)
+    }
     s.read.parquet(tmp)
       // partition-dir names type-infer back as DATE; the declared schema
       // (and the oracle) keep the day a plain string

@@ -9,7 +9,7 @@ import graft.ingest.Normalize
 import graft.multimodal.Media
 import graft.ops.{Ordered, Profile, Reshape, Scalar}
 import graft.sim.Similarity
-import graft.sources.Tables
+import graft.sources.{LocalFs, Tables}
 import graft.text.{Dedup, TextOps}
 
 import graft.entry.EntryHelpers._
@@ -303,15 +303,17 @@ private[graft] object GraphQualityQueries {
     val tmp = tmpDir("evolve", dir)
     val o = Tables.table(s, dir, "orders")
     val cutoff = lit("1998-01-01").cast("timestamp")
-    o.filter(col("o_orderdate") < cutoff)
-      .select("o_orderkey", "o_totalprice")
-      .write.mode("overwrite").parquet(s"$tmp/batch=1")
-    // NULL dates route to the v2 batch (matching the oracle's CASE, where
-    // a NULL date falls through to the real priority) — a bare >= would
-    // silently drop them from BOTH batches
-    o.filter(col("o_orderdate") >= cutoff || col("o_orderdate").isNull)
-      .select("o_orderkey", "o_totalprice", "o_orderpriority")
-      .write.mode("overwrite").parquet(s"$tmp/batch=2")
+    LocalFs.scoped(s, tmp) {
+      o.filter(col("o_orderdate") < cutoff)
+        .select("o_orderkey", "o_totalprice")
+        .write.mode("overwrite").parquet(s"$tmp/batch=1")
+      // NULL dates route to the v2 batch (matching the oracle's CASE, where
+      // a NULL date falls through to the real priority) — a bare >= would
+      // silently drop them from BOTH batches
+      o.filter(col("o_orderdate") >= cutoff || col("o_orderdate").isNull)
+        .select("o_orderkey", "o_totalprice", "o_orderpriority")
+        .write.mode("overwrite").parquet(s"$tmp/batch=2")
+    }
     s.read.option("mergeSchema", "true").parquet(tmp)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),

@@ -33,8 +33,7 @@ private[graft] object RelationalQueries {
     */
   private def qScanCsv(s: SparkSession, dir: String): DataFrame = {
     val tmp = tmpDir("scan_csv", dir)
-    Tables.table(s, dir, "region").coalesce(1).write.mode("overwrite")
-      .option("header", "true").csv(tmp)
+    graft.pipeline.Sink.writeCsv(Tables.table(s, dir, "region"), tmp)
     Normalize.readCsv(s, tmp, StructType.fromDDL("r_regionkey INT, r_name STRING"))
       .orderBy("r_regionkey")
   }
@@ -83,9 +82,9 @@ private[graft] object RelationalQueries {
     */
   private def qSinkRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val tmp = tmpDir("sink", dir)
-    Tables.table(s, dir, "orders").groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_orders"))
-      .coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
+    graft.pipeline.Sink.writeCsv(
+      Tables.table(s, dir, "orders").groupBy("o_orderpriority")
+        .agg(count(lit(1)).as("n_orders")), tmp)
     Normalize.readCsv(s, tmp, StructType.fromDDL("o_orderpriority STRING, n_orders BIGINT"))
       .orderBy("o_orderpriority")
   }

@@ -9,7 +9,7 @@ import graft.ingest.Normalize
 import graft.multimodal.Media
 import graft.ops.{Ordered, Profile, Reshape, Scalar}
 import graft.sim.Similarity
-import graft.sources.Tables
+import graft.sources.{LocalFs, Tables}
 import graft.text.{Dedup, TextOps}
 
 import graft.entry.EntryHelpers._
@@ -632,8 +632,10 @@ private[graft] object StatStreamQueries {
     */
   private def qSinkJsonl(s: SparkSession, dir: String): DataFrame = {
     val tmp = tmpDir("sink_jsonl", dir)
-    Tables.events(s, dir).select("event_id", "event_type", "value")
-      .write.mode("overwrite").json(tmp)
+    LocalFs.scoped(s, tmp) {
+      Tables.events(s, dir).select("event_id", "event_type", "value")
+        .write.mode("overwrite").json(tmp)
+    }
     s.read.schema("event_id BIGINT, event_type STRING, value DOUBLE").json(tmp)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), Scalar.stableSum(col("value")).as("sum_value"))
@@ -648,8 +650,10 @@ private[graft] object StatStreamQueries {
     */
   private def qSinkXml(s: SparkSession, dir: String): DataFrame = {
     val tmp = tmpDir("sink_xml", dir)
-    Tables.events(s, dir).select("event_id", "event_type", "value")
-      .write.mode("overwrite").option("rowTag", "event").format("xml").save(tmp)
+    LocalFs.scoped(s, tmp) {
+      Tables.events(s, dir).select("event_id", "event_type", "value")
+        .write.mode("overwrite").option("rowTag", "event").format("xml").save(tmp)
+    }
     s.read.schema("event_id BIGINT, event_type STRING, value DOUBLE")
       .option("rowTag", "event").format("xml").load(tmp)
       .groupBy("event_type")

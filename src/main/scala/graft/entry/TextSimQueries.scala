@@ -10,6 +10,7 @@ import graft.multimodal.Media
 import graft.ops.{Ordered, Profile, Reshape, Scalar}
 import graft.sim.Similarity
 import graft.sources.{Stamped, Tables}
+import graft.streaming.Ingest
 import graft.text.{Dedup, TextOps}
 
 import graft.entry.EntryHelpers._
@@ -136,21 +137,10 @@ private[graft] object TextSimQueries {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Publish the stream feed at `feed` once ([[Stamped.publish]]): each
-    * frame lands as ONE file, so `maxFilesPerTrigger = 1` replays it as
-    * one micro-batch. Returns `feed`.
-    */
-  private def publishFeed(s: SparkSession, feed: String,
-                          batches: DataFrame*): String = {
-    Stamped.publish(s, feed)(dir =>
-      batches.foreach(_.coalesce(1).write.mode("append").parquet(dir)))
-    feed
-  }
-
   /** X1 the ingest-dedup loop run as a STREAM (graft.streaming.IngestDedup):
     * the base corpus (doc_id ≡ 0,1,2 mod 5) bootstraps the doc store, band
     * index, and label version b000000000; the two remaining fifths arrive
-    * as one-file micro-batches through a file feed. Each foreachBatch
+    * as one-file micro-batches through a file feed. Each micro-batch
     * lands the arrivals, probes + grows the index, folds the pairs into a
     * NEW committed label version. CC associativity makes the final labels
     * equal the full-corpus LSH recompute, so the oracle is the same SQL as
@@ -168,14 +158,12 @@ private[graft] object TextSimQueries {
     graft.streaming.IngestDedup.ensureIngestState(
       docs.filter(m < 3).select("doc_id", "text"),
       s"$root/docs", s"$root/idx", s"$root/labels", p)
-    val feedDir = publishFeed(s, s"$root/feed",
+    val feed = Ingest.publish(s, s"$root/feed",
       docs.filter(m === 3L).select("doc_id", "text"),
       docs.filter(m === 4L).select("doc_id", "text"))
-    val stream = s.readStream.schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", 1) // one feed file = one micro-batch
-      .parquet(feedDir)
-    graft.streaming.IngestDedup.runAvailable(stream, s"$root/docs",
-      s"$root/idx", s"$root/labels", s"$root/ckpt", p).awaitTermination()
+    Ingest.drain(Ingest.open(s, feed), s"$root/ckpt")(
+      graft.streaming.IngestDedup.processBatch(_, _, s"$root/docs",
+        s"$root/idx", s"$root/labels", p))
     graft.streaming.IngestDedup.labels(s, s"$root/labels")
       .select(col("id").as("doc_id"), col("group_id"))
       .orderBy("doc_id")
@@ -446,7 +434,7 @@ private[graft] object TextSimQueries {
   /** X2 the IVF ingest loop run as a STREAM (graft.streaming.IngestIvf):
     * the corpus 3/5 bootstraps the refined centroid index; the two
     * remaining fifths arrive as one-file micro-batches and each
-    * foreachBatch assigns them against the STORED centroids, landing
+    * micro-batch assigns them against the STORED centroids, landing
     * write-once batch partitions. Assignments are per-vector
     * functions of exact integer centroids, so the streamed result equals
     * the batch replay — the oracle runs the Lloyd chain over the corpus
@@ -460,14 +448,11 @@ private[graft] object TextSimQueries {
     val root = s"${tmpDir("ivf_loop", dir)}_k8i2_$stamp"
     graft.streaming.IngestIvf.ensureIvfState(
       emb.filter(m < 3), s"$root/idx", k = 8, iters = 2)
-    val feedDir = publishFeed(s, s"$root/feed",
+    val feed = Ingest.publish(s, s"$root/feed",
       emb.filter(m === 3L).select("vec_id", "embedding"),
       emb.filter(m === 4L).select("vec_id", "embedding"))
-    val stream = s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", 1) // one feed file = one micro-batch
-      .parquet(feedDir)
-    graft.streaming.IngestIvf.runAvailable(stream, s"$root/idx",
-      s"$root/assigns", s"$root/ckpt").awaitTermination()
+    Ingest.drain(Ingest.open(s, feed), s"$root/ckpt")(
+      graft.streaming.IngestIvf.processBatch(_, _, s"$root/idx", s"$root/assigns"))
     graft.streaming.IngestIvf.assignments(s, s"$root/assigns")
       .select("vec_id", "cluster", "dist")
       .orderBy("vec_id")
@@ -475,7 +460,7 @@ private[graft] object TextSimQueries {
 
   /** X2 the PQ encode loop run as a STREAM (graft.streaming.IngestPq):
     * the corpus 3/5 trains the stored codebook; the two remaining fifths
-    * arrive as one-file micro-batches and each foreachBatch encodes them
+    * arrive as one-file micro-batches and each micro-batch encodes them
     * against the STORED codebook, landing write-once
     * sub-partitioned batch directories. Codes are per-vector functions
     * of exact integer codewords, so the streamed store equals the batch
@@ -489,14 +474,11 @@ private[graft] object TextSimQueries {
     val root = s"${tmpDir("pq_loop", dir)}_m8k8i2_$stamp"
     graft.streaming.IngestPq.ensurePqState(
       emb.filter(m < 3), s"$root/idx", m = 8, k = 8, iters = 2)
-    val feedDir = publishFeed(s, s"$root/feed",
+    val feed = Ingest.publish(s, s"$root/feed",
       emb.filter(m === 3L).select("vec_id", "embedding"),
       emb.filter(m === 4L).select("vec_id", "embedding"))
-    val stream = s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", 1) // one feed file = one micro-batch
-      .parquet(feedDir)
-    graft.streaming.IngestPq.runAvailable(stream, s"$root/idx",
-      s"$root/codes", s"$root/ckpt", m = 8).awaitTermination()
+    Ingest.drain(Ingest.open(s, feed), s"$root/ckpt")(
+      graft.streaming.IngestPq.processBatch(_, _, s"$root/idx", s"$root/codes", m = 8))
     graft.streaming.IngestPq.codes(s, s"$root/codes")
       .select(col("vec_id"), col("sub"), col("cluster").as("code"), col("dist"))
       .orderBy("vec_id", "sub")
@@ -523,10 +505,10 @@ private[graft] object TextSimQueries {
     Stamped.publish(s, feedDir) { dir =>
       // Pin STRICTLY SPACED mtimes on the two feed writes: centroids
       // EVOLVE per batch, so micro-batch order is part of this query's
-      // semantics — and FileStreamSource orders its maxFilesPerTrigger=1
-      // batches by file modification time, which has millisecond
-      // granularity. Two back-to-back coalesce(1) writes can land with
-      // EQUAL mtimes, letting the m=4 fifth process before m=3 and
+      // semantics — and FileStreamSource orders its one-file batches
+      // by file modification time, which has millisecond granularity.
+      // Two back-to-back coalesce(1) writes can land with EQUAL
+      // mtimes, letting the m=4 fifth process before m=3 and
       // breaking the oracle's fixed k1/k2 unroll nondeterministically.
       // The part filenames are writer UUIDs, so WHICH file holds which
       // fifth is recorded by diffing the listing between the writes.
@@ -543,11 +525,8 @@ private[graft] object TextSimQueries {
         f.setLastModified(if (firstWrite(f.getName)) base - 8000 else base - 4000)
       }
     }
-    val stream = s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir)
-    graft.streaming.StreamKmeans.runAvailable(stream, s"$root/stats",
-      s"$root/ckpt").awaitTermination()
+    Ingest.drain(Ingest.open(s, feedDir), s"$root/ckpt")(
+      graft.streaming.StreamKmeans.processBatch(_, _, s"$root/stats"))
     graft.streaming.StreamKmeans.centroids(s, s"$root/stats")
       .orderBy("cluster", "pos")
   }
@@ -1027,7 +1006,7 @@ private[graft] object TextSimQueries {
     * micro-batches arrive — the planted resize siblings (ids +30M),
     * then RE-UPLOADS of their source docs (same bytes, new ids +60M:
     * the re-upload-after-re-encode arrival order a production near-dup
-    * loop must close over). Each foreachBatch probes the index, appends
+    * loop must close over). Each micro-batch probes the index, appends
     * its own `batch=` partition, and lands its verified matches behind
     * a commit marker — batch 2's matches against batch 1's arrivals come
     * THROUGH THE GROWN INDEX alone, no corpus re-bucketing between
@@ -1044,7 +1023,7 @@ private[graft] object TextSimQueries {
     * are per-vector functions of the frozen planes, so the streamed
     * store equals the batch replay with the loop-closure restriction
     * spelled as the oracle hits predicate. Warm re-runs skip committed
-    * batches. The feed is published once ([[publishFeed]]), so an
+    * batches. The feed is published once ([[Ingest.publish]]), so an
     * interrupt mid-staging never leaves a half-visible feed that a
     * replay would re-append and duplicate.
     */
@@ -1061,14 +1040,12 @@ private[graft] object TextSimQueries {
       .filter(col("doc_id") < 30000000L &&
         pmod(col("doc_id"), lit(4L)) === 1L && length(col("text")) >= 256)
       .select((col("doc_id") + lit(60000000L)).as("doc_id"), col("text"))
-    val feedDir = publishFeed(s, s"$root/feed",
+    val feed = Ingest.publish(s, s"$root/feed",
       mediaSemFeatures(s, dir).filter(col("vec_id") >= 30000000L),
       Media.bovwFeatures(s, reups))
-    val stream = s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", 1) // one feed file = one micro-batch
-      .parquet(feedDir)
-    graft.streaming.IngestSemBand.runAvailable(stream, s"$root/idx",
-      s"$root/matches", s"$root/ckpt", p, threshold = 0.6).awaitTermination()
+    Ingest.drain(Ingest.open(s, feed), s"$root/ckpt")(
+      graft.streaming.IngestSemBand.processBatch(_, _, s"$root/idx",
+        s"$root/matches", p, threshold = 0.6))
     val all = graft.streaming.IngestSemBand.matches(s, s"$root/matches")
       // a re-upload's exact copy is trivially sim-1.0 — exclude it so the
       // argmax reports the best GENUINE near-dup (usually the batch-1
@@ -2127,7 +2104,7 @@ private[graft] object TextSimQueries {
     // question: each micro-batch folds its pairs in, and CC associativity
     // makes the fixpoint independent of how the corpus was batched — so
     // the identical recompute-from-scratch SQL is the oracle, now
-    // witnessing the whole foreachBatch loop (land, probe, grow, fold).,
+    // witnessing the whole micro-batch loop (land, probe, grow, fold).,
     "q_ingest_stream" -> lshGroupsOracle,
     // Signatures are per-doc functions, so incremental batch-vs-corpus
     // dedup == the full-corpus LSH pair list restricted to pairs with

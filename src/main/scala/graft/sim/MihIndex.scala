@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.Stamped
@@ -36,16 +36,14 @@ import graft.sources.Stamped
   * Hamming space, forced by atom-heavy signatures like per-frame video
   * hashes): the capped semantics need each endpoint's half-key bucket
   * size over the WHOLE corpus-so-far, which naively costs a corpus
-  * groupBy per batch. Instead the store maintains the MONOTONE HOT SET
-  * under `path/_hot/batch=…`: the index is append-only, so a key's
-  * count only changes when an arriving batch CONTAINS it — newly-hot
-  * keys are exactly the batch's own keys whose (corpus-so-far + batch)
-  * count crosses the cap, computable from one broadcast-semi-joined
-  * index scan with a |batch|-key shuffle. Inductively the accumulated
-  * hot set after batch N equals {key : count over base ∪ batches 1..N
-  * > cap} — the exact capped semantics of a full recompute — because a
-  * key crossing the cap at some prefix must appear in that prefix's
-  * last contributing batch. Cool flags are then two broadcast lookups
+  * groupBy per batch. Instead the store keeps the MONOTONE HOT SET of
+  * (half, k) keys under `path/_hot/batch=…` ([[HotKeys]], shared with
+  * [[SignBandIndex]]): newly-hot keys are exactly the batch's own keys
+  * whose (corpus-so-far + batch) count crosses the cap, computable from
+  * one broadcast-semi-joined index scan with a |batch|-key shuffle, and
+  * the accumulated hot set after batch N equals {key : count over
+  * base ∪ batches 1..N > cap} — the exact capped semantics of a full
+  * recompute. Cool flags are then two broadcast lookups
   * against the (tiny) hot set on each side; the corpus side pays only
   * the scan it already pays for the probe join.
   *
@@ -82,31 +80,18 @@ object MihIndex {
     Stamped.publish(s, path, spec) { dir =>
       Hamming.checkedHalves(hashes, idCol).withColumn("batch", lit("base"))
         .write.mode("overwrite").partitionBy("batch").parquet(dir)
-      p.maxKeyDf.foreach(cap => baseHot(s.read.parquet(dir), cap)
-        .write.mode("overwrite").parquet(s"$dir/_hot/batch=base"))
+      p.maxKeyDf.foreach(cap =>
+        Hot.writeBase(dir, Hot.over(Hot.counts(keys(s.read.parquet(dir))), cap)))
       spec.want
     }
   }
 
-  /** Hot keys of a standing hash table: (half, k) whose bucket size
-    * exceeds the cap — one groupBy per half, paid once at build.
-    */
-  private def baseHot(index: DataFrame, cap: Int): DataFrame =
-    index.select(posexplode(array(col("h1"), col("h2"))).as(Seq("half", "k")))
-      .groupBy("half", "k").agg(count(lit(1)).as("n"))
-      .filter(col("n") > cap).select("half", "k")
+  /** The index's hot-key store: one key per (half, value). */
+  private val Hot = HotKeys(Seq("half", "k"))
 
-  /** The accumulated hot set (base + every ingested batch's newly-hot
-    * keys). Distinct-folded: a key can cross the cap only once (counts
-    * are monotone under append-only batches), but a replayed batch may
-    * have re-written its partition.
-    */
-  private def hotKeys(s: SparkSession, path: String,
-                      excludeBatch: Option[String]): DataFrame = {
-    val hot = s.read.parquet(s"$path/_hot")
-    excludeBatch.foldLeft(hot)((h, b) => h.filter(col("batch") =!= b))
-      .select("half", "k").distinct()
-  }
+  /** One (half, k) row per half of every signature in `df`. */
+  private def keys(df: DataFrame): DataFrame =
+    df.select(posexplode(array(col("h1"), col("h2"))).as(Seq("half", "k")))
 
   /** Incremental near-dup pairs of an arriving hash batch against a
     * corpus whose MIH index was persisted by [[ensureIndex]]: the batch
@@ -151,23 +136,10 @@ object MihIndex {
           lit(true).as("c1"), lit(true).as("c2"))
         (flag(batch), flag(index), None)
       case Some(cap) =>
-        // the batch's own key tallies (|batch|-sized)
-        val bk = batch
-          .select(posexplode(array(col("h1"), col("h2"))).as(Seq("half", "k")))
-          .groupBy("half", "k").agg(count(lit(1)).as("nb"))
-        // corpus-so-far counts FOR THE BATCH'S KEYS ONLY: the index scan
-        // is broadcast-semi-joined down to |batch| keys before the
-        // (map-side combinable) count — no corpus-key shuffle
-        val ck = index
-          .select(posexplode(array(col("h1"), col("h2"))).as(Seq("half", "k")))
-          .join(broadcast(bk.select("half", "k")), Seq("half", "k"), "left_semi")
-          .groupBy("half", "k").agg(count(lit(1)).as("nc"))
         // a key's count changes ONLY when the batch contains it — so the
         // newly-hot keys are exactly the batch keys crossing the cap now
-        val fresh = bk.join(ck, Seq("half", "k"), "left")
-          .filter(col("nb") + coalesce(col("nc"), lit(0L)) > cap)
-          .select("half", "k")
-        val hot = hotKeys(s, indexPath, appendBatch).union(fresh)
+        val fresh = Hot.over(Hot.tally(keys(batch), keys(index)), cap)
+        val hot = Hot.read(s, indexPath, appendBatch).union(fresh)
           .distinct().localCheckpoint()
         def flag(df: DataFrame) = df
           .join(broadcast(hot.filter(col("half") === 0).select(col("k").as("_hk1"))),
@@ -193,8 +165,7 @@ object MihIndex {
     // own append
     val out = all.localCheckpoint()
     appendBatch.foreach { id =>
-      newlyHot.foreach(nh => Stamped.appendOnce(s, indexPath, "MIH index", id,
-        "_hot/")(nh.write.mode("overwrite").parquet(_)))
+      newlyHot.foreach(Hot.append(s, indexPath, "MIH index", id, _))
       Stamped.appendOnce(s, indexPath, "MIH index", id)(
         batch.write.mode("overwrite").parquet(_))
     }

@@ -42,13 +42,13 @@ import graft.sources.Stamped
   *     dominant sign pattern, not similarity, and is dropped from the
   *     equi-join. The capped semantics need each key's count over the
   *     whole corpus-so-far, which naively costs a corpus groupBy per
-  *     batch — instead the store maintains the MONOTONE HOT SET under
-  *     `path/_hot/batch=…` (the [[MihIndex]] induction: the index is
-  *     append-only, so a key's count only changes when an arriving batch
-  *     CONTAINS it — newly-hot keys are computable from one
+  *     batch — instead the store keeps the MONOTONE HOT SET of
+  *     (band, bkt) keys under `path/_hot/batch=…` ([[HotKeys]], shared
+  *     with [[MihIndex]]: newly-hot keys come from one
   *     broadcast-semi-joined index scan with a |batch|-key shuffle, and
   *     the accumulated set after batch N equals the full recompute's
-  *     hot set over base ∪ batches 1..N);
+  *     hot set over base ∪ batches 1..N). The probe's tallies double as
+  *     its creep signal ([[ProbeStats]]);
   *   - appends are written once per batch partition
   *     ([[graft.sources.Stamped.appendOnce]]), and a replayed batch's
   *     partition is pruned out of its own probe.
@@ -119,25 +119,12 @@ object SignBandIndex {
       case SpecText(pl, _, _, _, e, mx) => Spec(pl.toInt, e.toLong, mx.toLong)
     }
 
-  /** Hot keys of a standing bucket table: (band, bkt) whose count exceeds
-    * the cap — one slim map-side-combinable groupBy, paid once at build.
-    */
-  private def baseHot(index: DataFrame, cap: Int): DataFrame =
-    index.select(posexplode(col("buckets")).as(Seq("band", "bkt")))
-      .groupBy("band", "bkt").agg(count(lit(1)).as("n"))
-      .filter(col("n") > cap).select("band", "bkt")
+  /** The index's hot-key store: one key per (band, bucket). */
+  private val Hot = HotKeys(Seq("band", "bkt"))
 
-  /** The accumulated hot set (base + every ingested batch's newly-hot
-    * keys). Distinct-folded: a key can cross the cap only once (counts
-    * are monotone under append-only batches), but a replayed batch may
-    * have re-written its partition.
-    */
-  private def hotKeys(s: SparkSession, path: String,
-                      excludeBatch: Option[String]): DataFrame = {
-    val hot = s.read.parquet(s"$path/_hot")
-    excludeBatch.foldLeft(hot)((h, b) => h.filter(col("batch") =!= b))
-      .select("band", "bkt").distinct()
-  }
+  /** One (band, bkt) row per band of every vector in `df`. */
+  private def keys(df: DataFrame): DataFrame =
+    df.select(posexplode(col("buckets")).as(Seq("band", "bkt")))
 
   /** Materialize the banded index of a vector table at `path`
     * (idempotent: a complete index is left untouched). Input: `emb` with
@@ -174,11 +161,8 @@ object SignBandIndex {
         .withColumn("batch", lit("base"))
         .write.mode("overwrite").partitionBy("batch").parquet(dir)
       val stored = s.read.parquet(dir)
-      val occ = stored.select(posexplode(col("buckets")).as(Seq("band", "bkt")))
-        .groupBy("band", "bkt").agg(count(lit(1)).as("n"))
-        .localCheckpoint()
-      occ.filter(col("n") > p.maxBucketDf).select("band", "bkt")
-        .write.mode("overwrite").parquet(s"$dir/_hot/batch=base")
+      val occ = Hot.counts(keys(stored)).localCheckpoint()
+      Hot.writeBase(dir, Hot.over(occ, p.maxBucketDf))
       val buildMaxOcc = {
         val r = occ.agg(max("n")).collect()(0)
         if (r.isNullAt(0)) 0L else r.getLong(0)
@@ -199,10 +183,7 @@ object SignBandIndex {
     */
   def rebuildDue(s: SparkSession, indexPath: String, p: Params): Boolean = {
     val spec = readSpec(s, indexPath, p)
-    val r = s.read.parquet(indexPath)
-      .select(posexplode(col("buckets")).as(Seq("band", "bkt")))
-      .groupBy("band", "bkt").agg(count(lit(1)).as("n"))
-      .agg(max("n")).collect()(0)
+    val r = Hot.counts(keys(s.read.parquet(indexPath))).agg(max("n")).collect()(0)
     !r.isNullAt(0) && r.getLong(0) > spec.rebuildThreshold
   }
 
@@ -312,22 +293,11 @@ object SignBandIndex {
       (ix, id) => ix.filter(col("batch") =!= id)
     }.select("id", "embedding", "buckets")
     // capped semantics count the UNION (corpus-so-far + batch), exactly
-    // like the symmetric recompute: the batch's own key tallies
-    // (|batch|-sized) join the corpus counts FOR THE BATCH'S KEYS ONLY —
-    // the index scan is broadcast-semi-joined down before the (map-side
-    // combinable) count, so no corpus-key shuffle
-    val bk = batch.select(posexplode(col("buckets")).as(Seq("band", "bkt")))
-      .groupBy("band", "bkt").agg(count(lit(1)).as("nb"))
-    val ck = index.select(posexplode(col("buckets")).as(Seq("band", "bkt")))
-      .join(broadcast(bk.select("band", "bkt")), Seq("band", "bkt"), "left_semi")
-      .groupBy("band", "bkt").agg(count(lit(1)).as("nc"))
-    val tallies = bk.join(ck, Seq("band", "bkt"), "left")
-      .select(col("band"), col("bkt"),
-        (col("nb") + coalesce(col("nc"), lit(0L))).as("n"))
-      .localCheckpoint()
-    // a key's count changes ONLY when the batch contains it — so the
-    // newly-hot keys are exactly the batch keys crossing the cap now
-    val fresh = tallies.filter(col("n") > p.maxBucketDf).select("band", "bkt")
+    // like the symmetric recompute; a key's count changes ONLY when the
+    // batch contains it, so the newly-hot keys are exactly the batch keys
+    // crossing the cap now
+    val tallies = Hot.tally(keys(batch), keys(index)).localCheckpoint()
+    val fresh = Hot.over(tallies, p.maxBucketDf)
     // frozen-width creep watch: the probe already holds its keys' counts,
     // so the rebuild check is free here (the full-index form is
     // [[rebuildDue]])
@@ -342,7 +312,7 @@ object SignBandIndex {
         s"${spec.expectedOcc}, max ${spec.buildMaxOcc}) — append creep has " +
         "outgrown the frozen plane width; rebuild to re-widen before the " +
         "cap erodes recall")
-    val hot = hotKeys(s, indexPath, appendBatch).union(fresh)
+    val hot = Hot.read(s, indexPath, appendBatch).union(fresh)
       .distinct().localCheckpoint()
     val batchCool = Similarity.applyHotBuckets(batch, "id", p.bands, hot)
     val indexCool = Similarity.applyHotBuckets(index, "id", p.bands, hot)
@@ -374,8 +344,7 @@ object SignBandIndex {
     // return could otherwise race its own append
     val out = all.localCheckpoint()
     appendBatch.foreach { id =>
-      Stamped.appendOnce(s, indexPath, "sign-band index", id, "_hot/")(
-        fresh.write.mode("overwrite").parquet(_))
+      Hot.append(s, indexPath, "sign-band index", id, fresh)
       Stamped.appendOnce(s, indexPath, "sign-band index", id)(
         batch.write.mode("overwrite").parquet(_))
     }

@@ -33,7 +33,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     `_hot/batch=<id>`, `v=<v>`) are written once in place behind their
   *     own `_SUCCESS` ([[writeOnce]]): a staging sibling there would be
   *     discovered as a partition. A crashed write left no marker, so the
-  *     re-run overwrites it.
+  *     re-run overwrites it, and [[versions]] lists only the committed
+  *     ones: the version reads of the ingest loops and the `_hot` read of
+  *     [[graft.sim.HotKeys]] open exactly those children.
   *
   * A root built from parameters pins them in a sidecar ([[Spec]]): a
   * probe with different parameters fails loudly, because every stored
@@ -61,7 +63,7 @@ object Stamped {
   }
 
   /** Whether the directory at `path` is committed. */
-  def committed(s: SparkSession, path: String): Boolean = {
+  private def committed(s: SparkSession, path: String): Boolean = {
     val (fs, p) = fsOf(s, path)
     fs.exists(new Path(p, Marker))
   }
@@ -95,14 +97,17 @@ object Stamped {
     */
   def version(batchId: Long): String = f"b${batchId + 1}%09d"
 
-  /** The committed `v=<version>` directories under `root`, ascending. */
-  def versions(s: SparkSession, root: String): Seq[String] = {
+  /** The values of the committed `<key>=<value>` directories under
+    * `root`, ascending: the versions (`v=`) of a loop's store, or the
+    * batches (`batch=`) of a partitioned one.
+    */
+  def versions(s: SparkSession, root: String, key: String = "v"): Seq[String] = {
     val (fs, p) = fsOf(s, root)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
       .map(_.getPath)
-      .filter(v => v.getName.startsWith("v=") && fs.exists(new Path(v, Marker)))
-      .map(_.getName.stripPrefix("v="))
+      .filter(v => v.getName.startsWith(s"$key=") && fs.exists(new Path(v, Marker)))
+      .map(_.getName.stripPrefix(s"$key="))
       .sorted
   }
 

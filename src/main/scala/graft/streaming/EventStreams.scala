@@ -3,9 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery, Trigger}
+  OutputMode, StreamingQuery}
 
-import graft.ops.Scalar
 import graft.sources.LocalFs
 
 /** Structured Streaming surface. The reference is batch-only ("manual-trigger
@@ -17,7 +16,7 @@ import graft.sources.LocalFs
   * Scale notes: event-time windows + watermark bound state; the stateful
   * sessionizer keys state by user — state store partitions by the group key,
   * so a 1000-executor cluster shards it linearly. No `collect`, no
-  * foreachBatch driver loops.
+  * per-batch driver loops (the ingest loops drain through [[Ingest]]).
   */
 object EventStreams {
 
@@ -60,15 +59,6 @@ object EventStreams {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-
-  /** Quarterly roll-up as a streaming query — same Quarter key expression as
-    * the batch path (Scalar.toQuarter), so batch and stream agree.
-    */
-  def quarterlyValues(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 day")
-      .groupBy(Scalar.toQuarter(col("ts")).as("Quarter"))
-      .agg(count(lit(1)).as("n"), avg(col("value")).as("avg_value"))
 
   /** Streaming exact dedup (X1 on a feed): duplicate event_ids are dropped
     * across micro-batches with state bounded by the watermark — the
@@ -220,8 +210,8 @@ object EventStreams {
 
   /** Start `writer` (checkpointed at `checkpoint`, or wherever the session
     * puts it when None), run `await` on the query, ALWAYS stop it, and
-    * return it. Every stream and ingest drain the program runs starts
-    * here.
+    * return it. Every stream and ingest drain ([[Ingest.drain]]) the
+    * program runs starts here.
     *
     * The whole drive runs in [[LocalFs.scoped]] on the checkpoint's file
     * system: the explicit `checkpoint`, else the session's checkpoint
@@ -232,7 +222,7 @@ object EventStreams {
     * manager's renames, and 96 `chmod` from the offset, commit, source-log
     * and state files, their `.crc` files and directories. It holds for the
     * whole drive, not just `start()`: the stream clones the session at
-    * start (so `foreachBatch` writes inherit it), but a file source opens
+    * start (so a micro-batch step's writes inherit it), but a file source opens
     * its log later, on the stream thread, through the caller's session.
     */
   def drive[T](s: SparkSession, writer: DataStreamWriter[T],
@@ -249,15 +239,6 @@ object EventStreams {
       q
     }
   }
-
-  /** Drain everything currently in the feed and stop
-    * (Trigger.AvailableNow): the catch-up / backfill mode of the ingest
-    * loops. Returns the terminated query; a failed drive throws here.
-    */
-  def drainAvailable[T](s: SparkSession, writer: DataStreamWriter[T],
-                        checkpoint: String): StreamingQuery =
-    drive(s, writer.trigger(Trigger.AvailableNow()), Some(checkpoint))(
-      _.awaitTermination())
 
   /** Drive a streaming query to completion against the bounded source and
     * return the materialized result (memory sink) — the local smoke path;

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.sources.Stamped
 import graft.text.Dedup
@@ -17,9 +16,10 @@ import graft.text.Dedup
   * re-run, src/ETL-NPL-Pipeline.py:271-327); a training-data corpus ingests
   * forever, so the batch artifacts ([[Dedup.ensureBandIndex]]'s growing
   * signature index, [[Dedup.ensureGroupLabels]]' labels) are driven here by
-  * Structured Streaming `foreachBatch` — the standard shape for streaming
-  * maintenance of transactional batch artifacts: the driver only
-  * coordinates; every data pass is a distributed job.
+  * Structured Streaming micro-batches through [[Ingest.drain]] — the
+  * standard shape for streaming maintenance of transactional batch
+  * artifacts: the driver only coordinates; every data pass is a
+  * distributed job.
   *
   * Three co-versioned stores, every directory written once
   * ([[Stamped.writeOnce]]) so an at-least-once replay (crash anywhere,
@@ -35,8 +35,10 @@ import graft.text.Dedup
   *                                         is the batch's overall
   *                                         commit record.
   *
-  * A batch whose label version is committed is skipped wholesale; a batch
-  * that crashed mid-way re-runs against stores whose per-partition guards
+  * The whole step runs inside [[Stamped.writeOnce]] of its label version,
+  * so a batch whose version is committed is skipped wholesale; a batch
+  * that crashed mid-way (its docs and index partitions landed, its
+  * version did not) re-runs against stores whose per-partition guards
   * (and the probe's own-partition prune) make the re-run read-your-own-
   * replay-safe. Versions are `b`-prefixed zero-padded batch ids, so the
   * "latest committed" scan is a lexicographic max over directory names —
@@ -136,67 +138,49 @@ object IngestDedup {
         .write.mode("overwrite").parquet(_))
   }
 
-  /** One micro-batch of the loop (also the batch-mode entry point for a
-    * non-streaming caller with its own batch numbering). Steps:
-    * land → probe + grow index → fold labels → commit version.
+  /** One micro-batch of the loop, the step [[Ingest.drain]] runs (also
+    * the batch-mode entry point for a non-streaming caller with its own
+    * batch numbering). Steps: land → probe + grow index → fold labels →
+    * commit version.
     */
   def processBatch(batch: DataFrame, batchId: Long, docsPath: String,
                    indexPath: String, labelsPath: String, p: Params): Unit = {
     val s = batch.sparkSession
     val v = Stamped.version(batchId)
-    // the version's label dir is the batch's commit record: committed ⇒
-    // every store already holds this batch ⇒ nothing to do
-    if (Stamped.committed(s, s"$labelsPath/v=$v")) return
-    Stamped.writeOnce(s, s"$docsPath/batch=$v")(
-      batch.select("doc_id", "text").write.mode("overwrite").parquet(_))
-    // the store's landed copy (not the in-memory micro-batch) feeds the
-    // probe: deterministic under replay, and the corpus side of the
-    // candidate verify partition-prunes to candidate batches only.
-    // `batch <= v` pins the doc universe to this batch's view even if
-    // later partitions exist from a pre-crash run that got further.
-    val docs = s.read.parquet(docsPath).filter(col("batch") <= v)
-      .select("doc_id", "text", "batch")
-    val pairs = Dedup.ingestPairs(docs, col("batch") === v, indexPath,
-      p.n, p.numHashes, p.bands, p.verifyThreshold, appendBatch = Some(v))
-    val prior = labels(s, labelsPath) // committed versions are < v here
-    // the version's content is the DELTA: touched components + the
-    // batch's singletons (batch ids are new — a committed replay was
-    // already skipped above, so none of them carries a prior label)
-    val delta = Dedup.incrementalGroupsDelta(prior, pairs.select("doc_a", "doc_b"))
-    val withSingles = delta.union(
-      docs.filter(col("batch") === v).select(col("doc_id").as("id"))
-        .join(delta, Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("group_id")))
-    if ((batchId + 1) % CompactEvery == 0) {
-      // compaction point: fold the delta into a FULL snapshot so reads
-      // never stack more than CompactEvery versions
-      val d = withSingles.localCheckpoint()
-      val full = d.union(prior.join(d.select("id"), Seq("id"), "left_anti"))
-      full.write.mode("overwrite").parquet(s"$labelsPath/v=$v")
-      val marker = new Path(s"$labelsPath/v=$v/$FullMarker")
-      marker.getFileSystem(s.sessionState.newHadoopConf()).create(marker, true).close()
-    } else {
-      withSingles.write.mode("overwrite").parquet(s"$labelsPath/v=$v")
+    // the version's label dir is the batch's commit record, written last:
+    // committed ⇒ every store already holds this batch ⇒ nothing to do
+    Stamped.writeOnce(s, s"$labelsPath/v=$v") { out =>
+      Stamped.writeOnce(s, s"$docsPath/batch=$v")(
+        batch.select("doc_id", "text").write.mode("overwrite").parquet(_))
+      // the store's landed copy (not the in-memory micro-batch) feeds the
+      // probe: deterministic under replay, and the corpus side of the
+      // candidate verify partition-prunes to candidate batches only.
+      // `batch <= v` pins the doc universe to this batch's view even if
+      // later partitions exist from a pre-crash run that got further.
+      val docs = s.read.parquet(docsPath).filter(col("batch") <= v)
+        .select("doc_id", "text", "batch")
+      val pairs = Dedup.ingestPairs(docs, col("batch") === v, indexPath,
+        p.n, p.numHashes, p.bands, p.verifyThreshold, appendBatch = Some(v))
+      val prior = labels(s, labelsPath) // committed versions are < v here
+      // the version's content is the DELTA: touched components + the
+      // batch's singletons (batch ids are new — a committed replay was
+      // already skipped above, so none of them carries a prior label)
+      val delta = Dedup.incrementalGroupsDelta(prior, pairs.select("doc_a", "doc_b"))
+      val withSingles = delta.union(
+        docs.filter(col("batch") === v).select(col("doc_id").as("id"))
+          .join(delta, Seq("id"), "left_anti")
+          .select(col("id"), col("id").as("group_id")))
+      if ((batchId + 1) % CompactEvery == 0) {
+        // compaction point: fold the delta into a FULL snapshot so reads
+        // never stack more than CompactEvery versions
+        val d = withSingles.localCheckpoint()
+        val full = d.union(prior.join(d.select("id"), Seq("id"), "left_anti"))
+        full.write.mode("overwrite").parquet(out)
+        val marker = new Path(s"$out/$FullMarker")
+        marker.getFileSystem(s.sessionState.newHadoopConf()).create(marker, true).close()
+      } else {
+        withSingles.write.mode("overwrite").parquet(out)
+      }
     }
   }
-
-  /** Attach the loop to a streaming (doc_id, text) frame. The caller picks
-    * trigger/checkpoint and calls `.start()`; every micro-batch runs
-    * [[processBatch]] with the stream's transactional batch id.
-    */
-  def attach(stream: DataFrame, docsPath: String, indexPath: String,
-             labelsPath: String, p: Params): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, docsPath, indexPath, labelsPath, p)
-    }
-
-  /** Drain everything currently in the feed and stop (Trigger.AvailableNow):
-    * the catch-up / backfill mode of the loop. Returns the terminated
-    * query; a failed drive throws here.
-    */
-  def runAvailable(stream: DataFrame, docsPath: String, indexPath: String,
-                   labelsPath: String, checkpoint: String, p: Params): StreamingQuery =
-    EventStreams.drainAvailable(stream.sparkSession,
-      attach(stream, docsPath, indexPath, labelsPath, p), checkpoint)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.sim.Similarity
 import graft.sources.Stamped
@@ -21,7 +20,8 @@ import graft.sources.Stamped
   * once per batch ([[Stamped.writeOnce]]). An at-least-once replay recomputes the
   * identical rows (exact integer arithmetic) into the same partition —
   * convergent by construction. Per-batch cost is |batch|·k·dim through
-  * one broadcast join; the driver only coordinates.
+  * one broadcast join; the driver only coordinates. A stream drives it
+  * through [[Ingest.drain]].
   */
 object IngestIvf {
 
@@ -33,8 +33,9 @@ object IngestIvf {
     Similarity.ensureCentroidIndex(
       baseEmb.select("vec_id", "embedding"), indexPath, k, iters)
 
-  /** One micro-batch: assign against the stored centroids and land the
-    * result under its batch partition, exactly once — PARTITIONED BY
+  /** One micro-batch, the step [[Ingest.drain]] runs: assign against the
+    * stored centroids and land the result under its batch partition,
+    * exactly once — PARTITIONED BY
     * CLUSTER, so the store IS the inverted-list layout: a probe of
     * nprobe lists reads nprobe/k of the directories (partition pruning
     * at the scan, no row filter), which is the point of IVF at 100 TB.
@@ -58,20 +59,4 @@ object IngestIvf {
   def assignments(s: SparkSession, assignsPath: String): DataFrame =
     s.read.parquet(assignsPath)
       .withColumn("cluster", col("cluster").cast("long"))
-
-  /** Attach the loop to a streaming (vec_id, embedding) frame; the caller
-    * picks trigger/checkpoint and starts it.
-    */
-  def attach(stream: DataFrame, indexPath: String,
-             assignsPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, indexPath, assignsPath)
-    }
-
-  /** Drain the feed and stop (Trigger.AvailableNow) — catch-up mode. */
-  def runAvailable(stream: DataFrame, indexPath: String, assignsPath: String,
-                   checkpoint: String): StreamingQuery =
-    EventStreams.drainAvailable(stream.sparkSession,
-      attach(stream, indexPath, assignsPath), checkpoint)
 }

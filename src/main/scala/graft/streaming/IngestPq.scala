@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.sim.Similarity
 import graft.sources.Stamped
@@ -22,7 +21,8 @@ import graft.sources.Stamped
   * the identical rows (exact integer arithmetic) into the same partition
   * — convergent by construction. Codes land PARTITIONED BY SUB, so a per-subspace ADC
   * lookup join prunes to that subspace's directories at the scan.
-  * Per-batch cost is |batch|·m·k·(dim/m) through one broadcast join.
+  * Per-batch cost is |batch|·m·k·(dim/m) through one broadcast join. A
+  * stream drives it through [[Ingest.drain]].
   */
 object IngestPq {
 
@@ -34,8 +34,9 @@ object IngestPq {
     Similarity.ensurePqIndex(
       baseEmb.select("vec_id", "embedding"), indexPath, m, k, iters)
 
-  /** One micro-batch: encode against the stored codebook and land the
-    * codes under this batch's partition, exactly once. */
+  /** One micro-batch, the step [[Ingest.drain]] runs: encode against the
+    * stored codebook and land the codes under this batch's partition,
+    * exactly once. */
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
                    codesPath: String, m: Int): Unit = {
     val s = batch.sparkSession
@@ -52,19 +53,4 @@ object IngestPq {
   def codes(s: SparkSession, codesPath: String): DataFrame =
     s.read.parquet(codesPath)
       .withColumn("sub", col("sub").cast("int"))
-
-  /** Attach the loop to a streaming (vec_id, embedding) frame; the caller
-    * picks trigger/checkpoint and starts it. */
-  def attach(stream: DataFrame, indexPath: String, codesPath: String,
-             m: Int): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, indexPath, codesPath, m)
-    }
-
-  /** Drain the feed and stop (Trigger.AvailableNow) — catch-up mode. */
-  def runAvailable(stream: DataFrame, indexPath: String, codesPath: String,
-                   checkpoint: String, m: Int): StreamingQuery =
-    EventStreams.drainAvailable(stream.sparkSession,
-      attach(stream, indexPath, codesPath, m), checkpoint)
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.sim.SignBandIndex
 import graft.sources.Stamped
@@ -25,7 +24,8 @@ import graft.sources.Stamped
   * same directory — convergent by construction, across either crash
   * window (after the index append, or after the matches write). Batches
   * are checkpoint-ordered, so batch N's probe sees exactly base ∪
-  * batches 1..N-1 — the loop-closure semantics the oracle replays.
+  * batches 1..N-1 — the loop-closure semantics the oracle replays. A
+  * stream drives it through [[Ingest.drain]].
   */
 object IngestSemBand {
 
@@ -42,37 +42,39 @@ object IngestSemBand {
       baseFeat.select("vec_id", "embedding"), "vec_id", indexPath, p,
       countForWidth)
 
-  /** One micro-batch: probe the stored index (growing it under this
-    * batch's version), land the verified matches under the batch
-    * partition exactly once — then run the MAINTENANCE contract: the
-    * probe's own key counts are a free |batch|-cost creep signal
-    * ([[SignBandIndex.ProbeStats]]); only when it fires does the loop pay
-    * the full-index [[SignBandIndex.rebuildDue]] confirmation, and only a
-    * confirmed creep triggers [[SignBandIndex.rebuild]] (atomic staging
+  /** One micro-batch, the step [[Ingest.drain]] runs: inside
+    * [[Stamped.writeOnce]] of the batch's match partition (a committed
+    * batch is skipped wholesale), probe the stored index (growing it
+    * under this batch's version), land the verified matches — then run
+    * the MAINTENANCE contract: the probe's own key counts are a free
+    * |batch|-cost creep signal ([[SignBandIndex.ProbeStats]]); only when
+    * it fires does the loop pay the full-index
+    * [[SignBandIndex.rebuildDue]] confirmation, and only a confirmed
+    * creep triggers [[SignBandIndex.rebuild]] (atomic staging
     * swap — appends fold into a re-widened base, the hot set and the
     * sidecar profile reset). Ordering keeps replays convergent: the
-    * rebuild runs strictly AFTER this batch's matches are durable, so a
-    * replayed batch either skips its committed matches (and the NEXT
-    * batch's probe re-fires the creep signal — maintenance is deferred,
-    * never lost while appends keep arriving) or re-probes the pre-rebuild
-    * index it originally saw.
+    * rebuild runs strictly AFTER this batch's matches are written, and
+    * never for a skipped batch, so a replayed batch either skips its
+    * committed matches (and the NEXT batch's probe re-fires the creep
+    * signal — maintenance is deferred, never lost while appends keep
+    * arriving) or re-probes the pre-rebuild index it originally saw.
     */
   def processBatch(batch: DataFrame, batchId: Long, indexPath: String,
                    matchesPath: String, p: SignBandIndex.Params,
                    threshold: Double): Unit = {
     val s = batch.sparkSession
     val v = Stamped.version(batchId)
-    val dir = s"$matchesPath/batch=$v"
-    if (Stamped.committed(s, dir)) return
-    val (matches, stats) = SignBandIndex.ingestMatchesStats(
-      batch.select("vec_id", "embedding"),
-      "vec_id", indexPath, p, threshold, appendBatch = Some(v))
-    matches.write.mode("overwrite").parquet(dir)
-    if (stats.creep && SignBandIndex.rebuildDue(s, indexPath, p)) {
-      System.err.println(s"[graft] sign-band ingest loop: rebuild due at " +
-        s"batch $v (probe max occupancy ${stats.probeMaxOcc} > threshold " +
-        s"${stats.rebuildThreshold}) — re-widening $indexPath")
-      SignBandIndex.rebuild(s, indexPath, p)
+    Stamped.writeOnce(s, s"$matchesPath/batch=$v") { dir =>
+      val (matches, stats) = SignBandIndex.ingestMatchesStats(
+        batch.select("vec_id", "embedding"),
+        "vec_id", indexPath, p, threshold, appendBatch = Some(v))
+      matches.write.mode("overwrite").parquet(dir)
+      if (stats.creep && SignBandIndex.rebuildDue(s, indexPath, p)) {
+        System.err.println(s"[graft] sign-band ingest loop: rebuild due at " +
+          s"batch $v (probe max occupancy ${stats.probeMaxOcc} > threshold " +
+          s"${stats.rebuildThreshold}) — re-widening $indexPath")
+        SignBandIndex.rebuild(s, indexPath, p)
+      }
     }
   }
 
@@ -81,22 +83,4 @@ object IngestSemBand {
     */
   def matches(s: SparkSession, matchesPath: String): DataFrame =
     s.read.parquet(matchesPath)
-
-  /** Attach the loop to a streaming (vec_id, embedding) frame; the
-    * caller picks trigger/checkpoint and starts it.
-    */
-  def attach(stream: DataFrame, indexPath: String, matchesPath: String,
-             p: SignBandIndex.Params,
-             threshold: Double): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, indexPath, matchesPath, p, threshold)
-    }
-
-  /** Drain the feed and stop (Trigger.AvailableNow) — catch-up mode. */
-  def runAvailable(stream: DataFrame, indexPath: String, matchesPath: String,
-                   checkpoint: String, p: SignBandIndex.Params,
-                   threshold: Double): StreamingQuery =
-    EventStreams.drainAvailable(stream.sparkSession,
-      attach(stream, indexPath, matchesPath, p, threshold), checkpoint)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.sim.Similarity
 import graft.sources.Stamped
@@ -23,10 +22,12 @@ import graft.sources.Stamped
   * algorithm.)
   *
   * Versioned commits, [[IngestDedup]]-style: `statsPath/v=<v>/`, written
-  * once, with the committed version as the batch's commit record — a
-  * replayed batch (crash, fresh checkpoint) is skipped wholesale, so
-  * at-least-once delivery converges. Per-batch cost: |batch|·k·dim through one
-  * broadcast join plus a k·dim-row merge; the driver only coordinates.
+  * once ([[Stamped.writeOnce]]), with the committed version as the
+  * batch's commit record — a replayed batch (crash, fresh checkpoint) is
+  * skipped wholesale, so at-least-once delivery converges. A stream
+  * drives it through [[Ingest.drain]]. Per-batch cost: |batch|·k·dim
+  * through one broadcast join plus a k·dim-row merge; the driver only
+  * coordinates.
   */
 object StreamKmeans {
 
@@ -57,40 +58,27 @@ object StreamKmeans {
         .write.mode("overwrite").parquet(_))
   }
 
-  /** One micro-batch: assign against the CURRENT centroids, fold the
-    * batch's statistics in, commit the next version. Skip-if-committed
-    * makes replays convergent.
+  /** One micro-batch, the step [[Ingest.drain]] runs: assign against the
+    * CURRENT centroids, fold the batch's statistics in, commit the next
+    * version once ([[Stamped.writeOnce]]) — a replayed batch is skipped,
+    * so replays converge.
     */
   def processBatch(batch: DataFrame, batchId: Long, statsPath: String): Unit = {
     val s = batch.sparkSession
-    val v = Stamped.version(batchId)
-    if (Stamped.committed(s, s"$statsPath/v=$v")) return
-    val prev = statsAt(s, statsPath)
-    val cents = prev.select(col("cluster"), col("pos"),
-      expr("ssum div n").as("c"))
-    val b = batch.select("vec_id", "embedding")
-    val bstats = Similarity.clusterStats(b, Similarity.assignToCentroids(b, cents))
-    // every cluster keeps its state; clusters the batch touched add the
-    // batch's sums — pure integer addition, engine-order-independent
-    prev.as("p")
-      .join(bstats.as("b"), Seq("cluster", "pos"), "left")
-      .select(col("cluster"), col("pos"),
-        (col("p.ssum") + coalesce(col("b.ssum"), lit(0L))).as("ssum"),
-        (col("p.n") + coalesce(col("b.n"), lit(0L))).as("n"))
-      .write.mode("overwrite").parquet(s"$statsPath/v=$v")
-  }
-
-  /** Attach the loop to a streaming (vec_id, embedding) frame. */
-  def attach(stream: DataFrame,
-             statsPath: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, statsPath)
+    Stamped.writeOnce(s, s"$statsPath/v=${Stamped.version(batchId)}") { out =>
+      val prev = statsAt(s, statsPath)
+      val cents = prev.select(col("cluster"), col("pos"),
+        expr("ssum div n").as("c"))
+      val b = batch.select("vec_id", "embedding")
+      val bstats = Similarity.clusterStats(b, Similarity.assignToCentroids(b, cents))
+      // every cluster keeps its state; clusters the batch touched add the
+      // batch's sums — pure integer addition, engine-order-independent
+      prev.as("p")
+        .join(bstats.as("b"), Seq("cluster", "pos"), "left")
+        .select(col("cluster"), col("pos"),
+          (col("p.ssum") + coalesce(col("b.ssum"), lit(0L))).as("ssum"),
+          (col("p.n") + coalesce(col("b.n"), lit(0L))).as("n"))
+        .write.mode("overwrite").parquet(out)
     }
-
-  /** Drain the feed and stop (Trigger.AvailableNow) — catch-up mode. */
-  def runAvailable(stream: DataFrame, statsPath: String,
-                   checkpoint: String): StreamingQuery =
-    EventStreams.drainAvailable(stream.sparkSession,
-      attach(stream, statsPath), checkpoint)
+  }
 }

@@ -35,6 +35,15 @@ class EntryQueriesSpec extends AnyFunSuite with SparkSuite {
       "probe has no uncapped hits — the cap assertion would be vacuous")
   }
 
+  test("q_sink_upsert writes and backfills its day partitions without forking chmod") {
+    var rows = 0L
+    val cmds = Forks.during {
+      rows = SparkEntry.queries("q_sink_upsert")(spark, dir).count()
+    }
+    assert(rows > 0)
+    Forks.assertNoFsForks(cmds)
+  }
+
   test("q_approx_distinct: every group's HLL verdict is within_10pct=1") {
     // rsd is 0.02 in the query; 10% is ~5 sigma. The query now emits the
     // verdict column (the raw estimate is engine-specific, the verdict is

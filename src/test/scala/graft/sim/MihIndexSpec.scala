@@ -126,6 +126,21 @@ class MihIndexSpec extends AnyFunSuite with SparkSuite {
     assert(p2again == p2)
   }
 
+  test("a capped probe reads its hot-key set without an ignored-path warning") {
+    val rows = clustered(90, seed = 53)
+    val m = rows.groupBy(_._1 % 3)
+    val path = tmp("mih_warn")
+    val p = MihIndex.Params(maxKeyDf = Some(8))
+    MihIndex.ensureIndex(m(0).toDF("id", "h1", "h2"), "id", path, p)
+    val logged = graft.Logs.during(graft.Logs.DataSource) {
+      Seq("b1" -> m(1), "b2" -> m(2)).foreach { case (id, b) =>
+        MihIndex.ingestNearPairs(b.toDF("id", "h1", "h2"), "id", path, p,
+          appendBatch = Some(id)).count()
+      }
+    }
+    assert(!logged.exists(_.contains("All paths were ignored")), logged)
+  }
+
   test("a mismatched probe spec throws instead of silently diverging") {
     val rows = clustered(20, seed = 41)
     val path = tmp("mih_spec")

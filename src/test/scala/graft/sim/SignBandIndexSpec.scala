@@ -171,6 +171,21 @@ class SignBandIndexSpec extends AnyFunSuite with SparkSuite {
     assert(probe.count() > 0, "rebuilt index lost the piled cluster")
   }
 
+  test("a capped probe reads its hot-key set without an ignored-path warning") {
+    val rows = clustered(120, seed = 59)
+    val m = rows.groupBy(_._1 % 3)
+    val path = tmp("semband_warn")
+    val p = SignBandIndex.Params(numPlanes = 16, bands = 8, maxBucketDf = 24)
+    SignBandIndex.ensureIndex(toDf(m(0)), "vec_id", path, p)
+    val logged = graft.Logs.during(graft.Logs.DataSource) {
+      Seq("b1" -> m(1), "b2" -> m(2)).foreach { case (id, b) =>
+        SignBandIndex.ingestMatches(toDf(b), "vec_id", path, p, threshold = 0.6,
+          appendBatch = Some(id)).count()
+      }
+    }
+    assert(!logged.exists(_.contains("All paths were ignored")), logged)
+  }
+
   test("a mismatched probe spec throws instead of silently diverging") {
     val rows = clustered(30, seed = 41)
     val path = tmp("semband_spec")

@@ -6,7 +6,6 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, TimestampTy
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
-import graft.ops.Scalar
 import graft.sources.Tables
 
 class EventStreamsSpec extends AnyFunSuite with SparkSuite {
@@ -23,20 +22,6 @@ class EventStreamsSpec extends AnyFunSuite with SparkSuite {
     Files.createSymbolicLink(d.resolve("batch0.parquet"),
       Paths.get(s"$dir/events.parquet"))
     d.toString
-  }
-
-  test("streaming quarterly roll-up agrees with the batch aggregation") {
-    val stream = EventStreams.quarterlyValues(EventStreams.readEventStream(spark, feedDir))
-    val got = EventStreams.runToCompletion(spark, stream, "quarterly_stream")
-      .orderBy("Quarter").as[(String, Long, Double)].collect()
-    val expected = Tables.events(spark, dir)
-      .groupBy(Scalar.toQuarter(col("ts")).as("Quarter"))
-      .agg(count(lit(1)).as("n"), avg(col("value")).as("avg_value"))
-      .orderBy("Quarter").as[(String, Long, Double)].collect()
-    assert(got.map(r => (r._1, r._2)).toSeq == expected.map(r => (r._1, r._2)).toSeq)
-    got.zip(expected).foreach { case (g, e) =>
-      assert(math.abs(g._3 - e._3) < 1e-9)
-    }
   }
 
   test("windowed watermark aggregation produces hourly per-type counts") {
@@ -309,34 +294,34 @@ class EventStreamsSpec extends AnyFunSuite with SparkSuite {
   test("an ingest-dedup drain renames its checkpoint files without forking readlink") {
     import java.nio.file.Files
     def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
-    val (feed, docsP, idx, labelsP) =
-      (tmp("ckpt_ingest_feed"), tmp("ckpt_ingest_docs") + "/docs",
+    val (docsP, idx, labelsP) =
+      (tmp("ckpt_ingest_docs") + "/docs",
         tmp("ckpt_ingest_idx") + "/idx", tmp("ckpt_ingest_labels") + "/labels")
     val p = IngestDedup.Params(n = 3, numHashes = 32, bands = 16,
       verifyThreshold = 0.5)
     IngestDedup.ensureIngestState(Seq(
         (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"))
       .toDF("doc_id", "text"), docsP, idx, labelsP, p)
-    Seq((10L, "red orange yellow green blue indigo violet pink brown black white"))
-      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(feed)
+    val feed = Ingest.publish(spark, tmp("ckpt_ingest_feed") + "/feed",
+      Seq((10L, "red orange yellow green blue indigo violet pink brown black white"))
+        .toDF("doc_id", "text"))
     val cmds = graft.Forks.during {
-      IngestDedup.runAvailable(
-        spark.readStream.schema("doc_id BIGINT, text STRING").parquet(feed),
-        docsP, idx, labelsP, tmp("ckpt_ingest_ckpt"), p)
+      Ingest.drain(Ingest.open(spark, feed), tmp("ckpt_ingest_ckpt"))(
+        IngestDedup.processBatch(_, _, docsP, idx, labelsP, p))
     }
     assert(IngestDedup.labels(spark, labelsP).orderBy("id")
       .as[(Long, Long)].collect().toSeq == Seq((1L, 1L), (10L, 10L)))
     graft.Forks.assertNoFsForks(cmds)
   }
 
-  private def quarterlyTo(name: String) =
-    EventStreams.quarterlyValues(EventStreams.readEventStream(spark, feedDir))
+  private def hourlyTo(name: String) =
+    EventStreams.hourlyTypeCounts(EventStreams.readEventStream(spark, feedDir))
       .writeStream.outputMode(OutputMode.Update).format("memory").queryName(name)
 
   test("a drive restores a set checkpoint-manager setting, and overrides it meanwhile") {
     withPresetScopeKeys {
       var during: Seq[Option[String]] = Nil
-      EventStreams.drive(spark, quarterlyTo("ckpt_set")) { q =>
+      EventStreams.drive(spark, hourlyTo("ckpt_set")) { q =>
         during = scopedSettings
         q.processAllAvailable()
       }
@@ -348,7 +333,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSuite {
 
   test("a drive leaves an unset checkpoint-manager setting unset") {
     assert(scopedSettings.forall(_.isEmpty))
-    EventStreams.drive(spark, quarterlyTo("ckpt_unset"))(_.processAllAvailable())
+    EventStreams.drive(spark, hourlyTo("ckpt_unset"))(_.processAllAvailable())
     assert(scopedSettings.forall(_.isEmpty))
     assert(spark.table("ckpt_unset").count() > 0)
   }
@@ -363,7 +348,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSuite {
       assert(scopedSettings == preset)
       scopedKeys.foreach(spark.conf.unset)
       intercept[IllegalStateException] {
-        EventStreams.drive(spark, quarterlyTo("ckpt_await_throws")) { _ =>
+        EventStreams.drive(spark, hourlyTo("ckpt_await_throws")) { _ =>
           throw new IllegalStateException("await failed")
         }
       }
@@ -386,7 +371,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSuite {
   test("a Stamped.writeOnce nested in a drive keeps the drive's settings until the drive ends") {
     val root = java.nio.file.Files.createTempDirectory("graft_nested").toString
     var inWrite, afterWrite: Seq[Option[String]] = Nil
-    EventStreams.drive(spark, quarterlyTo("ckpt_nested")) { q =>
+    EventStreams.drive(spark, hourlyTo("ckpt_nested")) { q =>
       q.processAllAvailable()
       graft.sources.Stamped.writeOnce(spark, s"$root/v=1") { d =>
         inWrite = scopedSettings
@@ -396,6 +381,6 @@ class EventStreamsSpec extends AnyFunSuite with SparkSuite {
     }
     assert(inWrite == inScope && afterWrite == inScope)
     assert(scopedSettings.forall(_.isEmpty))
-    assert(graft.sources.Stamped.committed(spark, s"$root/v=1"))
+    assert(graft.sources.Stamped.versions(spark, root) == Seq("1"))
   }
 }

@@ -28,14 +28,14 @@ class IngestDedupSpec extends AnyFunSuite with SparkSuite {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  private def readFeed(feed: String) =
-    spark.readStream.schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", 1) // one feed file = one micro-batch
-      .parquet(feed)
+  private def drain(feed: String, ckpt: String, docsP: String, idx: String,
+                    labelsP: String): Unit =
+    Ingest.drain(Ingest.open(spark, feed), ckpt)(
+      IngestDedup.processBatch(_, _, docsP, idx, labelsP, p))
 
   test("streamed two-batch ingest converges to the full-corpus labeling") {
-    val (feed, docsP, idx, labelsP) =
-      (tmp("ingest_feed"), tmp("ingest_docs") + "/docs",
+    val (docsP, idx, labelsP) =
+      (tmp("ingest_docs") + "/docs",
         tmp("ingest_idx") + "/idx", tmp("ingest_labels") + "/labels")
     IngestDedup.ensureIngestState(base.toDF("doc_id", "text"),
       docsP, idx, labelsP, p)
@@ -44,11 +44,9 @@ class IngestDedupSpec extends AnyFunSuite with SparkSuite {
       .as[(Long, Long)].collect().toSeq == Seq((1L, 1L), (2L, 2L)))
 
     // two feed files, landed in arrival order
-    b1.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(feed)
-    b2.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(feed)
-    val ckpt = tmp("ingest_ckpt")
-    val q = IngestDedup.runAvailable(readFeed(feed), docsP, idx, labelsP, ckpt, p)
-    q.awaitTermination()
+    val feed = Ingest.publish(spark, tmp("ingest_feed") + "/feed",
+      b1.toDF("doc_id", "text"), b2.toDF("doc_id", "text"))
+    drain(feed, tmp("ingest_ckpt"), docsP, idx, labelsP)
 
     val got = IngestDedup.labels(spark, labelsP).orderBy("id")
       .as[(Long, Long)].collect().toSeq
@@ -73,9 +71,7 @@ class IngestDedupSpec extends AnyFunSuite with SparkSuite {
     // is a pure no-op: every version is already committed
     val before = IngestDedup.labels(spark, labelsP).orderBy("id")
       .as[(Long, Long)].collect().toSeq
-    val q2 = IngestDedup.runAvailable(readFeed(feed), docsP, idx, labelsP,
-      tmp("ingest_ckpt2"), p)
-    q2.awaitTermination()
+    drain(feed, tmp("ingest_ckpt2"), docsP, idx, labelsP)
     assert(IngestDedup.labels(spark, labelsP).orderBy("id")
       .as[(Long, Long)].collect().toSeq == before)
     assert(store.count() == 4, "replay duplicated landed docs")

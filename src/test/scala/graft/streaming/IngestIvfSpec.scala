@@ -18,15 +18,12 @@ class IngestIvfSpec extends AnyFunSuite with SparkSuite {
     val root = Files.createTempDirectory("graft_ivf_loop").toString
     IngestIvf.ensureIvfState(emb.filter(m < 3), s"$root/idx", k = 4, iters = 1)
     // stage the two arrival fifths as one feed file each
-    emb.filter(m === 3L).select("vec_id", "embedding")
-      .coalesce(1).write.mode("append").parquet(s"$root/feed")
-    emb.filter(m === 4L).select("vec_id", "embedding")
-      .coalesce(1).write.mode("append").parquet(s"$root/feed")
+    val feed = Ingest.publish(spark, s"$root/feed",
+      emb.filter(m === 3L).select("vec_id", "embedding"),
+      emb.filter(m === 4L).select("vec_id", "embedding"))
     def drain(ckpt: String): Unit =
-      IngestIvf.runAvailable(
-        spark.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-          .option("maxFilesPerTrigger", 1).parquet(s"$root/feed"),
-        s"$root/idx", s"$root/assigns", ckpt).awaitTermination()
+      Ingest.drain(Ingest.open(spark, feed), ckpt)(
+        IngestIvf.processBatch(_, _, s"$root/idx", s"$root/assigns"))
     drain(s"$root/ckpt")
     val streamed = IngestIvf.assignments(spark, s"$root/assigns")
       .select("vec_id", "cluster", "dist")

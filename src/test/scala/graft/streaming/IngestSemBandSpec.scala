@@ -29,16 +29,13 @@ class IngestSemBandSpec extends AnyFunSuite with SparkSuite {
     val root = Files.createTempDirectory("graft_semband_loop").toString
     val p = SignBandIndex.Params(numPlanes = 16, bands = 8)
     IngestSemBand.ensureState(emb.filter(m < 3), s"$root/idx", p)
-    emb.filter(m === 3L).select("vec_id", "embedding")
-      .coalesce(1).write.mode("append").parquet(s"$root/feed")
-    emb.filter(m === 4L).select("vec_id", "embedding")
-      .coalesce(1).write.mode("append").parquet(s"$root/feed")
+    val feed = Ingest.publish(spark, s"$root/feed",
+      emb.filter(m === 3L).select("vec_id", "embedding"),
+      emb.filter(m === 4L).select("vec_id", "embedding"))
     def drain(ckpt: String): Unit =
-      IngestSemBand.runAvailable(
-        spark.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-          .option("maxFilesPerTrigger", 1).parquet(s"$root/feed"),
-        s"$root/idx", s"$root/matches", ckpt, p, threshold = 0.5)
-        .awaitTermination()
+      Ingest.drain(Ingest.open(spark, feed), ckpt)(
+        IngestSemBand.processBatch(_, _, s"$root/idx", s"$root/matches", p,
+          threshold = 0.5))
     drain(s"$root/ckpt")
     def asSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.select("query_id", "vec_id", "sim").collect()
@@ -86,14 +83,11 @@ class IngestSemBandSpec extends AnyFunSuite with SparkSuite {
     val root = Files.createTempDirectory("graft_semband_rebuild").toString
     val p = SignBandIndex.Params(numPlanes = 16, bands = 8)
     IngestSemBand.ensureState(base, s"$root/idx", p)
-    flood.coalesce(1).write.mode("append").parquet(s"$root/feed")
-    probe.coalesce(1).write.mode("append").parquet(s"$root/feed")
+    val feed = Ingest.publish(spark, s"$root/feed", flood, probe)
     def drain(ckpt: String): Unit =
-      IngestSemBand.runAvailable(
-        spark.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-          .option("maxFilesPerTrigger", 1).parquet(s"$root/feed"),
-        s"$root/idx", s"$root/matches", ckpt, p, threshold = 0.5)
-        .awaitTermination()
+      Ingest.drain(Ingest.open(spark, feed), ckpt)(
+        IngestSemBand.processBatch(_, _, s"$root/idx", s"$root/matches", p,
+          threshold = 0.5))
     drain(s"$root/ckpt")
     // the rebuild fired at batch 1: its append partition folded into the
     // new base (only batch 2's partition survives as an append), and the

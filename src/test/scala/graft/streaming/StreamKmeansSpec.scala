@@ -17,15 +17,12 @@ class StreamKmeansSpec extends AnyFunSuite with SparkSuite {
     val root = Files.createTempDirectory("graft_skm").toString
     StreamKmeans.ensureKmeansState(emb.filter(m < 3), s"$root/stats",
       k = 4, iters = 1)
-    emb.filter(m === 3L).select("vec_id", "embedding")
-      .coalesce(1).write.mode("append").parquet(s"$root/feed")
-    emb.filter(m === 4L).select("vec_id", "embedding")
-      .coalesce(1).write.mode("append").parquet(s"$root/feed")
+    val feed = Ingest.publish(spark, s"$root/feed",
+      emb.filter(m === 3L).select("vec_id", "embedding"),
+      emb.filter(m === 4L).select("vec_id", "embedding"))
     def drain(ckpt: String): Unit =
-      StreamKmeans.runAvailable(
-        spark.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-          .option("maxFilesPerTrigger", 1).parquet(s"$root/feed"),
-        s"$root/stats", ckpt).awaitTermination()
+      Ingest.drain(Ingest.open(spark, feed), ckpt)(
+        StreamKmeans.processBatch(_, _, s"$root/stats"))
     drain(s"$root/ckpt")
     val streamed = StreamKmeans.centroids(spark, s"$root/stats")
       .orderBy("cluster", "pos").collect().map(_.toSeq).toSeq
